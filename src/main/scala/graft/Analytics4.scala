@@ -770,7 +770,7 @@ object Analytics4 {
     */
   private[graft] def q71FuzzyMatch(s: org.apache.spark.sql.SparkSession,
       dir: String, forceParts: Option[Int] = None,
-      lenBucket: Boolean = false, inlineVerify: Boolean = false)
+      inlineVerify: Boolean = false)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.graft.DatasetBridge
     val c = t(s, dir, "customer").select(col("c_nationkey"),
@@ -786,17 +786,7 @@ object Analytics4 {
       math.max(sessionParts,
         math.min(2048L, (buildBytes + (100L << 20) - 1) / (100L << 20)).toInt)
     }
-    // lenBucket (A/B only, VERDICT r17 #6): append floor(len/4) to
-    // the bucket key to split hot variant buckets by name length.
-    // UNSOUND in general — a dist-≤2 pair may straddle a div-4
-    // boundary (len 19 vs 20) and lose its shared bucket — and
-    // structurally inert on the fixtures (lengths are exactly
-    // {18, 24}, gap 6 > 2, and the variant HASH already separates
-    // every distinct variant string, so a function of the window
-    // cannot split a same-variant hot bucket). Measured + ledgered in
-    // SURVEY §20; the shipped entry keeps lenBucket=false.
-    val bkCols = Seq(col("c_nationkey"), col("c_mktsegment"), col("v")) ++
-      (if (lenBucket) Seq(floor(length(col("c_name")) / lit(4))) else Nil)
+    val bkCols = Seq(col("c_nationkey"), col("c_mktsegment"), col("v"))
     // shuffle_hash hint (both paths): the planner sizes this self-join
     // from the customer FILE bytes, not the ~70x variant explode, so
     // unhinted it "broadcasts" a 100 M-row side and dies on
@@ -858,7 +848,7 @@ object Analytics4 {
       // widening the 107 M-row keyed exchange (names + block attrs on
       // every variant occurrence) costs more than the distinct +
       // lookup joins it removes. Output bit-identical to the shipped
-      // path (Round19Spec + Q71Ab assert equality).
+      // path (Round19Spec asserts equality).
       val keyed = c
         .withColumn("v", explode(DatasetBridge.column(
           graft.functions.DeletionVariants(

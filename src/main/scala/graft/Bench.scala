@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOTE: measured RocksDB state store at 1.5x SLOWER than the
-      // default HDFS-backed store for these bounded streams (per-
-      // partition instance setup dominates at small state) — keep
-      // the default; revisit only for large unbounded state.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NOTE: measured RocksDB state store at 1.5x SLOWER than the
+    // default HDFS-backed store for these bounded streams (per-
+    // partition instance setup dominates at small state) — keep
+    // the default; revisit only for large unbounded state.
+    val spark = GraftSession.build("graft-bench")
     // Default standing-index budget (VERDICT r18 #1): a quarter of the
     // heap bounds what a multi-corpus host can accrete in IndexCache.
     // NOTE the suite itself is single-corpus, where the corpus-group
@@ -90,11 +81,11 @@ object Bench {
     // one-time streaming-engine init (state-store coordinator, query
     // listener bus, offset/commit-log classes): measured ~2 s of pure
     // first-streaming-query tax that otherwise lands on whichever
-    // stream_* entry runs first (r20; same rationale as the JIT warm)
-    // (skipped when an explicit subset selects no stream_* entry —
+    // streaming entry runs first (r20; same rationale as the JIT warm)
+    // (skipped when an explicit subset selects no StreamOps entry —
     // local iteration shouldn't pay the ~2 s drain for batch work —
     // and the temp root is deleted after the drain; ADVICE r20)
-    if (args.isEmpty || args.exists(_.startsWith("stream_")))
+    if (args.isEmpty || StreamOps.entries.exists(e => args.contains(e.name)))
       warm("stream-infra") {
         val root = java.nio.file.Files.createTempDirectory("graft_warm_stream")
         try {
@@ -206,11 +197,7 @@ object Bench {
     try {
       val detailPath = sys.env.getOrElse(
         "SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(detailPath),
-        (jsonLine(sfDir, resMap, budget = 1 << 20, errors = errors,
-          pins = pinsMap, drift = drift) + "\n")
-          .getBytes("UTF-8"))
+      writeDetail(detailPath, sfDir, resMap, errors, pinsMap, drift)
       System.err.println(s"BENCHDETAIL wrote $detailPath (${resMap.size} entries)")
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"BENCHWARN detail file write failed: ${e.getMessage}")
@@ -321,6 +308,15 @@ object Bench {
     }
     header + kept.mkString("{", ",", "}") + regStr + mprStr + "}"
   }
+
+  /** Writes the uncapped detail line: [[jsonLine]]'s schema with every
+    * entry kept, newline-terminated.
+    */
+  def writeDetail(path: String, sfDir: String, results: Map[String, Double],
+      errors: Int, pins: Map[String, Double], drift: Option[Double]): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (jsonLine(sfDir, results, budget = 1 << 20, errors = errors,
+        pins = pins, drift = drift) + "\n").getBytes("UTF-8"))
 
   /** Pinned per-entry minimums for `sfDir`'s scale, from the committed
     * resource (absent scale → no pins → no regressions field).

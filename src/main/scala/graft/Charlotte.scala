@@ -146,14 +146,8 @@ object Charlotte {
     val mode = args.lift(1).getOrElse("test")
     val outDir = args.lift(2).getOrElse("target/charlotte_out")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-charlotte")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-charlotte",
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
 
     try run(spark, config, mode, outDir)
     finally if (mode != "follow") spark.stop()

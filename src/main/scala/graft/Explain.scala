@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: dumps `explain("formatted")` for headline queries so
   * scan pushdown (`PushedFilters`/`ReadSchema`), broadcast joins and
   * whole-stage codegen spans can be eyeballed per change.
@@ -36,14 +34,7 @@ object Explain {
         // post-materialization batch read, whose plan says nothing
         // about the streaming topology — StreamSpec pins those shapes.
         "knn_recall_report")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build("graft-explain")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

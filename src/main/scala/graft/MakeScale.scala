@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for the measured-scaling story:
@@ -47,14 +47,7 @@ object MakeScale {
     val alphabet = if (args.length > 3) args(3) else "123456789"
     // copies beyond alphabet+1 switch to the RS-4 suffix code (see
     // the c_name block below), so no alphabet-size require here
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-makescale")
 
     def tbl(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     def stride(df: DataFrame, c: String): Long =

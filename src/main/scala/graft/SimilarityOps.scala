@@ -85,9 +85,9 @@ object SimilarityOps {
       forceParts: Option[Int] = None): DataFrame =
     knnGraphPlan(s, dir, forceParts).mutual
 
-  /** The four knn_graph stages as separate relations, so the stage-
-    * split diagnostic ([[KnnGraphStages]]) can time route / cell-join
-    * scan / partial top-k / mutualize independently (VERDICT r16 #1).
+  /** The four knn_graph stages as separate relations, so route /
+    * cell-join scan / partial top-k / mutualize can be timed
+    * independently (VERDICT r16 #1).
     * `mutual` is exactly the entry's result; the intermediate fields
     * share its plan prefixes. `selfJoinMutual` forces the pre-r17
     * reciprocation self-join, kept only so the spec can pin the two

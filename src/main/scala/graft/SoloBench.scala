@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Minimal-warmup solo timer for A/Bs of NON-INDEX entries: the full
   * Bench pays minutes of index/signature warmups per JVM at sf10,
   * which drowns an interleaved A/B of (say) a text entry in setup.
@@ -15,15 +13,7 @@ object SoloBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SoloBench <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-solobench")
     val reps = math.max(1,
       try sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
       catch { case _: NumberFormatException => 2 })

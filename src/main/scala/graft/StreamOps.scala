@@ -409,8 +409,8 @@ object StreamOps {
       checkpointed: Boolean): (DataFrame, Option[String]) =
     timerSessStream(s, timerSessPrep(s, dir), checkpointed)
 
-  /** Source-prep stage of [[timerSessionsDrain]], factored so
-    * TimerSessStages can time prep / stream / read-back independently
+  /** Source-prep stage of [[timerSessionsDrain]], factored so prep /
+    * stream / read-back can be timed independently
     * (VERDICT r17 #3): write the events as 4 time-ordered bucket
     * files (each bucket must stay ONE file, because with
     * maxFilesPerTrigger=1 a bucket split across unordered files would

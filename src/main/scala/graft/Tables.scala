@@ -18,7 +18,7 @@ object Tables {
     *
     * `events.ts` has drifted across driver testdata regenerations:
     * nanosecond parquet (Spark 4 reads a raw long under
-    * `spark.sql.legacy.parquet.nanosAsLong`, set in Verify/Bench),
+    * `spark.sql.legacy.parquet.nanosAsLong`, set by GraftSession),
     * then `TIMESTAMP(MICROS, isAdjustedToUTC=false)` (Spark reads
     * `TIMESTAMP_NTZ`). Normalize every physical encoding to a session-TZ
     * `TimestampType` at µs precision so downstream `unix_micros`/

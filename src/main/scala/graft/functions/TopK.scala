@@ -142,4 +142,3 @@ object TopKBuffer {
     b
   }
 }
-

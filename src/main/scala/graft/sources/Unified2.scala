@@ -158,11 +158,25 @@ object Unified2 {
     out.result()
   }
 
+  /** Body bytes a known record type reads before its optional or
+    * length-prefixed tail.
+    */
+  private def fixedLen(recType: Int): Int = recType match {
+    case EventV1 | EventV2 => 52
+    case EventIp6V1 | EventIp6V2 => 76
+    case Packet => 28
+    case ExtraData => 32
+    case _ => 0
+  }
+
   private def parseRecord(file: String, idx: Int, recType: Int,
       body: Array[Byte]): U2Record = {
     val b = ByteBuffer.wrap(body)
     val base = U2Record.empty(file, idx, recType)
     recType match {
+      // body too short for its type's fixed fields: keep framing only,
+      // like an unknown type ([[alerts]] builds no alert from it)
+      case _ if body.length < fixedLen(recType) => base
       case EventV1 | EventV2 | EventIp6V1 | EventIp6V2 =>
         val ipLen = if (recType == EventIp6V1 || recType == EventIp6V2) 16 else 4
         val v2 = recType == EventV2 || recType == EventIp6V2
@@ -241,7 +255,7 @@ object Unified2 {
     val keys = Seq("sensor", "src_file", "sensor_id", "event_id",
       "event_second")
     val ev = records.filter(col("rec_type").isin(EventV1, EventV2,
-        EventIp6V1, EventIp6V2))
+        EventIp6V1, EventIp6V2) && col("event_id").isNotNull)
       .select(col("sensor"), col("src_file"), col("rec_index"),
         col("sensor_id"), col("event_id"), col("event_second"),
         col("event_microsecond"), col("signature_id"), col("generator_id"),
@@ -327,8 +341,9 @@ object Unified2 {
       }
     }
     recs.collect {
-      case r if r.rec_type == EventV1 || r.rec_type == EventV2 ||
-          r.rec_type == EventIp6V1 || r.rec_type == EventIp6V2 =>
+      case r if (r.rec_type == EventV1 || r.rec_type == EventV2 ||
+          r.rec_type == EventIp6V1 || r.rec_type == EventIp6V2) &&
+          r.event_id.isDefined =>
         U2Alert(sensor, r.src_file, r.sensor_id, r.event_id,
           r.event_second, r.rec_index, r.event_microsecond,
           r.signature_id, r.generator_id, r.signature_revision,

@@ -13,13 +13,8 @@ object PlanAudit {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build("graft-planaudit",
+      Map("spark.sql.debug.maxToStringFields" -> "10000"))
     names.foreach { n =>
       try {
         val df = graft.SparkEntry.queries(n)(spark, dir)

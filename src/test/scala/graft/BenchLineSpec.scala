@@ -51,18 +51,30 @@ class BenchLineSpec extends AnyFunSuite {
   test("detail budget keeps every entry with the same schema (side file)") {
     // VERDICT r20 #2: the capped line's window churn produced phantom
     // dropped/new entries in round-over-round PERF diffs. Bench.main
-    // now also writes the SAME jsonLine with a 1 MiB budget to
-    // BENCH_DETAIL.json — verify that budget keeps all entries and
-    // stays well-formed, and that main actually writes the file.
-    val line = Bench.jsonLine("/root/testdata/sf0.1", many, budget = 1 << 20)
-    (1 to 300).foreach(i => assert(line.contains(f""""query_$i%03d":""")))
-    assert(line.count(_ == '{') == line.count(_ == '}'))
-    val bench = scala.io.Source.fromFile(
-      "src/main/scala/graft/Bench.scala", "UTF-8").mkString
-    assert(bench.contains("SPARK_GRAFT_BENCH_DETAIL"),
-      "main must write the uncapped detail side file")
-    assert(bench.contains("budget = 1 << 20"),
-      "detail file must use the uncapped budget")
+    // also writes the uncapped line to BENCH_DETAIL.json through
+    // writeDetail; write it for real and read it back.
+    val dir = java.nio.file.Files.createTempDirectory("graft_detail")
+    val path = dir.resolve("BENCH_DETAIL.json")
+    try {
+      Bench.writeDetail(path.toString, "/root/testdata/sf0.1", many,
+        errors = 2, pins = many, drift = Some(1.1))
+      val text = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+      assert(text.endsWith("}\n") && text.count(_ == '\n') == 1)
+      assert(text.startsWith("""{"metric":"total","value":"""))
+      // well-formed JSON whose query map holds every entry
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(text)
+      assert(json.get("errors").asInt == 2)
+      assert(json.get("median_pin_ratio").asDouble == 1.0)
+      val queries = json.get("queries")
+      assert(queries.size == many.size)
+      many.foreach { case (k, v) =>
+        assert(math.abs(queries.get(k).asDouble - v) < 1e-9, k)
+      }
+    } finally {
+      java.nio.file.Files.deleteIfExists(path)
+      java.nio.file.Files.delete(dir)
+    }
   }
 
   test("total is the sum over ALL queries, not just the embedded ones") {

@@ -17,6 +17,15 @@ class FormatEdgeSpec extends AnyFunSuite {
 
   private def idx(n: String) = DecodePacket.schema.fieldIndex(n)
 
+  private def withFile[T](bytes: Array[Byte])(
+      f: (java.nio.channels.FileChannel, Long) => T): T = {
+    import java.nio.file.{Files, StandardOpenOption}
+    val p = Files.createTempFile("graft_rr", ".u2")
+    Files.write(p, bytes)
+    val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.READ)
+    try f(ch, Files.size(p)) finally { ch.close(); Files.delete(p) }
+  }
+
   test("DecodePacket skips an 802.1Q VLAN tag") {
     val plain = Unified2Fixture.ipv4Packet(6, ip(10, 0, 0, 1),
       ip(10, 0, 0, 2), 1234, 80, "HI".getBytes)
@@ -55,16 +64,8 @@ class FormatEdgeSpec extends AnyFunSuite {
   }
 
   test("readRange streams records and stops on torn/oversized/shrunk input") {
-    import java.nio.channels.FileChannel
-    import java.nio.file.{Files, StandardOpenOption}
     val full = Unified2Fixture.eventV2(1, 7, 1700000000L, 100, 1, 1, 1, 1,
       ip(1, 1, 1, 1), ip(2, 2, 2, 2), 1, 2, 6)
-    def withFile[T](bytes: Array[Byte])(f: (FileChannel, Long) => T): T = {
-      val p = Files.createTempFile("graft_rr", ".u2")
-      Files.write(p, bytes)
-      val ch = FileChannel.open(p, StandardOpenOption.READ)
-      try f(ch, Files.size(p)) finally { ch.close(); Files.delete(p) }
-    }
     // clean span: both records stream out with continued numbering
     withFile(full ++ full) { (ch, size) =>
       val recs = Unified2.readRange(ch, "f", 0, size, 5).toSeq
@@ -101,5 +102,30 @@ class FormatEdgeSpec extends AnyFunSuite {
     assert(recs.head.rec_type == 999)
     assert(recs.head.event_id.isEmpty)
     assert(recs(1).event_id.contains(2L)) // parsing resumes after unknown
+  }
+
+  test("a known type with a body shorter than its fixed fields keeps framing only") {
+    def short(recType: Int): Array[Byte] =
+      ByteBuffer.allocate(18).putInt(recType).putInt(10).array()
+    val next = Unified2Fixture.eventV2(1, 3, 1700000000L, 100, 1, 1, 1, 1,
+      ip(1, 1, 1, 1), ip(2, 2, 2, 2), 1, 2, 6)
+    // [u32 104][u32 10][10 zero bytes] used to throw
+    // BufferUnderflowException from both read paths
+    val parsed = Unified2.parseFile("f", short(104))
+    assert(parsed.map(_.rec_type) == Seq(104))
+    assert(parsed.head == Unified2.U2Record.empty("f", 0, 104))
+    withFile(short(104)) { (ch, size) =>
+      assert(Unified2.readRange(ch, "f", 0, size, 0).toSeq ==
+        Seq(Unified2.U2Record.empty("f", 0, 104)))
+    }
+    Seq(Unified2.EventV1, Unified2.EventIp6V1, Unified2.EventV2,
+      Unified2.EventIp6V2, Unified2.Packet, Unified2.ExtraData).foreach { t =>
+      val recs = Unified2.parseFile("f", short(t) ++ next)
+      assert(recs.length == 2, s"type $t")
+      assert(recs.head.sensor_id.isEmpty, s"type $t")
+      assert(recs(1).event_id.contains(3L), s"type $t: parsing resumes")
+    }
+    // no alert is assembled from the framing-only event
+    assert(Unified2.assembleFile("s", parsed).isEmpty)
   }
 }

@@ -20,14 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IndexCachePurgeSpec extends AnyFunSuite {
 
-  private def build(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def build(): SparkSession = SparkSuite.session()
 
   test("stopped session's registry entries drop on the next touch") {
     val s1 = build()

@@ -128,8 +128,7 @@ class Round19Spec extends SparkSuite {
     // longer drain — same corpus, 12 ratchets. If eviction tracked
     // batches instead of open sessions, tripling the batch count
     // would shift residency; the exact per-batch equality below says
-    // it tracks the watermark alone. (SessPlateau is the sf10-scale
-    // measured twin of this test.)
+    // it tracks the watermark alone.
     val K = 12
     val root = StreamOps.timerSessPrep(spark, sfDir, K)
     val (closed, ckptOpt) =
@@ -205,34 +204,5 @@ class Round19Spec extends SparkSuite {
     assert(a.count() > 0, "fixture must produce fuzzy pairs")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "inline-verify output must equal the shipped formulation")
-  }
-
-  test("DiagArgs: value-taking flags do not leak their value into dirs") {
-    assert(DiagArgs.dirs(Array("d1", "--reps", "5", "d2"), "def") ==
-      Seq("d1", "d2"))
-    assert(DiagArgs.dirs(Array("--reps", "5"), "def") == Seq("def"))
-    assert(DiagArgs.dirs(Array("--sortagg", "d1", "--parts", "64"),
-      "def") == Seq("d1"))
-    assert(DiagArgs.dirs(Array.empty[String], "def") == Seq("def"))
-    assert(DiagArgs.intFlag(Array("--reps", "5"), "--reps").contains(5))
-    assert(DiagArgs.intFlag(Array("d"), "--reps").isEmpty)
-    // ADVICE r19: SessPlateau's --buckets landed without a ValueFlags
-    // entry, so its value parsed as a corpus dir and the run crashed
-    // reading tables from dir "24"
-    assert(DiagArgs.dirs(Array("target/sf10", "--buckets", "24"), "def") ==
-      Seq("target/sf10"))
-    assert(DiagArgs.intFlag(Array("--buckets", "24"), "--buckets")
-      .contains(24))
-    // a non-integer value fails loud, naming the flag (not a bare
-    // NumberFormatException that dirs() silently disagrees with)
-    val e = intercept[RuntimeException](
-      DiagArgs.intFlag(Array("--reps", "foo"), "--reps"))
-    assert(e.getMessage.contains("--reps") &&
-      e.getMessage.contains("foo"))
-    // an UNREGISTERED flag string can't be queried at all — the
-    // require turns the add-a-flag-forget-the-set bug class into an
-    // immediate failure at the new call site
-    intercept[IllegalArgumentException](
-      DiagArgs.intFlag(Array("--novel", "3"), "--novel"))
   }
 }

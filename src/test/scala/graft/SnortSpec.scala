@@ -232,4 +232,14 @@ class SnortSpec extends SparkSuite {
       assert(r.getAs[String]("ip").split("\\.").length == 4)
     }
   }
+
+  test("alerts() builds no alert from a short-bodied event record") {
+    import spark.implicits._
+    val short = java.nio.ByteBuffer.allocate(18).putInt(Unified2.EventV2)
+      .putInt(10).array()
+    val recs = Unified2.parseFile("f", short).toDF()
+      .withColumn("sensor", lit("s"))
+    assert(recs.count() == 1)
+    assert(Unified2.alerts(recs).count() == 0)
+  }
 }

@@ -5,19 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite, lazy). */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkSuite.session()
 
   def q(name: String, dir: String) =
     SparkEntry.queries(name)(spark, dir)
 
   val sfDir = "/root/testdata/sf0.001"
+}
+
+object SparkSuite {
+  /** The mains' session at a fixed 4 slots, whatever the host. */
+  def session(): SparkSession = GraftSession.build("graft-test",
+    Map("spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4"))
 }
 
 /** Planted-fixture tables written once per JVM under target/fixtures:
@@ -33,7 +32,7 @@ object Fixtures {
   lazy val dir: String = {
     val d = "target/fixtures"
     val spark = SparkSession.getActiveSession.getOrElse(
-      SparkSession.builder().master("local[4]").getOrCreate())
+      SparkSuite.session())
     import spark.implicits._
 
     val base = baseText

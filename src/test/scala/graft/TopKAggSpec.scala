@@ -64,5 +64,4 @@ class TopKAggSpec extends SparkSuite {
     assert(rt.sorted.toSeq == Seq((9.0, 90L), (5.0, 50L)))
     assert(b.sorted.toSeq == rt.sorted.toSeq)
   }
-
 }

@@ -51,7 +51,18 @@ class ZOrderSpec extends SparkSuite {
     val pts = spark.range(65536)
       .select((col("id") / 256).cast("long").as("a"),
         pmod(col("id"), lit(256)).cast("long").as("b"))
-    ZOrder.writeClustered(pts, "a", "b", s"$root/z", nFiles = 16)
+    // repartitionByRange SAMPLES its boundaries, seeded by rdd.id, so
+    // they would shift with session history. A per-partition sample
+    // size of at least the row count makes the sample every row, and
+    // the boundaries the exact quantiles.
+    val sampleConf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    val prior = spark.conf.getOption(sampleConf)
+    spark.conf.set(sampleConf, "65536")
+    try ZOrder.writeClustered(pts, "a", "b", s"$root/z", nFiles = 16)
+    finally prior match {
+      case Some(v) => spark.conf.set(sampleConf, v)
+      case None => spark.conf.unset(sampleConf)
+    }
     pts.repartition(16).write.parquet(s"$root/h")
 
     val (zTouched, zTotal) = filesTouched(s"$root/z", 32, 63)
@@ -59,10 +70,6 @@ class ZOrderSpec extends SparkSuite {
     assert(zTotal == 16 && hTotal >= 16)
     // the 32x32 query rectangle is 1/64 of the space: a z-layout keeps
     // it inside very few rectangles; a hash layout smears it everywhere.
-    // Bound is 3, not 2: repartitionByRange SAMPLES its boundaries
-    // (seeded by rdd.id, so they shift with session history) — the
-    // 1024-value query z-run spans ≤2 ideal 4096-value files plus at
-    // most one more under sampling skew.
     assert(zTouched <= 3, s"z-order touched $zTouched of $zTotal")
     assert(hTouched == hTotal, s"hash touched $hTouched of $hTotal")
 
