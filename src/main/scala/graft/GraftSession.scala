@@ -8,8 +8,12 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions, where N is `SPARK_GRAFT_CPUS` when set and the
   * JVM's available processors otherwise; UTC session time;
   * `nanosAsLong` so TIMESTAMP_NS parquet columns read as longs
-  * (`Tables.normalizeEventTs` converts them); no UI; log level WARN. A main that needs something else
-  * passes it in `overrides`, which win over the defaults.
+  * (`Tables.normalizeEventTs` converts them); no UI; log level WARN; a
+  * codegen cache of 500 generated classes instead of Spark's 100, so a
+  * session that cycles through many entries does not compile the same
+  * classes again on every pass (picked from a 500 / 1 000 / 2 000
+  * sweep; see CHANGES.md). A main that needs something else passes it
+  * in `overrides`, which win over the defaults.
   */
 object GraftSession {
 
@@ -28,7 +32,8 @@ object GraftSession {
       "spark.sql.shuffle.partitions" -> n.toString,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.ui.enabled" -> "false") ++ overrides
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "500") ++ overrides
   }
 
   def build(app: String, overrides: Map[String, String] = Map.empty)

@@ -809,9 +809,11 @@ object TextOps {
       // in the output so the DuckDB twin hashes identically.
       //
       // r21 shape (guide §2.3/§2.4): tf is aggregated ONCE — entry-
-      // scratch persisted, so the df aggregate (broadcast build, which
-      // fills the cache) and the join's streamed side share one
-      // computation. Previously the subtree fed both as two plan
+      // scratch persisted, so the df aggregate (which fills the cache)
+      // and the join's other side share one computation. The df side is
+      // one row per distinct term, an unbounded vocabulary, so the join
+      // is not forced to broadcast: AQE broadcasts it while it is small
+      // and sort-merges it once it is not. Previously the subtree fed both as two plan
       // instances; AQE's exchange reuse deduped the exchange at sf0.1
       // but NOT at sf10, where the whole tokenize+aggregate ran twice
       // (measured: 28-30 s stable vs 3.9-4.5 s with the persist —
@@ -833,7 +835,7 @@ object TextOps {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("doc_id"))
           .orderBy(col("tf").desc, col("df").asc, col("term"))
-        tf.join(broadcast(df), Seq("term"))
+        tf.join(df, Seq("term"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
           .select(col("doc_id"), col("term"), col("tf"), col("df"),

@@ -242,6 +242,25 @@ object Unified2 {
       .withColumn("sensor", lit(sensor))
   }
 
+  /** The event rows of `records`, one per event record with an event
+    * id: the columns [[alerts]] carries before it correlates packets
+    * and extra data, without `packets`, `extra` and `event_ts`. A
+    * consumer that needs no packet or extra-data column reads this
+    * instead of [[alerts]]: every event row is one alert row there too
+    * (the packet and extra-data sides are grouped per key, so the left
+    * joins never fan out), and the plan carries no groupBy or join.
+    */
+  def events(records: DataFrame): DataFrame =
+    records.filter(col("rec_type").isin(EventV1, EventV2,
+        EventIp6V1, EventIp6V2) && col("event_id").isNotNull)
+      .select(col("sensor"), col("src_file"), col("rec_index"),
+        col("sensor_id"), col("event_id"), col("event_second"),
+        col("event_microsecond"), col("signature_id"), col("generator_id"),
+        col("signature_revision"), col("classification_id"),
+        col("priority_id"), col("ip_source"), col("ip_destination"),
+        col("sport_itype"), col("dport_icode"), col("protocol"),
+        col("impact_flag"), col("blocked"))
+
   /** Assemble alerts: each event row + its packets + extra-data blobs.
     * Correlation keys include the logical sensor AND the source file —
     * snort emits an event's PACKET/EXTRA_DATA records into the same
@@ -254,15 +273,7 @@ object Unified2 {
   def alerts(records: DataFrame): DataFrame = {
     val keys = Seq("sensor", "src_file", "sensor_id", "event_id",
       "event_second")
-    val ev = records.filter(col("rec_type").isin(EventV1, EventV2,
-        EventIp6V1, EventIp6V2) && col("event_id").isNotNull)
-      .select(col("sensor"), col("src_file"), col("rec_index"),
-        col("sensor_id"), col("event_id"), col("event_second"),
-        col("event_microsecond"), col("signature_id"), col("generator_id"),
-        col("signature_revision"), col("classification_id"),
-        col("priority_id"), col("ip_source"), col("ip_destination"),
-        col("sport_itype"), col("dport_icode"), col("protocol"),
-        col("impact_flag"), col("blocked"))
+    val ev = events(records)
     val pk = records.filter(col("rec_type") === Packet)
       .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(

@@ -56,13 +56,18 @@ object Spool {
   }
 
   /** The complete charlotte-equivalent ingest loop as one call: follow
-    * a spool, assemble + enrich alerts, append to a parquet sink. The
-    * rule maps are RE-READ inside every micro-batch — the Spark-native
-    * form of the reference's mtime-triggered rehash
-    * (/root/reference/charlotte/__init__.py:182-199): edit
-    * sid-msg.map on disk and the NEXT batch enriches with it, no
-    * restart. Runs one AvailableNow drain; call again after new files
-    * appear (or swap the trigger for continuous operation).
+    * a spool, enrich its events, append to a parquet sink. The parsed
+    * rule maps are kept across micro-batches, and each batch first
+    * compares every map file's (mtime, size, file key) stamp with the
+    * one it was parsed at and parses the file again if they differ —
+    * the reference's mtime-triggered rehash
+    * (/root/reference/charlotte/__init__.py:155-211): edit sid-msg.map
+    * in place or rename a new one over it, and the NEXT batch enriches
+    * with it, no restart. An in-place edit that keeps both the size and
+    * the mtime (a write within the filesystem's mtime granularity, or a
+    * restored mtime) is not seen, as in the reference. Runs one
+    * AvailableNow drain; call again after new files appear (or swap the
+    * trigger for continuous operation).
     */
   def ingestOnce(spark: SparkSession, dirs: Seq[String], prefix: String,
       sensor: String, sigMapPath: String, genMapPath: String,
@@ -160,26 +165,64 @@ object Spool {
     }
   }
 
-  /** Per-batch enrichment + parquet append shared by both ingest loops;
-    * the rule maps are RE-READ each batch = the reference's mtime-based
-    * hot reload.
+  /** Per-batch enrichment + parquet append shared by both ingest loops.
+    * The sink stores event columns only, so it enriches
+    * [[Unified2.events]], not the packet and extra-data assembly of
+    * [[Unified2.alerts]]. The parsed maps live in this query's closure
+    * and are parsed again only when a file's stamp changes (see
+    * [[ingestOnce]]).
     */
   private def enrichAndAppend(spark: SparkSession, sigMapPath: String,
       genMapPath: String, classMapPath: String, outPath: String,
-      checkpoint: String)
-      : (Dataset[Row], Long) => Unit = { (batch: Dataset[Row], id: Long) =>
-    val alerts = Maps.enrichClassifications(
-      Maps.enrichSignatures(Unified2.alerts(batch),
-        Maps.combinedSigMap(spark, sigMapPath, genMapPath)),
+      checkpoint: String): (Dataset[Row], Long) => Unit = {
+    val sigs = new StampedMaps(Seq(sigMapPath, genMapPath),
+      Maps.combinedSigMap(spark, sigMapPath, genMapPath))
+    val classes = new StampedMaps(Seq(classMapPath),
       Maps.classMap(spark, classMapPath))
-    idempotentAppend(spark,
-      alerts.select(col("sensor"), col("event_id"), col("event_second"),
-        col("signature_id"), col("generator_id"), col("sig_msg"),
-        col("sig_rev"), col("sig_priority"), col("class_name"),
-        Net.ipToString(col("ip_source")).as("src_ip"),
-        Net.ipToString(col("ip_destination")).as("dst_ip"),
-        col("sport_itype"), col("dport_icode"), col("protocol")),
-      outPath, id, checkpointNamespace(spark, checkpoint))
+    (batch: Dataset[Row], id: Long) => {
+      val alerts = Maps.enrichClassifications(
+        Maps.enrichSignatures(Unified2.events(batch), sigs()), classes())
+      idempotentAppend(spark,
+        alerts.select(col("sensor"), col("event_id"), col("event_second"),
+          col("signature_id"), col("generator_id"), col("sig_msg"),
+          col("sig_rev"), col("sig_priority"), col("class_name"),
+          Net.ipToString(col("ip_source")).as("src_ip"),
+          Net.ipToString(col("ip_destination")).as("dst_ip"),
+          col("sport_itype"), col("dport_icode"), col("protocol")),
+        outPath, id, checkpointNamespace(spark, checkpoint))
+    }
+  }
+
+  /** A map DataFrame parsed from local `paths`, kept until the
+    * (mtime, size, file key) stamp of one of them changes. The stamps
+    * are taken BEFORE the parse, so a file rewritten during it differs
+    * at the next call and is parsed again. A missing file throws, like
+    * the parse itself.
+    */
+  private[graft] final class StampedMaps(paths: Seq[String],
+      parse: => DataFrame) {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+
+    private var parsed: Option[(Seq[(FileTime, Long, AnyRef)], DataFrame)] =
+      None
+
+    private def stamp(path: String): (FileTime, Long, AnyRef) = {
+      val a = Files.readAttributes(Paths.get(path),
+        classOf[BasicFileAttributes])
+      (a.lastModifiedTime, a.size, a.fileKey)
+    }
+
+    def apply(): DataFrame = synchronized {
+      val now = paths.map(stamp)
+      parsed match {
+        case Some((`now`, df)) => df
+        case _ =>
+          val df = parse
+          parsed = Some((now, df))
+          df
+      }
+    }
   }
 
   /** Stable namespace for one checkpoint LIFETIME: the streaming query
@@ -333,7 +376,14 @@ object Spool {
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(outPath, s".batch_${ns}_$batchId.tmp")
     fs.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
+    // committer v2 moves each task's files straight into tmp and skips
+    // the job-level rename; `_SUCCESS` is not needed either: tmp itself
+    // is the staging area, steps 2-3 are the commit, and a replay
+    // deletes a torn tmp first
+    df.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(tmp.toString)
     fs.listStatus(out)
       .filter(st => st.isFile &&
         st.getPath.getName.startsWith(s"batch_${ns}_${batchId}_"))

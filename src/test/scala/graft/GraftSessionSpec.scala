@@ -33,6 +33,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(set("spark.sql.session.timeZone") == "UTC")
     assert(set("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(set("spark.ui.enabled") == "false")
+    assert(set("spark.sql.codegen.cache.maxEntries") == "500")
   }
 
   test("overrides win over the defaults and may add keys") {
@@ -52,5 +53,6 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "500")
   }
 }

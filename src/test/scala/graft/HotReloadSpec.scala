@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 
 import org.apache.spark.sql.functions._
 
@@ -8,9 +9,10 @@ import graft.sources.Unified2Fixture
 import graft.streaming.Spool
 
 /** Map hot-reload semantics: the reference rehashes sid-msg.map when
-  * its mtime changes (__init__.py:182-199); graft re-reads maps per
-  * micro-batch, so edits apply to the NEXT batch without a restart —
-  * and without rewriting history already ingested.
+  * its mtime changes (__init__.py:155-211); graft parses a map again
+  * when its (mtime, size, file key) stamp changes, so edits apply to
+  * the NEXT batch without a restart — and without rewriting history
+  * already ingested.
   */
 class HotReloadSpec extends SparkSuite {
 
@@ -52,5 +54,87 @@ class HotReloadSpec extends SparkSuite {
     assert(v2.filter(col("sig_msg") === "WEB-MISC test http alert")
       .count() == v1.filter(col("sig_msg") === "WEB-MISC test http alert")
       .count())
+  }
+
+  private val Renamed = "WEB-MISC TEST HTTP ALERT"
+  private def attrs(p: Path) =
+    Files.readAttributes(p, classOf[BasicFileAttributes])
+
+  /** One running follow query over the fixture spool: drains it, lets
+    * `edit` change sid-msg.map, rolls over a file holding one new
+    * sid-1000001 alert, and checks that this next batch, and only it,
+    * carries the edited message.
+    */
+  private def followAcrossEdit(name: String)(edit: Path => Unit): Unit = {
+    val root = Files.createTempDirectory(name).toString
+    val spool = s"$root/spool"
+    Unified2Fixture.writeSpool(spool)
+    val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
+    val out = s"$root/out"
+    val q = Spool.tailIngest(spark, Seq(spool), "snort.log", "s1", sid, gen,
+      cls, out, s"$root/ckpt", availableNow = false)
+    try {
+      q.processAllAvailable()
+      val n1 = spark.read.parquet(out).count()
+      assert(n1 == 7)
+      edit(Paths.get(sid))
+      Files.write(Paths.get(spool, "snort.log.1700000500"),
+        Unified2Fixture.eventV2(1, 44, 1700000500L, 1000001, 1, 3, 2, 1,
+          Array[Byte](10, 1, 1, 1), Array[Byte](10, 2, 2, 2), 7, 8, 6))
+      q.processAllAvailable()
+      val v2 = spark.read.parquet(out)
+      assert(v2.count() == n1 + 1)
+      assert(v2.filter(col("sig_msg") === Renamed).collect()
+        .map(_.getAs[Long]("event_id")).toSeq == Seq(44L),
+        "the edit must apply to the next batch, and only to it")
+    } finally q.stop()
+  }
+
+  test("follow: a same-length in-place map edit with a new mtime applies to the next batch") {
+    followAcrossEdit("graft-hotreload-inplace") { sid =>
+      val before = attrs(sid)
+      val text = Files.readString(sid)
+      Files.writeString(sid, text.replace("WEB-MISC test http alert", Renamed))
+      Files.setLastModifiedTime(sid, FileTime.fromMillis(
+        before.lastModifiedTime.toMillis + 10000L))
+      val after = attrs(sid)
+      assert(after.size == before.size)
+      assert(after.fileKey == before.fileKey)
+    }
+  }
+
+  test("follow: a map renamed over the old one applies to the next batch") {
+    followAcrossEdit("graft-hotreload-rename") { sid =>
+      val before = attrs(sid)
+      val next = sid.resolveSibling("sid-msg.map.new")
+      Files.writeString(next,
+        Files.readString(sid).replace("WEB-MISC test http alert", Renamed))
+      // same size and mtime: only the file key tells the files apart
+      Files.setLastModifiedTime(next, before.lastModifiedTime)
+      Files.move(next, sid, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      val after = attrs(sid)
+      assert(after.size == before.size)
+      assert(after.lastModifiedTime == before.lastModifiedTime)
+      assume(after.fileKey != null && after.fileKey != before.fileKey,
+        "the filesystem exposes no distinct file keys")
+    }
+  }
+
+  test("stamped maps parse again only after a stamp changes") {
+    val root = Files.createTempDirectory("graft-stamped")
+    val (sid, _, _) = Unified2Fixture.writeMaps(root.toString)
+    var parses = 0
+    val maps = new Spool.StampedMaps(Seq(sid), {
+      parses += 1
+      graft.snort.Maps.sigMap(spark, sid)
+    })
+    val first = maps()
+    assert(maps() eq first)
+    assert(parses == 1)
+    Files.setLastModifiedTime(Paths.get(sid), FileTime.fromMillis(
+      attrs(Paths.get(sid)).lastModifiedTime.toMillis + 10000L))
+    assert(maps() ne first)
+    assert(parses == 2)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.snort.SnortStar
+import graft.snort.{Maps, SnortStar}
 import graft.sources.{Unified2, Unified2Fixture}
 
 /** Golden tests for the charlotte-native pipeline: the fixture spool
@@ -241,5 +241,70 @@ class SnortSpec extends SparkSuite {
       .withColumn("sensor", lit("s"))
     assert(recs.count() == 1)
     assert(Unified2.alerts(recs).count() == 0)
+  }
+
+  test("enrichment keeps the alert columns, then the map columns, in order") {
+    val root = java.nio.file.Files.createTempDirectory("graft-enrich").toString
+    val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
+    val alerts = Unified2.alerts(Unified2.records(spark,
+      Seq(Unified2Fixture.writeSpool(s"$root/spool")), "snort.log", "s1"))
+    val sigs = Maps.enrichSignatures(alerts,
+      Maps.combinedSigMap(spark, sid, gen))
+    val both = Maps.enrichClassifications(sigs, Maps.classMap(spark, cls))
+    assert(both.columns.toSeq == alerts.columns.toSeq ++ Seq("sig_msg",
+      "sig_rev", "sig_priority", "class_name", "class_desc",
+      "class_priority"))
+    val t = both.schema
+    assert(t("sig_msg").dataType == org.apache.spark.sql.types.StringType)
+    assert(!t("sig_msg").nullable)
+    Seq("sig_rev", "sig_priority", "class_priority").foreach(c =>
+      assert(t(c).dataType == org.apache.spark.sql.types.LongType, c))
+    assert(!t("sig_rev").nullable)
+    assert(!t("class_name").nullable)
+    // a map with extra columns passes them through after sig_msg
+    assert(Maps.enrichSignatures(alerts, Maps.sigMap(spark, sid))
+      .columns.toSeq.takeRight(4) ==
+      Seq("sig_msg", "refs", "sig_rev", "sig_priority"))
+    assert(both.count() == 7)
+  }
+
+  test("a (gid, sid) repeated in a map file keeps its last line, one row per alert") {
+    val root = java.nio.file.Files.createTempDirectory("graft-dupmap")
+    val (_, _, cls) = Unified2Fixture.writeMaps(s"$root/maps")
+    val sid = root.resolve("sid-msg.map")
+    java.nio.file.Files.writeString(sid,
+      """|1000001 || WEB-MISC test http alert || url,example.com
+         |1000002 || DNS suspicious query
+         |1000003 || POLICY http proxy connect
+         |1000001 || WEB-MISC test http alert v2
+         |""".stripMargin)
+    val gen = root.resolve("gen-msg.map")
+    java.nio.file.Files.writeString(gen,
+      """|116 || 1 || snort decoder alert
+         |116 || 1 || snort decoder alert v2
+         |""".stripMargin)
+    // the parsers keep every line
+    assert(Maps.sigMap(spark, sid.toString).count() == 4)
+    assert(Maps.genMap(spark, gen.toString).count() == 2)
+    val combined = Maps.combinedSigMap(spark, sid.toString, gen.toString)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getString(2))
+    assert(combined.length == 4)
+    assert(combined.toMap == Map(
+      (1L, 1000001L) -> "WEB-MISC test http alert v2",
+      (1L, 1000002L) -> "DNS suspicious query",
+      (1L, 1000003L) -> "POLICY http proxy connect",
+      (116L, 1L) -> "snort decoder alert v2"))
+
+    val recs = Unified2.records(spark,
+      Seq(Unified2Fixture.writeSpool(s"$root/spool")), "snort.log", "s1")
+    val enriched = Maps.enrichClassifications(
+      Maps.enrichSignatures(Unified2.alerts(recs),
+        Maps.combinedSigMap(spark, sid.toString, gen.toString)),
+      Maps.classMap(spark, cls)).collect()
+    // 7 alerts in the fixture, three of them sid 1000001: one row each
+    assert(enriched.length == 7)
+    assert(enriched.map(_.getAs[Long]("event_id")).distinct.length == 7)
+    assert(enriched.count(_.getAs[String]("sig_msg") ==
+      "WEB-MISC test http alert v2") == 3)
   }
 }

@@ -95,6 +95,40 @@ class SpoolTailSpec extends SparkSuite {
       "WEB-MISC test http alert").count() == 3)
   }
 
+  test("tailIngest warehouse equals the alerts()-based projection row for row") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.Net
+    import graft.snort.Maps
+    import graft.sources.Unified2
+    // the fixture spool carries packets (one alert has two, one none)
+    // and an extra-data record next to its events
+    val root = Files.createTempDirectory("graft_tailrows").toString
+    val spool = Unified2Fixture.writeSpool(s"$root/spool")
+    val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
+    val out = s"$root/out"
+    graft.streaming.Spool.tailIngest(spark, Seq(spool), "snort.log", "s1",
+      sid, gen, cls, out, s"$root/ckpt", availableNow = true)
+
+    val assembled = Maps.enrichClassifications(
+      Maps.enrichSignatures(
+        Unified2.alerts(Unified2.records(spark, Seq(spool), "snort.log", "s1")),
+        Maps.combinedSigMap(spark, sid, gen)),
+      Maps.classMap(spark, cls))
+    val want = assembled.select(col("sensor"), col("event_id"),
+      col("event_second"), col("signature_id"), col("generator_id"),
+      col("sig_msg"), col("sig_rev"), col("sig_priority"), col("class_name"),
+      Net.ipToString(col("ip_source")).as("src_ip"),
+      Net.ipToString(col("ip_destination")).as("dst_ip"),
+      col("sport_itype"), col("dport_icode"), col("protocol"))
+    val got = spark.read.parquet(out)
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      want.schema.map(f => f.name -> f.dataType))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long]).toSeq
+    assert(rows(want).length == 7)
+    assert(rows(got) == rows(want))
+  }
+
   test("purgeIngested deletes only fully-committed rolled-over files") {
     val dir = Files.createTempDirectory("graft_purge").toString
     val f1 = Paths.get(dir, "snort.log.1800000001")
