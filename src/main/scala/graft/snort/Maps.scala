@@ -3,20 +3,26 @@ package graft.snort
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Snort rule-map parsers: sid-msg.map, gen-msg.map,
-  * classification.config → small DataFrames meant to be BROADCAST
-  * against the alert stream (the reference loads them into in-process
-  * dicts and mtime-polls for changes, /root/reference/charlotte/
-  * __init__.py:155-211). The follow sink keeps the parsed maps across
-  * micro-batches and parses a file again only when its (mtime, size,
-  * file key) stamp changes — see [[graft.streaming.Spool.ingestOnce]].
+  * classification.config → small DataFrames for BROADCAST joins, or
+  * driver-side lookup maps for a projection (the reference loads them
+  * into in-process dicts and mtime-polls for changes, charlotte's
+  * __init__.py:155-211).
   *
-  * Files are read driver-side (they are tiny config files, not data)
-  * and shipped as literal rows; every join against them is a broadcast
-  * join — zero shuffle on the 100 TB side.
+  * Files are read driver-side (they are tiny config files, not data).
+  * The batch API ([[enrichSignatures]] / [[enrichClassifications]])
+  * ships them as literal rows and joins with a broadcast hint — zero
+  * shuffle on the 100 TB side. The follow sink instead broadcasts the
+  * parsed lookups ([[sigLookup]] / [[classLookup]]) once per
+  * (mtime, size, file key) stamp and enriches with a projection
+  * ([[lookupSignatures]] / [[lookupClassifications]]), so a micro-batch
+  * runs no broadcast-exchange job — see
+  * [[graft.streaming.Spool.ingestOnce]]. Both paths build their
+  * fallback columns from the same helpers and give the same rows.
   */
 object Maps {
 
@@ -67,8 +73,7 @@ object Maps {
     * the classification id is the 1-based ordinal of the line — the
     * same convention idstools' ClassificationMap uses.
     */
-  def classMap(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
+  private def classRows(path: String): Seq[(Long, String, String, Long)] = {
     val prefix = "config classification:"
     lines(path).filter(_.toLowerCase.startsWith(prefix))
       .zipWithIndex
@@ -77,25 +82,61 @@ object Maps {
         if (parts.length >= 3 && asciiDigits(parts(2)))
           Some((i + 1L, parts(0), parts(1), parts(2).toLong))
         else None
-      }.toDF("class_id", "class_name", "class_desc", "class_priority")
+      }
   }
 
-  /** Combined signature lookup `(gid, sid, msg)`: sid-msg entries
-    * (gid 1) + gen-msg entries for every other generator, exactly one
-    * row per (gid, sid). A key a map file repeats keeps its LAST line,
-    * as the reference's dict load does; keeping every line would make
-    * [[enrichSignatures]]' left join emit the matching alert once per
-    * copy. One local relation, parsed on the driver.
+  /** classification.config as `(class_id, class_name, class_desc,
+    * class_priority)`, one row per parsed line (see [[classRows]]).
+    */
+  def classMap(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    classRows(path)
+      .toDF("class_id", "class_name", "class_desc", "class_priority")
+  }
+
+  /** class_id → class_name, the lookup behind [[classMap]]. */
+  def classLookup(path: String): Map[Long, String] =
+    classRows(path).map { case (id, name, _, _) => id -> name }.toMap
+
+  /** (gid, sid) → msg: sid-msg entries (gid 1) + gen-msg entries for
+    * every other generator. A key a map file repeats keeps its LAST
+    * line, as the reference's dict load does.
+    */
+  def sigLookup(sidPath: String, genPath: String): Map[(Long, Long), String] =
+    (sigRows(sidPath).map { case (g, s, m, _) => (g, s) -> m } ++
+      genRows(genPath).collect { case (g, s, m) if g != 1 => (g, s) -> m })
+      .toMap
+
+  /** Combined signature lookup `(gid, sid, msg)`: [[sigLookup]] as a
+    * local relation, exactly one row per (gid, sid); keeping every line
+    * of a repeated key would make [[enrichSignatures]]' left join emit
+    * the matching alert once per copy.
     */
   def combinedSigMap(spark: SparkSession, sidPath: String,
       genPath: String): DataFrame = {
     import spark.implicits._
-    val entries = sigRows(sidPath).map { case (g, s, m, _) => (g, s) -> m } ++
-      genRows(genPath).collect { case (g, s, m) if g != 1 => (g, s) -> m }
-    entries.toMap.toSeq.sortBy(_._1)
+    sigLookup(sidPath, genPath).toSeq.sortBy(_._1)
       .map { case ((g, s), m) => (g, s, m) }
       .toDF("gid", "sid", "msg")
   }
+
+  // The reference's fallbacks (__init__.py:186-204), one definition for
+  // the join API and the lookup projection: an unmapped (gid, sid) gets
+  // `Unknown Alert g:s`, rev 0 and priority 10; an unknown class id
+  // gets `unknown-classification`.
+  private def sigMsg(alerts: DataFrame, msg: Column): Column =
+    coalesce(msg, format_string("Unknown Alert %d:%d",
+      alerts("generator_id"), alerts("signature_id"))).as("sig_msg")
+
+  private def sigRevAndPriority(alerts: DataFrame,
+      matched: Column): Seq[Column] = Seq(
+    when(matched, coalesce(alerts("signature_revision"), lit(1L)))
+      .otherwise(lit(0L)).as("sig_rev"),
+    when(matched, alerts("priority_id")).otherwise(lit(10L))
+      .as("sig_priority"))
+
+  private def className(name: Column): Column =
+    coalesce(name, lit("unknown-classification")).as("class_name")
 
   /** Enrich alerts with signature metadata; unmapped (gid, sid) falls
     * back to `Unknown Alert g:s`, rev 0, priority 10 — byte-for-byte
@@ -105,21 +146,16 @@ object Maps {
     * (gid, sid), as [[combinedSigMap]] does.
     */
   def enrichSignatures(alerts: DataFrame, sigs: DataFrame): DataFrame = {
-    val matched = sigs("sid").isNotNull
     val sigCols = sigs.columns.toSeq.filterNot(Set("gid", "sid")).map {
-      case "msg" => coalesce(sigs("msg"), format_string("Unknown Alert %d:%d",
-        alerts("generator_id"), alerts("signature_id"))).as("sig_msg")
+      case "msg" => sigMsg(alerts, sigs("msg"))
       case c => sigs(c)
     }
     alerts.join(broadcast(sigs),
         alerts("generator_id") === sigs("gid") &&
           alerts("signature_id") === sigs("sid"),
         "left_outer")
-      .select(alerts.columns.toSeq.map(alerts(_)) ++ sigCols ++ Seq(
-        when(matched, coalesce(alerts("signature_revision"), lit(1L)))
-          .otherwise(lit(0L)).as("sig_rev"),
-        when(matched, alerts("priority_id")).otherwise(lit(10L))
-          .as("sig_priority")): _*)
+      .select(alerts.columns.toSeq.map(alerts(_)) ++ sigCols ++
+        sigRevAndPriority(alerts, sigs("sid").isNotNull): _*)
   }
 
   /** Enrich with classification names; unknown ids get
@@ -128,12 +164,37 @@ object Maps {
     */
   def enrichClassifications(alerts: DataFrame, classes: DataFrame): DataFrame = {
     val classCols = classes.columns.toSeq.filterNot(_ == "class_id").map {
-      case "class_name" => coalesce(classes("class_name"),
-        lit("unknown-classification")).as("class_name")
+      case "class_name" => className(classes("class_name"))
       case c => classes(c)
     }
     alerts.join(broadcast(classes),
         alerts("classification_id") === classes("class_id"), "left_outer")
       .select(alerts.columns.toSeq.map(alerts(_)) ++ classCols: _*)
+  }
+
+  /** [[enrichSignatures]] against [[combinedSigMap]], as a projection
+    * over a broadcast [[sigLookup]]: no join, so no broadcast-exchange
+    * job. Output: the alert columns, then `sig_msg`, `sig_rev` and
+    * `sig_priority` — the same rows, types and nullability.
+    */
+  def lookupSignatures(alerts: DataFrame,
+      sigs: Broadcast[Map[(Long, Long), String]]): DataFrame = {
+    // a null gid or sid never matches, as in the join: the udf returns
+    // null for a null primitive argument without calling the function
+    val msgOf = udf((g: Long, s: Long) => sigs.value.getOrElse((g, s), null))
+    val msg = msgOf(alerts("generator_id"), alerts("signature_id"))
+    alerts.select(alerts.columns.toSeq.map(alerts(_)) ++
+      (sigMsg(alerts, msg) +: sigRevAndPriority(alerts, msg.isNotNull)): _*)
+  }
+
+  /** [[enrichClassifications]] against [[classMap]], as a projection
+    * over a broadcast [[classLookup]]. Output: the alert columns, then
+    * `class_name` — the only [[classMap]] column the follow sink keeps.
+    */
+  def lookupClassifications(alerts: DataFrame,
+      classes: Broadcast[Map[Long, String]]): DataFrame = {
+    val nameOf = udf((id: Long) => classes.value.getOrElse(id, null))
+    alerts.select(alerts.columns.toSeq.map(alerts(_)) :+
+      className(nameOf(alerts("classification_id"))): _*)
   }
 }

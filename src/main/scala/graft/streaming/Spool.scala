@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -57,17 +58,19 @@ object Spool {
 
   /** The complete charlotte-equivalent ingest loop as one call: follow
     * a spool, enrich its events, append to a parquet sink. The parsed
-    * rule maps are kept across micro-batches, and each batch first
-    * compares every map file's (mtime, size, file key) stamp with the
-    * one it was parsed at and parses the file again if they differ —
-    * the reference's mtime-triggered rehash
-    * (/root/reference/charlotte/__init__.py:155-211): edit sid-msg.map
-    * in place or rename a new one over it, and the NEXT batch enriches
-    * with it, no restart. An in-place edit that keeps both the size and
-    * the mtime (a write within the filesystem's mtime granularity, or a
-    * restored mtime) is not seen, as in the reference. Runs one
-    * AvailableNow drain; call again after new files appear (or swap the
-    * trigger for continuous operation).
+    * rule maps are kept across micro-batches as one broadcast per
+    * (mtime, size, file key) stamp, and each batch first compares every
+    * map file's stamp with the one it was parsed at; if they differ it
+    * parses the file again, broadcasts the new lookup and destroys the
+    * replaced one — the reference's mtime-triggered rehash
+    * (charlotte's __init__.py:155-211): edit sid-msg.map in place or
+    * rename a new one over it, and the NEXT batch enriches with it, no
+    * restart. An in-place edit that keeps both the size and the mtime
+    * (a write within the filesystem's mtime granularity, or a restored
+    * mtime) is not seen, as in the reference. Enrichment is a projection
+    * over the broadcast lookups, so a batch runs one Spark job: the
+    * write. Runs one AvailableNow drain; call again after new files
+    * appear (or swap the trigger for continuous operation).
     */
   def ingestOnce(spark: SparkSession, dirs: Seq[String], prefix: String,
       sensor: String, sigMapPath: String, genMapPath: String,
@@ -168,44 +171,55 @@ object Spool {
   /** Per-batch enrichment + parquet append shared by both ingest loops.
     * The sink stores event columns only, so it enriches
     * [[Unified2.events]], not the packet and extra-data assembly of
-    * [[Unified2.alerts]]. The parsed maps live in this query's closure
-    * and are parsed again only when a file's stamp changes (see
-    * [[ingestOnce]]).
+    * [[Unified2.alerts]]. The rule-map lookups are broadcast once per
+    * stamp (see [[ingestOnce]]) and applied by [[sinkRows]]'s
+    * projection, so the batch's only Spark job is the staging write.
     */
   private def enrichAndAppend(spark: SparkSession, sigMapPath: String,
       genMapPath: String, classMapPath: String, outPath: String,
       checkpoint: String): (Dataset[Row], Long) => Unit = {
-    val sigs = new StampedMaps(Seq(sigMapPath, genMapPath),
-      Maps.combinedSigMap(spark, sigMapPath, genMapPath))
-    val classes = new StampedMaps(Seq(classMapPath),
-      Maps.classMap(spark, classMapPath))
-    (batch: Dataset[Row], id: Long) => {
-      val alerts = Maps.enrichClassifications(
-        Maps.enrichSignatures(Unified2.events(batch), sigs()), classes())
+    val sigs = StampedMaps.broadcast(spark, Seq(sigMapPath, genMapPath))(
+      Maps.sigLookup(sigMapPath, genMapPath))
+    val classes = StampedMaps.broadcast(spark, Seq(classMapPath))(
+      Maps.classLookup(classMapPath))
+    (batch: Dataset[Row], id: Long) =>
       idempotentAppend(spark,
-        alerts.select(col("sensor"), col("event_id"), col("event_second"),
-          col("signature_id"), col("generator_id"), col("sig_msg"),
-          col("sig_rev"), col("sig_priority"), col("class_name"),
-          Net.ipToString(col("ip_source")).as("src_ip"),
-          Net.ipToString(col("ip_destination")).as("dst_ip"),
-          col("sport_itype"), col("dport_icode"), col("protocol")),
+        sinkRows(Unified2.events(batch), sigs(), classes()),
         outPath, id, checkpointNamespace(spark, checkpoint))
-    }
   }
 
-  /** A map DataFrame parsed from local `paths`, kept until the
-    * (mtime, size, file key) stamp of one of them changes. The stamps
-    * are taken BEFORE the parse, so a file rewritten during it differs
-    * at the next call and is parsed again. A missing file throws, like
-    * the parse itself.
+  /** The follow sink's columns: `events` enriched by the broadcast
+    * lookups, the same rows as [[Maps.enrichSignatures]] /
+    * [[Maps.enrichClassifications]] against [[Maps.combinedSigMap]] /
+    * [[Maps.classMap]] followed by [[sinkColumns]].
     */
-  private[graft] final class StampedMaps(paths: Seq[String],
-      parse: => DataFrame) {
+  private[graft] def sinkRows(events: DataFrame,
+      sigs: Broadcast[Map[(Long, Long), String]],
+      classes: Broadcast[Map[Long, String]]): DataFrame =
+    Maps.lookupClassifications(Maps.lookupSignatures(events, sigs), classes)
+      .select(sinkColumns: _*)
+
+  private[graft] def sinkColumns: Seq[Column] = Seq(col("sensor"),
+    col("event_id"), col("event_second"), col("signature_id"),
+    col("generator_id"), col("sig_msg"), col("sig_rev"), col("sig_priority"),
+    col("class_name"),
+    Net.ipToString(col("ip_source")).as("src_ip"),
+    Net.ipToString(col("ip_destination")).as("dst_ip"),
+    col("sport_itype"), col("dport_icode"), col("protocol"))
+
+  /** A value parsed from local `paths`, kept until the (mtime, size,
+    * file key) stamp of one of them changes; `release` then receives
+    * the replaced value. The stamps are taken BEFORE the parse, so a
+    * file rewritten during it differs at the next call and is parsed
+    * again. A missing file throws, like the parse itself, and keeps the
+    * current value.
+    */
+  private[graft] final class StampedMaps[T](paths: Seq[String],
+      parse: => T, release: T => Unit = (_: T) => ()) {
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 
-    private var parsed: Option[(Seq[(FileTime, Long, AnyRef)], DataFrame)] =
-      None
+    private var parsed: Option[(Seq[(FileTime, Long, AnyRef)], T)] = None
 
     private def stamp(path: String): (FileTime, Long, AnyRef) = {
       val a = Files.readAttributes(Paths.get(path),
@@ -213,16 +227,28 @@ object Spool {
       (a.lastModifiedTime, a.size, a.fileKey)
     }
 
-    def apply(): DataFrame = synchronized {
+    def apply(): T = synchronized {
       val now = paths.map(stamp)
       parsed match {
-        case Some((`now`, df)) => df
-        case _ =>
-          val df = parse
-          parsed = Some((now, df))
-          df
+        case Some((`now`, v)) => v
+        case old =>
+          val v = parse
+          parsed = Some((now, v))
+          old.foreach { case (_, replaced) => release(replaced) }
+          v
       }
     }
+  }
+
+  private[graft] object StampedMaps {
+    /** One broadcast of `parse` per stamp; a stamp change destroys the
+      * replaced broadcast, so reloads never grow the live set. An
+      * executor fetches the value once per stamp, not once per batch.
+      */
+    def broadcast[T: scala.reflect.ClassTag](spark: SparkSession,
+        paths: Seq[String])(parse: => T): StampedMaps[Broadcast[T]] =
+      new StampedMaps(paths, spark.sparkContext.broadcast(parse),
+        (b: Broadcast[T]) => b.destroy())
   }
 
   /** Stable namespace for one checkpoint LIFETIME: the streaming query

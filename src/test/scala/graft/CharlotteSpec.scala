@@ -13,7 +13,7 @@ import graft.sources.Unified2Fixture
 class CharlotteSpec extends SparkSuite {
 
   private def writeConfig(): (String, GraftConfig, String) = {
-    val root = Files.createTempDirectory("graft_cli").toString
+    val root = tempDir("graft_cli")
     val spool = Unified2Fixture.writeSpool(s"$root/spool")
     val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
     val conf = s"""{

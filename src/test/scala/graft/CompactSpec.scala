@@ -12,8 +12,7 @@ class CompactSpec extends SparkSuite {
 
   test("compactParquet merges a many-file directory losslessly") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact") + "/t"
     // simulate 30 micro-batch appends: one small file each
     (0 until 30).foreach { b =>
       Seq.tabulate(100)(i => (b.toLong * 100 + i, s"row-$b-$i"))
@@ -39,8 +38,7 @@ class CompactSpec extends SparkSuite {
   }
 
   test("missing dirs are skipped; an orphaned tmp rolls forward") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_compact2").toString
+    val root = tempDir("graft_compact2")
     // a sensor that never alerted: no dir, no error, no-op report
     assert(Compact.compactParquet(spark, s"$root/never") == (0, 0, 0L))
 
@@ -75,14 +73,12 @@ class CompactSpec extends SparkSuite {
 
   test("liveNamespaces releases retired checkpoints' newest batches") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_compact3").toString + "/t"
+    val dir = tempDir("graft_compact3") + "/t"
     val nsLive = "a" * 32
     val nsDead = "b" * 32
     // one ingest batch per (namespace, id): live has 0..1, dead has 0
     def writeBatch(ns: String, id: Long, v: Long): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_compact3_b").toString
+      val tmp = tempDir("graft_compact3_b")
       Seq((v, s"ns-$ns-$id")).toDF("id", "v").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
@@ -127,11 +123,9 @@ class CompactSpec extends SparkSuite {
 
   test("legacy \"\" namespace keeps its newest-batch exemption even when liveNamespaces excludes it") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_compact4").toString + "/t"
+    val dir = tempDir("graft_compact4") + "/t"
     def writeBatch(name: String, v: Long): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_compact4_b").toString
+      val tmp = tempDir("graft_compact4_b")
       Seq((v, name)).toDF("id", "v").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))

@@ -70,13 +70,13 @@ class CrashRecoverySpec extends SparkSuite {
   }
 
   test("replayed micro-batch after a simulated crash neither duplicates nor loses events") {
-    val dir = Files.createTempDirectory("graft_crash").toString
+    val dir = tempDir("graft_crash")
     val file = Paths.get(dir, "snort.log.1800000000")
     Files.write(file, alert(1) ++ alert(2))
     val (sid, gen, cls) = Unified2Fixture.writeMaps(
-      Files.createTempDirectory("graft_crash_maps").toString)
-    val out = Files.createTempDirectory("graft_crash_out").toString
-    val ckpt = Files.createTempDirectory("graft_crash_ckpt").toString
+      tempDir("graft_crash_maps"))
+    val out = tempDir("graft_crash_out")
+    val ckpt = tempDir("graft_crash_ckpt")
 
     def drain(): Unit = graft.streaming.Spool.tailIngest(spark, Seq(dir),
       "snort.log", "sC", sid, gen, cls, out, ckpt, availableNow = true)
@@ -123,13 +123,13 @@ class CrashRecoverySpec extends SparkSuite {
   }
 
   test("compaction between a crash and the recovering restart stays exactly-once") {
-    val dir = Files.createTempDirectory("graft_crashc").toString
+    val dir = tempDir("graft_crashc")
     val file = Paths.get(dir, "snort.log.1800000000")
     Files.write(file, alert(1) ++ alert(2))
     val (sid, gen, cls) = Unified2Fixture.writeMaps(
-      Files.createTempDirectory("graft_crashc_maps").toString)
-    val out = Files.createTempDirectory("graft_crashc_out").toString
-    val ckpt = Files.createTempDirectory("graft_crashc_ckpt").toString
+      tempDir("graft_crashc_maps"))
+    val out = tempDir("graft_crashc_out")
+    val ckpt = tempDir("graft_crashc_ckpt")
 
     def drain(): Unit = graft.streaming.Spool.tailIngest(spark, Seq(dir),
       "snort.log", "sCc", sid, gen, cls, out, ckpt, availableNow = true)
@@ -162,25 +162,25 @@ class CrashRecoverySpec extends SparkSuite {
 
   test("a fresh checkpoint cannot destroy a previous lifetime's batches") {
     val (sid, gen, cls) = Unified2Fixture.writeMaps(
-      Files.createTempDirectory("graft_crashn_maps").toString)
-    val out = Files.createTempDirectory("graft_crashn_out").toString
+      tempDir("graft_crashn_maps"))
+    val out = tempDir("graft_crashn_out")
 
     // lifetime A ingests event 1 (its batch 0)
-    val dirA = Files.createTempDirectory("graft_crashn_a").toString
+    val dirA = tempDir("graft_crashn_a")
     Files.write(Paths.get(dirA, "snort.log.1800000000"), alert(1))
     graft.streaming.Spool.tailIngest(spark, Seq(dirA), "snort.log", "sA",
       sid, gen, cls, out,
-      Files.createTempDirectory("graft_crashn_ckpta").toString,
+      tempDir("graft_crashn_ckpta"),
       availableNow = true)
 
     // lifetime B — a FRESH checkpoint, same outPath — also writes its
     // batch 0. Under bare-batch-id naming this DELETED lifetime A's
     // batch-0 files (ADVICE r12); query-id namespacing keeps both.
-    val dirB = Files.createTempDirectory("graft_crashn_b").toString
+    val dirB = tempDir("graft_crashn_b")
     Files.write(Paths.get(dirB, "snort.log.1800000000"), alert(9))
     graft.streaming.Spool.tailIngest(spark, Seq(dirB), "snort.log", "sB",
       sid, gen, cls, out,
-      Files.createTempDirectory("graft_crashn_ckptb").toString,
+      tempDir("graft_crashn_ckptb"),
       availableNow = true)
 
     val ids = spark.read.parquet(out)
@@ -197,14 +197,14 @@ class CrashRecoverySpec extends SparkSuite {
     // previous lifetime's files. The stream-start invalidation must
     // make this behave exactly like the fresh-path case above.
     val (sid, gen, cls) = Unified2Fixture.writeMaps(
-      Files.createTempDirectory("graft_crashr_maps").toString)
-    val out = Files.createTempDirectory("graft_crashr_out").toString
-    val ckpt = Files.createTempDirectory("graft_crashr_ckpt").toString
+      tempDir("graft_crashr_maps"))
+    val out = tempDir("graft_crashr_out")
+    val ckpt = tempDir("graft_crashr_ckpt")
 
     // lifetime A ingests event 1 (its batch 0), then the checkpoint
     // dir is deleted and recreated at the SAME path (a long-lived
     // ingest service resetting a stream)
-    val dirA = Files.createTempDirectory("graft_crashr_a").toString
+    val dirA = tempDir("graft_crashr_a")
     Files.write(Paths.get(dirA, "snort.log.1800000000"), alert(1))
     graft.streaming.Spool.tailIngest(spark, Seq(dirA), "snort.log", "sRa",
       sid, gen, cls, out, ckpt, availableNow = true)
@@ -220,7 +220,7 @@ class CrashRecoverySpec extends SparkSuite {
     Files.createDirectories(Paths.get(ckpt))
 
     // lifetime B, same checkpoint path, also writes its batch 0
-    val dirB = Files.createTempDirectory("graft_crashr_b").toString
+    val dirB = tempDir("graft_crashr_b")
     Files.write(Paths.get(dirB, "snort.log.1800000000"), alert(9))
     graft.streaming.Spool.tailIngest(spark, Seq(dirB), "snort.log", "sRb",
       sid, gen, cls, out, ckpt, availableNow = true)
@@ -241,8 +241,8 @@ class CrashRecoverySpec extends SparkSuite {
     // uncommitted and adopts them all — breaking the at-most-ONE-
     // adopted-batch invariant. Sequencing means anything <= the max
     // retained commit id is committed; only an id above it is adopted.
-    val out = Files.createTempDirectory("graft_crashp_out").toString
-    val ckpt = Files.createTempDirectory("graft_crashp_ckpt").toString
+    val out = tempDir("graft_crashp_out")
+    val ckpt = tempDir("graft_crashp_ckpt")
     // migrateLegacyBatches only RENAMES by name — content is never read
     Seq(0, 1, 2).foreach { id =>
       Files.write(Paths.get(out, s"batch_${id}_0.parquet"),
@@ -276,13 +276,13 @@ class CrashRecoverySpec extends SparkSuite {
   }
 
   test("pre-r13 legacy batch files migrate on upgrade: committed fold, uncommitted dedup") {
-    val dir = Files.createTempDirectory("graft_crashm").toString
+    val dir = tempDir("graft_crashm")
     val file = Paths.get(dir, "snort.log.1800000000")
     Files.write(file, alert(1) ++ alert(2))
     val (sid, gen, cls) = Unified2Fixture.writeMaps(
-      Files.createTempDirectory("graft_crashm_maps").toString)
-    val out = Files.createTempDirectory("graft_crashm_out").toString
-    val ckpt = Files.createTempDirectory("graft_crashm_ckpt").toString
+      tempDir("graft_crashm_maps"))
+    val out = tempDir("graft_crashm_out")
+    val ckpt = tempDir("graft_crashm_ckpt")
 
     def drain(): Unit = graft.streaming.Spool.tailIngest(spark, Seq(dir),
       "snort.log", "sM", sid, gen, cls, out, ckpt, availableNow = true)
@@ -345,13 +345,13 @@ class CrashRecoverySpec extends SparkSuite {
   }
 
   test("a torn staging dir from a crash mid-write is invisible and cleaned up") {
-    val dir = Files.createTempDirectory("graft_crash2").toString
+    val dir = tempDir("graft_crash2")
     val file = Paths.get(dir, "snort.log.1800000000")
     Files.write(file, alert(7))
     val (sid, gen, cls) = Unified2Fixture.writeMaps(
-      Files.createTempDirectory("graft_crash2_maps").toString)
-    val out = Files.createTempDirectory("graft_crash2_out").toString
-    val ckpt = Files.createTempDirectory("graft_crash2_ckpt").toString
+      tempDir("graft_crash2_maps"))
+    val out = tempDir("graft_crash2_out")
+    val ckpt = tempDir("graft_crash2_ckpt")
 
     def drain(): Unit = graft.streaming.Spool.tailIngest(spark, Seq(dir),
       "snort.log", "sC2", sid, gen, cls, out, ckpt, availableNow = true)

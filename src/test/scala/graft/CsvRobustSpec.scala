@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 class CsvRobustSpec extends SparkSuite {
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val d = tempDir("graft_csv")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$d/in.csv"),
       "id,name\n1,alpha\n2,beta\nnot-a-number,gamma\n4,delta\n")
@@ -39,7 +39,7 @@ class CsvRobustSpec extends SparkSuite {
     // a bad CAST is a null under PERMISSIVE semantics, not a malformed
     // record — only structural (arity) violations trip the mode, so
     // the fixture here has an over-arity row
-    val d2 = java.nio.file.Files.createTempDirectory("graft_csv2").toString
+    val d2 = tempDir("graft_csv2")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$d2/in.csv"),
       "id,name\n1,alpha\n2,beta\n3,gamma,EXTRA\n4,delta\n")

@@ -20,7 +20,7 @@ import graft.streaming.Spool
 class FollowSoakSpec extends SparkSuite {
 
   test("follow: hot-reload mid-follow, signal stop, checkpoint resume") {
-    val root = Files.createTempDirectory("graft-followsoak").toString
+    val root = tempDir("graft-followsoak")
     val spool = s"$root/spool"
     Unified2Fixture.writeSpool(spool)
     val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")

@@ -17,7 +17,7 @@ import graft.streaming.Spool
 class HotReloadSpec extends SparkSuite {
 
   test("edited sid-msg.map applies to the next micro-batch only") {
-    val root = Files.createTempDirectory("graft-hotreload").toString
+    val root = tempDir("graft-hotreload")
     val spool = s"$root/spool"
     Unified2Fixture.writeSpool(spool)
     val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
@@ -66,7 +66,7 @@ class HotReloadSpec extends SparkSuite {
     * carries the edited message.
     */
   private def followAcrossEdit(name: String)(edit: Path => Unit): Unit = {
-    val root = Files.createTempDirectory(name).toString
+    val root = tempDir(name)
     val spool = s"$root/spool"
     Unified2Fixture.writeSpool(spool)
     val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
@@ -122,7 +122,7 @@ class HotReloadSpec extends SparkSuite {
   }
 
   test("stamped maps parse again only after a stamp changes") {
-    val root = Files.createTempDirectory("graft-stamped")
+    val root = Paths.get(tempDir("graft-stamped"))
     val (sid, _, _) = Unified2Fixture.writeMaps(root.toString)
     var parses = 0
     val maps = new Spool.StampedMaps(Seq(sid), {
@@ -136,5 +136,26 @@ class HotReloadSpec extends SparkSuite {
       attrs(Paths.get(sid)).lastModifiedTime.toMillis + 10000L))
     assert(maps() ne first)
     assert(parses == 2)
+  }
+
+  test("map reloads do not grow the number of live map broadcasts") {
+    val root = tempDir("graft-stamped-bc")
+    val (sid, gen, _) = Unified2Fixture.writeMaps(root)
+    val maps = Spool.StampedMaps.broadcast(spark, Seq(sid, gen))(
+      graft.snort.Maps.sigLookup(sid, gen))
+    def live(bcs: Seq[org.apache.spark.broadcast.Broadcast[_]]) =
+      bcs.count(b => scala.util.Try(b.value).isSuccess)
+    val first = maps()
+    assert(maps() eq first, "an unchanged stamp keeps its broadcast")
+    val seen = first +: (1 to 5).map { _ =>
+      Files.setLastModifiedTime(Paths.get(sid), FileTime.fromMillis(
+        attrs(Paths.get(sid)).lastModifiedTime.toMillis + 10000L))
+      val b = maps()
+      assert(b.value == graft.snort.Maps.sigLookup(sid, gen))
+      b
+    }
+    assert(seen.distinct.length == 6, "every stamp change broadcasts anew")
+    assert(live(seen) == 1, "each reload destroys the broadcast it replaces")
+    assert(seen.last eq maps())
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.Properties
 
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ import graft.snort.SnortStar
 class JdbcSinkSpec extends SparkSuite {
 
   test("star tables survive a JDBC write + readback round-trip") {
-    val db = Files.createTempDirectory("graft_jdbc").toString + "/star"
+    val db = tempDir("graft_jdbc") + "/star"
     val url = s"jdbc:derby:$db;create=true"
     val props = new Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
@@ -87,7 +86,7 @@ class JdbcSinkSpec extends SparkSuite {
     // throws mid-partition must leave ZERO rows (the partition
     // transaction rolls back — no torn state for a retry to double),
     // then (2) the retried clean write lands every row exactly once.
-    val db = Files.createTempDirectory("graft_jdbc_rb").toString + "/rb"
+    val db = tempDir("graft_jdbc_rb") + "/rb"
     val url = s"jdbc:derby:$db;create=true"
     val props = new Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")

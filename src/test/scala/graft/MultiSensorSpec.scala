@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.snort.{Maps, SnortStar}
@@ -17,7 +15,7 @@ import graft.sources.{Unified2, Unified2Fixture}
 class MultiSensorSpec extends SparkSuite {
 
   test("per-sensor cid sequences are independent and dims stable") {
-    val root = Files.createTempDirectory("graft-multisensor").toString
+    val root = tempDir("graft-multisensor")
     Unified2Fixture.writeSpool(s"$root/a")
     Unified2Fixture.writeSpool(s"$root/b")
     val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")

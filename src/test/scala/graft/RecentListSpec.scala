@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -53,9 +51,9 @@ class RecentListSpec extends SparkSuite {
   test("buffer survives restart; late old events never evict newer ones") {
     import spark.implicits._
     withRocksDb {
-      val src = Files.createTempDirectory("graft_recent_src").toString
-      val ckpt = Files.createTempDirectory("graft_recent_ckpt").toString
-      val sink = Files.createTempDirectory("graft_recent_sink").toString
+      val src = tempDir("graft_recent_src")
+      val ckpt = tempDir("graft_recent_ckpt")
+      val sink = tempDir("graft_recent_sink")
 
       // drain 1: user 1 sees events at t=10,20,30
       Seq(StreamOps.SessEv(1L, 101L, 10L, 1.0),

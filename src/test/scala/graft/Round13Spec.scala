@@ -14,8 +14,7 @@ class Round13Spec extends SparkSuite {
   /** Write a documents table with the sf schema into a temp dir. */
   private def corpus(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_r13").toString
+    val dir = tempDir("graft_r13")
     rows.map { case (id, text, source) =>
       (id, text, "en", source, text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -62,8 +61,7 @@ class Round13Spec extends SparkSuite {
   /** Write an embeddings table with the sf schema into a temp dir. */
   private def embCorpus(rows: Seq[(Long, Array[Float], Int)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_r13e").toString
+    val dir = tempDir("graft_r13e")
     rows.map { case (id, v, l) => (id, v.toSeq, l) }
       .toDF("vec_id", "embedding", "label")
       .selectExpr("vec_id", "CAST(embedding AS array<float>) AS embedding",

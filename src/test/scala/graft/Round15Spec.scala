@@ -82,8 +82,7 @@ class Round15Spec extends SparkSuite {
 
   test("boilerNgrams: boiler set is the df>=3 head, n_grams counts repeats") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_r15").toString
+    val dir = tempDir("graft_r15")
     // gram "a b c" appears in docs 1,2,3 (df=3, boiler), twice in doc 1
     // (occurrences count with repeats); "x y z" df=2 (not boiler);
     // doc 4 has zero boiler grams (left-join + coalesce path)

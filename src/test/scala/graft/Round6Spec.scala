@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class Round6Spec extends SparkSuite {
 
   test("sigMap skips empty / unicode-digit / alpha sids instead of crashing") {
-    val dir = Files.createTempDirectory("maps6")
+    val dir = java.nio.file.Paths.get(tempDir("maps6"))
     val sid = dir.resolve("sid-msg.map")
     Files.writeString(sid,
       """|1 || ok alert
@@ -25,7 +25,7 @@ class Round6Spec extends SparkSuite {
   }
 
   test("genMap skips a line whose gid/aid is not ASCII-numeric") {
-    val dir = Files.createTempDirectory("maps6g")
+    val dir = java.nio.file.Paths.get(tempDir("maps6g"))
     val gen = dir.resolve("gen-msg.map")
     Files.writeString(gen, "1 || ٣ || bad\n2 || 7 || good\n")
     val g = graft.snort.Maps.genMap(spark, gen.toString).collect()
@@ -164,7 +164,7 @@ class Round6Spec extends SparkSuite {
   }
 
   test("classMap skips a non-numeric priority but its ordinal is consumed") {
-    val dir = Files.createTempDirectory("maps6c")
+    val dir = java.nio.file.Paths.get(tempDir("maps6c"))
     val cls = dir.resolve("classification.config")
     Files.writeString(cls,
       """|config classification: a,A desc,1

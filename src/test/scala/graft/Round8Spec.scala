@@ -91,11 +91,11 @@ class Round8Spec extends SparkSuite {
     def alert(id: Int): Array[Byte] =
       Unified2Fixture.eventV2(1, id, 1800000000L + id, 1000001, 1, 3, 2, 1,
         ip4(10, 0, 0, id), ip4(192, 168, 1, id), 1000 + id, 80, 6)
-    val dir = Files.createTempDirectory("graft_sig").toString
+    val dir = tempDir("graft_sig")
     val file = Paths.get(dir, "snort.log.1800000000")
     Files.write(file, alert(1) ++ alert(2))
-    val ckpt = Files.createTempDirectory("graft_sig_ckpt").toString
-    val out = Files.createTempDirectory("graft_sig_out").toString
+    val ckpt = tempDir("graft_sig_ckpt")
+    val out = tempDir("graft_sig_out")
     def start() = SpoolTail
       .streamRecords(spark, Seq(dir), "snort.log", "sensorSig")
       .writeStream.format("parquet").option("path", out)
@@ -126,7 +126,7 @@ class Round8Spec extends SparkSuite {
     // machine — including a concurrent Verify run's oracle base
     // (bit us in r11: the suite ran beside a Verify and its DuckDB
     // compare found every dump-backed oracle empty)
-    val sandbox = Files.createTempDirectory("graft_prune_spec")
+    val sandbox = java.nio.file.Paths.get(tempDir("graft_prune_spec"))
     val scratch = sandbox.resolve("graft_scratch")
     val base = scratch.resolve("oracle_base")
     Files.createDirectories(base)

@@ -244,7 +244,7 @@ class SnortSpec extends SparkSuite {
   }
 
   test("enrichment keeps the alert columns, then the map columns, in order") {
-    val root = java.nio.file.Files.createTempDirectory("graft-enrich").toString
+    val root = tempDir("graft-enrich")
     val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
     val alerts = Unified2.alerts(Unified2.records(spark,
       Seq(Unified2Fixture.writeSpool(s"$root/spool")), "snort.log", "s1"))
@@ -269,7 +269,7 @@ class SnortSpec extends SparkSuite {
   }
 
   test("a (gid, sid) repeated in a map file keeps its last line, one row per alert") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dupmap")
+    val root = java.nio.file.Paths.get(tempDir("graft-dupmap"))
     val (_, _, cls) = Unified2Fixture.writeMaps(s"$root/maps")
     val sid = root.resolve("sid-msg.map")
     java.nio.file.Files.writeString(sid,

@@ -1,11 +1,30 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite, lazy). */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session()
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything
+    * in it after the suite.
+    */
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => SparkSuite.deleteRecursively(d))
+    finally super.afterAll()
 
   def q(name: String, dir: String) =
     SparkEntry.queries(name)(spark, dir)
@@ -17,6 +36,14 @@ object SparkSuite {
   /** The mains' session at a fixed 4 slots, whatever the host. */
   def session(): SparkSession = GraftSession.build("graft-test",
     Map("spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4"))
+
+  def deleteRecursively(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
 }
 
 /** Planted-fixture tables written once per JVM under target/fixtures:

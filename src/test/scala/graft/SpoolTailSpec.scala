@@ -21,15 +21,15 @@ class SpoolTailSpec extends SparkSuite {
       ip4(10, 0, 0, id), ip4(192, 168, 1, id), 1000 + id, 80, 6)
 
   test("tail source follows a growing active file across batches and restarts") {
-    val dir = Files.createTempDirectory("graft_tail").toString
+    val dir = tempDir("graft_tail")
     val file = Paths.get(dir, "snort.log.1800000000")
     val r3 = alert(3)
 
     // batch 1 input: two complete records + a TORN half of record 3
     Files.write(file, alert(1) ++ alert(2) ++ r3.take(r3.length / 2))
 
-    val ckpt = Files.createTempDirectory("graft_tail_ckpt").toString
-    val out = Files.createTempDirectory("graft_tail_out").toString
+    val ckpt = tempDir("graft_tail_ckpt")
+    val out = tempDir("graft_tail_out")
     // parquet sink: the memory sink can't recover from a checkpoint
     def start() = SpoolTail
       .streamRecords(spark, Seq(dir), "snort.log", "sensorT")
@@ -72,13 +72,13 @@ class SpoolTailSpec extends SparkSuite {
   }
 
   test("tailIngest runs the full enrich loop over a growing file") {
-    val dir = Files.createTempDirectory("graft_tailingest").toString
+    val dir = tempDir("graft_tailingest")
     val file = Paths.get(dir, "snort.log.1800000000")
     Files.write(file, alert(1) ++ alert(2))
     val (sid, gen, cls) = Unified2Fixture.writeMaps(
-      Files.createTempDirectory("graft_tailingest_maps").toString)
-    val out = Files.createTempDirectory("graft_tailingest_out").toString
-    val ckpt = Files.createTempDirectory("graft_tailingest_ckpt").toString
+      tempDir("graft_tailingest_maps"))
+    val out = tempDir("graft_tailingest_out")
+    val ckpt = tempDir("graft_tailingest_ckpt")
 
     graft.streaming.Spool.tailIngest(spark, Seq(dir), "snort.log", "sT",
       sid, gen, cls, out, ckpt, availableNow = true)
@@ -102,16 +102,27 @@ class SpoolTailSpec extends SparkSuite {
     import graft.sources.Unified2
     // the fixture spool carries packets (one alert has two, one none)
     // and an extra-data record next to its events
-    val root = Files.createTempDirectory("graft_tailrows").toString
+    val root = tempDir("graft_tailrows")
     val spool = Unified2Fixture.writeSpool(s"$root/spool")
     val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
+    // map edge cases: a repeated sid (its last line wins), a gen-msg hit
+    // with gid != 1, a gen-msg gid 1 line (sid-msg owns gid 1), an
+    // unmapped gid-1 sid and an unknown class id
+    Files.writeString(Paths.get(sid), "1000002 || DNS suspicious query v2\n",
+      StandardOpenOption.APPEND)
+    def ev(id: Int, sig: Int, gen: Int, cls: Int) =
+      Unified2Fixture.eventV2(1, id, 1700000100L + id, sig, gen, 4, cls, 2,
+        ip4(10, 9, 0, id), ip4(192, 168, 9, id), 4000 + id, 443, 6)
+    Files.write(Paths.get(spool, "snort.log.1700000100"),
+      ev(101, 1000002, 1, 2) ++ ev(102, 1, 116, 1) ++ ev(103, 1, 1, 3) ++
+        ev(104, 2000000, 1, 2) ++ ev(105, 1000001, 1, 99))
     val out = s"$root/out"
     graft.streaming.Spool.tailIngest(spark, Seq(spool), "snort.log", "s1",
       sid, gen, cls, out, s"$root/ckpt", availableNow = true)
 
+    val records = Unified2.records(spark, Seq(spool), "snort.log", "s1")
     val assembled = Maps.enrichClassifications(
-      Maps.enrichSignatures(
-        Unified2.alerts(Unified2.records(spark, Seq(spool), "snort.log", "s1")),
+      Maps.enrichSignatures(Unified2.alerts(records),
         Maps.combinedSigMap(spark, sid, gen)),
       Maps.classMap(spark, cls))
     val want = assembled.select(col("sensor"), col("event_id"),
@@ -125,18 +136,81 @@ class SpoolTailSpec extends SparkSuite {
       want.schema.map(f => f.name -> f.dataType))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long]).toSeq
-    assert(rows(want).length == 7)
+    assert(rows(want).length == 12)
     assert(rows(got) == rows(want))
+    val msgs = rows(got).map(r => r(1) -> r(5)).toMap
+    assert(msgs(101L) == "DNS suspicious query v2")
+    assert(msgs(102L) == "snort decoder alert")
+    assert(msgs(103L) == "Unknown Alert 1:1")
+    assert(msgs(104L) == "Unknown Alert 1:2000000")
+    assert(rows(got).find(_(1) == 105L).get(8) == "unknown-classification")
+
+    // the sink's projection over broadcast lookups against the join API
+    // on the same events, before parquet makes every column nullable:
+    // equal rows, schema and nullability
+    val sc = spark.sparkContext
+    val events = Unified2.events(records)
+    val lookedUp = graft.streaming.Spool.sinkRows(events,
+      sc.broadcast(Maps.sigLookup(sid, gen)), sc.broadcast(Maps.classLookup(cls)))
+    val joined = Maps.enrichClassifications(
+      Maps.enrichSignatures(events, Maps.combinedSigMap(spark, sid, gen)),
+      Maps.classMap(spark, cls)).select(graft.streaming.Spool.sinkColumns: _*)
+    assert(lookedUp.schema == joined.schema)
+    assert(rows(lookedUp) == rows(joined))
+    assert(rows(lookedUp) == rows(want))
+  }
+
+  test("a non-empty follow micro-batch runs one Spark job with one task") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = tempDir("graft_tailjobs")
+    val spool = Unified2Fixture.writeSpool(s"$root/spool")
+    val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
+    val out = s"$root/out"
+    // (query id, batch id, tasks) of every job a streaming query starts
+    val jobs = new ConcurrentLinkedQueue[(String, String, Int)]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("graft.test.marker") == root) drained.countDown()
+          else Option(p.getProperty("sql.streaming.queryId")).foreach { q =>
+            jobs.add((q, p.getProperty("streaming.sql.batchId"),
+              e.stageInfos.map(_.numTasks).sum))
+          }
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val q = graft.streaming.Spool.tailIngest(spark, Seq(spool), "snort.log",
+        "s1", sid, gen, cls, out, s"$root/ckpt", availableNow = true)
+      // listener events arrive in order: once the listener sees this
+      // job, it has seen every job of the drain
+      sc.setLocalProperty("graft.test.marker", root)
+      try spark.range(1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(drained.await(60, TimeUnit.SECONDS))
+      assert(spark.read.parquet(out).count() == 7)
+      val perBatch = jobs.asScala.toSeq.filter(_._1 == q.id.toString)
+        .groupBy(_._2)
+      assert(perBatch.nonEmpty)
+      assert(perBatch.values.forall(_.size == 1),
+        s"jobs per batch: ${perBatch.map { case (b, js) => b -> js.size }}")
+      assert(perBatch.values.flatten.forall(_._3 == 1),
+        s"tasks per job: ${perBatch.values.flatten.map(_._3)}")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("purgeIngested deletes only fully-committed rolled-over files") {
-    val dir = Files.createTempDirectory("graft_purge").toString
+    val dir = tempDir("graft_purge")
     val f1 = Paths.get(dir, "snort.log.1800000001")
     val f2 = Paths.get(dir, "snort.log.1800000002")
     Files.write(f1, alert(1) ++ alert(2))
     Files.write(f2, alert(3))
-    val ckpt = Files.createTempDirectory("graft_purge_ckpt").toString
-    val out = Files.createTempDirectory("graft_purge_out").toString
+    val ckpt = tempDir("graft_purge_ckpt")
+    val out = tempDir("graft_purge_out")
 
     // nothing committed yet -> nothing purged
     assert(graft.streaming.Spool.purgeIngested(ckpt).isEmpty)
@@ -164,7 +238,7 @@ class SpoolTailSpec extends SparkSuite {
   }
 
   test("tail source drains a closed spool via AvailableNow") {
-    val root = Files.createTempDirectory("graft_tail_closed").toString
+    val root = tempDir("graft_tail_closed")
     val dir = Unified2Fixture.writeSpool(root + "/spool")
     // executor-side parquet sink, like the engine's own drains — the
     // memory sink is the driver-collect path the r17 wave removed from
@@ -193,5 +267,49 @@ class SpoolTailSpec extends SparkSuite {
     }
     assert(e.getMessage.contains("exceeds Int range"),
       s"wrong failure: ${e.getMessage}")
+  }
+
+  private def planned(files: (String, Long, Long, Long)*) = {
+    spark // the planner sizes partitions from the active session
+    val st = new graft.streaming.SpoolTailStream(Seq("/nonexistent"), "x")
+    val start = graft.streaming.SpoolTailOffset(files.map {
+      case (f, startOff, startIdx, _) => f -> Seq(startOff, startIdx)
+    }.toMap)
+    val end = graft.streaming.SpoolTailOffset(files.map {
+      case (f, _, startIdx, endOff) => f -> Seq(endOff, startIdx + 1)
+    }.toMap)
+    st.planInputPartitions(start, end).toSeq
+      .map(_.asInstanceOf[graft.streaming.SpoolTailPartition].ranges)
+  }
+
+  test("planner packs small ranges of several files into one partition, in path order") {
+    import graft.streaming.SpoolTailRange
+    val parts = planned(("/d1/snort.log.2", 100L, 7L, 900L),
+      ("/d0/snort.log.1", 0L, 0L, 4000L), ("/d2/snort.log.1", 50L, 3L, 60L),
+      ("/d0/snort.log.9", 10L, 1L, 10L)) // did not grow: no range
+    assert(parts == Seq(Seq(
+      SpoolTailRange("/d0/snort.log.1", 0L, 0, 4000L),
+      SpoolTailRange("/d1/snort.log.2", 100L, 7, 900L),
+      SpoolTailRange("/d2/snort.log.1", 50L, 3, 60L))))
+  }
+
+  test("planner splits a batch above the target size, never a file's range") {
+    import graft.streaming.{SpoolTail, SpoolTailRange}
+    val mb = 1L << 20
+    // 8.4 GB of growth caps the target at maxPartitionBytes (128 MB) for
+    // any slot count up to 64
+    assert(spark.sparkContext.defaultParallelism <= 64)
+    val parts = planned(("/a", 0L, 0L, 150 * mb), ("/b", 0L, 5L, 30 * mb),
+      ("/c", 0L, 9L, 60 * mb), ("/d", 0L, 2L, 160 * mb),
+      ("/e", 100L, 4L, 8000 * mb))
+    assert(parts == Seq(
+      Seq(SpoolTailRange("/a", 0L, 0, 150 * mb)),
+      Seq(SpoolTailRange("/b", 0L, 5, 30 * mb),
+        SpoolTailRange("/c", 0L, 9, 60 * mb)),
+      Seq(SpoolTailRange("/d", 0L, 2, 160 * mb)),
+      Seq(SpoolTailRange("/e", 100L, 4, 8000 * mb))))
+    assert(SpoolTail.partitionBytes(400 * mb, 4 * mb, 128 * mb, 4) == 100 * mb)
+    assert(SpoolTail.partitionBytes(4000 * mb, 4 * mb, 128 * mb, 4) == 128 * mb)
+    assert(SpoolTail.partitionBytes(mb, 4 * mb, 128 * mb, 4) == 4 * mb)
   }
 }

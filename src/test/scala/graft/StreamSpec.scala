@@ -61,7 +61,7 @@ class StreamSpec extends SparkSuite {
   }
 
   test("spool checkpoint resumes after restart (bookmark semantics)") {
-    val root = Files.createTempDirectory("graft-spool-resume").toString
+    val root = tempDir("graft-spool-resume")
     val spool = s"$root/spool"
     Unified2Fixture.writeSpool(spool)
     val ckpt = s"$root/ckpt"

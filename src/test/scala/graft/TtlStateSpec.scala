@@ -92,8 +92,7 @@ class TtlStateSpec extends SparkSuite {
   test("TTL'd counters expire between drains; a long TTL carries over") {
     withRocksDb {
       import spark.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ttl").toString
+      val root = tempDir("graft_ttl")
       Seq((1L, 1L), (1L, 2L), (1L, 3L)).toDF("user_id", "event_id")
         .write.mode("append").parquet(s"$root/src")
 

@@ -18,7 +18,7 @@ class WatermarkSpec extends SparkSuite {
   import spark.implicits._
 
   test("append-mode window agg drops events older than the watermark") {
-    val dir = Files.createTempDirectory("graft_wm").toString
+    val dir = tempDir("graft_wm")
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:00:00")
     def ts(minutes: Int) =
       new java.sql.Timestamp(t0.getTime + minutes * 60000L)

@@ -45,8 +45,7 @@ class ZOrderSpec extends SparkSuite {
 
   test("2-D range predicate prunes z-clustered files, not hash layout") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_zorder").toString
+    val root = tempDir("graft_zorder")
     // 64k points on a 256x256 grid, row-major (worst case for 1-D sort)
     val pts = spark.range(65536)
       .select((col("id") / 256).cast("long").as("a"),
