@@ -25,6 +25,31 @@ object Analytics {
   private def onePlus(c: Column): Column =
     (lit(1) + dec(c)).cast(DecimalType(3, 2))
 
+  /** q27's 30-min-gap sessionization in SQL — also the oracle of its
+    * streaming twin stream_session. */
+  private[graft] val sessionizeOracleSql: String =
+    """WITH e AS (
+          SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events),
+        s AS (SELECT *, CASE WHEN LAG(us) OVER w IS NULL
+              OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
+          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        t AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id
+            ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id FROM s)
+        SELECT user_id, sess_id, COUNT(*) AS n_events,
+          MIN(us) AS start_us, MAX(us) AS end_us,
+          CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sess_value
+        FROM t GROUP BY user_id, sess_id ORDER BY user_id, sess_id"""
+
+  /** q29's as-of join in SQL (DuckDB's native ASOF LEFT JOIN) — also
+    * the oracle of its streaming twin stream_asof. */
+  private[graft] val asofOracleSql: String =
+    """SELECT p.event_id, p.user_id, epoch_us(p.ts) AS p_us,
+        s.event_id AS s_event_id, epoch_us(s.ts) AS s_us
+        FROM (SELECT * FROM events WHERE event_type='purchase') p
+        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='signup') s
+        ON p.user_id = s.user_id AND p.ts >= s.ts
+        ORDER BY p.event_id"""
+
   val entries: Seq[Entry] = Seq(
     Entry(
       "q01_agg",
@@ -643,17 +668,7 @@ object Analytics {
             max(col("us")).as("end_us"), dsum(col("value")).as("sess_value"))
           .orderBy(col("user_id"), col("sess_id"))
       },
-      Some("""WITH e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events),
-        s AS (SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-              OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        t AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id
-            ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id FROM s)
-        SELECT user_id, sess_id, COUNT(*) AS n_events,
-          MIN(us) AS start_us, MAX(us) AS end_us,
-          CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sess_value
-        FROM t GROUP BY user_id, sess_id ORDER BY user_id, sess_id""")),
+      Some(sessionizeOracleSql)),
 
     Entry(
       "q29_asof_join",
@@ -675,12 +690,7 @@ object Analytics {
             col("s_event_id"), col("s_us"))
           .orderBy(col("event_id"))
       },
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS p_us,
-        s.event_id AS s_event_id, epoch_us(s.ts) AS s_us
-        FROM (SELECT * FROM events WHERE event_type='purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='signup') s
-        ON p.user_id = s.user_id AND p.ts >= s.ts
-        ORDER BY p.event_id""")),
+      Some(asofOracleSql)),
 
     // q28_approx_distinct moved to SketchOps (bracket-check oracle
     // contract alongside the other estimate sketches, VERDICT r11 #1)

@@ -705,22 +705,40 @@ object Analytics4 {
     */
   private[graft] def q71FuzzyCapped(s: org.apache.spark.sql.SparkSession,
       dir: String, cap: Int = Q71Cap): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.graft.DatasetBridge
     if (cap == Q71Cap) dumpQ71Buckets(s, dir)
-    val c = t(s, dir, "customer")
+    q71Verify(q71CappedCandidates(s, dir, cap), t(s, dir, "customer"))
+  }
+
+  /** Banded Levenshtein distance (≤ 2, else 3) of a_name and b_name. */
+  private def q71Dist: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graft.DatasetBridge
+    DatasetBridge.column(graft.functions.LevenshteinBand(
+      DatasetBridge.expression(col("a_name")),
+      DatasetBridge.expression(col("b_name")), 2)).cast("long")
+  }
+
+  /** q71's verify over candidate (a_key, b_key) pairs: name lookups
+    * from customer relation `c` — NO forced broadcast: the lookup side
+    * is the whole customer relation, which stops fitting the driver as
+    * the corpus grows (a forced broadcast() died on
+    * spark.driver.maxResultSize at the sf10 decade); AQE broadcasts it
+    * while it is genuinely small and shuffle-joins on the key — still
+    * linear — once it is not. Then the block-equality re-check (a
+    * 64-bit bucket-hash collision could smuggle a cross-block pair in)
+    * and the banded-Levenshtein verify.
+    */
+  private def q71Verify(cand: org.apache.spark.sql.DataFrame,
+      c: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val an = c.select(col("c_custkey").as("a_key"),
       col("c_name").as("a_name"), col("c_nationkey").as("a_nat"),
       col("c_mktsegment").as("a_seg"))
     val bn = c.select(col("c_custkey").as("b_key"),
       col("c_name").as("b_name"), col("c_nationkey").as("b_nat"),
       col("c_mktsegment").as("b_seg"))
-    q71CappedCandidates(s, dir, cap).join(an, "a_key").join(bn, "b_key")
+    cand.join(an, "a_key").join(bn, "b_key")
       .filter(col("a_nat") === col("b_nat") &&
         col("a_seg") === col("b_seg"))
-      .withColumn("dist", DatasetBridge.column(
-        graft.functions.LevenshteinBand(
-          DatasetBridge.expression(col("a_name")),
-          DatasetBridge.expression(col("b_name")), 2)).cast("long"))
+      .withColumn("dist", q71Dist)
       .filter(col("dist") <= 2)
       .select(col("a_key"), col("a_name"), col("b_key"), col("b_name"),
         col("dist"))
@@ -815,29 +833,7 @@ object Analytics4 {
         .join(keyed.toDF("b_key", "bk"), "bk")
         .filter(col("a_key") < col("b_key"))
         .select(col("a_key"), col("b_key")).distinct()
-      // name lookups: NO forced broadcast — the lookup side is the
-      // whole customer relation, which stops fitting the driver as
-      // the corpus grows (a forced broadcast() died on
-      // spark.driver.maxResultSize at the sf10 decade). AQE
-      // broadcasts it while it is genuinely small and shuffle-joins
-      // on the key — still linear — once it is not.
-      val an = c.select(col("c_custkey").as("a_key"),
-        col("c_name").as("a_name"), col("c_nationkey").as("a_nat"),
-        col("c_mktsegment").as("a_seg"))
-      val bn = c.select(col("c_custkey").as("b_key"),
-        col("c_name").as("b_name"), col("c_nationkey").as("b_nat"),
-        col("c_mktsegment").as("b_seg"))
-      cand.join(an, "a_key").join(bn, "b_key")
-        .filter(col("a_nat") === col("b_nat") &&
-          col("a_seg") === col("b_seg"))
-        .withColumn("dist", DatasetBridge.column(
-          graft.functions.LevenshteinBand(
-            DatasetBridge.expression(col("a_name")),
-            DatasetBridge.expression(col("b_name")), 2)).cast("long"))
-        .filter(col("dist") <= 2)
-        .select(col("a_key"), col("a_name"), col("b_key"), col("b_name"),
-          col("dist"))
-        .orderBy(col("a_key"), col("b_key"))
+      q71Verify(cand, c)
     } else {
       // inlineVerify (A/B only, VERDICT r18 #2 — LOST, ledgered in
       // SURVEY §21): carry the name through the blocking join and
@@ -864,10 +860,7 @@ object Analytics4 {
         // exactly as the postLookup path's post-join filter did
         .filter(col("a_key") < col("b_key") &&
           col("a_nat") === col("b_nat") && col("a_seg") === col("b_seg"))
-        .withColumn("dist", DatasetBridge.column(
-          graft.functions.LevenshteinBand(
-            DatasetBridge.expression(col("a_name")),
-            DatasetBridge.expression(col("b_name")), 2)).cast("long"))
+        .withColumn("dist", q71Dist)
         .filter(col("dist") <= 2)
         .select(col("a_key"), col("a_name"), col("b_key"), col("b_name"),
           col("dist"))

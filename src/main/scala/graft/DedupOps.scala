@@ -91,10 +91,7 @@ object DedupOps {
     * shared between the entry and the cached history Bloom below.
     */
   private def grams6(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), " "),
-          x => length(x) > lit(0)).as("tk"))
+    spaceTokens(s, dir)
       .select(col("doc_id"),
         explode(when(size(col("tk")) >= 6,
           transform(sequence(lit(1), size(col("tk")) - lit(5)),
@@ -374,6 +371,29 @@ object DedupOps {
         list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
         FROM documents))"""
 
+  /** LSH candidates over the dumped banded signatures: `cand` holds
+    * every (a < b) doc pair sharing a (band, bkey) bucket. */
+  private val bandCandCtes =
+    s"""bd AS (SELECT band, bkey, doc_id
+          FROM read_parquet('$dumpSql/banded/*.parquet')),
+        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+          FROM bd l JOIN bd r ON l.band = r.band AND l.bkey = r.bkey
+            AND l.doc_id < r.doc_id)"""
+
+  /** documents as (doc_id, tk): lower-cased space tokens, empty ones
+    * dropped — the word n-gram entries' tokenizer. */
+  private def spaceTokens(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"),
+        filter(split(lower(col("text")), " "),
+          x => length(x) > lit(0)).as("tk"))
+
+  /** SQL twin of [[spaceTokens]]. */
+  private val spaceTokensCte =
+    """toks AS (SELECT doc_id,
+            list_filter(string_split(lower(text), ' '),
+              x -> len(x) > 0) AS tk FROM documents)"""
+
   /** Build-once half of dedup_incremental's lifecycle: historical
     * banded signatures persisted as a band-partitioned parquet store
     * (the on-disk LSH posting-list layout). Built once per (session,
@@ -510,11 +530,7 @@ object DedupOps {
       // exact-Jaccard verification re-derived ENTIRELY from text via
       // the SQL shingle twin — int/int division, exact on both engines.
       Some(s"""WITH $shinglesSql,
-        bd AS (SELECT band, bkey, doc_id
-          FROM read_parquet('$dumpSql/banded/*.parquet')),
-        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-          FROM bd l JOIN bd r ON l.band = r.band AND l.bkey = r.bkey
-            AND l.doc_id < r.doc_id),
+        $bandCandCtes,
         v AS (SELECT a, b,
             CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE) /
               len(list_distinct(list_concat(x.shingles, y.shingles)))
@@ -548,11 +564,7 @@ object DedupOps {
       // vertex = its component's canonical keeper — independently
       // re-deriving what the distributed hash-min loop computes.
       Some(s"""WITH RECURSIVE $shinglesSql,
-        bd AS (SELECT band, bkey, doc_id
-          FROM read_parquet('$dumpSql/banded/*.parquet')),
-        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-          FROM bd l JOIN bd r ON l.band = r.band AND l.bkey = r.bkey
-            AND l.doc_id < r.doc_id),
+        $bandCandCtes,
         pv AS (SELECT a, b FROM (SELECT a, b,
             CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE) /
               len(list_distinct(list_concat(x.shingles, y.shingles)))
@@ -607,11 +619,7 @@ object DedupOps {
           .orderBy(col("contained"), col("container"))
       },
       Some(s"""WITH $shinglesSql,
-        bd AS (SELECT band, bkey, doc_id
-          FROM read_parquet('$dumpSql/banded/*.parquet')),
-        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-          FROM bd l JOIN bd r ON l.band = r.band AND l.bkey = r.bkey
-            AND l.doc_id < r.doc_id),
+        $bandCandCtes,
         v AS (SELECT a, b,
             CAST(len(list_intersect(x.shingles, y.shingles)) AS BIGINT)
               AS n_common,
@@ -664,11 +672,7 @@ object DedupOps {
           .orderBy(col("bin"))
       },
       Some(s"""WITH $shinglesSql,
-        bd AS (SELECT band, bkey, doc_id
-          FROM read_parquet('$dumpSql/banded/*.parquet')),
-        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-          FROM bd l JOIN bd r ON l.band = r.band AND l.bkey = r.bkey
-            AND l.doc_id < r.doc_id),
+        $bandCandCtes,
         v AS (SELECT a, b,
             CAST(len(list_intersect(x.shingles, y.shingles)) AS BIGINT)
               AS inter,
@@ -950,12 +954,7 @@ object DedupOps {
       // hashes are the inexpressible step); the cosine verify is
       // re-computed in SQL with the bit-exact normalize+dot fold the
       // knn_brute oracle proved (list_reduce ≡ the sequential kernel).
-      Some(s"""WITH norm AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
+      Some(s"""WITH ${SimilarityOps.normCte()},
         k AS (SELECT bucket, vec_id
           FROM read_parquet('$dumpSql/embbuckets/*.parquet')),
         cand AS (SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
@@ -1015,10 +1014,7 @@ object DedupOps {
       // full training scan — one shuffle total, on the output doc_id.
       // At 100 TB the eval-gram set is still MBs, exactly this plan.
       (s, dir) => {
-        val toks = t(s, dir, "documents")
-          .select(col("doc_id"),
-            filter(split(lower(col("text")), " "),
-              x => length(x) > lit(0)).as("tk"))
+        val toks = spaceTokens(s, dir)
         val grams = toks.select(col("doc_id"),
           explode(when(size(col("tk")) >= 8,
             transform(sequence(lit(1), size(col("tk")) - lit(7)),
@@ -1034,9 +1030,7 @@ object DedupOps {
             countDistinct(col("eval_doc")).as("n_eval_docs"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH toks AS (SELECT doc_id,
-            list_filter(string_split(lower(text), ' '),
-              x -> len(x) > 0) AS tk FROM documents),
+      Some(s"""WITH $spaceTokensCte,
         grams AS (SELECT doc_id, unnest([array_to_string(tk[i:i+7], ' ')
             for i in range(1, greatest(len(tk) - 7, 0) + 1)]) AS gram
           FROM toks),
@@ -1080,10 +1074,7 @@ object DedupOps {
       // per-token work that dwarfs what the ~90 B/gram string build
       // costs. Strings stay; the broadcast join never shuffles them.
       (s, dir) => {
-        val toks = t(s, dir, "documents")
-          .select(col("doc_id"),
-            filter(split(lower(col("text")), " "),
-              x => length(x) > lit(0)).as("tk"))
+        val toks = spaceTokens(s, dir)
         val grams = toks.select(col("doc_id"),
           size(col("tk")).cast("long").as("n_tokens"),
           explode(when(size(col("tk")) >= 13,
@@ -1114,9 +1105,7 @@ object DedupOps {
       // (start, gram) per position; range(start, start+13) matches
       // Spark's inclusive sequence(start, start+12). frac is the one
       // float: the same single INT/INT division on both engines.
-      Some("""WITH toks AS (SELECT doc_id,
-            list_filter(string_split(lower(text), ' '),
-              x -> len(x) > 0) AS tk FROM documents),
+      Some(s"""WITH $spaceTokensCte,
         grams AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
             unnest(range(1, greatest(len(tk) - 12, 0) + 1)) AS start,
             unnest([array_to_string(tk[i:i+12], ' ')
@@ -1321,9 +1310,7 @@ object DedupOps {
             countDistinct(col("hist_doc")).as("n_hist_docs"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH toks AS (SELECT doc_id,
-            list_filter(string_split(lower(text), ' '),
-              x -> len(x) > 0) AS tk FROM documents),
+      Some(s"""WITH $spaceTokensCte,
         grams AS (SELECT doc_id, unnest([array_to_string(tk[i:i+5], ' ')
             for i in range(1, greatest(len(tk) - 5, 0) + 1)]) AS gram
           FROM toks),

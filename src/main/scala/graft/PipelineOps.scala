@@ -297,16 +297,7 @@ object PipelineOps {
             col("doc_id"), col("score_q"))
           .orderBy(col("stage"), col("shard_id"), col("position"))
       },
-      Some(s"""WITH v AS (SELECT token, wq FROM read_parquet(
-            '${OracleDumps.SqlRoot}/text/classify_vocab/*.parquet')),
-        dd AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-            x -> len(x) > 0) AS w
-          FROM documents),
-        tok AS (SELECT doc_id, unnest(w) AS token
-          FROM dd WHERE len(w) >= 1),
-        sc AS (SELECT doc_id, COUNT(*) AS n_tok,
-            CAST(SUM(v.wq) AS BIGINT) AS score_q
-          FROM tok JOIN v USING (token) GROUP BY doc_id),
+      Some(s"""WITH ${TextOps.classifyScoreCtes},
         st AS (SELECT doc_id, score_q,
             CASE WHEN score_q * 100 >= 13000000000 * n_tok THEN 0
                  WHEN score_q * 100 >= 9000000000 * n_tok THEN 1
@@ -480,16 +471,7 @@ object PipelineOps {
           .select(col("doc_id"), col("score"), col("p_accept"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH v AS (SELECT token, wq FROM read_parquet(
-            '${OracleDumps.SqlRoot}/text/classify_vocab/*.parquet')),
-        dd AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-            x -> len(x) > 0) AS w
-          FROM documents),
-        tok AS (SELECT doc_id, unnest(w) AS token
-          FROM dd WHERE len(w) >= 1),
-        sc AS (SELECT doc_id, COUNT(*) AS n_tok,
-            CAST(SUM(v.wq) AS BIGINT) AS score_q
-          FROM tok JOIN v USING (token) GROUP BY doc_id),
+      Some(s"""WITH ${TextOps.classifyScoreCtes},
         s2 AS (SELECT doc_id,
             CAST(score_q AS DOUBLE) / 1e9 / n_tok AS score,
             LEAST(GREATEST(0.5 + CAST(score_q AS DOUBLE) / 1e9 / n_tok,

@@ -239,6 +239,109 @@ object SimilarityOps {
         col("e.key").as("vec_id"), col("e.ord").as(simCol))
   }
 
+  /** The query side of a probe: `emb`'s rows matching `pred` as
+    * (qid, qvec). */
+  private def queryVecs(emb: DataFrame, pred: Column): DataFrame =
+    emb.filter(pred)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+
+  /** knn_brute's scan: every corpus vector scored against each of the
+    * broadcast queries, the query itself excluded (`pred` may tighten
+    * the pair filter). The corpus never shuffles.
+    */
+  private def bruteScored(emb: DataFrame, q: DataFrame,
+      pred: Column = col("vec_id") =!= col("qid")): DataFrame =
+    emb.crossJoin(broadcast(q))
+      .filter(pred)
+      .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
+      .select(col("qid"), col("vec_id"), col("sim"))
+
+  /** IVF routing: each query's `nProbe` nearest cells by dot with the
+    * centroid, ties to the lower cell id — (csim DESC, cell ASC), the
+    * order every IVF oracle's `pr` CTE ranks by.
+    */
+  private[graft] def probeCells(queries: DataFrame, cen: DataFrame,
+      nProbe: Int): DataFrame = {
+    val wProbe = Window.partitionBy(col("qid"))
+      .orderBy(col("csim").desc, col("cell"))
+    queries.crossJoin(broadcast(cen))
+      .withColumn("csim", Vectors.dot(col("qvec"), col("cvec")))
+      .withColumn("crank", row_number().over(wProbe))
+      .filter(col("crank") <= nProbe)
+      .select(col("qid"), col("qvec"), col("cell"))
+  }
+
+  /** IVF top-k: probe each query's `nProbe` nearest cells, exact top-k
+    * within them. */
+  private def ivfTopK(cen: DataFrame, assigned: DataFrame,
+      queries: DataFrame, nProbe: Int, k: Int): DataFrame = {
+    val scored = assigned
+      .join(broadcast(probeCells(queries, cen, nProbe)), "cell")
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
+      .select(col("qid"), col("vec_id"), col("sim"))
+    topkPerQuery(scored, "sim", k)
+  }
+
+  /** Index-accelerated radius search: probe only the cells whose
+    * centroid angle clears acos(τ) + the cell's max member angle
+    * (`cenRadii` = centroids ⋈ radii, see [[cellRadii]]), exact τ
+    * filter inside them. Lossless by the triangle inequality.
+    */
+  private def radiusProbe(q: DataFrame, cenRadii: DataFrame,
+      assigned: DataFrame, tau: Double): DataFrame = {
+    val clamp1 = (c: Column) => greatest(lit(-1.0), least(lit(1.0), c))
+    val probes = q.crossJoin(broadcast(cenRadii))
+      .withColumn("cdot", Vectors.dot(col("qvec"), col("cvec")))
+      .filter(acos(clamp1(col("cdot"))) <=
+        lit(math.acos(tau)) + acos(clamp1(col("min_cdot"))) + lit(1e-6))
+      .select(col("qid"), col("qvec"), col("cell"))
+    assigned.join(broadcast(probes), "cell")
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
+      .filter(col("sim") >= tau)
+      .select(col("qid"), col("vec_id"), col("sim"))
+      .orderBy(col("qid"), col("vec_id"))
+  }
+
+  /** recall@5 per query of `approx` against `exact` (both (qid,
+    * vec_id) top-5 lists); every query of `q` reports, 0-hit ones
+    * included. */
+  private def recallAt5(q: DataFrame, exact: DataFrame,
+      approx: DataFrame): DataFrame = {
+    val hits = exact.join(approx, Seq("qid", "vec_id"))
+      .groupBy(col("qid")).agg(count(lit(1)).as("hits"))
+    q.select(col("qid")).join(hits, Seq("qid"), "left")
+      .select(col("qid"),
+        coalesce(col("hits"), lit(0L)).as("hits"),
+        (coalesce(col("hits"), lit(0L)).cast("double") / 5.0)
+          .as("recall"))
+      .orderBy(col("qid"))
+  }
+
+  /** Each assigned vector's dot with its cell's centroid, as `d`. */
+  private def centroidDots(asg: DataFrame, cen: DataFrame): DataFrame =
+    asg.join(broadcast(cen), "cell")
+      .withColumn("d", Vectors.dot(col("embedding"), col("cvec")))
+
+  /** Per (label, dim): the sorted left-fold sum `ssum` of the values
+    * and their count `n` — a reproducible float sum, since Spark's
+    * aggregate() and DuckDB's list_reduce() add in the same order. */
+  private def labelDimSums(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings")
+      .select(col("label"), posexplode(col("embedding"))
+        .as(Seq("pos", "v")))
+      .select(col("label"), col("pos"), col("v").cast("double").as("v"))
+      .groupBy(col("label"), col("pos"))
+      .agg(aggregate(array_sort(collect_list(col("v"))), lit(0.0),
+          (a, x) => a + x).as("ssum"),
+        count(lit(1)).as("n"))
+
+  /** Per-cell smallest member-to-centroid dot, as `name`. */
+  private def radiiOf(asg: DataFrame, cen: DataFrame,
+      name: String = "min_cdot"): DataFrame =
+    centroidDots(asg, cen).groupBy(col("cell")).agg(min(col("d")).as(name))
+
   /** IVF centroids: deterministic seeds (every 37th vector) refined by
     * two spherical k-means (Lloyd) iterations, entirely as DataFrame
     * ops — assign each vector to its nearest centroid (broadcast),
@@ -287,11 +390,7 @@ object SimilarityOps {
     */
   private def cellRadii(s: SparkSession, dir: String): DataFrame =
     IndexCache.getOrBuild(s, dir, "ivf_radii")(
-      assignedCached(s, dir)
-        .join(broadcast(centroids(s, dir)), "cell")
-        .withColumn("d", Vectors.dot(col("embedding"), col("cvec")))
-        .groupBy(col("cell")).agg(min(col("d")).as("min_cdot"))
-        .persist())
+      radiiOf(assignedCached(s, dir), centroids(s, dir)).persist())
 
   /** Standing BASE index for the incremental-refresh lifecycle
     * (knn_ivf_refresh): centroids trained on the base corpus only
@@ -314,10 +413,7 @@ object SimilarityOps {
         .select(col("cell"), col("vec_id"), col("embedding"))
         .persist())
     val radii = IndexCache.getOrBuild(s, dir, "ivf_refresh_radii")(
-      asg.join(broadcast(cen), "cell")
-        .withColumn("d", Vectors.dot(col("embedding"), col("cvec")))
-        .groupBy(col("cell")).agg(min(col("d")).as("min_cdot"))
-        .persist())
+      radiiOf(asg, cen).persist())
     (cen, asg, radii)
   }
 
@@ -337,9 +433,7 @@ object SimilarityOps {
       batch: DataFrame): (DataFrame, DataFrame) = {
     val batchAsg = withNearestCell(batch, col("embedding"), cen)
       .select(col("cell"), col("vec_id"), col("embedding"))
-    val batchRadii = batchAsg.join(broadcast(cen), "cell")
-      .withColumn("d", Vectors.dot(col("embedding"), col("cvec")))
-      .groupBy(col("cell")).agg(min(col("d")).as("bmin"))
+    val batchRadii = radiiOf(batchAsg, cen, "bmin")
     val radii2 = radii.join(batchRadii, Seq("cell"), "full_outer")
       .select(col("cell"),
         least(coalesce(col("min_cdot"), lit(1.0)),
@@ -407,6 +501,95 @@ object SimilarityOps {
       true
     })
 
+  /** SQL twin of [[embeddings]]: each vector divided by √Σx², the same
+    * left folds as Vectors.normalized; `cols` ride beside `e`.
+    */
+  private[graft] def normCte(cols: String = "vec_id"): String =
+    s"""norm AS (SELECT $cols,
+          list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
+            list_reduce(list_transform(embedding,
+              y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
+              (a,b) -> a+b))) AS e
+        FROM embeddings)"""
+
+  /** SQL twin of [[queryVecs]]: the `norm` rows matching `pred` as
+    * (qid, qe). */
+  private def qCte(pred: String, name: String = "q"): String =
+    s"$name AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE $pred)"
+
+  /** SQL twin of [[bruteScored]]: `name` holds the in-order dot (the
+    * fold knn_brute proves bit-exact) of every `norm` row with each
+    * query of `q`, the query itself excluded; `cols` adds columns,
+    * `pred` tightens the pair filter.
+    */
+  private def bruteSimCte(name: String = "s", q: String = "q",
+      cols: String = "", pred: String = ""): String =
+    s"""$name AS (SELECT $q.qid, n.vec_id$cols,
+          list_reduce(list_transform(range(1, len(n.e)+1),
+            i -> n.e[i]*$q.qe[i]), (a,b) -> a+b) AS sim
+        FROM norm n, $q WHERE n.vec_id <> $q.qid$pred)"""
+
+  /** The final top-5 per query of CTE `from`, ranked by (`score` DESC,
+    * vec_id) — TopKAgg's order — as (qid, rank, vec_id, score). */
+  private def top5Sql(from: String, score: String = "sim"): String =
+    s"""r AS (SELECT qid, CAST(row_number() OVER (PARTITION BY qid
+          ORDER BY $score DESC, vec_id) AS INT) AS rank, vec_id, $score
+        FROM $from)
+      SELECT qid, rank, vec_id, $score FROM r WHERE rank <= 5
+      ORDER BY qid, rank"""
+
+  /** `name` = the (qid, vec_id) of each query's top 5 in `from`, by
+    * (`score` DESC, vec_id). */
+  private def top5IdsCte(name: String, from: String,
+      score: String = "sim"): String =
+    s"""$name AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
+          row_number() OVER (PARTITION BY qid
+            ORDER BY $score DESC, vec_id) AS rnk FROM $from)
+        WHERE rnk <= 5)"""
+
+  /** knn_brute's oracle: exact top-5 of the query rows `qPred`;
+    * `qCols` / `pred` carry a label filter. */
+  private def bruteTop5Sql(qPred: String, normCols: String = "vec_id",
+      qCols: String = "e AS qe", pred: String = ""): String =
+    s"""WITH ${normCte(normCols)},
+      q AS (SELECT vec_id AS qid, $qCols FROM norm WHERE $qPred),
+      ${bruteSimCte(pred = pred)},
+      ${top5Sql("s")}"""
+
+  /** knn_range's oracle: every pair with cosine ≥ 0.25 for the query
+    * rows `qPred` — also the oracle of the lossless IVF radius probes. */
+  private def rangeSql(qPred: String): String =
+    s"""WITH ${normCte()},
+      ${qCte(qPred)},
+      ${bruteSimCte()}
+      SELECT qid, vec_id, sim FROM s
+      WHERE sim >= 0.25 ORDER BY qid, vec_id"""
+
+  /** The dumped IVF index: centroids and cell assignments. */
+  private def cenCte: String =
+    s"cen AS (SELECT cell, cvec FROM read_parquet('$dumpSql/centroids/*.parquet'))"
+  private def asgCte: String =
+    s"""asg AS (SELECT cell, vec_id, embedding
+        FROM read_parquet('$dumpSql/assignments/*.parquet'))"""
+
+  /** SQL twin of [[ivfTopK]]'s scan over `q` (qid, qe),
+    * `cen` and `asg`: rank the centroids per query by (csim DESC, cell),
+    * keep 4, score the probed cells' members as `sc`.
+    */
+  private def ivfScanCtes: String =
+    """cs AS (SELECT q.qid, q.qe, c.cell,
+          list_reduce(list_transform(range(1, len(c.cvec)+1),
+            i -> q.qe[i]*c.cvec[i]), (a,b) -> a+b) AS csim
+        FROM q CROSS JOIN cen c),
+      pr AS (SELECT qid, qe, cell FROM (SELECT *, row_number() OVER (
+          PARTITION BY qid ORDER BY csim DESC, cell) AS crank FROM cs)
+        WHERE crank <= 4),
+      sc AS (SELECT pr.qid, a.vec_id,
+          list_reduce(list_transform(range(1, len(a.embedding)+1),
+            i -> a.embedding[i]*pr.qe[i]), (x,y) -> x+y) AS sim
+        FROM asg a JOIN pr ON a.cell = pr.cell
+        WHERE a.vec_id <> pr.qid)"""
+
   /** The PQ/ADC serving path in SQL over the dumped codebooks+codes:
     * per-query lookup table from the bit-exact zip fold, per-vector
     * score = the 8 table entries folded IN SUBSPACE ORDER (matching
@@ -428,15 +611,9 @@ object SimilarityOps {
             FROM q CROSS JOIN cen c) cs) WHERE crank <= 4) pr
         JOIN asg a ON a.cell = pr.cell AND a.vec_id <> pr.qid
         JOIN ce ON ce.vec_id = a.vec_id"""
-    s"""WITH norm AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-            list_reduce(list_transform(embedding,
-              y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-              (a,b) -> a+b))) AS e
-        FROM embeddings),
-      q AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE $qidPred),
-      cen AS (SELECT cell, cvec
-        FROM read_parquet('$dumpSql/centroids/*.parquet')),
+    s"""WITH ${normCte()},
+      ${qCte(qidPred)},
+      $cenCte,
       asg AS (SELECT cell, vec_id
         FROM read_parquet('$dumpSql/assignments/*.parquet')),
       cb AS (SELECT m, code, cvec
@@ -455,12 +632,7 @@ object SimilarityOps {
         FROM cand c JOIN tab t ON t.qid = c.qid AND t.m = c.m
           AND t.code = c.code
         GROUP BY c.qid, c.vec_id HAVING COUNT(*) = 8),
-      r AS (SELECT qid, CAST(row_number() OVER (PARTITION BY qid
-          ORDER BY approx_dot DESC, vec_id) AS INT) AS rank, vec_id,
-          approx_dot
-        FROM sc)
-      SELECT qid, rank, vec_id, approx_dot FROM r WHERE rank <= 5
-      ORDER BY qid, rank"""
+      ${top5Sql("sc", "approx_dot")}"""
   }
 
   /** The IVF probe/serve path as a DuckDB query over the dumped index
@@ -468,34 +640,12 @@ object SimilarityOps {
     * pins it) and stream_knn (wider query set).
     */
   def ivfProbeSql(qidPred: String): String =
-    s"""WITH norm AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-            list_reduce(list_transform(embedding,
-              y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-              (a,b) -> a+b))) AS e
-        FROM embeddings),
-      cen AS (SELECT cell, cvec
-        FROM read_parquet('$dumpSql/centroids/*.parquet')),
-      asg AS (SELECT cell, vec_id, embedding
-        FROM read_parquet('$dumpSql/assignments/*.parquet')),
-      q AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE $qidPred),
-      cs AS (SELECT q.qid, q.qe, c.cell,
-          list_reduce(list_transform(range(1, len(c.cvec)+1),
-            i -> q.qe[i]*c.cvec[i]), (a,b) -> a+b) AS csim
-        FROM q CROSS JOIN cen c),
-      pr AS (SELECT qid, qe, cell FROM (SELECT *, row_number() OVER (
-          PARTITION BY qid ORDER BY csim DESC, cell) AS crank FROM cs)
-        WHERE crank <= 4),
-      sc AS (SELECT pr.qid, a.vec_id,
-          list_reduce(list_transform(range(1, len(a.embedding)+1),
-            i -> a.embedding[i]*pr.qe[i]), (x,y) -> x+y) AS sim
-        FROM asg a JOIN pr ON a.cell = pr.cell
-        WHERE a.vec_id <> pr.qid),
-      r AS (SELECT qid, CAST(row_number() OVER (PARTITION BY qid
-          ORDER BY sim DESC, vec_id) AS INT) AS rank, vec_id, sim
-        FROM sc)
-      SELECT qid, rank, vec_id, sim FROM r WHERE rank <= 5
-      ORDER BY qid, rank"""
+    s"""WITH ${normCte()},
+      $cenCte,
+      $asgCte,
+      ${qCte(qidPred)},
+      $ivfScanCtes,
+      ${top5Sql("sc")}"""
 
   /** The knn_graph serving path in SQL over the dumped index: every
     * assigned vector routes to its 4 nearest cells (csim DESC, cell —
@@ -505,23 +655,10 @@ object SimilarityOps {
     * pairs once (src < dst).
     */
   def knnGraphSql: String =
-    s"""WITH cen AS (SELECT cell, cvec
-          FROM read_parquet('$dumpSql/centroids/*.parquet')),
-      asg AS (SELECT cell, vec_id, embedding
-        FROM read_parquet('$dumpSql/assignments/*.parquet')),
+    s"""WITH $cenCte,
+      $asgCte,
       q AS (SELECT vec_id AS qid, embedding AS qe FROM asg),
-      cs AS (SELECT q.qid, q.qe, c.cell,
-          list_reduce(list_transform(range(1, len(c.cvec)+1),
-            i -> q.qe[i]*c.cvec[i]), (a,b) -> a+b) AS csim
-        FROM q CROSS JOIN cen c),
-      pr AS (SELECT qid, qe, cell FROM (SELECT *, row_number() OVER (
-          PARTITION BY qid ORDER BY csim DESC, cell) AS crank FROM cs)
-        WHERE crank <= 4),
-      sc AS (SELECT pr.qid, a.vec_id,
-          list_reduce(list_transform(range(1, len(a.embedding)+1),
-            i -> a.embedding[i]*pr.qe[i]), (x,y) -> x+y) AS sim
-        FROM asg a JOIN pr ON a.cell = pr.cell
-        WHERE a.vec_id <> pr.qid),
+      $ivfScanCtes,
       t AS (SELECT qid, vec_id, sim FROM (SELECT qid, vec_id, sim,
           row_number() OVER (PARTITION BY qid
             ORDER BY sim DESC, vec_id) AS rank FROM sc) WHERE rank <= 3)
@@ -617,22 +754,9 @@ object SimilarityOps {
     * scan only those cells' assignment partitions, exact top-k within.
     */
   def probeIndex(s: SparkSession, indexPath: String, queries: DataFrame,
-      nProbe: Int, k: Int): DataFrame = {
-    val cen = s.read.parquet(s"$indexPath/centroids")
-    val assigned = s.read.parquet(s"$indexPath/assignments")
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("csim").desc, col("cell"))
-    val probes = queries.crossJoin(broadcast(cen))
-      .withColumn("csim", Vectors.dot(col("qvec"), col("cvec")))
-      .withColumn("crank", row_number().over(wProbe))
-      .filter(col("crank") <= nProbe)
-      .select(col("qid"), col("qvec"), col("cell"))
-    val scored = assigned.join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-      .select(col("qid"), col("vec_id"), col("sim"))
-    topkPerQuery(scored, "sim", k)
-  }
+      nProbe: Int, k: Int): DataFrame =
+    ivfTopK(s.read.parquet(s"$indexPath/centroids"),
+      s.read.parquet(s"$indexPath/assignments"), queries, nProbe, k)
 
   val entries: Seq[Entry] = Seq(
     Entry(
@@ -646,8 +770,7 @@ object SimilarityOps {
         dumpOracleBase(s, dir)
         val idx = ivfStorePath(s, dir)
         writeIndex(s, dir, idx)
-        val q = embeddings(s, dir).filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        val q = queryVecs(embeddings(s, dir), col("vec_id") < 10)
         probeIndex(s, idx, q, nProbe = 4, k = 5)
           .orderBy(col("qid"), col("rank"))
       },
@@ -794,13 +917,8 @@ object SimilarityOps {
       // the similarity. No corpus shuffle until the tiny final top-k.
       (s, dir) => {
         val emb = embeddings(s, dir)
-        val q = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val scored = emb.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-          .select(col("qid"), col("vec_id"), col("sim"))
-        topkPerQuery(scored, "sim", 5)
+        topkPerQuery(bruteScored(emb, queryVecs(emb, col("vec_id") < 10)),
+            "sim", 5)
           .orderBy(col("qid"), col("rank"))
       },
       // DuckDB-expressible because every float step is replicated in
@@ -808,24 +926,7 @@ object SimilarityOps {
       // fold), rank (sim DESC, vec_id ASC = TopKAgg's tie-break).
       // list_reduce seeds with the first element vs our 0.0 — equal
       // for doubles (0.0 + x = x), so sims hash-match bit-for-bit.
-      Some("""WITH norm AS (
-          SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE vec_id < 10),
-        s AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q WHERE n.vec_id <> q.qid),
-        r AS (SELECT qid,
-            CAST(row_number() OVER (PARTITION BY qid
-              ORDER BY sim DESC, vec_id) AS INT) AS rank,
-            vec_id, sim FROM s)
-        SELECT qid, rank, vec_id, sim FROM r
-        WHERE rank <= 5 ORDER BY qid, rank""")),
+      Some(bruteTop5Sql("vec_id < 10"))),
 
     Entry(
       "knn_range",
@@ -842,8 +943,7 @@ object SimilarityOps {
       // (~1-3% pass per query; clustered real embeddings pass more).
       (s, dir) => {
         val emb = embeddings(s, dir)
-        val q = emb.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        val q = queryVecs(emb, col("vec_id") < 5)
         emb.crossJoin(broadcast(q))
           .filter(col("vec_id") =!= col("qid"))
           .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
@@ -853,20 +953,7 @@ object SimilarityOps {
       },
       // Bit-exact like knn_brute: identical normalize + in-order dot
       // folds, and the τ compare sees identical doubles on both sides.
-      Some("""WITH norm AS (
-          SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE vec_id < 5),
-        s AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q WHERE n.vec_id <> q.qid)
-        SELECT qid, vec_id, sim FROM s
-        WHERE sim >= 0.25 ORDER BY qid, vec_id""")),
+      Some(rangeSql("vec_id < 5"))),
 
     Entry(
       "knn_ivf_range",
@@ -889,40 +976,13 @@ object SimilarityOps {
       // and a pruned τ-boundary cell would break the bit-exact-equals-
       // knn_range contract (ADVICE r10). Extra kept cells only cost
       // scan; the exact τ re-filter discards them.
-      (s, dir) => {
-        val tau = 0.25
-        val q = embeddings(s, dir).filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val clamp1 = (c: Column) => greatest(lit(-1.0), least(lit(1.0), c))
-        val probes = q.crossJoin(broadcast(
-            centroids(s, dir).join(cellRadii(s, dir), "cell")))
-          .withColumn("cdot", Vectors.dot(col("qvec"), col("cvec")))
-          .filter(acos(clamp1(col("cdot"))) <=
-            lit(math.acos(tau)) + acos(clamp1(col("min_cdot"))) + lit(1e-6))
-          .select(col("qid"), col("qvec"), col("cell"))
-        assignedCached(s, dir).join(broadcast(probes), "cell")
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-          .filter(col("sim") >= tau)
-          .select(col("qid"), col("vec_id"), col("sim"))
-          .orderBy(col("qid"), col("vec_id"))
-      },
+      (s, dir) => radiusProbe(
+        queryVecs(embeddings(s, dir), col("vec_id") < 5),
+        centroids(s, dir).join(cellRadii(s, dir), "cell"),
+        assignedCached(s, dir), tau = 0.25),
       // Pruning is lossless, so the oracle is knn_range's verbatim:
       // same queries, same τ, same in-order normalize/dot folds.
-      Some("""WITH norm AS (
-          SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE vec_id < 5),
-        s AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q WHERE n.vec_id <> q.qid)
-        SELECT qid, vec_id, sim FROM s
-        WHERE sim >= 0.25 ORDER BY qid, vec_id""")),
+      Some(rangeSql("vec_id < 5"))),
 
     Entry(
       "knn_ivf_refresh",
@@ -940,44 +1000,17 @@ object SimilarityOps {
       // the oracle checks. Round11Spec additionally pins refresh ≡
       // full rebuild at the same centroids and the radii safety bound.
       (s, dir) => {
-        val tau = 0.25
         val (cen, asg, radii) = refreshBase(s, dir)
         val batch = embeddings(s, dir).filter(col("vec_id") % 7 === 3)
         val (asg2, radii2) = refreshIndex(cen, asg, radii, batch)
-        val q = embeddings(s, dir)
-          .filter(col("vec_id") >= 5 && col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val clamp1 = (c: Column) => greatest(lit(-1.0), least(lit(1.0), c))
-        val probes = q.crossJoin(broadcast(cen.join(radii2, "cell")))
-          .withColumn("cdot", Vectors.dot(col("qvec"), col("cvec")))
-          .filter(acos(clamp1(col("cdot"))) <=
-            lit(math.acos(tau)) + acos(clamp1(col("min_cdot"))) + lit(1e-6))
-          .select(col("qid"), col("qvec"), col("cell"))
-        asg2.join(broadcast(probes), "cell")
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-          .filter(col("sim") >= tau)
-          .select(col("qid"), col("vec_id"), col("sim"))
-          .orderBy(col("qid"), col("vec_id"))
+        val q = queryVecs(embeddings(s, dir),
+          col("vec_id") >= 5 && col("vec_id") < 10)
+        radiusProbe(q, cen.join(radii2, "cell"), asg2, tau = 0.25)
       },
       // Refresh + pruning are lossless, so the oracle is brute radius
       // search over the full corpus: same normalize/dot folds as
       // knn_range, query set [5,10).
-      Some("""WITH norm AS (
-          SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, e AS qe FROM norm
-          WHERE vec_id >= 5 AND vec_id < 10),
-        s AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q WHERE n.vec_id <> q.qid)
-        SELECT qid, vec_id, sim FROM s
-        WHERE sim >= 0.25 ORDER BY qid, vec_id""")),
+      Some(rangeSql("vec_id >= 5 AND vec_id < 10"))),
 
     Entry(
       "knn_ivf",
@@ -989,23 +1022,8 @@ object SimilarityOps {
       // embeddings the same plan recalls >0.9 at the same probe count.
       (s, dir) => {
         dumpOracleBase(s, dir)
-        val emb = embeddings(s, dir)
-        val cen = centroids(s, dir)
-        val assigned = assignedCached(s, dir)
-        val q = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val wProbe = Window.partitionBy(col("qid"))
-          .orderBy(col("csim").desc, col("cell"))
-        val probes = q.crossJoin(broadcast(cen))
-          .withColumn("csim", Vectors.dot(col("qvec"), col("cvec")))
-          .withColumn("crank", row_number().over(wProbe))
-          .filter(col("crank") <= 4)
-          .select(col("qid"), col("qvec"), col("cell"))
-        val scored = assigned.join(broadcast(probes), "cell")
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-          .select(col("qid"), col("vec_id"), col("sim"))
-        topkPerQuery(scored, "sim", 5)
+        val q = queryVecs(embeddings(s, dir), col("vec_id") < 10)
+        ivfTopK(centroids(s, dir), assignedCached(s, dir), q, 4, 5)
           .orderBy(col("qid"), col("rank"))
       },
       Some(ivfProbeSql("vec_id < 10"))),
@@ -1027,72 +1045,21 @@ object SimilarityOps {
       (s, dir) => {
         dumpOracleBase(s, dir)
         val emb = embeddings(s, dir)
-        val q = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val brute = topkPerQuery(
-          emb.crossJoin(broadcast(q))
-            .filter(col("vec_id") =!= col("qid"))
-            .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-            .select(col("qid"), col("vec_id"), col("sim")), "sim", 5)
+        val q = queryVecs(emb, col("vec_id") < 10)
+        val brute = topkPerQuery(bruteScored(emb, q), "sim", 5)
           .select(col("qid"), col("vec_id"))
-        val wProbe = Window.partitionBy(col("qid"))
-          .orderBy(col("csim").desc, col("cell"))
-        val probes = q.crossJoin(broadcast(centroids(s, dir)))
-          .withColumn("csim", Vectors.dot(col("qvec"), col("cvec")))
-          .withColumn("crank", row_number().over(wProbe))
-          .filter(col("crank") <= 4)
-          .select(col("qid"), col("qvec"), col("cell"))
-        val ivf = topkPerQuery(
-          assignedCached(s, dir).join(broadcast(probes), "cell")
-            .filter(col("vec_id") =!= col("qid"))
-            .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-            .select(col("qid"), col("vec_id"), col("sim")), "sim", 5)
+        val ivf = ivfTopK(centroids(s, dir), assignedCached(s, dir), q, 4, 5)
           .select(col("qid"), col("vec_id"))
-        val hits = brute.join(ivf, Seq("qid", "vec_id"))
-          .groupBy(col("qid")).agg(count(lit(1)).as("hits"))
-        // every query reports, 0-hit ones included
-        q.select(col("qid")).join(hits, Seq("qid"), "left")
-          .select(col("qid"),
-            coalesce(col("hits"), lit(0L)).as("hits"),
-            (coalesce(col("hits"), lit(0L)).cast("double") / 5.0)
-              .as("recall"))
-          .orderBy(col("qid"))
+        recallAt5(q, brute, ivf)
       },
-      Some(s"""WITH norm AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE vec_id < 10),
-        bs AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q WHERE n.vec_id <> q.qid),
-        br AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-            row_number() OVER (PARTITION BY qid
-              ORDER BY sim DESC, vec_id) AS rnk FROM bs)
-          WHERE rnk <= 5),
-        cen AS (SELECT cell, cvec
-          FROM read_parquet('$dumpSql/centroids/*.parquet')),
-        asg AS (SELECT cell, vec_id, embedding
-          FROM read_parquet('$dumpSql/assignments/*.parquet')),
-        cs AS (SELECT q.qid, q.qe, c.cell,
-            list_reduce(list_transform(range(1, len(c.cvec)+1),
-              i -> q.qe[i]*c.cvec[i]), (a,b) -> a+b) AS csim
-          FROM q CROSS JOIN cen c),
-        pr AS (SELECT qid, qe, cell FROM (SELECT *, row_number() OVER (
-            PARTITION BY qid ORDER BY csim DESC, cell) AS crank FROM cs)
-          WHERE crank <= 4),
-        sc AS (SELECT pr.qid, a.vec_id,
-            list_reduce(list_transform(range(1, len(a.embedding)+1),
-              i -> a.embedding[i]*pr.qe[i]), (x,y) -> x+y) AS sim
-          FROM asg a JOIN pr ON a.cell = pr.cell
-          WHERE a.vec_id <> pr.qid),
-        ir AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-            row_number() OVER (PARTITION BY qid
-              ORDER BY sim DESC, vec_id) AS rnk FROM sc)
-          WHERE rnk <= 5),
+      Some(s"""WITH ${normCte()},
+        ${qCte("vec_id < 10")},
+        ${bruteSimCte("bs")},
+        ${top5IdsCte("br", "bs")},
+        $cenCte,
+        $asgCte,
+        $ivfScanCtes,
+        ${top5IdsCte("ir", "sc")},
         h AS (SELECT qid, COUNT(*) AS hits
           FROM br JOIN ir USING (qid, vec_id) GROUP BY qid)
         SELECT q.qid, CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
@@ -1145,13 +1112,8 @@ object SimilarityOps {
           .parquet(s"${OracleDumps.root(s, dir)}/knn/hybrid_idf")
         val lexTop = hybridLexTop(docs, tok, idfTbl)
         val emb = embeddings(s, dir)
-        val qv = emb.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val vecTop = topkPerQuery(
-            emb.crossJoin(broadcast(qv))
-              .filter(col("vec_id") =!= col("qid"))
-              .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-              .select(col("qid"), col("vec_id"), col("sim")), "sim", 50)
+        val qv = queryVecs(emb, col("vec_id") < 5)
+        val vecTop = topkPerQuery(bruteScored(emb, qv), "sim", 50)
           .select(col("qid"), col("vec_id"), col("rank").as("vec_rank"))
         val fused = lexTop
           .join(vecTop, Seq("qid", "vec_id"), "full_outer")
@@ -1183,17 +1145,9 @@ object SimilarityOps {
             row_number() OVER (PARTITION BY qid
               ORDER BY lex_q DESC, vec_id) AS lex_rank FROM lex)
           WHERE lex_rank <= 50),
-        norm AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        qv AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE vec_id < 5),
-        vs AS (SELECT qv.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*qv.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, qv WHERE n.vec_id <> qv.qid),
+        ${normCte()},
+        ${qCte("vec_id < 5", "qv")},
+        ${bruteSimCte("vs", "qv")},
         v50 AS (SELECT qid, vec_id, vec_rank FROM (SELECT qid, vec_id,
             row_number() OVER (PARTITION BY qid
               ORDER BY sim DESC, vec_id) AS vec_rank FROM vs)
@@ -1232,34 +1186,14 @@ object SimilarityOps {
         val q = emb.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
             col("label").as("qlabel"))
-        val scored = emb.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("qid") &&
-            col("label") === col("qlabel"))
-          .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-          .select(col("qid"), col("vec_id"), col("sim"))
+        val scored = bruteScored(emb, q, col("vec_id") =!= col("qid") &&
+          col("label") === col("qlabel"))
         topkPerQuery(scored, "sim", 5)
           .orderBy(col("qid"), col("rank"))
       },
-      Some("""WITH norm AS (
-          SELECT vec_id, label,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, label AS qlabel, e AS qe
-          FROM norm WHERE vec_id < 10),
-        s AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q
-          WHERE n.vec_id <> q.qid AND n.label = q.qlabel),
-        r AS (SELECT qid,
-            CAST(row_number() OVER (PARTITION BY qid
-              ORDER BY sim DESC, vec_id) AS INT) AS rank,
-            vec_id, sim FROM s)
-        SELECT qid, rank, vec_id, sim FROM r
-        WHERE rank <= 5 ORDER BY qid, rank""")),
+      Some(bruteTop5Sql("vec_id < 10", normCols = "vec_id, label",
+        qCols = "label AS qlabel, e AS qe",
+        pred = " AND n.label = q.qlabel"))),
 
     Entry(
       "knn_mmr",
@@ -1279,15 +1213,10 @@ object SimilarityOps {
       // oracle's unrolled SQL.
       (s, dir) => {
         val emb = embeddings(s, dir)
-        val qv = emb.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        val qv = queryVecs(emb, col("vec_id") < 5)
         // candidate generation unchanged: knn_brute's broadcast scan +
         // TopKAgg — the only corpus-sized stage
-        val cand = topkPerQuery(
-          emb.crossJoin(broadcast(qv))
-            .filter(col("vec_id") =!= col("qid"))
-            .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-            .select(col("qid"), col("vec_id"), col("sim")), "sim", 20)
+        val cand = topkPerQuery(bruteScored(emb, qv), "sim", 20)
           .select(col("qid"), col("vec_id"), col("sim"))
         // r20 SINGLE-PASS greedy (guide §1.2 step 1 — the 5-round
         // dataframe loop was ~10 micro-jobs: per-round pen groupBy,
@@ -1358,17 +1287,9 @@ object SimilarityOps {
             col("st.vec_id").as("vec_id"), col("st.score").as("mmr"))
           .orderBy(col("qid"), col("step"))
       },
-      Some("""WITH norm AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        qv AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE vec_id < 5),
-        sims AS (SELECT qv.qid, n.vec_id, n.e,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*qv.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, qv WHERE n.vec_id <> qv.qid),
+      Some(s"""WITH ${normCte()},
+        ${qCte("vec_id < 5", "qv")},
+        ${bruteSimCte("sims", "qv", cols = ", n.e")},
         c AS (SELECT qid, vec_id, e, sim FROM (SELECT *,
             row_number() OVER (PARTITION BY qid
               ORDER BY sim DESC, vec_id) AS rnk FROM sims)
@@ -1484,12 +1405,7 @@ object SimilarityOps {
         sel.select(col("step"), col("vec_id"), col("max_dot"))
           .orderBy(col("step"))
       },
-      Some("""WITH norm AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
+      Some(s"""WITH ${normCte()},
         sel1 AS (SELECT vec_id, e FROM norm WHERE vec_id = 0),
         m2 AS (SELECT n.vec_id,
             MAX(list_reduce(list_transform(range(1, len(n.e)+1),
@@ -1553,14 +1469,7 @@ object SimilarityOps {
       // by class count × dims. (float→double is exact; 0.0 + x = x, so
       // the differing fold seeds agree.)
       (s, dir) =>
-        t(s, dir, "embeddings")
-          .select(col("label"), posexplode(col("embedding"))
-            .as(Seq("pos", "v")))
-          .select(col("label"), col("pos"), col("v").cast("double").as("v"))
-          .groupBy(col("label"), col("pos"))
-          .agg(aggregate(array_sort(collect_list(col("v"))), lit(0.0),
-              (a, x) => a + x).as("ssum"),
-            count(lit(1)).as("n"))
+        labelDimSums(s, dir)
           .select(col("label"), col("pos").cast("long").as("dim"),
             (col("ssum") / col("n")).as("mean"))
           .orderBy(col("label"), col("dim")),
@@ -1618,7 +1527,7 @@ object SimilarityOps {
           .select(col("rank"), col("vec_id"), col("cos_centroid"))
           .orderBy(col("rank"))
       },
-      Some("""WITH e AS (SELECT i - 1 AS pos,
+      Some(s"""WITH e AS (SELECT i - 1 AS pos,
             CAST(embedding[i] AS DOUBLE) AS v
           FROM embeddings,
             unnest(generate_series(1, len(embedding))) AS t(i)),
@@ -1630,12 +1539,7 @@ object SimilarityOps {
         cu AS (SELECT list_transform(cv, x -> x / sqrt(
             list_reduce(list_transform(cv, y -> y*y), (a,b) -> a+b)))
             AS cu FROM ca),
-        norm AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
+        ${normCte()},
         sc AS (SELECT n.vec_id,
             list_reduce(list_transform(range(1, len(n.e)+1),
               i -> n.e[i]*cu.cu[i]), (a,b) -> a+b) AS cos_centroid
@@ -1656,14 +1560,7 @@ object SimilarityOps {
       // (label, dim) centroid shuffle + one label re-agg; centroids
       // ride broadcast.
       (s, dir) => {
-        val cen = t(s, dir, "embeddings")
-          .select(col("label"), posexplode(col("embedding"))
-            .as(Seq("pos", "v")))
-          .select(col("label"), col("pos"), col("v").cast("double").as("v"))
-          .groupBy(col("label"), col("pos"))
-          .agg(aggregate(array_sort(collect_list(col("v"))), lit(0.0),
-              (a, x) => a + x).as("ssum"),
-            count(lit(1)).as("n"))
+        val cen = labelDimSums(s, dir)
           .select(col("label"), col("pos"), (col("ssum") / col("n")).as("m"))
           .groupBy(col("label"))
           .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
@@ -1686,7 +1583,7 @@ object SimilarityOps {
             col("cohesion"))
           .orderBy(col("label"))
       },
-      Some("""WITH e AS (SELECT label, i - 1 AS pos,
+      Some(s"""WITH e AS (SELECT label, i - 1 AS pos,
             CAST(embedding[i] AS DOUBLE) AS v
           FROM embeddings,
             unnest(generate_series(1, len(embedding))) AS t(i)),
@@ -1699,12 +1596,7 @@ object SimilarityOps {
         cu AS (SELECT label, list_transform(cv, x -> x / sqrt(
             list_reduce(list_transform(cv, y -> y*y), (a,b) -> a+b)))
             AS cu FROM ca),
-        norm AS (SELECT vec_id, label,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
+        ${normCte("vec_id, label")},
         sc AS (SELECT n.label,
             CAST(round(list_reduce(list_transform(range(1, len(n.e)+1),
               i -> n.e[i]*cu.cu[i]), (a,b) -> a+b) * 1e12) AS BIGINT)
@@ -1789,15 +1681,8 @@ object SimilarityOps {
         val (pqCen, codes) = pqIndex(s, dir, emb)
         val assigned = assignedCached(s, dir)
           .select(col("cell"), col("vec_id"))
-        val q = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val wProbe = Window.partitionBy(col("qid"))
-          .orderBy(col("csim").desc, col("cell"))
-        val probes = q.crossJoin(broadcast(cen))
-          .withColumn("csim", Vectors.dot(col("qvec"), col("cvec")))
-          .withColumn("crank", row_number().over(wProbe))
-          .filter(col("crank") <= 4)
-          .select(col("qid"), col("cell"))
+        val q = queryVecs(emb, col("vec_id") < 10)
+        val probes = probeCells(q, cen, 4).select(col("qid"), col("cell"))
         val table = pqTable(pqCen, q)
         val scored = assigned.join(broadcast(probes), "cell")
           .filter(col("vec_id") =!= col("qid"))
@@ -1830,9 +1715,7 @@ object SimilarityOps {
         dumpOracleBase(s, dir)
         val emb = embeddings(s, dir)
         val (cen, codes) = pqIndex(s, dir, emb)
-        val q = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        pqSearch(cen, codes, q, 5)
+        pqSearch(cen, codes, queryVecs(emb, col("vec_id") < 10), 5)
       },
       Some(pqProbeSql("vec_id < 10", ivfPruned = false))),
 
@@ -1854,9 +1737,8 @@ object SimilarityOps {
         val batch = embeddings(s, dir).filter(col("vec_id") % 7 === 3)
         val codes2 = rcodes.unionAll(encodeWithCodebooks(rcen, batch))
         dumpPqRefresh(s, dir, rcen, codes2)
-        val q = embeddings(s, dir)
-          .filter(col("vec_id") >= 10 && col("vec_id") < 15)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+        val q = queryVecs(embeddings(s, dir),
+          col("vec_id") >= 10 && col("vec_id") < 15)
         pqSearch(rcen, codes2, q, 5)
       },
       Some(pqProbeSql("vec_id >= 10 AND vec_id < 15", ivfPruned = false,
@@ -1875,17 +1757,13 @@ object SimilarityOps {
       // report is hash-exact.
       (s, dir) => {
         dumpOracleBase(s, dir)
-        assignedCached(s, dir)
-          .join(broadcast(centroids(s, dir)), "cell")
-          .withColumn("d", Vectors.dot(col("embedding"), col("cvec")))
+        centroidDots(assignedCached(s, dir), centroids(s, dir))
           .groupBy(col("cell"))
           .agg(count(lit(1)).as("n_vecs"), min(col("d")).as("min_cdot"))
           .orderBy(col("cell"))
       },
-      Some(s"""WITH cen AS (SELECT cell, cvec
-          FROM read_parquet('$dumpSql/centroids/*.parquet')),
-        asg AS (SELECT cell, vec_id, embedding
-          FROM read_parquet('$dumpSql/assignments/*.parquet')),
+      Some(s"""WITH $cenCte,
+        $asgCte,
         d AS (SELECT a.cell,
             list_reduce(list_transform(range(1, len(a.embedding)+1),
               i -> a.embedding[i]*c.cvec[i]), (x,y) -> x+y) AS d
@@ -1929,10 +1807,8 @@ object SimilarityOps {
       // The whole pipeline re-derived in SQL from the dumped index:
       // centroid-dot rank and pairwise cosine both use the bit-exact
       // in-order list_reduce fold the knn_brute oracle proved.
-      Some(s"""WITH cen AS (SELECT cell, cvec
-          FROM read_parquet('$dumpSql/centroids/*.parquet')),
-        asg AS (SELECT cell, vec_id, embedding
-          FROM read_parquet('$dumpSql/assignments/*.parquet')),
+      Some(s"""WITH $cenCte,
+        $asgCte,
         m AS (SELECT a.cell, a.vec_id, a.embedding,
             list_reduce(list_transform(range(1, len(a.embedding)+1),
               i -> a.embedding[i]*c.cvec[i]), (x,y) -> x+y) AS cdot
@@ -1993,40 +1869,17 @@ object SimilarityOps {
         dumpOracleBase(s, dir)
         val emb = embeddings(s, dir)
         val (cen, codes) = pqIndex(s, dir, emb)
-        val q = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val brute = topkPerQuery(
-          emb.crossJoin(broadcast(q))
-            .filter(col("vec_id") =!= col("qid"))
-            .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-            .select(col("qid"), col("vec_id"), col("sim")), "sim", 5)
+        val q = queryVecs(emb, col("vec_id") < 10)
+        val brute = topkPerQuery(bruteScored(emb, q), "sim", 5)
           .select(col("qid"), col("vec_id"))
         val pq = pqSearch(cen, codes, q, 5)
           .select(col("qid"), col("vec_id"))
-        val hits = brute.join(pq, Seq("qid", "vec_id"))
-          .groupBy(col("qid")).agg(count(lit(1)).as("hits"))
-        q.select(col("qid")).join(hits, Seq("qid"), "left")
-          .select(col("qid"),
-            coalesce(col("hits"), lit(0L)).as("hits"),
-            (coalesce(col("hits"), lit(0L)).cast("double") / 5.0)
-              .as("recall"))
-          .orderBy(col("qid"))
+        recallAt5(q, brute, pq)
       },
-      Some(s"""WITH norm AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, e AS qe FROM norm WHERE vec_id < 10),
-        bs AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q WHERE n.vec_id <> q.qid),
-        br AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-            row_number() OVER (PARTITION BY qid
-              ORDER BY sim DESC, vec_id) AS rnk FROM bs)
-          WHERE rnk <= 5),
+      Some(s"""WITH ${normCte()},
+        ${qCte("vec_id < 10")},
+        ${bruteSimCte("bs")},
+        ${top5IdsCte("br", "bs")},
         cb AS (SELECT m, code, cvec
           FROM read_parquet('$dumpSql/pq_codebooks/*.parquet')),
         ce AS (SELECT vec_id, mi - 1 AS m, codes[mi] AS code
@@ -2043,10 +1896,7 @@ object SimilarityOps {
             FROM q CROSS JOIN ce WHERE ce.vec_id <> q.qid) c
           JOIN tab t ON t.qid = c.qid AND t.m = c.m AND t.code = c.code
           GROUP BY c.qid, c.vec_id HAVING COUNT(*) = 8),
-        pr AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-            row_number() OVER (PARTITION BY qid
-              ORDER BY approx_dot DESC, vec_id) AS rnk FROM sc)
-          WHERE rnk <= 5),
+        ${top5IdsCte("pr", "sc", "approx_dot")},
         hits AS (SELECT br.qid, COUNT(*) AS hits
           FROM br JOIN pr ON br.qid = pr.qid AND br.vec_id = pr.vec_id
           GROUP BY br.qid)
@@ -2074,35 +1924,16 @@ object SimilarityOps {
         val q = emb.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
             col("label").as("qlabel"))
-        val scored = emb.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("qid") &&
-            col("label") =!= col("qlabel"))
-          .withColumn("sim", Vectors.dot(col("embedding"), col("qvec")))
-          .select(col("qid"), col("vec_id"), col("sim"))
+        val scored = bruteScored(emb, q, col("vec_id") =!= col("qid") &&
+          col("label") =!= col("qlabel"))
         topkPerQuery(scored, "sim", 5)
           .orderBy(col("qid"), col("rank"))
       },
       // knn_brute's bit-exact SQL with the label cross-filter applied
       // before ranking.
-      Some("""WITH norm AS (
-          SELECT vec_id, label,
-            list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
-              list_reduce(list_transform(embedding,
-                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
-                (a,b) -> a+b))) AS e
-          FROM embeddings),
-        q AS (SELECT vec_id AS qid, e AS qe, label AS qlabel
-          FROM norm WHERE vec_id < 10),
-        s AS (SELECT q.qid, n.vec_id,
-            list_reduce(list_transform(range(1, len(n.e)+1),
-              i -> n.e[i]*q.qe[i]), (a,b) -> a+b) AS sim
-          FROM norm n, q WHERE n.vec_id <> q.qid AND n.label <> q.qlabel),
-        r AS (SELECT qid,
-            CAST(row_number() OVER (PARTITION BY qid
-              ORDER BY sim DESC, vec_id) AS INT) AS rank,
-            vec_id, sim FROM s)
-        SELECT qid, rank, vec_id, sim FROM r
-        WHERE rank <= 5 ORDER BY qid, rank""")),
+      Some(bruteTop5Sql("vec_id < 10", normCols = "vec_id, label",
+        qCols = "e AS qe, label AS qlabel",
+        pred = " AND n.label <> q.qlabel"))),
 
     Entry(
       "emb_project",
@@ -2147,8 +1978,7 @@ object SimilarityOps {
     * fold.
     */
   private[graft] def semanticIncrementalSql: String =
-    s"""WITH asg AS (SELECT cell, vec_id, embedding
-        FROM read_parquet('$dumpSql/assignments/*.parquet')),
+    s"""WITH $asgCte,
       hist AS (SELECT cell, vec_id AS dup_of, embedding AS e_h
         FROM asg WHERE vec_id % 10 <> 0),
       probe AS (SELECT cell, vec_id AS new_id, embedding AS e_p
@@ -2454,6 +2284,19 @@ object MultimodalOps {
       .filter(col("hamming") <= 3)
   }
 
+  /** SQL twin of [[phashPairs]] over a (doc_id, sig) CTE `s`: 4×16-bit
+    * block buckets, bucket self-join, hamming ≤ 3 verify. */
+  private val phashPairSql: String =
+    """bk AS (SELECT doc_id, sig, blk,
+            (sig >> CAST(blk*16 AS INT)) & 65535 AS bkey
+          FROM (SELECT doc_id, sig, unnest(range(0, 4)) AS blk FROM s)),
+        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b,
+            l.sig AS sa, r.sig AS sb
+          FROM bk l JOIN bk r ON l.blk = r.blk AND l.bkey = r.bkey
+            AND l.doc_id < r.doc_id)
+        SELECT a, b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
+        FROM cand WHERE bit_count(xor(sa, sb)) <= 3 ORDER BY a, b"""
+
   /** mm_phash_real's source: one REAL 32×32 PNG per document rendered
     * from its text bytes (row doc_id·2) plus the ±1-pixel near-dup
     * variant (doc_id·2+1) — see [[ImageGen]]. Executor-side encode in
@@ -2499,18 +2342,9 @@ object MultimodalOps {
           .orderBy(col("doc_id")),
       // the stub codec is deterministic byte arithmetic, so even this
       // is oracled: UTF-8 byte sums via a hex nibble-fold in SQL
-      Some("""CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
-        CREATE OR REPLACE MACRO bytes_of(t) AS (
-          list_transform(range(0, octet_length(encode(t))),
-            i -> h2i(hex(encode(t)), 2*CAST(i AS INT)+1, 2)));
-        CREATE OR REPLACE MACRO graft_crc32(t) AS (
-          xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT),
-            bytes_of(t)),
-            (crc, b) -> xor([0,1996959894,3993919788,2567524794,124634137,1886057615,3915621685,2657392035,249268274,2044508324,3772115230,2547177864,162941995,2125561021,3887607047,2428444049,498536548,1789927666,4089016648,2227061214,450548861,1843258603,4107580753,2211677639,325883990,1684777152,4251122042,2321926636,335633487,1661365465,4195302755,2366115317,997073096,1281953886,3579855332,2724688242,1006888145,1258607687,3524101629,2768942443,901097722,1119000684,3686517206,2898065728,853044451,1172266101,3705015759,2882616665,651767980,1373503546,3369554304,3218104598,565507253,1454621731,3485111705,3099436303,671266974,1594198024,3322730930,2970347812,795835527,1483230225,3244367275,3060149565,1994146192,31158534,2563907772,4023717930,1907459465,112637215,2680153253,3904427059,2013776290,251722036,2517215374,3775830040,2137656763,141376813,2439277719,3865271297,1802195444,476864866,2238001368,4066508878,1812370925,453092731,2181625025,4111451223,1706088902,314042704,2344532202,4240017532,1658658271,366619977,2362670323,4224994405,1303535960,984961486,2747007092,3569037538,1256170817,1037604311,2765210733,3554079995,1131014506,879679996,2909243462,3663771856,1141124467,855842277,2852801631,3708648649,1342533948,654459306,3188396048,3373015174,1466479909,544179635,3110523913,3462522015,1591671054,702138776,2966460450,3352799412,1504918807,783551873,3082640443,3233442989,3988292384,2596254646,62317068,1957810842,3939845945,2647816111,81470997,1943803523,3814918930,2489596804,225274430,2053790376,3826175755,2466906013,167816743,2097651377,4027552580,2265490386,503444072,1762050814,4150417245,2154129355,426522225,1852507879,4275313526,2312317920,282753626,1742555852,4189708143,2394877945,397917763,1622183637,3604390888,2714866558,953729732,1340076626,3518719985,2797360999,1068828381,1219638859,3624741850,2936675148,906185462,1090812512,3747672003,2825379669,829329135,1181335161,3412177804,3160834842,628085408,1382605366,3423369109,3138078467,570562233,1426400815,3317316542,2998733608,733239954,1555261956,3268935591,3050360625,752459403,1541320221,2607071920,3965973030,1969922972,40735498,2617837225,3943577151,1913087877,83908371,2512341634,3803740692,2075208622,213261112,2463272603,3855990285,2094854071,198958881,2262029012,4057260610,1759359992,534414190,2176718541,4139329115,1873836001,414664567,2282248934,4279200368,1711684554,285281116,2405801727,4167216745,1634467795,376229701,2685067896,3608007406,1308918612,956543938,2808555105,3495958263,1231636301,1047427035,2932959818,3654703836,1088359270,936918000,2847714899,3736837829,1202900863,817233897,3183342108,3401237130,1404277552,615818150,3134207493,3453421203,1423857449,601450431,3009837614,3294710456,1567103746,711928724,3020668471,3272380065,1510334235,755167117][CAST((xor(crc, b) & 255) + 1 AS INT)],
-              crc // 256)), 4294967295));
+      Some(s"""${OracleDumps.H2iMacro}
+        ${OracleDumps.BytesOfMacro}
+        ${OracleDumps.Crc32Macro}
         WITH b AS (SELECT doc_id, octet_length(encode(text)) AS n_bytes,
             list_reduce(list_prepend(CAST(0 AS BIGINT), bytes_of(text)),
               (a, x) -> a + x) AS checksum
@@ -2531,18 +2365,9 @@ object MultimodalOps {
       // oracled incl. the crc32-derived height: zlib CRC32 as an
       // inline 256-entry table fold, scale doubles in the same
       // left-assoc multiply order, toLong = trunc
-      Some("""CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
-        CREATE OR REPLACE MACRO bytes_of(t) AS (
-          list_transform(range(0, octet_length(encode(t))),
-            i -> h2i(hex(encode(t)), 2*CAST(i AS INT)+1, 2)));
-        CREATE OR REPLACE MACRO graft_crc32(t) AS (
-          xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT),
-            bytes_of(t)),
-            (crc, b) -> xor([0,1996959894,3993919788,2567524794,124634137,1886057615,3915621685,2657392035,249268274,2044508324,3772115230,2547177864,162941995,2125561021,3887607047,2428444049,498536548,1789927666,4089016648,2227061214,450548861,1843258603,4107580753,2211677639,325883990,1684777152,4251122042,2321926636,335633487,1661365465,4195302755,2366115317,997073096,1281953886,3579855332,2724688242,1006888145,1258607687,3524101629,2768942443,901097722,1119000684,3686517206,2898065728,853044451,1172266101,3705015759,2882616665,651767980,1373503546,3369554304,3218104598,565507253,1454621731,3485111705,3099436303,671266974,1594198024,3322730930,2970347812,795835527,1483230225,3244367275,3060149565,1994146192,31158534,2563907772,4023717930,1907459465,112637215,2680153253,3904427059,2013776290,251722036,2517215374,3775830040,2137656763,141376813,2439277719,3865271297,1802195444,476864866,2238001368,4066508878,1812370925,453092731,2181625025,4111451223,1706088902,314042704,2344532202,4240017532,1658658271,366619977,2362670323,4224994405,1303535960,984961486,2747007092,3569037538,1256170817,1037604311,2765210733,3554079995,1131014506,879679996,2909243462,3663771856,1141124467,855842277,2852801631,3708648649,1342533948,654459306,3188396048,3373015174,1466479909,544179635,3110523913,3462522015,1591671054,702138776,2966460450,3352799412,1504918807,783551873,3082640443,3233442989,3988292384,2596254646,62317068,1957810842,3939845945,2647816111,81470997,1943803523,3814918930,2489596804,225274430,2053790376,3826175755,2466906013,167816743,2097651377,4027552580,2265490386,503444072,1762050814,4150417245,2154129355,426522225,1852507879,4275313526,2312317920,282753626,1742555852,4189708143,2394877945,397917763,1622183637,3604390888,2714866558,953729732,1340076626,3518719985,2797360999,1068828381,1219638859,3624741850,2936675148,906185462,1090812512,3747672003,2825379669,829329135,1181335161,3412177804,3160834842,628085408,1382605366,3423369109,3138078467,570562233,1426400815,3317316542,2998733608,733239954,1555261956,3268935591,3050360625,752459403,1541320221,2607071920,3965973030,1969922972,40735498,2617837225,3943577151,1913087877,83908371,2512341634,3803740692,2075208622,213261112,2463272603,3855990285,2094854071,198958881,2262029012,4057260610,1759359992,534414190,2176718541,4139329115,1873836001,414664567,2282248934,4279200368,1711684554,285281116,2405801727,4167216745,1634467795,376229701,2685067896,3608007406,1308918612,956543938,2808555105,3495958263,1231636301,1047427035,2932959818,3654703836,1088359270,936918000,2847714899,3736837829,1202900863,817233897,3183342108,3401237130,1404277552,615818150,3134207493,3453421203,1423857449,601450431,3009837614,3294710456,1567103746,711928724,3020668471,3272380065,1510334235,755167117][CAST((xor(crc, b) & 255) + 1 AS INT)],
-              crc // 256)), 4294967295));
+      Some(s"""${OracleDumps.H2iMacro}
+        ${OracleDumps.BytesOfMacro}
+        ${OracleDumps.Crc32Macro}
         WITH src AS (SELECT doc_id, octet_length(encode(text)) AS nb,
             len(text) % 1024 AS width, graft_crc32(text) % 1024 AS height
           FROM documents),
@@ -2565,18 +2390,9 @@ object MultimodalOps {
           .toDF()
           .orderBy(col("doc_id"), col("frame_idx")),
       // every-4th-frame stride checksums re-derived over the same hex
-      Some("""CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
-        CREATE OR REPLACE MACRO bytes_of(t) AS (
-          list_transform(range(0, octet_length(encode(t))),
-            i -> h2i(hex(encode(t)), 2*CAST(i AS INT)+1, 2)));
-        CREATE OR REPLACE MACRO graft_crc32(t) AS (
-          xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT),
-            bytes_of(t)),
-            (crc, b) -> xor([0,1996959894,3993919788,2567524794,124634137,1886057615,3915621685,2657392035,249268274,2044508324,3772115230,2547177864,162941995,2125561021,3887607047,2428444049,498536548,1789927666,4089016648,2227061214,450548861,1843258603,4107580753,2211677639,325883990,1684777152,4251122042,2321926636,335633487,1661365465,4195302755,2366115317,997073096,1281953886,3579855332,2724688242,1006888145,1258607687,3524101629,2768942443,901097722,1119000684,3686517206,2898065728,853044451,1172266101,3705015759,2882616665,651767980,1373503546,3369554304,3218104598,565507253,1454621731,3485111705,3099436303,671266974,1594198024,3322730930,2970347812,795835527,1483230225,3244367275,3060149565,1994146192,31158534,2563907772,4023717930,1907459465,112637215,2680153253,3904427059,2013776290,251722036,2517215374,3775830040,2137656763,141376813,2439277719,3865271297,1802195444,476864866,2238001368,4066508878,1812370925,453092731,2181625025,4111451223,1706088902,314042704,2344532202,4240017532,1658658271,366619977,2362670323,4224994405,1303535960,984961486,2747007092,3569037538,1256170817,1037604311,2765210733,3554079995,1131014506,879679996,2909243462,3663771856,1141124467,855842277,2852801631,3708648649,1342533948,654459306,3188396048,3373015174,1466479909,544179635,3110523913,3462522015,1591671054,702138776,2966460450,3352799412,1504918807,783551873,3082640443,3233442989,3988292384,2596254646,62317068,1957810842,3939845945,2647816111,81470997,1943803523,3814918930,2489596804,225274430,2053790376,3826175755,2466906013,167816743,2097651377,4027552580,2265490386,503444072,1762050814,4150417245,2154129355,426522225,1852507879,4275313526,2312317920,282753626,1742555852,4189708143,2394877945,397917763,1622183637,3604390888,2714866558,953729732,1340076626,3518719985,2797360999,1068828381,1219638859,3624741850,2936675148,906185462,1090812512,3747672003,2825379669,829329135,1181335161,3412177804,3160834842,628085408,1382605366,3423369109,3138078467,570562233,1426400815,3317316542,2998733608,733239954,1555261956,3268935591,3050360625,752459403,1541320221,2607071920,3965973030,1969922972,40735498,2617837225,3943577151,1913087877,83908371,2512341634,3803740692,2075208622,213261112,2463272603,3855990285,2094854071,198958881,2262029012,4057260610,1759359992,534414190,2176718541,4139329115,1873836001,414664567,2282248934,4279200368,1711684554,285281116,2405801727,4167216745,1634467795,376229701,2685067896,3608007406,1308918612,956543938,2808555105,3495958263,1231636301,1047427035,2932959818,3654703836,1088359270,936918000,2847714899,3736837829,1202900863,817233897,3183342108,3401237130,1404277552,615818150,3134207493,3453421203,1423857449,601450431,3009837614,3294710456,1567103746,711928724,3020668471,3272380065,1510334235,755167117][CAST((xor(crc, b) & 255) + 1 AS INT)],
-              crc // 256)), 4294967295));
+      Some(s"""${OracleDumps.H2iMacro}
+        ${OracleDumps.BytesOfMacro}
+        ${OracleDumps.Crc32Macro}
         WITH src AS (SELECT doc_id, octet_length(encode(text)) AS nb,
             hex(encode(text)) AS h
           FROM documents),
@@ -2614,13 +2430,8 @@ object MultimodalOps {
           .toDF()
         phashPairs(sig).orderBy(col("a"), col("b"))
       },
-      Some("""CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
-        CREATE OR REPLACE MACRO bytes_of(t) AS (
-          list_transform(range(0, octet_length(encode(t))),
-            i -> h2i(hex(encode(t)), 2*CAST(i AS INT)+1, 2)));
+      Some(s"""${OracleDumps.H2iMacro}
+        ${OracleDumps.BytesOfMacro}
         WITH b AS (SELECT doc_id, bytes_of(text) AS by,
             CAST(octet_length(encode(text)) AS BIGINT) AS nb
           FROM documents),
@@ -2643,15 +2454,7 @@ object MultimodalOps {
                 ELSE CAST(0 AS BIGINT) END)),
               (a, x) -> a + x) AS sig
           FROM t),
-        bk AS (SELECT doc_id, sig, blk,
-            (sig >> CAST(blk*16 AS INT)) & 65535 AS bkey
-          FROM (SELECT doc_id, sig, unnest(range(0, 4)) AS blk FROM s)),
-        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b,
-            l.sig AS sa, r.sig AS sb
-          FROM bk l JOIN bk r ON l.blk = r.blk AND l.bkey = r.bkey
-            AND l.doc_id < r.doc_id)
-        SELECT a, b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-        FROM cand WHERE bit_count(xor(sa, sb)) <= 3 ORDER BY a, b""")),
+        $phashPairSql""")),
 
     Entry(
       "mm_phash_real",
@@ -2691,15 +2494,7 @@ object MultimodalOps {
       },
       Some(s"""WITH s AS (SELECT doc_id, sig FROM read_parquet(
             '${OracleDumps.SqlRoot}/mm/phash_real_sig/*.parquet')),
-        bk AS (SELECT doc_id, sig, blk,
-            (sig >> CAST(blk*16 AS INT)) & 65535 AS bkey
-          FROM (SELECT doc_id, sig, unnest(range(0, 4)) AS blk FROM s)),
-        cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b,
-            l.sig AS sa, r.sig AS sb
-          FROM bk l JOIN bk r ON l.blk = r.blk AND l.bkey = r.bkey
-            AND l.doc_id < r.doc_id)
-        SELECT a, b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-        FROM cand WHERE bit_count(xor(sa, sb)) <= 3 ORDER BY a, b""")),
+        $phashPairSql""")),
 
     Entry(
       "mm_embed_knn",

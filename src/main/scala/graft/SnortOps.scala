@@ -143,6 +143,98 @@ object SnortOps {
     ()
   }
 
+  /** The '||'-separated map parsers in SQL over a byte-identical copy
+    * of raw map `file`: comment/blank filter, split + trim, as `p`
+    * (parts). */
+  private def mapPartsCtes(file: String): String =
+    s"""c AS (SELECT content FROM
+            read_text('$oracleBaseDir/raw/$file')),
+          l AS (SELECT trim(x) AS line FROM
+            (SELECT unnest(string_split(content, chr(10))) AS x FROM c)),
+          f AS (SELECT line FROM l
+            WHERE line <> '' AND NOT starts_with(line, '#')),
+          p AS (SELECT list_transform(string_split(line, '||'),
+            x -> trim(x)) AS parts FROM f)"""
+
+  /** The dumped pre-enrichment alerts `b` and combined sid/gen map `m`. */
+  private val baseSigCtes =
+    s"""b AS (SELECT * FROM
+            read_parquet('$oracleBaseDir/alerts_base/*.parquet')),
+          m AS (SELECT * FROM
+            read_parquet('$oracleBaseDir/sigmap/*.parquet'))"""
+
+  /** The reference's signature fallbacks over `b` LEFT JOIN `m`
+    * (Unknown Alert g:s / rev 0 / priority 10 on unmapped sigs), as
+    * sig_msg, sig_rev, sig_priority. */
+  private val sigFallbackCols =
+    """COALESCE(m.msg, 'Unknown Alert ' ||
+            CAST(b.generator_id AS VARCHAR) || ':' ||
+            CAST(b.signature_id AS VARCHAR)) AS sig_msg,
+          CASE WHEN m.sid IS NULL THEN 0
+            ELSE COALESCE(b.signature_revision, 1) END AS sig_rev,
+          CASE WHEN m.sid IS NULL THEN 10
+            ELSE b.priority_id END AS sig_priority"""
+
+  /** `e` = the enriched events of `b`, `m` and records `r`, each with
+    * its packet-slot count n_pkts (≥ 1) — the star's input. */
+  private val enrichedEventCtes =
+    s"""pk AS (SELECT sensor, src_file, sensor_id, event_id,
+              event_second, COUNT(*) AS n_packets
+            FROM r WHERE rec_type = 2 GROUP BY ALL),
+          e AS (SELECT b.*, $sigFallbackCols,
+              GREATEST(COALESCE(pk.n_packets, 0), 1) AS n_pkts
+            FROM b LEFT JOIN m ON b.generator_id = m.gid
+              AND b.signature_id = m.sid
+            LEFT JOIN pk USING (sensor, src_file, sensor_id, event_id,
+              event_second))"""
+
+  /** The SQL reference of the distributed (sid, cid) normalization
+    * over enriched events `e`: sensor surrogate keys `sd` (sensors from
+    * `sensors`), signature keys `g2`, per-sensor file bases `fb` and
+    * each alert's first cid `wc.cid_base` — the same two-level prefix
+    * sums as [[SnortStar.normalize]].
+    */
+  private def cidWindowCtes(sensors: String): String =
+    s"""sd AS (SELECT sensor, CAST(DENSE_RANK() OVER (ORDER BY sensor)
+              AS BIGINT) AS sensor_sid
+            FROM (SELECT DISTINCT sensor FROM $sensors)),
+          g2 AS (SELECT *, CAST(DENSE_RANK() OVER (ORDER BY s_gid,
+                s_sid, s_rev, s_class_id, s_priority, s_msg) AS BIGINT)
+                AS sig_id
+            FROM (SELECT DISTINCT generator_id AS s_gid,
+                signature_id AS s_sid, sig_rev AS s_rev,
+                classification_id AS s_class_id,
+                sig_priority AS s_priority, sig_msg AS s_msg FROM e)),
+          fb AS (SELECT sensor, src_file, COALESCE(SUM(file_pkts) OVER (
+                PARTITION BY sensor ORDER BY src_file
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                AS file_base
+            FROM (SELECT sensor, src_file, SUM(n_pkts) AS file_pkts
+              FROM e GROUP BY ALL)),
+          wc AS (SELECT e.*, fb.file_base + COALESCE(SUM(e.n_pkts)
+                OVER (PARTITION BY e.sensor, e.src_file
+                  ORDER BY e.rec_index
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                + 1 AS cid_base
+            FROM e JOIN fb USING (sensor, src_file))"""
+
+  /** The event fact table over [[cidWindowCtes]]: one row per packet
+    * slot, with the Snorby timestamp rendering. */
+  private val eventFactSql =
+    """ev0 AS (SELECT sd.sensor_sid AS sid, wc.cid_base,
+              g2.sig_id,
+              strftime(wc.event_ts, '%Y-%m-%d %H:%M:%S') AS ts,
+              unnest(range(0, wc.n_pkts)) AS slot
+            FROM wc JOIN sd USING (sensor)
+            JOIN g2 ON wc.generator_id = g2.s_gid
+              AND wc.signature_id = g2.s_sid AND wc.sig_rev = g2.s_rev
+              AND wc.classification_id = g2.s_class_id
+              AND wc.sig_priority = g2.s_priority
+              AND wc.sig_msg = g2.s_msg)
+        SELECT sid, CAST(cid_base + slot AS BIGINT) AS cid,
+          sig_id AS signature, ts AS "timestamp"
+        FROM ev0 ORDER BY sid, cid"""
+
   val entries: Seq[Entry] = Seq(
     Entry("u2_parse", (s, _) => {
       dumpOracleBase(s)
@@ -164,10 +256,7 @@ object SnortOps {
       // with blob-length clamp) — binary columns land as unhex'd
       // blobs. Only the src_file STRING maps through the record
       // skeleton (basename join; path naming isn't parser logic).
-      Some(s"""        CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
+      Some(s"""${OracleDumps.H2iMacro}
         WITH RECURSIVE
         f AS (SELECT parse_filename(filename) AS fname, hex(content) AS h,
             CAST(octet_length(content) AS BIGINT) AS nb
@@ -319,14 +408,7 @@ object SnortOps {
       // the sid-msg.map parser re-implemented in SQL over a
       // byte-identical copy of the raw file: comment/blank filter,
       // '||' split + trim, digit guard, implicit gid 1, csv'd refs
-      Some(s"""WITH c AS (SELECT content FROM
-            read_text('$oracleBaseDir/raw/sid-msg.map')),
-          l AS (SELECT trim(x) AS line FROM
-            (SELECT unnest(string_split(content, chr(10))) AS x FROM c)),
-          f AS (SELECT line FROM l
-            WHERE line <> '' AND NOT starts_with(line, '#')),
-          p AS (SELECT list_transform(string_split(line, '||'),
-            x -> trim(x)) AS parts FROM f),
+      Some(s"""WITH ${mapPartsCtes("sid-msg.map")},
           v AS (SELECT parts FROM p WHERE len(parts) >= 2
             AND regexp_full_match(parts[1], '[0-9]+'))
         SELECT CAST(1 AS BIGINT) AS gid, CAST(parts[1] AS BIGINT) AS sid,
@@ -340,14 +422,7 @@ object SnortOps {
       dumpOracleBase(s)
       Maps.genMap(s, gen).orderBy(col("gid"), col("sid"))
     },
-      Some(s"""WITH c AS (SELECT content FROM
-            read_text('$oracleBaseDir/raw/gen-msg.map')),
-          l AS (SELECT trim(x) AS line FROM
-            (SELECT unnest(string_split(content, chr(10))) AS x FROM c)),
-          f AS (SELECT line FROM l
-            WHERE line <> '' AND NOT starts_with(line, '#')),
-          p AS (SELECT list_transform(string_split(line, '||'),
-            x -> trim(x)) AS parts FROM f),
+      Some(s"""WITH ${mapPartsCtes("gen-msg.map")},
           v AS (SELECT parts FROM p WHERE len(parts) >= 3
             AND regexp_full_match(parts[1], '[0-9]+')
             AND regexp_full_match(parts[2], '[0-9]+'))
@@ -391,18 +466,9 @@ object SnortOps {
       // re-derives the reference's fallback semantics (Unknown Alert
       // g:s / rev 0 / priority 10 on unmapped sigs) from the dumped
       // pre-enrichment base + sid/gen maps
-      Some(s"""WITH b AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/alerts_base/*.parquet')),
-          m AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/sigmap/*.parquet'))
+      Some(s"""WITH $baseSigCtes
         SELECT b.event_id, b.generator_id, b.signature_id,
-          COALESCE(m.msg, 'Unknown Alert ' ||
-            CAST(b.generator_id AS VARCHAR) || ':' ||
-            CAST(b.signature_id AS VARCHAR)) AS sig_msg,
-          CASE WHEN m.sid IS NULL THEN 0
-            ELSE COALESCE(b.signature_revision, 1) END AS sig_rev,
-          CASE WHEN m.sid IS NULL THEN 10
-            ELSE b.priority_id END AS sig_priority
+          $sigFallbackCols
         FROM b LEFT JOIN m
           ON b.generator_id = m.gid AND b.signature_id = m.sid
         ORDER BY b.event_id""")),
@@ -437,10 +503,7 @@ object SnortOps {
       // id/seq families, and the payload-start arithmetic — every
       // guard mirrors DecodePacket's early returns, so absent layers
       // are NULL on both sides
-      Some(s"""        CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
+      Some(s"""${OracleDumps.H2iMacro}
         WITH p0 AS (SELECT event_id, rec_index, h, len(h) // 2 AS nb
             FROM read_parquet('$oracleBaseDir/packets_raw/*.parquet')),
         e0 AS (SELECT *, CASE WHEN nb >= 14 THEN h2i(h, 25, 4) END AS et0 FROM p0),
@@ -553,63 +616,12 @@ object SnortOps {
       // same two-level windows (per-file local prefix sum + per-sensor
       // file-base prefix sum), slot expansion via unnest(range), dim
       // surrogate keys, and the Snorby timestamp rendering
-      Some(s"""WITH b AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/alerts_base/*.parquet')),
-          m AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/sigmap/*.parquet')),
+      Some(s"""WITH $baseSigCtes,
           r AS (SELECT * FROM
             read_parquet('$oracleBaseDir/records_base/*.parquet')),
-          pk AS (SELECT sensor, src_file, sensor_id, event_id,
-              event_second, COUNT(*) AS n_packets
-            FROM r WHERE rec_type = 2 GROUP BY ALL),
-          e AS (SELECT b.*,
-              COALESCE(m.msg, 'Unknown Alert ' ||
-                CAST(b.generator_id AS VARCHAR) || ':' ||
-                CAST(b.signature_id AS VARCHAR)) AS sig_msg,
-              CASE WHEN m.sid IS NULL THEN 0
-                ELSE COALESCE(b.signature_revision, 1) END AS sig_rev,
-              CASE WHEN m.sid IS NULL THEN 10
-                ELSE b.priority_id END AS sig_priority,
-              GREATEST(COALESCE(pk.n_packets, 0), 1) AS n_pkts
-            FROM b LEFT JOIN m ON b.generator_id = m.gid
-              AND b.signature_id = m.sid
-            LEFT JOIN pk USING (sensor, src_file, sensor_id, event_id,
-              event_second)),
-          sd AS (SELECT sensor, CAST(DENSE_RANK() OVER (ORDER BY sensor)
-              AS BIGINT) AS sensor_sid
-            FROM (SELECT DISTINCT sensor FROM b)),
-          g2 AS (SELECT *, CAST(DENSE_RANK() OVER (ORDER BY s_gid,
-                s_sid, s_rev, s_class_id, s_priority, s_msg) AS BIGINT)
-                AS sig_id
-            FROM (SELECT DISTINCT generator_id AS s_gid,
-                signature_id AS s_sid, sig_rev AS s_rev,
-                classification_id AS s_class_id,
-                sig_priority AS s_priority, sig_msg AS s_msg FROM e)),
-          fb AS (SELECT sensor, src_file, COALESCE(SUM(file_pkts) OVER (
-                PARTITION BY sensor ORDER BY src_file
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                AS file_base
-            FROM (SELECT sensor, src_file, SUM(n_pkts) AS file_pkts
-              FROM e GROUP BY ALL)),
-          wc AS (SELECT e.*, fb.file_base + COALESCE(SUM(e.n_pkts)
-                OVER (PARTITION BY e.sensor, e.src_file
-                  ORDER BY e.rec_index
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                + 1 AS cid_base
-            FROM e JOIN fb USING (sensor, src_file)),
-          ev0 AS (SELECT sd.sensor_sid AS sid, wc.cid_base,
-              g2.sig_id,
-              strftime(wc.event_ts, '%Y-%m-%d %H:%M:%S') AS ts,
-              unnest(range(0, wc.n_pkts)) AS slot
-            FROM wc JOIN sd USING (sensor)
-            JOIN g2 ON wc.generator_id = g2.s_gid
-              AND wc.signature_id = g2.s_sid AND wc.sig_rev = g2.s_rev
-              AND wc.classification_id = g2.s_class_id
-              AND wc.sig_priority = g2.s_priority
-              AND wc.sig_msg = g2.s_msg)
-        SELECT sid, CAST(cid_base + slot AS BIGINT) AS cid,
-          sig_id AS signature, ts AS "timestamp"
-        FROM ev0 ORDER BY sid, cid""")),
+          $enrichedEventCtes,
+          ${cidWindowCtes("b")},
+          $eventFactSql""")),
 
     Entry("u2_extra", (s, _) => {
       // typed EXTRA_DATA rendering (public unified2 spec type ids —
@@ -653,10 +665,7 @@ object SnortOps {
       // has no ipv6 extra record, so IF one is ever added the oracle
       // MISMATCHES loudly instead of silently skipping it (that
       // branch is proven directly by Inet6Spec).
-      Some(s"""CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
+      Some(s"""${OracleDumps.H2iMacro}
         WITH RECURSIVE
         f AS (SELECT hex(content) AS h,
             CAST(octet_length(content) AS BIGINT) AS nb
@@ -721,52 +730,13 @@ object SnortOps {
       // inet_aton as split-arithmetic, then the dashboard joins +
       // distinct-talker rollup; only the binary packet decode passes
       // through (dumped as decoded address strings, spec-tested)
-      Some(s"""WITH b AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/alerts_base/*.parquet')),
-          m AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/sigmap/*.parquet')),
+      Some(s"""WITH $baseSigCtes,
           r AS (SELECT * FROM
             read_parquet('$oracleBaseDir/records_base/*.parquet')),
           pd AS (SELECT * FROM
             read_parquet('$oracleBaseDir/packets_decoded/*.parquet')),
-          pk AS (SELECT sensor, src_file, sensor_id, event_id,
-              event_second, COUNT(*) AS n_packets
-            FROM r WHERE rec_type = 2 GROUP BY ALL),
-          e AS (SELECT b.*,
-              COALESCE(m.msg, 'Unknown Alert ' ||
-                CAST(b.generator_id AS VARCHAR) || ':' ||
-                CAST(b.signature_id AS VARCHAR)) AS sig_msg,
-              CASE WHEN m.sid IS NULL THEN 0
-                ELSE COALESCE(b.signature_revision, 1) END AS sig_rev,
-              CASE WHEN m.sid IS NULL THEN 10
-                ELSE b.priority_id END AS sig_priority,
-              GREATEST(COALESCE(pk.n_packets, 0), 1) AS n_pkts
-            FROM b LEFT JOIN m ON b.generator_id = m.gid
-              AND b.signature_id = m.sid
-            LEFT JOIN pk USING (sensor, src_file, sensor_id, event_id,
-              event_second)),
-          sd AS (SELECT sensor, CAST(DENSE_RANK() OVER (ORDER BY sensor)
-              AS BIGINT) AS sensor_sid
-            FROM (SELECT DISTINCT sensor FROM b)),
-          g2 AS (SELECT *, CAST(DENSE_RANK() OVER (ORDER BY s_gid,
-                s_sid, s_rev, s_class_id, s_priority, s_msg) AS BIGINT)
-                AS sig_id
-            FROM (SELECT DISTINCT generator_id AS s_gid,
-                signature_id AS s_sid, sig_rev AS s_rev,
-                classification_id AS s_class_id,
-                sig_priority AS s_priority, sig_msg AS s_msg FROM e)),
-          fb AS (SELECT sensor, src_file, COALESCE(SUM(file_pkts) OVER (
-                PARTITION BY sensor ORDER BY src_file
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                AS file_base
-            FROM (SELECT sensor, src_file, SUM(n_pkts) AS file_pkts
-              FROM e GROUP BY ALL)),
-          wc AS (SELECT e.*, fb.file_base + COALESCE(SUM(e.n_pkts)
-                OVER (PARTITION BY e.sensor, e.src_file
-                  ORDER BY e.rec_index
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                + 1 AS cid_base
-            FROM e JOIN fb USING (sensor, src_file)),
+          $enrichedEventCtes,
+          ${cidWindowCtes("b")},
           ev0 AS (SELECT sd.sensor_sid AS sid, wc.cid_base,
               wc.generator_id, wc.signature_id, wc.sig_rev,
               wc.classification_id, wc.sig_priority, wc.sig_msg,
@@ -831,10 +801,7 @@ object SnortOps {
       // the full signature-uniqueness key (incl. class + priority, the
       // reference's upsert key) re-derived: enrichment fallbacks from
       // the maps, then DISTINCT + dense_rank surrogate keys in SQL
-      Some(s"""WITH b AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/alerts_base/*.parquet')),
-          m AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/sigmap/*.parquet')),
+      Some(s"""WITH $baseSigCtes,
           e AS (SELECT DISTINCT
             b.generator_id AS s_gid, b.signature_id AS s_sid,
             CASE WHEN m.sid IS NULL THEN 0
@@ -859,20 +826,10 @@ object SnortOps {
       // the u2fast one-line rendering assembled independently in SQL:
       // enrichment fallbacks, timestamp/microsecond formatting,
       // protocol names, and the full bracket layout
-      Some(s"""WITH b AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/alerts_base/*.parquet')),
-          m AS (SELECT * FROM
-            read_parquet('$oracleBaseDir/sigmap/*.parquet')),
+      Some(s"""WITH $baseSigCtes,
           c AS (SELECT * FROM
             read_parquet('$oracleBaseDir/classmap/*.parquet')),
-          e AS (SELECT b.*,
-            COALESCE(m.msg, 'Unknown Alert ' ||
-              CAST(b.generator_id AS VARCHAR) || ':' ||
-              CAST(b.signature_id AS VARCHAR)) AS sig_msg,
-            CASE WHEN m.sid IS NULL THEN 0
-              ELSE COALESCE(b.signature_revision, 1) END AS sig_rev,
-            CASE WHEN m.sid IS NULL THEN 10
-              ELSE b.priority_id END AS sig_priority,
+          e AS (SELECT b.*, $sigFallbackCols,
             COALESCE(c.class_name, 'unknown-classification')
               AS class_name
           FROM b LEFT JOIN m
@@ -942,41 +899,8 @@ object SnortOps {
       // render) applied to the 60k-alert bulk dump.
       Some(s"""WITH e AS (SELECT * FROM
             read_parquet('$oracleBaseDir/bulk_alerts/*.parquet')),
-          sd AS (SELECT sensor, CAST(DENSE_RANK() OVER (ORDER BY sensor)
-              AS BIGINT) AS sensor_sid
-            FROM (SELECT DISTINCT sensor FROM e)),
-          g2 AS (SELECT *, CAST(DENSE_RANK() OVER (ORDER BY s_gid,
-                s_sid, s_rev, s_class_id, s_priority, s_msg) AS BIGINT)
-                AS sig_id
-            FROM (SELECT DISTINCT generator_id AS s_gid,
-                signature_id AS s_sid, sig_rev AS s_rev,
-                classification_id AS s_class_id,
-                sig_priority AS s_priority, sig_msg AS s_msg FROM e)),
-          fb AS (SELECT sensor, src_file, COALESCE(SUM(file_pkts) OVER (
-                PARTITION BY sensor ORDER BY src_file
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                AS file_base
-            FROM (SELECT sensor, src_file, SUM(n_pkts) AS file_pkts
-              FROM e GROUP BY ALL)),
-          wc AS (SELECT e.*, fb.file_base + COALESCE(SUM(e.n_pkts)
-                OVER (PARTITION BY e.sensor, e.src_file
-                  ORDER BY e.rec_index
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                + 1 AS cid_base
-            FROM e JOIN fb USING (sensor, src_file)),
-          ev0 AS (SELECT sd.sensor_sid AS sid, wc.cid_base,
-              g2.sig_id,
-              strftime(wc.event_ts, '%Y-%m-%d %H:%M:%S') AS ts,
-              unnest(range(0, wc.n_pkts)) AS slot
-            FROM wc JOIN sd USING (sensor)
-            JOIN g2 ON wc.generator_id = g2.s_gid
-              AND wc.signature_id = g2.s_sid AND wc.sig_rev = g2.s_rev
-              AND wc.classification_id = g2.s_class_id
-              AND wc.sig_priority = g2.s_priority
-              AND wc.sig_msg = g2.s_msg)
-        SELECT sid, CAST(cid_base + slot AS BIGINT) AS cid,
-          sig_id AS signature, ts AS "timestamp"
-        FROM ev0 ORDER BY sid, cid""")),
+          ${cidWindowCtes("e")},
+          $eventFactSql""")),
 
     Entry(
       "inet_cidr_enrich",

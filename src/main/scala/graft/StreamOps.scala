@@ -512,11 +512,7 @@ object StreamOps {
     import s.implicits._
     // timers keep a second column family → RocksDB provider, like
     // the other transformWithState entries
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbStateStore(s) {
       val stream = s.readStream
         .schema("user_id BIGINT, event_id BIGINT, us BIGINT")
         .option("maxFilesPerTrigger", "1").parquet(root)
@@ -533,9 +529,6 @@ object StreamOps {
       } else
         (withShufflePartitions(s, 8)(
           runOnce(s, sessions.toDF(), OutputMode.Append())), None)
-    } finally prev match {
-      case Some(p) => s.conf.set(provKey, p)
-      case None => s.conf.unset(provKey)
     }
   }
 
@@ -563,6 +556,74 @@ object StreamOps {
         col("value.groupState.start_us"), col("value.groupState.end_us"),
         (col("value.groupState.cents").cast("double") / 100.0)
           .as("sess_value"))
+
+  /** The event stream as [[SessEv]] (user, event, µs, value). */
+  private def sessEvents(s: SparkSession, dir: String): Dataset[SessEv] = {
+    import s.implicits._
+    eventStream(s, dir)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts").cast("timestamp")).as("us"), col("value"))
+      .as[SessEv]
+  }
+
+  /** Run `f` with the RocksDB state store provider (transformWithState
+    * needs it), restoring the session's previous setting after. */
+  private def withRocksDbStateStore[T](s: SparkSession)(f: => T): T = {
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(provKey)
+    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
+      "state.RocksDBStateStoreProvider")
+    try f
+    finally prev match {
+      case Some(p) => s.conf.set(provKey, p)
+      case None => s.conf.unset(provKey)
+    }
+  }
+
+  /** Drain a spool record stream (u2_stream, u2_tail) to its verify
+    * projection. The basename only: stream sources differ from the
+    * batch scan in path prefix (file:), not identity — the oracle
+    * walks copies.
+    */
+  private def drainSpoolRecords(s: SparkSession, recs: DataFrame): DataFrame =
+    runOnce(s, recs.select(col("sensor"),
+        substring_index(col("src_file"), "/", -1).as("src_file"),
+        col("rec_index"), col("rec_type"), col("event_id"),
+        col("signature_id")), OutputMode.Append())
+      .orderBy(col("src_file"), col("rec_index"))
+
+  /** The SQL re-parse of the raw fixture spool both spool streams
+    * equal (the reduced u2_parse oracle: framing walk + event / packet
+    * / extra ids).
+    */
+  private val spoolReparseSql: String =
+    s"""${OracleDumps.H2iMacro}
+        WITH RECURSIVE
+        f AS (SELECT parse_filename(filename) AS src_file,
+            hex(content) AS h,
+            CAST(octet_length(content) AS BIGINT) AS nb
+          FROM read_blob('${SnortOps.oracleBaseDir}/raw_spool/*')),
+        walk AS (
+          SELECT src_file, h, nb, CAST(0 AS BIGINT) AS off,
+              CAST(-1 AS BIGINT) AS idx, CAST(NULL AS BIGINT) AS rtype,
+              CAST(NULL AS BIGINT) AS boff
+            FROM f
+          UNION ALL
+          SELECT src_file, h, nb, off + 8 + h2i(h, 2*(off+4)+1, 8),
+              idx + 1, h2i(h, 2*off+1, 8), off + 8
+            FROM walk
+            WHERE nb - off >= 8
+              AND h2i(h, 2*(off+4)+1, 8) < 2147483648
+              AND nb - off - 8 >= h2i(h, 2*(off+4)+1, 8)),
+        recs AS (SELECT src_file, h, idx, rtype, 2*boff+1 AS pb
+          FROM walk WHERE idx >= 0)
+        SELECT 'sensor1' AS sensor, src_file, CAST(idx AS INT) AS rec_index,
+          CAST(rtype AS INT) AS rec_type,
+          CASE WHEN rtype IN (7, 72, 104, 105, 2) THEN h2i(h, pb+8, 8)
+               WHEN rtype = 110 THEN h2i(h, pb+24, 8) END AS event_id,
+          CASE WHEN rtype IN (7, 72, 104, 105)
+               THEN h2i(h, pb+32, 8) END AS signature_id
+        FROM recs ORDER BY src_file, rec_index"""
 
   val entries: Seq[Entry] = Seq(
     Entry(
@@ -667,10 +728,7 @@ object StreamOps {
       // must reproduce the declarative result exactly.
       (s, dir) => {
         import s.implicits._
-        val evs: Dataset[SessEv] = eventStream(s, dir)
-          .select(col("user_id"), col("event_id"),
-            unix_micros(col("ts").cast("timestamp")).as("us"), col("value"))
-          .as[SessEv]
+        val evs = sessEvents(s, dir)
         val sessions = evs.groupByKey(_.user_id)
           .flatMapGroupsWithState(OutputMode.Append,
             GroupStateTimeout.NoTimeout)(sessionStep _)
@@ -679,17 +737,7 @@ object StreamOps {
         closed.unionByName(openSessions(s, ckpt))
           .orderBy(col("user_id"), col("sess_id"))
       },
-      Some("""WITH e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events),
-        s AS (SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-              OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        t AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id
-            ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id FROM s)
-        SELECT user_id, sess_id, COUNT(*) AS n_events,
-          MIN(us) AS start_us, MAX(us) AS end_us,
-          CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sess_value
-        FROM t GROUP BY user_id, sess_id ORDER BY user_id, sess_id""")),
+      Some(Analytics.sessionizeOracleSql)),
 
     Entry(
       "stream_stream_join",
@@ -797,47 +845,12 @@ object StreamOps {
       (s, _) => {
         val spool = Unified2Fixture.writeSpool(
           s"${Unified2Fixture.defaultRoot()}/spool")
-        val recs = Spool.streamRecords(s, Seq(spool), "snort.log", "sensor1")
-        // basename only: stream sources differ from the batch scan in
-        // path prefix (file:), not identity — the oracle walks copies
-        runOnce(s, recs.select(col("sensor"),
-            substring_index(col("src_file"), "/", -1).as("src_file"),
-            col("rec_index"), col("rec_type"), col("event_id"),
-            col("signature_id")), OutputMode.Append())
-          .orderBy(col("src_file"), col("rec_index"))
+        drainSpoolRecords(s,
+          Spool.streamRecords(s, Seq(spool), "snort.log", "sensor1"))
       },
       // streamed records == the SQL re-parse of the raw spool (the
       // reduced u2_parse oracle: framing walk + event/packet/extra ids)
-      Some(s"""CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
-        WITH RECURSIVE
-        f AS (SELECT parse_filename(filename) AS src_file,
-            hex(content) AS h,
-            CAST(octet_length(content) AS BIGINT) AS nb
-          FROM read_blob('${SnortOps.oracleBaseDir}/raw_spool/*')),
-        walk AS (
-          SELECT src_file, h, nb, CAST(0 AS BIGINT) AS off,
-              CAST(-1 AS BIGINT) AS idx, CAST(NULL AS BIGINT) AS rtype,
-              CAST(NULL AS BIGINT) AS boff
-            FROM f
-          UNION ALL
-          SELECT src_file, h, nb, off + 8 + h2i(h, 2*(off+4)+1, 8),
-              idx + 1, h2i(h, 2*off+1, 8), off + 8
-            FROM walk
-            WHERE nb - off >= 8
-              AND h2i(h, 2*(off+4)+1, 8) < 2147483648
-              AND nb - off - 8 >= h2i(h, 2*(off+4)+1, 8)),
-        recs AS (SELECT src_file, h, idx, rtype, 2*boff+1 AS pb
-          FROM walk WHERE idx >= 0)
-        SELECT 'sensor1' AS sensor, src_file, CAST(idx AS INT) AS rec_index,
-          CAST(rtype AS INT) AS rec_type,
-          CASE WHEN rtype IN (7, 72, 104, 105, 2) THEN h2i(h, pb+8, 8)
-               WHEN rtype = 110 THEN h2i(h, pb+24, 8) END AS event_id,
-          CASE WHEN rtype IN (7, 72, 104, 105)
-               THEN h2i(h, pb+32, 8) END AS signature_id
-        FROM recs ORDER BY src_file, rec_index""")),
+      Some(spoolReparseSql)),
 
     Entry(
       "stream_tws_totals",
@@ -847,15 +860,8 @@ object StreamOps {
       // batch grouped aggregate (the oracle).
       (s, dir) => {
         import s.implicits._
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(provKey)
-        s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        try {
-          val evs: Dataset[SessEv] = eventStream(s, dir)
-            .select(col("user_id"), col("event_id"),
-              unix_micros(col("ts").cast("timestamp")).as("us"), col("value"))
-            .as[SessEv]
+        withRocksDbStateStore(s) {
+          val evs = sessEvents(s, dir)
           val totals = evs.groupByKey(_.user_id)
             .transformWithState(new TotalsProcessor,
               TimeMode.None(), OutputMode.Update())
@@ -871,9 +877,6 @@ object StreamOps {
             .select(col("user_id"), col("last.n_events").as("n_events"),
               (col("last.cents").cast("double") / 100.0).as("total"))
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
         }
       },
       Some("""SELECT user_id, COUNT(*) AS n_events,
@@ -889,11 +892,7 @@ object StreamOps {
       // Oracle: the batch grouped aggregate with arg_max.
       (s, dir) => {
         import s.implicits._
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(provKey)
-        s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        try {
+        withRocksDbStateStore(s) {
           val evs: Dataset[TypeEv] = eventStream(s, dir)
             .select(col("user_id"), col("event_type"), col("event_id"),
               unix_micros(col("ts").cast("timestamp")).as("us"))
@@ -913,9 +912,6 @@ object StreamOps {
               col("last.last_event_id").as("last_event_id"),
               col("last.last_us").as("last_us"))
             .orderBy(col("user_id"), col("event_type"))
-        } finally prev match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
         }
       },
       Some("""SELECT user_id, event_type, COUNT(*) AS n,
@@ -932,15 +928,8 @@ object StreamOps {
       // window rank (the oracle) regardless of batching.
       (s, dir) => {
         import s.implicits._
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(provKey)
-        s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        try {
-          val evs: Dataset[SessEv] = eventStream(s, dir)
-            .select(col("user_id"), col("event_id"),
-              unix_micros(col("ts").cast("timestamp")).as("us"), col("value"))
-            .as[SessEv]
+        withRocksDbStateStore(s) {
+          val evs = sessEvents(s, dir)
           val recent = evs.groupByKey(_.user_id)
             .transformWithState(new RecentProcessor,
               TimeMode.None(), OutputMode.Update())
@@ -953,9 +942,6 @@ object StreamOps {
               col("last.r1").as("r1"), col("last.r2").as("r2"),
               col("last.r3").as("r3"))
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
         }
       },
       Some("""WITH r AS (SELECT user_id, event_id,
@@ -1063,45 +1049,11 @@ object StreamOps {
       (s, _) => {
         val spool = Unified2Fixture.writeSpool(
           s"${Unified2Fixture.defaultRoot()}/spool")
-        val recs = graft.streaming.SpoolTail.streamRecords(
-          s, Seq(spool), "snort.log", "sensor1")
-        runOnce(s, recs.select(col("sensor"),
-            substring_index(col("src_file"), "/", -1).as("src_file"),
-            col("rec_index"), col("rec_type"), col("event_id"),
-            col("signature_id")), OutputMode.Append())
-          .orderBy(col("src_file"), col("rec_index"))
+        drainSpoolRecords(s, graft.streaming.SpoolTail.streamRecords(
+          s, Seq(spool), "snort.log", "sensor1"))
       },
       // byte-offset-bookmark tail == the same SQL re-parse
-      Some(s"""CREATE OR REPLACE MACRO h2i(h, p, k) AS list_reduce(
-          list_transform(range(CAST(p AS INT), CAST(p + k AS INT)),
-            i -> strpos('0123456789ABCDEF', h[CAST(i AS INT)]) - 1),
-          (a, b) -> a * 16 + b);
-        WITH RECURSIVE
-        f AS (SELECT parse_filename(filename) AS src_file,
-            hex(content) AS h,
-            CAST(octet_length(content) AS BIGINT) AS nb
-          FROM read_blob('${SnortOps.oracleBaseDir}/raw_spool/*')),
-        walk AS (
-          SELECT src_file, h, nb, CAST(0 AS BIGINT) AS off,
-              CAST(-1 AS BIGINT) AS idx, CAST(NULL AS BIGINT) AS rtype,
-              CAST(NULL AS BIGINT) AS boff
-            FROM f
-          UNION ALL
-          SELECT src_file, h, nb, off + 8 + h2i(h, 2*(off+4)+1, 8),
-              idx + 1, h2i(h, 2*off+1, 8), off + 8
-            FROM walk
-            WHERE nb - off >= 8
-              AND h2i(h, 2*(off+4)+1, 8) < 2147483648
-              AND nb - off - 8 >= h2i(h, 2*(off+4)+1, 8)),
-        recs AS (SELECT src_file, h, idx, rtype, 2*boff+1 AS pb
-          FROM walk WHERE idx >= 0)
-        SELECT 'sensor1' AS sensor, src_file, CAST(idx AS INT) AS rec_index,
-          CAST(rtype AS INT) AS rec_type,
-          CASE WHEN rtype IN (7, 72, 104, 105, 2) THEN h2i(h, pb+8, 8)
-               WHEN rtype = 110 THEN h2i(h, pb+24, 8) END AS event_id,
-          CASE WHEN rtype IN (7, 72, 104, 105)
-               THEN h2i(h, pb+32, 8) END AS signature_id
-        FROM recs ORDER BY src_file, rec_index""")),
+      Some(spoolReparseSql)),
 
     Entry(
       "stream_topk",
@@ -1277,11 +1229,6 @@ object StreamOps {
         q.awaitTermination()
         s.read.parquet(s"$root/b*").orderBy(col("event_id"))
       },
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS p_us,
-        s.event_id AS s_event_id, epoch_us(s.ts) AS s_us
-        FROM (SELECT * FROM events WHERE event_type='purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='signup') s
-        ON p.user_id = s.user_id AND p.ts >= s.ts
-        ORDER BY p.event_id"""))
+      Some(Analytics.asofOracleSql))
   )
 }

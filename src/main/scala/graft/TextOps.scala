@@ -248,12 +248,12 @@ object TextOps {
   private[graft] def textClassify(s: SparkSession, dir: String): DataFrame =
     classifyProjection(t(s, dir, "documents"), classifyWeights(s, dir))
 
-  /** Classifier oracle over the dumped per-token weights — shared by
-    * text_classify and stream_classify (drained stream == batch for a
-    * stateless projection, so the SAME SQL gates both).
+  /** The classifier's per-doc integer score over the dumped per-token
+    * weights: `sc` = (doc_id, n_tok, score_q). Shared by every oracle
+    * of a classify-scored entry.
     */
-  private[graft] val classifyOracleSql: String =
-    s"""WITH v AS (SELECT token, wq FROM read_parquet(
+  private[graft] val classifyScoreCtes: String =
+    s"""v AS (SELECT token, wq FROM read_parquet(
             '${OracleDumps.SqlRoot}/text/classify_vocab/*.parquet')),
           dd AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
               x -> len(x) > 0) AS w
@@ -262,7 +262,14 @@ object TextOps {
             FROM dd WHERE len(w) >= 1),
           sc AS (SELECT doc_id, COUNT(*) AS n_tok,
               CAST(SUM(v.wq) AS BIGINT) AS score_q
-            FROM tok JOIN v USING (token) GROUP BY doc_id)
+            FROM tok JOIN v USING (token) GROUP BY doc_id)"""
+
+  /** Classifier oracle over the dumped per-token weights — shared by
+    * text_classify and stream_classify (drained stream == batch for a
+    * stateless projection, so the SAME SQL gates both).
+    */
+  private[graft] val classifyOracleSql: String =
+    s"""WITH $classifyScoreCtes
         SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok, score_q,
           CAST(score_q AS DOUBLE) / 1e9 / n_tok AS score,
           score_q > 0 AS pred_hq
@@ -1266,20 +1273,12 @@ object TextOps {
         val merges = bpeMergesCached(s, dir, 10)
         // one merge level: greedy left-to-right rewrite of the
         // space-separated symbol string (identical fold to training)
-        def mergeFold(seq: Column, a: String, b: String): Column = {
-          val (aL, bL) = (lit(a), lit(b))
+        def mergeFold(seq: Column, a: String, b: String): Column =
           aggregate(
             slice(split(seq, " "), lit(2),
               greatest(size(split(seq, " ")) - 1, lit(0))),
             element_at(split(seq, " "), 1),
-            (acc, x) => when(x === bL && (acc === aL ||
-                acc.endsWith(concat(lit(" "), aL))),
-              when(acc === aL, concat(aL, bL))
-                .otherwise(concat(
-                  acc.substr(lit(1), length(acc) - length(aL) - 1),
-                  lit(" "), aL, bL)))
-              .otherwise(concat(acc, lit(" "), x)))
-        }
+            bpeMergeStep(a, b))
         def charSeq(w: Column): Column = concat(array_join(
           transform(sequence(lit(1), length(w)),
             i => w.substr(i, lit(1))), " "), lit(" </w>"))
@@ -1345,18 +1344,11 @@ object TextOps {
       val (a, b, cnt) =
         (best.getString(0), best.getString(1), best.getLong(2))
       merges += ((step, a, b, a + b, cnt))
-      val (aL, bL) = (lit(a), lit(b))
       val rewritten = aggregate(
         expr("slice(split(seq, ' '), 2, " +
           "greatest(size(split(seq, ' ')) - 1, 0))"),
         expr("element_at(split(seq, ' '), 1)"),
-        (acc, x) => when(x === bL && (acc === aL ||
-            acc.endsWith(concat(lit(" "), aL))),
-          when(acc === aL, concat(aL, bL))
-            .otherwise(concat(
-              acc.substr(lit(1), length(acc) - length(aL) - 1),
-              lit(" "), aL, bL)))
-          .otherwise(concat(acc, lit(" "), x)))
+        bpeMergeStep(a, b))
       vocab = vocab.select(col("wc"), rewritten.as("seq"))
         .localCheckpoint(false)
     }
@@ -1377,6 +1369,31 @@ object TextOps {
       (System.identityHashCode(s), s"$dir#$nMerges"),
       _ => bpeMerges(s, dir, nMerges))
 
+  /** One BPE merge of pair (a, b) as an aggregate() step over the
+    * space-separated symbols: a greedy left-to-right rewrite, the same
+    * fold in training and in bpe_apply. */
+  private def bpeMergeStep(a: String, b: String): (Column, Column) => Column = {
+    val (aL, bL) = (lit(a), lit(b))
+    (acc, x) => when(x === bL && (acc === aL ||
+        acc.endsWith(concat(lit(" "), aL))),
+      when(acc === aL, concat(aL, bL))
+        .otherwise(concat(
+          acc.substr(lit(1), length(acc) - length(aL) - 1),
+          lit(" "), aL, bL)))
+      .otherwise(concat(acc, lit(" "), x))
+  }
+
+  /** SQL twin of [[bpeMergeStep]]: merge pair `bb` (a, b) into
+    * `t.seq`. */
+  private def bpeMergeSql(t: String): String =
+    s"""list_reduce(string_split($t.seq, ' '),
+          (acc, x) -> CASE WHEN x = bb.b AND (acc = bb.a
+              OR ends_with(acc, ' ' || bb.a))
+            THEN CASE WHEN acc = bb.a THEN bb.a || bb.b
+              ELSE substr(acc, 1, len(acc) - len(bb.a) - 1)
+                || ' ' || bb.a || bb.b END
+            ELSE acc || ' ' || x END)"""
+
   /** The training loop's CTE chain, shared by the bpe_train and
     * bpe_apply oracles: stage k counts stage k-1's vocabulary pairs,
     * takes the 1-row argmax under the same (count DESC, pair) total
@@ -1394,13 +1411,7 @@ object TextOps {
         GROUP BY t2.a, t2.b),
       best$k AS (SELECT CAST($k AS INT) AS step, a, b, cnt FROM p$k
         ORDER BY cnt DESC, a, b LIMIT 1),
-      v$k AS (SELECT v.wc, list_reduce(string_split(v.seq, ' '),
-          (acc, x) -> CASE WHEN x = bb.b AND (acc = bb.a
-              OR ends_with(acc, ' ' || bb.a))
-            THEN CASE WHEN acc = bb.a THEN bb.a || bb.b
-              ELSE substr(acc, 1, len(acc) - len(bb.a) - 1)
-                || ' ' || bb.a || bb.b END
-            ELSE acc || ' ' || x END) AS seq
+      v$k AS (SELECT v.wc, ${bpeMergeSql("v")} AS seq
         FROM v${k - 1} v CROSS JOIN best$k bb)"""
     }.mkString(",\n      ")
     s"""v0 AS (SELECT CAST(COUNT(*) AS BIGINT) AS wc,
@@ -1425,13 +1436,7 @@ object TextOps {
     */
   private def bpeApplySql(nMerges: Int): String = {
     val applyStages = (1 to nMerges).map { k =>
-      s"""e$k AS (SELECT e.word, list_reduce(string_split(e.seq, ' '),
-          (acc, x) -> CASE WHEN x = bb.b AND (acc = bb.a
-              OR ends_with(acc, ' ' || bb.a))
-            THEN CASE WHEN acc = bb.a THEN bb.a || bb.b
-              ELSE substr(acc, 1, len(acc) - len(bb.a) - 1)
-                || ' ' || bb.a || bb.b END
-            ELSE acc || ' ' || x END) AS seq
+      s"""e$k AS (SELECT e.word, ${bpeMergeSql("e")} AS seq
         FROM e${k - 1} e CROSS JOIN best$k bb)"""
     }.mkString(",\n      ")
     s"""WITH ${bpeStagesSql(nMerges)},

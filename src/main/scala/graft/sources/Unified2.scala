@@ -223,6 +223,17 @@ object Unified2 {
     }
   }
 
+  /** The `prefix*` files of `dirs` as (path, bytes), one row per file. */
+  private def spoolFiles(spark: SparkSession, dirs: Seq[String],
+      prefix: String): Dataset[(String, Array[Byte])] = {
+    import spark.implicits._
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", s"$prefix*")
+      .load(dirs: _*)
+      .select(col("path"), col("content"))
+      .as[(String, Array[Byte])]
+  }
+
   /** All records of a spool: one directory (or glob) of `prefix.*`
     * files, one parse task per file. `sensor` is the logical sensor
     * name the directory belongs to (multiple dirs may share it — the
@@ -232,12 +243,8 @@ object Unified2 {
   def records(spark: SparkSession, dirs: Seq[String], prefix: String,
       sensor: String): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.format("binaryFile")
-      .option("pathGlobFilter", s"$prefix*")
-      .load(dirs: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    raw.flatMap { case (path, bytes) => parseFile(path, bytes) }
+    spoolFiles(spark, dirs, prefix)
+      .flatMap { case (path, bytes) => parseFile(path, bytes) }
       .toDF()
       .withColumn("sensor", lit(sensor))
   }
@@ -379,12 +386,7 @@ object Unified2 {
   def alertsAssembled(spark: SparkSession, dirs: Seq[String],
       prefix: String, sensor: String): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.format("binaryFile")
-      .option("pathGlobFilter", s"$prefix*")
-      .load(dirs: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    raw.flatMap { case (path, bytes) =>
+    spoolFiles(spark, dirs, prefix).flatMap { case (path, bytes) =>
         assembleFile(sensor, parseFile(path, bytes)) }
       .toDF()
       .withColumn("event_ts", timestamp_seconds(

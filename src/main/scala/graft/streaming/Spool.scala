@@ -75,7 +75,6 @@ object Spool {
   def ingestOnce(spark: SparkSession, dirs: Seq[String], prefix: String,
       sensor: String, sigMapPath: String, genMapPath: String,
       classMapPath: String, outPath: String, checkpoint: String): Unit = {
-    invalidateNamespace(checkpoint)
     migrateLegacyBatches(spark, outPath, checkpoint)
     val q = streamRecords(spark, dirs, prefix, sensor)
       .writeStream
@@ -98,7 +97,6 @@ object Spool {
       classMapPath: String, outPath: String, checkpoint: String,
       availableNow: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    invalidateNamespace(checkpoint)
     migrateLegacyBatches(spark, outPath, checkpoint)
     val w = SpoolTail.streamRecords(spark, dirs, prefix, sensor)
       .writeStream
@@ -174,6 +172,10 @@ object Spool {
     * [[Unified2.alerts]]. The rule-map lookups are broadcast once per
     * stamp (see [[ingestOnce]]) and applied by [[sinkRows]]'s
     * projection, so the batch's only Spark job is the staging write.
+    * The checkpoint namespace is read once, at the query's first batch
+    * (Spark has written `metadata` by then), and lives in this closure:
+    * each started query builds its own, so a checkpoint deleted and
+    * recreated at the same path gets the new lifetime's namespace.
     */
   private def enrichAndAppend(spark: SparkSession, sigMapPath: String,
       genMapPath: String, classMapPath: String, outPath: String,
@@ -182,10 +184,11 @@ object Spool {
       Maps.sigLookup(sigMapPath, genMapPath))
     val classes = StampedMaps.broadcast(spark, Seq(classMapPath))(
       Maps.classLookup(classMapPath))
+    lazy val ns = checkpointNamespace(spark, checkpoint)
     (batch: Dataset[Row], id: Long) =>
       idempotentAppend(spark,
         sinkRows(Unified2.events(batch), sigs(), classes()),
-        outPath, id, checkpointNamespace(spark, checkpoint))
+        outPath, id, ns)
   }
 
   /** The follow sink's columns: `events` enriched by the broadcast
@@ -260,45 +263,24 @@ object Spool {
     * an outPath an older run populated (ADVICE r12): its batch 0 would
     * silently DELETE the previous run's batch_0 files. Keying on
     * (queryId, batchId) makes the overwrite exact — a replay only ever
-    * touches its own prior attempt. The query id is immutable for a
-    * checkpoint's lifetime, so the parse is memoized per checkpoint
-    * path (ADVICE r13) — the metadata file is read once per JVM, not
-    * once per micro-batch. But a PATH is not a LIFETIME: delete and
-    * recreate a checkpoint dir at the same path within one JVM and the
-    * stale cached id would make the new lifetime's batch-0 replay-delete
-    * target the PREVIOUS lifetime's files — the exact data loss the
-    * namespacing exists to prevent (ADVICE r14). So every ingest start
-    * ([[ingestOnce]]/[[tailIngest]]) drops the entry via
-    * [[invalidateNamespace]] and the first batch re-reads `metadata`,
-    * which by then holds the new lifetime's uuid.
+    * touches its own prior attempt. Reads `metadata` on every call; the
+    * sink reads it once per started query ([[enrichAndAppend]]), never
+    * across queries, since a PATH is not a LIFETIME (ADVICE r14).
     */
-  private val nsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop the memoized query id for `checkpoint` — called at every
-    * stream start so a deleted-and-recreated checkpoint at the same
-    * path mints its OWN namespace instead of inheriting (and then
-    * replay-deleting) the previous lifetime's (ADVICE r14).
-    */
-  private[graft] def invalidateNamespace(checkpoint: String): Unit = {
-    nsCache.remove(checkpoint); ()
-  }
-
   private[graft] def checkpointNamespace(spark: SparkSession,
-      checkpoint: String): String =
-    nsCache.computeIfAbsent(checkpoint, { cp =>
-      import org.apache.hadoop.fs.Path
-      val meta = new Path(cp, "metadata")
-      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(meta)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      "\"id\"\\s*:\\s*\"([0-9a-fA-F-]+)\"".r.findFirstMatchIn(txt) match {
-        case Some(m) => m.group(1).replace("-", "").toLowerCase
-        case None => sys.error(s"ingest: no query id in $meta")
-      }
-    })
+      checkpoint: String): String = {
+    import org.apache.hadoop.fs.Path
+    val meta = new Path(checkpoint, "metadata")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(meta)
+    val txt =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    "\"id\"\\s*:\\s*\"([0-9a-fA-F-]+)\"".r.findFirstMatchIn(txt) match {
+      case Some(m) => m.group(1).replace("-", "").toLowerCase
+      case None => sys.error(s"ingest: no query id in $meta")
+    }
+  }
 
   /** Pre-r13 ingest batches were promoted WITHOUT a checkpoint
     * namespace (`batch_<id>_<i>.parquet`); [[idempotentAppend]]'s

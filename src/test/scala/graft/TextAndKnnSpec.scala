@@ -172,6 +172,24 @@ class KnnSpec extends SparkSuite {
     }
   }
 
+  test("IVF probe keeps exactly nProbe cells per query, ties to the lower cell id") {
+    import spark.implicits._
+    // cells 1 and 3 share one centroid, so every query ties on them;
+    // cell 4 points away from both queries
+    val cen = Seq((3L, Array(1.0, 0.0)), (2L, Array(0.0, 1.0)),
+      (4L, Array(-1.0, 0.0)), (1L, Array(1.0, 0.0))).toDF("cell", "cvec")
+    val queries = Seq((10L, Array(0.8, 0.6)), (11L, Array(0.6, 0.8)))
+      .toDF("qid", "qvec")
+    def probed(nProbe: Int): Map[Long, Seq[Long]] =
+      SimilarityOps.probeCells(queries, cen, nProbe).collect().toSeq
+        .groupBy(_.getAs[Long]("qid"))
+        .map { case (qid, rs) => qid -> rs.map(_.getAs[Long]("cell")).sorted }
+    // qid 10 dots: 1 → 0.8, 3 → 0.8, 2 → 0.6; qid 11: 2 → 0.8, 1 = 3 → 0.6
+    assert(probed(1) == Map(10L -> Seq(1L), 11L -> Seq(2L)))
+    assert(probed(2) == Map(10L -> Seq(1L, 3L), 11L -> Seq(1L, 2L)))
+    assert(probed(3) == Map(10L -> Seq(1L, 2L, 3L), 11L -> Seq(1L, 2L, 3L)))
+  }
+
   test("knn results are deterministic") {
     val a = q("knn_brute", sfDir).collect().map(_.toString)
     val b = q("knn_brute", sfDir).collect().map(_.toString)

@@ -10,13 +10,31 @@ and cell values (exact for non-floats, exact-or-1e-12-relative report
 for floats). Strict: any difference is listed.
 """
 import sys, json, glob, os, math
-import duckdb
 import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
+# Promised float tolerance: a conversion ulp (e.g. DuckDB's
+# int128-decimal -> double at large magnitude) is noted, not failed.
+REL_TOL = 1e-12
+
+
+def float_rel_diff(a, b):
+    """0.0 when the floats are equal (NaN equals NaN), else their
+    difference relative to the larger magnitude."""
+    if a == b or (math.isnan(a) and math.isnan(b)):
+        return 0.0
+    return abs(a - b) / max(abs(a), abs(b), 1e-300)
+
+
+def floats_match(a, b):
+    """The float rule: exactly equal or within REL_TOL relative."""
+    return float_rel_diff(a, b) <= REL_TOL
+
+
 def main(sf_dir, out_dir):
+    import duckdb
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -71,17 +89,13 @@ def main(sf_dir, out_dir):
                 if a is None and b is None:
                     continue
                 if isinstance(a, float) and isinstance(b, float):
-                    if math.isnan(a) and math.isnan(b):
+                    rel = float_rel_diff(a, b)
+                    if rel == 0.0:
                         continue
-                    if a != b:
-                        rel = abs(a - b) / max(abs(a), abs(b), 1e-300)
-                        # promised tolerance: a conversion ulp (e.g.
-                        # DuckDB's int128-decimal -> double at large
-                        # magnitude) is noted, not failed
-                        if rel <= 1e-12:
-                            ulps += 1
-                        else:
-                            bad.append(f"{c}[{i}]: {a!r} != {b!r} (rel={rel:.2e})")
+                    if floats_match(a, b):
+                        ulps += 1
+                    else:
+                        bad.append(f"{c}[{i}]: {a!r} != {b!r} (rel={rel:.2e})")
                 elif str(a) != str(b):
                     bad.append(f"{c}[{i}]: {a!r} != {b!r}")
                 if len(bad) >= 5:
