@@ -220,7 +220,6 @@ object Analytics4 {
       // SURVEY §22 carries the measured table. Recall is one IEEE
       // division of two exact counts, so the report hash-matches.
       (s, dir) => {
-        dumpQ71Buckets(s, dir)
         val truth = q71FuzzyMatch(s, dir)
           .select(col("a_key"), col("b_key"), col("dist"))
         val cand = q71CappedCandidates(s, dir).withColumn("hit", lit(1L))
@@ -653,31 +652,23 @@ object Analytics4 {
         .persist()
     }
 
-  private val q71DumpDone = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), java.lang.Boolean]()
-
-  /** Dump the kept buckets once per (session, corpus) so the DuckDB
+  /** The oracle dump of the shipped-cap kept buckets, so the DuckDB
     * oracle re-derives candidate pairs from the same blocking product
     * (re-pairing + re-verifying in SQL; the variant hashing and the
-    * cap are the Spark-side steps under test via the pair set). Same
-    * scoping discipline as DedupOps.dumpOracleBase.
+    * cap are the Spark-side steps under test via the pair set).
     */
-  private[graft] def dumpQ71Buckets(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    q71DumpDone.computeIfAbsent((System.identityHashCode(s), dir), _ => {
-      // NO single-file collapse: coalesce(1) on the not-yet-
-      // materialized store folds past the groupBy exchange and runs
-      // the whole bucket build as ONE reduce task, and repartition(1)
-      // still serializes the ~50 M-row parquet encode at the decade
-      // dirs (both measured as multi-minute single-core stalls). The
-      // oracle reads a *.parquet glob, so the dump keeps the store's
-      // natural partitioning and writes in parallel.
-      cappedBuckets(s, dir)
-        .select(col("bk"), explode(col("keys")).as("key"))
-        .write.mode("overwrite")
-        .parquet(s"${OracleDumps.root(s, dir)}/q71/buckets")
-      true
-    })
+  def oracleDumps(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    // NO single-file collapse: coalesce(1) on the not-yet-
+    // materialized store folds past the groupBy exchange and runs
+    // the whole bucket build as ONE reduce task, and repartition(1)
+    // still serializes the ~50 M-row parquet encode at the decade
+    // dirs (both measured as multi-minute single-core stalls). The
+    // oracle reads a *.parquet glob, so the dump keeps the store's
+    // natural partitioning and writes in parallel.
+    cappedBuckets(s, dir)
+      .select(col("bk"), explode(col("keys")).as("key"))
+      .write.mode("overwrite")
+      .parquet(s"${OracleDumps.root(s, dir)}/q71/buckets")
 
   /** Distinct candidate pairs (a_key < b_key) from the kept buckets —
     * pairs explode JOIN-FREE inside each bucket's ≤cap-element key
@@ -704,10 +695,8 @@ object Analytics4 {
     * output is bit-identical to the exact entry, Round20Spec-pinned).
     */
   private[graft] def q71FuzzyCapped(s: org.apache.spark.sql.SparkSession,
-      dir: String, cap: Int = Q71Cap): org.apache.spark.sql.DataFrame = {
-    if (cap == Q71Cap) dumpQ71Buckets(s, dir)
+      dir: String, cap: Int = Q71Cap): org.apache.spark.sql.DataFrame =
     q71Verify(q71CappedCandidates(s, dir, cap), t(s, dir, "customer"))
-  }
 
   /** Banded Levenshtein distance (≤ 2, else 3) of a_name and b_name. */
   private def q71Dist: org.apache.spark.sql.Column = {

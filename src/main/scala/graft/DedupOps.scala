@@ -157,7 +157,6 @@ object DedupOps {
     minhashStoreHist(s, dir)
     histGramStore(s, dir)
     histGramBloom(s, dir).count()
-    dumpOracleBase(s, dir)
   }
 
   /** SimHash64 signature per document (shared by the dedup_simhash
@@ -247,7 +246,6 @@ object DedupOps {
     */
   private[graft] def dedupSimhash(s: SparkSession, dir: String,
       forceDepth: Option[Int] = None): DataFrame = {
-    dumpOracleBase(s, dir)
     val sig = simhashSigs(s, dir)
     val distinctSig = sig.select(col("sig")).distinct()
     val depth = forceDepth.getOrElse {
@@ -328,37 +326,29 @@ object DedupOps {
 
   /** Dedup oracle-base dumps. The 64-bit wrapping hashes themselves
     * (MinHash permutations, SimHash, hyperplane sign keys over floats,
-    * winnowing) are inexpressible in DuckDB — so the entries dump
-    * exactly those CANDIDATE-GENERATION intermediates once per
-    * (session, corpus), and the oracle re-runs everything downstream
-    * in SQL: bucket/band joins, split logic, exact Jaccard from
-    * text-derived shingles, hamming via bit_count∘xor, cosine via the
-    * bit-exact list_reduce fold, and connected components as a
-    * recursive CTE. The hash computation itself is spec'd directly
-    * (DedupSpec planted pairs). Paths are corpus-scoped (see
-    * [[OracleDumps]]) so interleaved runs against other dirs can't
-    * clobber the gate's dumps; `dumpSql` is the placeholder form baked
-    * into the static SQL.
+    * winnowing) are inexpressible in DuckDB — so [[Verify]] dumps
+    * exactly those CANDIDATE-GENERATION intermediates, and the oracle
+    * re-runs everything downstream in SQL: bucket/band joins, split
+    * logic, exact Jaccard from text-derived shingles, hamming via
+    * bit_count∘xor, cosine via the bit-exact list_reduce fold, and
+    * connected components as a recursive CTE. The hash computation
+    * itself is spec'd directly (DedupSpec planted pairs). Paths are
+    * corpus-scoped (see [[OracleDumps]]) so interleaved runs against
+    * other dirs can't clobber the gate's dumps; `dumpSql` is the
+    * placeholder form baked into the static SQL.
     */
+  def oracleDumps(s: SparkSession, dir: String): Unit = {
+    val base = s"${OracleDumps.root(s, dir)}/dedup"
+    OracleDumps.write(bandedSigs(s, dir), s"$base/banded")
+    OracleDumps.write(simhashSigs(s, dir), s"$base/simsig")
+    OracleDumps.write(
+      embeddingBuckets(s, dir).select(col("bucket"), col("vec_id")),
+      s"$base/embbuckets")
+    OracleDumps.write(
+      winnowFp(t(s, dir, "documents").select(col("doc_id"), col("text"))),
+      s"$base/substrfp")
+  }
   private val dumpSql = s"${OracleDumps.SqlRoot}/dedup"
-  private val dumpDone =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), java.lang.Boolean]()
-
-  def dumpOracleBase(s: SparkSession, dir: String): Unit =
-    dumpDone.computeIfAbsent((System.identityHashCode(s), dir), _ => {
-      val base = s"${OracleDumps.root(s, dir)}/dedup"
-      bandedSigs(s, dir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$base/banded")
-      simhashSigs(s, dir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$base/simsig")
-      embeddingBuckets(s, dir).select(col("bucket"), col("vec_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$base/embbuckets")
-      winnowFp(t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$base/substrfp")
-      true
-    })
 
   /** doc_id + word-3-shingle distinct set as a DuckDB CTE — the SQL
     * twin of [[shingled]], shared by the minhash-family oracles.
@@ -522,7 +512,6 @@ object DedupOps {
       // Shingles/signatures are cached — they feed both the bucket join
       // and the verification join.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         minhashPairs(s, dir).orderBy(col("a"), col("b"))
       },
       // Candidates re-joined in SQL from the DUMPED banded signatures
@@ -548,7 +537,6 @@ object DedupOps {
       // cluster size. This is the step that turns pairwise similarity
       // into the actual keep/drop decision of a corpus dedup pass.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val cc = connectedComponents(minhashPairs(s, dir).select(
           col("a"), col("b")))
         cc.groupBy(col("label").as("cluster"))
@@ -598,7 +586,6 @@ object DedupOps {
       // oracle from the dumped banded signatures + SQL shingle twin.
       (s, dir) => {
         withJaccardRewrite(s)
-        dumpOracleBase(s, dir)
         val cand = pairsFromBuckets(bandedSigs(s, dir), Seq("band", "bkey"))
         val sh = shingledCached(s, dir)
         val joined = cand.join(sh.toDF("a", "sh_a"), "a")
@@ -649,7 +636,6 @@ object DedupOps {
       // report itself is a ≤10-row aggregate.
       (s, dir) => {
         withJaccardRewrite(s)
-        dumpOracleBase(s, dir)
         val cand = pairsFromBuckets(bandedSigs(s, dir), Seq("band", "bkey"))
         val sh = shingledCached(s, dir)
         cand.join(sh.toDF("a", "sh_a"), "a")
@@ -703,7 +689,6 @@ object DedupOps {
       // Integer-exact bins (cross-multiplied); recall is one IEEE
       // division of two exact counts, so the report hash-matches.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val sh = shingledCached(s, dir).filter(col("doc_id") < 200)
         val truth = sh.toDF("a", "sh_a")
           .join(broadcast(sh.toDF("b", "sh_b")), col("a") < col("b"))
@@ -769,7 +754,6 @@ object DedupOps {
       // entry). DedupSpec pins the planted cross-split pairs.
       (s, dir) => {
         withJaccardRewrite(s)
-        dumpOracleBase(s, dir)
         val hist = minhashStoreHist(s, dir)
           .select(col("band"), col("bkey"), col("doc_id").as("dup_of"))
         val probe = bandedSigs(s, dir).filter(col("doc_id") % 10 === 0)
@@ -936,7 +920,6 @@ object DedupOps {
       // small tables trade one wide (low-recall) signature for OR-ed
       // recall while the candidate join stays one hash-shuffle.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val keyed = Scratch.reg(embeddingBuckets(s, dir))
         val l = keyed.select(col("bucket"), col("vec_id").as("a"),
           col("nv").as("e_a"))
@@ -979,7 +962,6 @@ object DedupOps {
       // fingerprints per pair, keep ≥ 3. Shuffles: one on the
       // fingerprint (bucket join), one on the pair — never n².
       (s, dir) => {
-        dumpOracleBase(s, dir)
         substringPairs(
           t(s, dir, "documents").select(col("doc_id"), col("text")))
       },
@@ -1179,26 +1161,10 @@ object DedupOps {
             || CASE WHEN doc_id % 5 = 0 THEN '?utm_source=feed' ELSE '' END
             || CASE WHEN doc_id % 4 = 0 THEN '#top' ELSE '' END AS url
           FROM documents),
-        p AS (SELECT doc_id, n_chars,
-          lower(regexp_extract(url, '^([A-Za-z]+)://', 1)) AS scheme,
-          regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1) AS hostport,
-          regexp_replace(
-            regexp_extract(url, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1),
-            '[^/]+/\.\./', '') AS path,
-          regexp_extract(url, '\?([^#]*)', 1) AS q0 FROM u),
-        c AS (SELECT doc_id, n_chars, scheme, path,
-          regexp_replace(lower(regexp_replace(hostport, ':[0-9]+$', '')),
-            '^www\.', '') AS host,
-          regexp_extract(hostport, ':([0-9]+)$', 1) AS port,
-          regexp_replace(regexp_replace(q0, '(^|&)utm_[^&]*', '', 'g'),
-            '^&', '') AS q2 FROM p),
-        k AS (SELECT doc_id, n_chars,
-          scheme || '://' || host
-            || CASE WHEN (scheme = 'https' AND port = '443')
-                 OR (scheme = 'http' AND port = '80') OR port = ''
-              THEN '' ELSE ':' || port END
-            || path
-            || CASE WHEN q2 = '' THEN '' ELSE '?' || q2 END AS canon_url
+        """ + TextOps.urlCanonCtes("doc_id, n_chars",
+          "doc_id, n_chars, scheme, path") + """,
+        k AS (SELECT doc_id, n_chars, """ + TextOps.CanonUrlSql +
+          """ AS canon_url
           FROM c),
         r AS (SELECT canon_url, doc_id, n_chars,
           ROW_NUMBER() OVER (PARTITION BY canon_url

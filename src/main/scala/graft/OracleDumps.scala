@@ -1,15 +1,18 @@
 package graft
 
 /** Location scheme for the oracle-base dumps (the candidate-generation
-  * intermediates DuckDB re-derives downstream logic from). Dumps are
-  * scoped BY CORPUS DIR **and BY applicationId**: the `oracleSql`
+  * intermediates DuckDB re-derives downstream logic from). Entries
+  * never write them: each module whose oracles read dumps has one
+  * `oracleDumps(s, dir)` step, and [[Verify]] runs every step once
+  * before its entries. Dumps are scoped BY CORPUS DIR **and BY
+  * applicationId**: the `oracleSql`
   * strings are built statically (no dir or session in scope), so they
   * bake in literal placeholders and [[Verify]] substitutes the actual
   * corpus slug and its own applicationId when it writes
-  * `oracle_sql.json`. Corpus scoping stops an entry invocation against
-  * another dir from clobbering the gate's dumps; applicationId scoping
-  * stops a CONCURRENT JVM on the SAME corpus (a test suite or bench
-  * interleaved with Verify) from overwriting the store mid-read —
+  * `oracle_sql.json`. Corpus scoping stops a dump against another
+  * dir from clobbering the gate's dumps; applicationId scoping stops a
+  * CONCURRENT JVM on the SAME corpus (a second Verify run, or a test
+  * running the dump steps) from overwriting the store mid-read —
   * centroid training uses avg() (order-dependent float sum), so a
   * concurrent re-dump between Verify and the DuckDB compare could
   * otherwise flip hash comparisons.
@@ -31,13 +34,17 @@ object OracleDumps {
   def scratchSlug(dir: String): String =
     slug(dir) + "_h" +
       Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir))
-  /** Runtime dump root for entries writing against `dir` from session
-    * `s` — unique per (corpus, JVM).
+  /** Runtime dump root for the dump steps writing against `dir` from
+    * session `s` — unique per (corpus, JVM).
     */
   def root(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     housekeep(s)
     s"$Base/${slug(dir)}__${s.sparkContext.applicationId}"
   }
+
+  /** Write `df` as the single-partition parquet dump at `path`. */
+  def write(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
 
   /** Millis stamp embedded in a local-mode applicationId (or in a dir
     * name derived from one — slugging turns `local-123` into
@@ -47,9 +54,10 @@ object OracleDumps {
     raw"local[-_](\d{10,})".r.findAllMatchIn(name).toSeq.lastOption
       .map(_.group(1).toLong)
 
-  /** App-ID scoping means every JVM (each suite, bench, Verify run)
-    * writes a fresh copy of the dumps and stores — without cleanup
-    * they accumulate unboundedly across rounds (ADVICE r7). Once per
+  /** App-ID scoping means every Verify run writes a fresh copy of the
+    * dumps, and every JVM (each suite, bench, Verify run) a fresh copy
+    * of the stores — without cleanup they accumulate unboundedly
+    * across rounds (ADVICE r7). Once per
     * JVM, delete any sibling scoped dir stamped >3 h OLDER than this
     * app's own local-<millis> stamp. Age is measured app-to-app (no
     * wall clock), the margin keeps every concurrent JVM and any

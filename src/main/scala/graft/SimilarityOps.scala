@@ -99,7 +99,6 @@ object SimilarityOps {
   private[graft] def knnGraphPlan(s: SparkSession, dir: String,
       forceParts: Option[Int] = None,
       selfJoinMutual: Boolean = false): KnnGraphStagePlans = {
-    dumpOracleBase(s, dir)
     val asg = assignedCached(s, dir)
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
     val parts = forceParts.getOrElse {
@@ -157,6 +156,25 @@ object SimilarityOps {
         .select(col("src"), col("dst"), col("sim"))
     }).orderBy(col("src"), col("dst"))
     KnnGraphStagePlans(probes, scored, top, mutual)
+  }
+
+  /** knn_hybrid's (doc_id, term) rows: each document's distinct words. */
+  private def hybridTerms(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(array_distinct(TextOps.words(lower(col("text"))))).as("term"))
+
+  /** knn_hybrid's per-term idf as round(idf · 1e9) `idf_q` — the one
+    * step of the entry behind a transcendental, so its oracle reads it
+    * as a dump (bm25's contract).
+    */
+  private def hybridIdf(docs: DataFrame, tok: DataFrame): DataFrame = {
+    val nD = docs.count().toDouble // bounded scalar (bm25's N pull)
+    tok.groupBy(col("term"))
+      .agg(countDistinct(col("doc_id")).as("df"))
+      .withColumn("idf_q",
+        round(log((lit(nD) - col("df") + 0.5) / (col("df") + 0.5)
+          + 1.0) * 1e9).cast("long"))
+      .select(col("term"), col("idf_q"))
   }
 
   /** knn_hybrid's JOIN-FREE lexical ranking (VERDICT r17 #4): top-50
@@ -467,39 +485,37 @@ object SimilarityOps {
     cen.count(); codes.count()
     val (prCen, prCodes) = pqRefreshBase(s, dir)
     prCen.count(); prCodes.count()
-    dumpOracleBase(s, dir)
   }
 
-  /** Absolute dump dir for the IVF oracle base: the TRAINED index
-    * (centroids from the float k-means fixpoint, cell assignments) is
-    * the one piece DuckDB can't re-derive — dump it once per
-    * (session, corpus) and the oracle re-runs the entire SERVING path
-    * in SQL: query normalization, centroid ranking, probe pruning,
-    * dot-product scoring (the bit-exact list_reduce fold knn_brute
-    * proved) and the top-k rank. Training determinism is spec'd
-    * directly (KnnSpec / PQSpec).
+  /** The oracle dumps of the knn index: the TRAINED IVF index
+    * (centroids from the float k-means fixpoint, cell assignments), the
+    * PQ codebooks + codes, the refreshed PQ index and knn_hybrid's idf
+    * table are the pieces DuckDB can't re-derive, so [[Verify]] writes
+    * them from the session's cached artifacts (never a retrain) and
+    * the oracles re-run the entire SERVING path in SQL: query
+    * normalization, centroid ranking, probe pruning, dot-product
+    * scoring (the bit-exact list_reduce fold knn_brute proved) and the
+    * top-k rank. Training determinism is spec'd directly (KnnSpec /
+    * PQSpec).
     */
+  def oracleDumps(s: SparkSession, dir: String): Unit = {
+    val base = s"${OracleDumps.root(s, dir)}/knn"
+    OracleDumps.write(centroids(s, dir), s"$base/centroids")
+    OracleDumps.write(assignedCached(s, dir), s"$base/assignments")
+    val (pqCen, pqCodes) = pqIndex(s, dir, embeddings(s, dir))
+    OracleDumps.write(pqCen, s"$base/pq_codebooks")
+    OracleDumps.write(pqCodes, s"$base/pq_codes")
+    val (rCen, rCodes) = pqRefreshed(s, dir)
+    OracleDumps.write(rCen, s"$base/pq_r_codebooks")
+    OracleDumps.write(rCodes, s"$base/pq_r_codes")
+    val docs = t(s, dir, "documents")
+    OracleDumps.write(hybridIdf(docs, hybridTerms(docs)),
+      s"$base/hybrid_idf")
+  }
   // placeholder-form SQL path root: dump paths are corpus-scoped (see
   // OracleDumps) so interleaved runs against other dirs — fixture
   // specs, another SF's bench — can't clobber the gate's dumps
   private val dumpSql = s"${OracleDumps.SqlRoot}/knn"
-  private val dumpDone =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), java.lang.Boolean]()
-
-  def dumpOracleBase(s: SparkSession, dir: String): Unit =
-    dumpDone.computeIfAbsent((System.identityHashCode(s), dir), _ => {
-      val base = s"${OracleDumps.root(s, dir)}/knn"
-      val cen = centroids(s, dir)
-      cen.coalesce(1).write.mode("overwrite").parquet(s"$base/centroids")
-      assignedCached(s, dir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/assignments")
-      val (pqCen, pqCodes) = pqIndex(s, dir, embeddings(s, dir))
-      pqCen.coalesce(1)
-        .write.mode("overwrite").parquet(s"$base/pq_codebooks")
-      pqCodes.coalesce(1)
-        .write.mode("overwrite").parquet(s"$base/pq_codes")
-      true
-    })
 
   /** SQL twin of [[embeddings]]: each vector divided by √Σx², the same
     * left folds as Vectors.normalized; `cols` ride beside `e`.
@@ -767,7 +783,6 @@ object SimilarityOps {
       // probe's cell filter a partition-pruned read (the on-disk form
       // of IVF posting lists). KnnSpec pins persisted ≡ in-memory.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val idx = ivfStorePath(s, dir)
         writeIndex(s, dir, idx)
         val q = queryVecs(embeddings(s, dir), col("vec_id") < 10)
@@ -1021,7 +1036,6 @@ object SimilarityOps {
       // worst case, where recall ~ fraction probed. On clustered real
       // embeddings the same plan recalls >0.9 at the same probe count.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val q = queryVecs(embeddings(s, dir), col("vec_id") < 10)
         ivfTopK(centroids(s, dir), assignedCached(s, dir), q, 4, 5)
           .orderBy(col("qid"), col("rank"))
@@ -1043,7 +1057,6 @@ object SimilarityOps {
       // the brute side is the expensive half, which is exactly why a
       // recall report samples queries instead of scoring all of them.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val emb = embeddings(s, dir)
         val q = queryVecs(emb, col("vec_id") < 10)
         val brute = topkPerQuery(bruteScored(emb, q), "sim", 5)
@@ -1097,20 +1110,9 @@ object SimilarityOps {
       // hash-matches; ln lives only in idf, which is dumped (bm25's
       // contract).
       (s, dir) => {
-        import TextOps.words
         val docs = t(s, dir, "documents")
-        val nD = docs.count().toDouble // bounded scalar (bm25's N pull)
-        val tok = docs.select(col("doc_id"),
-          explode(array_distinct(words(lower(col("text"))))).as("term"))
-        val dfT = tok.groupBy(col("term"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-        val idfTbl = dfT.withColumn("idf_q",
-            round(log((lit(nD) - col("df") + 0.5) / (col("df") + 0.5)
-              + 1.0) * 1e9).cast("long"))
-          .select(col("term"), col("idf_q"))
-        idfTbl.coalesce(1).write.mode("overwrite")
-          .parquet(s"${OracleDumps.root(s, dir)}/knn/hybrid_idf")
-        val lexTop = hybridLexTop(docs, tok, idfTbl)
+        val tok = hybridTerms(docs)
+        val lexTop = hybridLexTop(docs, tok, hybridIdf(docs, tok))
         val emb = embeddings(s, dir)
         val qv = queryVecs(emb, col("vec_id") < 5)
         val vecTop = topkPerQuery(bruteScored(emb, qv), "sim", 50)
@@ -1675,7 +1677,6 @@ object SimilarityOps {
       // deployment sharing one index. Scan cost: |probed cells| rows
       // of 8-byte codes instead of the full float corpus.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val emb = embeddings(s, dir)
         val cen = centroids(s, dir)
         val (pqCen, codes) = pqIndex(s, dir, emb)
@@ -1712,7 +1713,6 @@ object SimilarityOps {
       // the uniform-random test vectors is quantization-bound; PQSpec
       // proves exact retrieval on separable planted clusters.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val emb = embeddings(s, dir)
         val (cen, codes) = pqIndex(s, dir, emb)
         pqSearch(cen, codes, queryVecs(emb, col("vec_id") < 10), 5)
@@ -1733,10 +1733,7 @@ object SimilarityOps {
       // (Round11Spec); the oracle replays the ADC path over the
       // dumped refreshed index.
       (s, dir) => {
-        val (rcen, rcodes) = pqRefreshBase(s, dir)
-        val batch = embeddings(s, dir).filter(col("vec_id") % 7 === 3)
-        val codes2 = rcodes.unionAll(encodeWithCodebooks(rcen, batch))
-        dumpPqRefresh(s, dir, rcen, codes2)
+        val (rcen, codes2) = pqRefreshed(s, dir)
         val q = queryVecs(embeddings(s, dir),
           col("vec_id") >= 10 && col("vec_id") < 15)
         pqSearch(rcen, codes2, q, 5)
@@ -1756,7 +1753,6 @@ object SimilarityOps {
       // from the dumped index with the same in-order dot fold, so the
       // report is hash-exact.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         centroidDots(assignedCached(s, dir), centroids(s, dir))
           .groupBy(col("cell"))
           .agg(count(lit(1)).as("n_vecs"), min(col("d")).as("min_cdot"))
@@ -1789,7 +1785,6 @@ object SimilarityOps {
       // pairwise stage. τ = 0.35 matches dedup_embedding's confirm
       // threshold on this corpus.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val m = semanticRank(s, dir)
         val keep = m.select(col("cell"), col("vec_id").as("a"),
           col("embedding").as("e_a"), col("cdot").as("cdot_a"))
@@ -1834,7 +1829,6 @@ object SimilarityOps {
       // confirmed (new_id, dup_of, cos) pair, the shape a quarantine
       // queue consumes.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val asg = assignedCached(s, dir)
         val hist = asg.filter(col("vec_id") % 10 =!= 0)
           .select(col("cell"), col("vec_id").as("dup_of"),
@@ -1866,7 +1860,6 @@ object SimilarityOps {
       // 100 TB this runs on a sampled query set at codebook-train
       // time, brute side being the expensive half.
       (s, dir) => {
-        dumpOracleBase(s, dir)
         val emb = embeddings(s, dir)
         val (cen, codes) = pqIndex(s, dir, emb)
         val q = queryVecs(emb, col("vec_id") < 10)
@@ -2059,24 +2052,16 @@ object SimilarityOps {
         .as("mc"))
       .select(col("vec_id"), expr("transform(mc, e -> e.code)").as("codes"))
 
-  private val pqRefreshDumpDone =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), java.lang.Boolean]()
-
-  /** Dump the refreshed PQ index (base-trained codebooks + the
-    * refreshed code table) once per (session, corpus) so the oracle
-    * replays the ADC serving path over exactly what the entry serves.
+  /** knn_pq_refresh's refreshed PQ index: the base codebooks and the
+    * base codes unioned with the batch (vec_id % 7 == 3) encoded
+    * against them — what the entry serves and its oracle reads.
     */
-  private def dumpPqRefresh(s: SparkSession, dir: String,
-      cen: DataFrame, codes: DataFrame): Unit =
-    pqRefreshDumpDone.computeIfAbsent(
-      (System.identityHashCode(s), dir), _ => {
-        val base = s"${OracleDumps.root(s, dir)}/knn"
-        cen.coalesce(1).write.mode("overwrite")
-          .parquet(s"$base/pq_r_codebooks")
-        codes.coalesce(1).write.mode("overwrite")
-          .parquet(s"$base/pq_r_codes")
-        java.lang.Boolean.TRUE
-      })
+  private def pqRefreshed(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val (cen, codes) = pqRefreshBase(s, dir)
+    val batch = embeddings(s, dir).filter(col("vec_id") % 7 === 3)
+    (cen, codes.unionAll(encodeWithCodebooks(cen, batch)))
+  }
 
   /** Per-(vec, subspace) rows: vec_id, m, sub (8-dim slice). */
   private def subvecs(emb: DataFrame): DataFrame =
@@ -2325,6 +2310,30 @@ object MultimodalOps {
         }
       }(Encoders.product[MMIn])
 
+  /** mm_phash_real's decoded pixel-hash signatures (doc_id, sig). */
+  private def phashRealSig(s: SparkSession, dir: String): DataFrame =
+    mmPngSource(s, dir)
+      .mapPartitions(phashBatch(ImageIoCodec))(Encoders.product[MMHash])
+      .toDF()
+
+  /** mm_embed_knn's encoded unit vectors (doc_id, vec). */
+  private def mmVecs(s: SparkSession, dir: String): DataFrame =
+    mmSource(s, dir).as(Encoders.product[MMIn])
+      .mapPartitions(embedBatch(codec))(Encoders.product[MMVec])
+      .toDF()
+
+  /** The oracle dumps of the multimodal entries: mm_phash_real's
+    * signatures (the post-codec, pre-LSH relation) and mm_embed_knn's
+    * encoded vectors (the wrapping-hash stub encoder is the one
+    * inexpressible step; KnnSpec pins its determinism), so the oracles
+    * re-run the pairing and the whole ANN in SQL.
+    */
+  def oracleDumps(s: SparkSession, dir: String): Unit = {
+    val root = OracleDumps.root(s, dir)
+    OracleDumps.write(phashRealSig(s, dir), s"$root/mm/phash_real_sig")
+    OracleDumps.write(mmVecs(s, dir), s"$root/knn/mmvecs")
+  }
+
   private def mmSource(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents")
       .select(col("doc_id"),
@@ -2473,7 +2482,7 @@ object MultimodalOps {
       // Oracled from the dumped signature table (VERDICT r20 #4, the
       // q71_fuzzy_capped pattern): the decoded pixel-hash signatures —
       // the post-codec, pre-LSH (doc_id, sig) relation — are dumped
-      // per execution, and DuckDB re-derives the bucket pairs and
+      // by [[oracleDumps]], and DuckDB re-derives the bucket pairs and
       // hamming verify from them in SQL (the same bk/cand/verify the
       // mm_phash oracle runs). The DECODE itself stays JVM ground
       // truth (ImageIO pixels are not SQL-expressible) — Round20Spec's
@@ -2481,17 +2490,11 @@ object MultimodalOps {
       // losslessness + integer-exact kernels, and the ImageIoCodec is
       // passed EXPLICITLY (not via the installable global), so the
       // entry's output never depends on process state. The sig table
-      // is entry-scratch persisted: codec runs ONCE, serving both the
-      // dump and the pairing (previously exchange reuse played this
-      // role for the pairing's two sides).
-      (s, dir) => {
-        val sig = Scratch.reg(mmPngSource(s, dir)
-          .mapPartitions(phashBatch(ImageIoCodec))(Encoders.product[MMHash])
-          .toDF())
-        sig.coalesce(1).write.mode("overwrite")
-          .parquet(s"${OracleDumps.root(s, dir)}/mm/phash_real_sig")
-        phashPairs(sig).orderBy(col("a"), col("b"))
-      },
+      // is entry-scratch persisted: codec runs ONCE for the pairing's
+      // two sides.
+      (s, dir) =>
+        phashPairs(Scratch.reg(phashRealSig(s, dir)))
+          .orderBy(col("a"), col("b")),
       Some(s"""WITH s AS (SELECT doc_id, sig FROM read_parquet(
             '${OracleDumps.SqlRoot}/mm/phash_real_sig/*.parquet')),
         $phashPairSql""")),
@@ -2504,15 +2507,7 @@ object MultimodalOps {
       // corpus scan, no corpus shuffle; the encode step pipelines into
       // the similarity projection.
       (s, dir) => {
-        val vecs = Scratch.reg(mmSource(s, dir).as(Encoders.product[MMIn])
-          .mapPartitions(embedBatch(codec))(Encoders.product[MMVec])
-          .toDF())
-        // dump the encoded unit vectors (the wrapping-hash stub encoder
-        // is the one inexpressible step; KnnSpec pins its determinism)
-        // so the oracle re-runs the whole ANN in SQL
-        vecs.coalesce(1)
-          .write.mode("overwrite")
-          .parquet(s"${OracleDumps.root(s, dir)}/knn/mmvecs")
+        val vecs = Scratch.reg(mmVecs(s, dir))
         val q = vecs.filter(col("doc_id") < 5)
           .select(col("doc_id").as("qid"), col("vec").as("qvec"))
         val w = Window.partitionBy(col("qid"))

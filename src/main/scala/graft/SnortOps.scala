@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,29 +24,54 @@ import graft.sources.{Unified2, Unified2Fixture}
 object SnortOps {
 
   // The fixture pipeline feeds many entries; cache per session so each
-  // Verify/Bench run parses and enriches the spool once.
-  private val recCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
-  private val alertCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
-
-  private def fixtureRecords(s: SparkSession): DataFrame =
-    recCache.computeIfAbsent(s, (s2: SparkSession) => {
-      val spool = Unified2Fixture.writeSpool(
-        s"${Unified2Fixture.defaultRoot()}/spool")
-      Unified2.records(s2, Seq(spool), "snort.log", "sensor1").persist()
-    })
+  // Verify/Bench run parses and enriches the spool once. The fixture
+  // root is the corpus the artifacts are cached under.
+  private def fixtureRecords(s: SparkSession): DataFrame = {
+    val root = Unified2Fixture.defaultRoot()
+    IndexCache.getOrBuild(s, root, "u2_records") {
+      val spool = Unified2Fixture.writeSpool(s"$root/spool")
+      Unified2.records(s, Seq(spool), "snort.log", "sensor1").persist()
+    }
+  }
 
   /** Fixture spool + maps → enriched alerts (the full ingest path). */
-  def fixtureAlerts(s: SparkSession): DataFrame =
-    alertCache.computeIfAbsent(s, (s2: SparkSession) => {
-      val (sid, gen, cls) = Unified2Fixture.writeMaps(
-        s"${Unified2Fixture.defaultRoot()}/maps")
+  def fixtureAlerts(s: SparkSession): DataFrame = {
+    val root = Unified2Fixture.defaultRoot()
+    IndexCache.getOrBuild(s, root, "u2_alerts") {
+      val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
       Maps.enrichClassifications(
-        Maps.enrichSignatures(Unified2.alerts(fixtureRecords(s2)),
-          Maps.combinedSigMap(s2, sid, gen)),
-        Maps.classMap(s2, cls)).persist()
-    })
+        Maps.enrichSignatures(Unified2.alerts(fixtureRecords(s)),
+          Maps.combinedSigMap(s, sid, gen)),
+        Maps.classMap(s, cls)).persist()
+    }
+  }
+
+  /** u2_bulk_ingest's enriched alerts: the bulk fixture spool (60k
+    * alerts over 16 files) through single-pass parse+assembly and the
+    * map enrichment.
+    */
+  private def bulkAlerts(s: SparkSession): DataFrame = {
+    // alert-volume knob for solo scale probes (r16: the README's
+    // 600 k ingest-MB/s number); the driver's gate and suite runs
+    // keep the 60 k default. Dir is keyed by the count so a scale
+    // probe can never poison the default fixture's marker cache.
+    val nAlerts = s.conf.getOption("spark.graft.u2.bulkAlerts")
+      .flatMap(v => scala.util.Try(v.toInt).toOption)
+      .filter(_ > 0).getOrElse(60000)
+    val spool = Unified2Fixture.writeBulkSpool(
+      s"${Unified2Fixture.defaultRoot()}/bulk" +
+        (if (nAlerts == 60000) "" else s"_$nAlerts"), nAlerts, 16)
+    val (sid, gen, cls) = Unified2Fixture.writeMaps(
+      s"${Unified2Fixture.defaultRoot()}/maps")
+    // single-pass parse+assembly per spool file (map-only stage;
+    // see Unified2.alertsAssembled) — the join-based alerts() path
+    // re-read every byte 3× and shuffled 4× for file-local keys
+    Maps.enrichClassifications(
+      Maps.enrichSignatures(
+        Unified2.alertsAssembled(s, Seq(spool), "snort.log", "bulk1"),
+        Maps.combinedSigMap(s, sid, gen)),
+      Maps.classMap(s, cls))
+  }
 
   /** Where the UPSTREAM relations (pre-enrichment alerts + parsed rule
     * maps) are dumped so DuckDB can re-derive the enrichment, dim, and
@@ -62,85 +89,81 @@ object SnortOps {
   // OracleDumps.root).
   val oracleBaseDir =
     s"${OracleDumps.Base}/snort__${OracleDumps.AppIdPlaceholder}"
-  /** Runtime (this-JVM) resolution of [[oracleBaseDir]] for writes. */
-  def oracleWriteDir(s: SparkSession): String =
-    oracleBaseDir.replace(OracleDumps.AppIdPlaceholder,
-      s.sparkContext.applicationId)
-  private val dumpDone =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]()
-  /** public so Bench's untimed warmup can pay the write once */
-  def dumpOracleBase(s: SparkSession): Unit = {
-    dumpDone.computeIfAbsent(s, (s2: SparkSession) => {
-      val od = oracleWriteDir(s2)
-      val (sid, gen, cls) = Unified2Fixture.writeMaps(
-        s"${Unified2Fixture.defaultRoot()}/maps")
-      Unified2.alerts(fixtureRecords(s2))
-        .select(col("sensor"), col("src_file"), col("rec_index"),
-          col("sensor_id"), col("event_id"), col("event_second"),
-          col("event_microsecond"), col("event_ts"),
-          col("signature_id"), col("generator_id"),
-          col("signature_revision"), col("classification_id"),
-          col("priority_id"),
-          Net.ipToString(col("ip_source")).as("src_ip"),
-          Net.ipToString(col("ip_destination")).as("dst_ip"),
-          col("sport_itype"), col("dport_icode"), col("protocol"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$od/alerts_base")
-      Maps.combinedSigMap(s2, sid, gen).coalesce(1)
-        .write.mode("overwrite").parquet(s"$od/sigmap")
-      Maps.classMap(s2, cls).coalesce(1)
-        .write.mode("overwrite").parquet(s"$od/classmap")
-      // record-level skeleton (no binary payloads): lets SQL re-derive
-      // the event←packet/extra ASSEMBLY (grouping keys + counts)
-      fixtureRecords(s2)
-        .select(col("sensor"), col("src_file"), col("rec_index"),
-          col("sensor_id"), col("event_id"), col("event_second"),
-          col("rec_type"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$od/records_base")
-      // decoded per-packet headers (decode itself is binary, spec-
-      // tested; addresses land as dotted-quad/RFC5952 strings) keyed
-      // by record identity — SQL re-derives slot ranks, cid, inet_aton
-      SnortStar.registerFunctions(s2)
-      fixtureRecords(s2)
-        .filter(col("rec_type") === Unified2.Packet)
-        .withColumn("d", expr("graft_decode_packet(packet_data)"))
-        .select(col("sensor"), col("src_file"), col("rec_index"),
-          col("sensor_id"), col("event_id"), col("event_second"),
-          col("d.ip_ver").as("ip_ver"), col("d.ip_src").as("ip_src"),
-          col("d.ip_dst").as("ip_dst"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$od/packets_decoded")
-      // raw frames as hex: packet_decode's oracle re-implements the
-      // whole eth→VLAN→IP→L4 walk in SQL over these
-      fixtureRecords(s2)
-        .filter(col("rec_type") === Unified2.Packet)
-        .select(col("event_id"), col("rec_index"),
-          hex(col("packet_data")).as("h"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$od/packets_raw")
-      // byte-identical copies of the RAW rule-map files: the parse
-      // entries' oracles re-implement the parsers in SQL over these
-      val rawDir = java.nio.file.Paths.get(s"$od/raw")
-      java.nio.file.Files.createDirectories(rawDir)
-      Seq(sid, gen, cls).foreach { p =>
-        val src = java.nio.file.Paths.get(p)
-        java.nio.file.Files.copy(src, rawDir.resolve(src.getFileName),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      // ...and of the RAW spool files, for u2_parse's SQL re-parse
-      val spoolDir = java.nio.file.Paths.get(
-        Unified2Fixture.writeSpool(s"${Unified2Fixture.defaultRoot()}/spool"))
-      val rawSpool = java.nio.file.Paths.get(s"$od/raw_spool")
-      java.nio.file.Files.createDirectories(rawSpool)
-      java.nio.file.Files.list(spoolDir).forEach { p =>
-        if (p.getFileName.toString.startsWith("snort.log"))
-          java.nio.file.Files.copy(p, rawSpool.resolve(p.getFileName),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      java.lang.Boolean.TRUE
-    })
-    ()
+
+  /** The snort oracle dumps, under [[oracleBaseDir]] bound to this
+    * session (the fixture is the corpus, so `dir` is unused).
+    */
+  def oracleDumps(s: SparkSession, dir: String): Unit = {
+    val od = OracleDumps.bind(oracleBaseDir, s, dir)
+    val root = Unified2Fixture.defaultRoot()
+    val (sid, gen, cls) = Unified2Fixture.writeMaps(s"$root/maps")
+    val records = fixtureRecords(s)
+    OracleDumps.write(Unified2.alerts(records)
+      .select(col("sensor"), col("src_file"), col("rec_index"),
+        col("sensor_id"), col("event_id"), col("event_second"),
+        col("event_microsecond"), col("event_ts"),
+        col("signature_id"), col("generator_id"),
+        col("signature_revision"), col("classification_id"),
+        col("priority_id"),
+        Net.ipToString(col("ip_source")).as("src_ip"),
+        Net.ipToString(col("ip_destination")).as("dst_ip"),
+        col("sport_itype"), col("dport_icode"), col("protocol")),
+      s"$od/alerts_base")
+    OracleDumps.write(Maps.combinedSigMap(s, sid, gen), s"$od/sigmap")
+    OracleDumps.write(Maps.classMap(s, cls), s"$od/classmap")
+    // record-level skeleton (no binary payloads): lets SQL re-derive
+    // the event←packet/extra ASSEMBLY (grouping keys + counts)
+    OracleDumps.write(records
+      .select(col("sensor"), col("src_file"), col("rec_index"),
+        col("sensor_id"), col("event_id"), col("event_second"),
+        col("rec_type")),
+      s"$od/records_base")
+    // decoded per-packet headers (decode itself is binary, spec-
+    // tested; addresses land as dotted-quad/RFC5952 strings) keyed
+    // by record identity — SQL re-derives slot ranks, cid, inet_aton
+    SnortStar.registerFunctions(s)
+    val packets = records.filter(col("rec_type") === Unified2.Packet)
+    OracleDumps.write(packets
+      .withColumn("d", expr("graft_decode_packet(packet_data)"))
+      .select(col("sensor"), col("src_file"), col("rec_index"),
+        col("sensor_id"), col("event_id"), col("event_second"),
+        col("d.ip_ver").as("ip_ver"), col("d.ip_src").as("ip_src"),
+        col("d.ip_dst").as("ip_dst")),
+      s"$od/packets_decoded")
+    // raw frames as hex: packet_decode's oracle re-implements the
+    // whole eth→VLAN→IP→L4 walk in SQL over these
+    OracleDumps.write(packets.select(col("event_id"), col("rec_index"),
+        hex(col("packet_data")).as("h")),
+      s"$od/packets_raw")
+    // the enriched bulk pre-normalize base (parse+assembly output), so
+    // u2_bulk_ingest's oracle re-derives the star cid windows and dim
+    // keys at bulk scale; written unsplit like the bulk spool's parse
+    bulkAlerts(s)
+      .withColumn("n_pkts",
+        greatest(coalesce(size(col("packets")), lit(0)), lit(1)))
+      .select(col("sensor"), col("src_file"), col("rec_index"),
+        col("generator_id"), col("signature_id"), col("sig_rev"),
+        col("sig_priority"), col("classification_id"), col("sig_msg"),
+        col("event_ts"), col("n_pkts"))
+      .write.mode("overwrite")
+      .parquet(s"$od/bulk_alerts")
+    // byte-identical copies of the RAW rule-map files (the parse
+    // entries' oracles re-implement the parsers in SQL over these)
+    // and of the RAW spool files, for u2_parse's SQL re-parse
+    def copyInto(to: String, files: Seq[java.nio.file.Path]): Unit = {
+      val d = java.nio.file.Paths.get(to)
+      java.nio.file.Files.createDirectories(d)
+      files.foreach(p => java.nio.file.Files.copy(p,
+        d.resolve(p.getFileName),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+    }
+    copyInto(s"$od/raw", Seq(sid, gen, cls).map(java.nio.file.Paths.get(_)))
+    val spool = java.nio.file.Paths.get(
+      Unified2Fixture.writeSpool(s"$root/spool"))
+    scala.util.Using.resource(java.nio.file.Files.list(spool)) { ls =>
+      copyInto(s"$od/raw_spool", ls.iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("snort.log")))
+    }
   }
 
   /** The '||'-separated map parsers in SQL over a byte-identical copy
@@ -237,7 +260,6 @@ object SnortOps {
 
   val entries: Seq[Entry] = Seq(
     Entry("u2_parse", (s, _) => {
-      dumpOracleBase(s)
       // binary columns render as hex for the flat-column verify
       // surface (same move as sigmap_parse's csv'd refs); the library
       // API keeps them binary
@@ -356,7 +378,6 @@ object SnortOps {
         ORDER BY m.src_file, rec_index""")),
 
     Entry("u2_events", (s, _) => {
-      dumpOracleBase(s)
       Unified2.alerts(fixtureRecords(s))
         .select(col("sensor"), col("sensor_id"), col("event_id"),
           col("event_second"), col("event_microsecond"), col("event_ts"),
@@ -398,7 +419,6 @@ object SnortOps {
     Entry("sigmap_parse", (s, _) => {
       val (sid, _, _) = Unified2Fixture.writeMaps(
         s"${Unified2Fixture.defaultRoot()}/maps")
-      dumpOracleBase(s)
       // refs is array<string> in the library API; the verify harness
       // compares flat columns, so render it as a csv column here.
       Maps.sigMap(s, sid)
@@ -419,7 +439,6 @@ object SnortOps {
     Entry("genmap_parse", (s, _) => {
       val (_, gen, _) = Unified2Fixture.writeMaps(
         s"${Unified2Fixture.defaultRoot()}/maps")
-      dumpOracleBase(s)
       Maps.genMap(s, gen).orderBy(col("gid"), col("sid"))
     },
       Some(s"""WITH ${mapPartsCtes("gen-msg.map")},
@@ -433,7 +452,6 @@ object SnortOps {
     Entry("classmap_parse", (s, _) => {
       val (_, _, cls) = Unified2Fixture.writeMaps(
         s"${Unified2Fixture.defaultRoot()}/maps")
-      dumpOracleBase(s)
       Maps.classMap(s, cls).orderBy(col("class_id"))
     },
       // the 1-based ordinal id is line order among matching lines —
@@ -457,7 +475,6 @@ object SnortOps {
           AND regexp_full_match(parts[3], '[0-9]+') ORDER BY class_id""")),
 
     Entry("sig_enrich", (s, _) => {
-      dumpOracleBase(s)
       fixtureAlerts(s)
         .select(col("event_id"), col("generator_id"), col("signature_id"),
           col("sig_msg"), col("sig_rev"), col("sig_priority"))
@@ -474,7 +491,6 @@ object SnortOps {
         ORDER BY b.event_id""")),
 
     Entry("class_enrich", (s, _) => {
-      dumpOracleBase(s)
       fixtureAlerts(s)
         .select(col("event_id"), col("classification_id"), col("class_name"))
         .orderBy(col("event_id"))
@@ -488,7 +504,6 @@ object SnortOps {
 
     Entry("packet_decode", (s, _) => {
       SnortStar.registerFunctions(s)
-      dumpOracleBase(s)
       fixtureRecords(s)
         .filter(col("rec_type") === Unified2.Packet)
         .withColumn("d", expr("graft_decode_packet(packet_data)"))
@@ -608,7 +623,6 @@ object SnortOps {
         FROM l2 ORDER BY event_id, rec_index""")),
 
     Entry("star_normalize", (s, _) => {
-      dumpOracleBase(s)
       val star = SnortStar.normalize(fixtureAlerts(s))
       star("event").orderBy(col("sid"), col("cid"))
     },
@@ -637,7 +651,6 @@ object SnortOps {
         13 -> "normalized_js"))
       val spool = Unified2Fixture.writeSpool(
         s"${Unified2Fixture.defaultRoot()}/spool")
-      dumpOracleBase(s)
       graft.sources.Unified2
         .records(s, Seq(spool), "snort.log", "sensor1")
         .filter(col("rec_type") === graft.sources.Unified2.ExtraData)
@@ -783,7 +796,6 @@ object SnortOps {
         GROUP BY ALL ORDER BY ev.s_gid, ev.s_sid""")),
 
     Entry("sensor_dim", (s, _) => {
-      dumpOracleBase(s)
       SnortStar.sensors(fixtureAlerts(s)).orderBy(col("sensor_sid"))
     },
       Some(s"""SELECT sensor,
@@ -795,7 +807,6 @@ object SnortOps {
         ORDER BY sensor_sid""")),
 
     Entry("signature_dim", (s, _) => {
-      dumpOracleBase(s)
       SnortStar.signatures(fixtureAlerts(s)).orderBy(col("sig_id"))
     },
       // the full signature-uniqueness key (incl. class + priority, the
@@ -820,7 +831,6 @@ object SnortOps {
         FROM e ORDER BY sig_id""")),
 
     Entry("u2_text", (s, _) => {
-      dumpOracleBase(s)
       SnortStar.textFormat(fixtureAlerts(s)).orderBy(col("event_id"))
     },
       // the u2fast one-line rendering assembled independently in SQL:
@@ -858,42 +868,9 @@ object SnortOps {
       // map enrichment, star-schema cid assignment — returning the
       // event fact table. This is the reference's entire job measured
       // end-to-end; parse parallelism is one task per file.
-      (s, _) => {
-        // alert-volume knob for solo scale probes (r16: the README's
-        // 600 k ingest-MB/s number); the driver's gate and suite runs
-        // keep the 60 k default. Dir is keyed by the count so a scale
-        // probe can never poison the default fixture's marker cache.
-        val nAlerts = s.conf.getOption("spark.graft.u2.bulkAlerts")
-          .flatMap(v => scala.util.Try(v.toInt).toOption)
-          .filter(_ > 0).getOrElse(60000)
-        val spool = Unified2Fixture.writeBulkSpool(
-          s"${Unified2Fixture.defaultRoot()}/bulk" +
-            (if (nAlerts == 60000) "" else s"_$nAlerts"), nAlerts, 16)
-        val (sid, gen, cls) = Unified2Fixture.writeMaps(
-          s"${Unified2Fixture.defaultRoot()}/maps")
-        // single-pass parse+assembly per spool file (map-only stage;
-        // see Unified2.alertsAssembled) — the join-based alerts() path
-        // re-read every byte 3× and shuffled 4× for file-local keys
-        val alerts = Scratch.reg(Maps.enrichClassifications(
-          Maps.enrichSignatures(
-            Unified2.alertsAssembled(s, Seq(spool), "snort.log", "bulk1"),
-            Maps.combinedSigMap(s, sid, gen)),
-          Maps.classMap(s, cls)))
-        // dump the enriched pre-normalize base (parse+assembly output)
-        // so the oracle independently re-derives the star cid windows
-        // and dim keys at bulk scale; the persist keeps the ingest a
-        // single parse pass (the dump is the first action on it)
-        alerts
-          .withColumn("n_pkts",
-            greatest(coalesce(size(col("packets")), lit(0)), lit(1)))
-          .select(col("sensor"), col("src_file"), col("rec_index"),
-            col("generator_id"), col("signature_id"), col("sig_rev"),
-            col("sig_priority"), col("classification_id"), col("sig_msg"),
-            col("event_ts"), col("n_pkts"))
-          .write.mode("overwrite")
-          .parquet(s"${oracleWriteDir(s)}/bulk_alerts")
-        SnortStar.normalize(alerts)("event").orderBy(col("sid"), col("cid"))
-      },
+      (s, _) =>
+        SnortStar.normalize(Scratch.reg(bulkAlerts(s)))("event")
+          .orderBy(col("sid"), col("cid")),
       // star_normalize's SQL window re-derivation (two-level cid prefix
       // sums, dense-rank dim keys, slot expansion, Snorby timestamp
       // render) applied to the 60k-alert bulk dump.

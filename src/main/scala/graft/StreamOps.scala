@@ -1131,7 +1131,6 @@ object StreamOps {
       // shape. StreamSpec asserts exact agreement with the batch
       // probe over the same index.
       (s, dir) => {
-        SimilarityOps.dumpOracleBase(s, dir)
         val idx = SimilarityOps.ensureIndex(s, dir)
         val root = tempRoot(s, "graft_stream_knn")
         val emb = s.read.parquet(s"$dir/embeddings.parquet")
@@ -1171,7 +1170,6 @@ object StreamOps {
       // the oracle (same SQL as the batch twin) and Round11Spec verify
       // it anyway.
       (s, dir) => {
-        SimilarityOps.dumpOracleBase(s, dir)
         val root = tempRoot(s, "graft_stream_semdedup")
         val emb = s.read.parquet(s"$dir/embeddings.parquet")
         val qs = s.readStream.schema(emb.schema)

@@ -58,6 +58,36 @@ object TextOps {
       when(q2 === "", lit("")).otherwise(concat(lit("?"), q2)))
   }
 
+  /** SQL twin of [[canonicalizeUrl]]'s parts over a CTE `u` holding
+    * `url`: `p` splits scheme / hostport / path (dot-segments dropped)
+    * / raw query `q0` and carries `carry`; `c` derives host, port and
+    * the utm-stripped query `q2` and carries `cCarry` of p's columns.
+    * Plain strings: the regexes hold backslashes.
+    */
+  def urlCanonCtes(carry: String, cCarry: String): String =
+    "p AS (SELECT " + carry + """,
+          lower(regexp_extract(url, '^([A-Za-z]+)://', 1)) AS scheme,
+          regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1) AS hostport,
+          regexp_replace(
+            regexp_extract(url, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1),
+            '[^/]+/\.\./', '') AS path,
+          regexp_extract(url, '\?([^#]*)', 1) AS q0 FROM u),
+        c AS (SELECT """ + cCarry + """,
+          regexp_replace(lower(regexp_replace(hostport, ':[0-9]+$', '')),
+            '^www\.', '') AS host,
+          regexp_extract(hostport, ':([0-9]+)$', 1) AS port,
+          regexp_replace(regexp_replace(q0, '(^|&)utm_[^&]*', '', 'g'),
+            '^&', '') AS q2 FROM p)"""
+
+  /** The canonical URL over [[urlCanonCtes]]' `c` columns. */
+  val CanonUrlSql: String =
+    """scheme || '://' || host
+            || CASE WHEN (scheme = 'https' AND port = '443')
+                 OR (scheme = 'http' AND port = '80') OR port = ''
+              THEN '' ELSE ':' || port END
+            || path
+            || CASE WHEN q2 = '' THEN '' ELSE '?' || q2 END"""
+
   // ---- bigram language model (shared by text_lm_score and the
   // streaming stream_lm_score — the same model and scoring expressions
   // run over a batch frame or a stream-static join) ----
@@ -99,7 +129,7 @@ object TextOps {
     * hash aggregation (no per-doc ordered float fold), and the ln ulp
     * hazard disappears entirely because BOTH engines read the same
     * dumped integers (the dump is the oracle's model too, like bm25's
-    * idf). Persisted + dumped once per (session, corpus).
+    * idf). Persisted once per (session, corpus).
     */
   private[graft] def lmModel(s: SparkSession, dir: String): DataFrame =
     IndexCache.getOrBuild(s, dir, "lm") {
@@ -109,15 +139,12 @@ object TextOps {
         .agg(count(lit(1)).as("c2"))
       val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
       val vocab = bi.select(countDistinct(col("w2"))).head().getLong(0)
-      val model = c2.join(c1, "w1")
+      c2.join(c1, "w1")
         .withColumn("lnp_q",
           round(log((col("c2") + 0.5) / (col("c1") + lit(0.5) * vocab))
             * lit(1e12)).cast("long"))
         .select(col("w1"), col("w2"), col("lnp_q"))
         .persist()
-      model.coalesce(1).write.mode("overwrite")
-        .parquet(s"${OracleDumps.root(s, dir)}/text/lm_bigrams")
-      model
     }
 
   /** Mean negative log-likelihood per doc (quantized at 1e-12
@@ -220,23 +247,25 @@ object TextOps {
           (lnq(r.getAs[Long]("pos").toDouble, posT)
             - lnq(r.getAs[Long]("neg").toDouble, negT)) * 1e9)
       }
-      // oracle contract: per-TOKEN quantized weights (token → its
-      // bucket's weight), so DuckDB joins tokens to weights without
-      // ever computing xxhash64
-      import s.implicits._
-      val wDf = w.toSeq.zipWithIndex
-        .map { case (wq, b) => (b, wq) }.toDF("b", "wq")
-      t(s, dir, "documents")
-        .select(explode(words(lower(col("text")))).as("token"))
-        .distinct()
-        .withColumn("b",
-          pmod(xxhash64(col("token")), lit(ClsBuckets.toLong)).cast("int"))
-        .join(broadcast(wDf), "b")
-        .select(col("token"), col("wq"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${OracleDumps.root(s, dir)}/text/classify_vocab")
       w
     }
+
+  /** The classifier's oracle contract: per-TOKEN quantized weights
+    * (token → its bucket's weight), so DuckDB joins tokens to weights
+    * without ever computing xxhash64.
+    */
+  private def classifyVocab(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val wDf = classifyWeights(s, dir).toSeq.zipWithIndex
+      .map { case (wq, b) => (b, wq) }.toDF("b", "wq")
+    t(s, dir, "documents")
+      .select(explode(words(lower(col("text")))).as("token"))
+      .distinct()
+      .withColumn("b",
+        pmod(xxhash64(col("token")), lit(ClsBuckets.toLong)).cast("int"))
+      .join(broadcast(wDf), "b")
+      .select(col("token"), col("wq"))
+  }
 
   /** Learned-filter inference as a PURE PROJECTION: the weight vector
     * rides into the plan as a 4096-long literal array (the broadcast-
@@ -468,6 +497,61 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  /** text_bm25's fixed query terms, in term order. */
+  private val Bm25Query = Seq("the", "data", "and").sorted
+  private def tfCol(i: Int): Column = col(s"tf$i")
+
+  /** text_bm25's statistics: the entry-scratch per-doc proxy (doc_id,
+    * dl, tf0..tf2 — tf_i counts [[Bm25Query]]'s i-th term), the exact
+    * avgdl, and the idf table (term, df, idf) — ONE global aggregate
+    * over the proxy yields all three. Terms absent from the corpus get
+    * NO idf row. The idf table is also the oracle's dump.
+    */
+  private def bm25Stats(s: SparkSession, dir: String)
+      : (DataFrame, Double, DataFrame) = {
+    val query = Bm25Query
+    val proxy = Scratch.reg(query.zipWithIndex.foldLeft(
+      t(s, dir, "documents")
+        .select(col("doc_id"), words(lower(col("text"))).as("w"))
+        .withColumn("dl", size(col("w")).cast("double"))) {
+      case (d, (term, i)) => d.withColumn(s"tf$i",
+        size(filter(col("w"), x => x === lit(term))).cast("double"))
+    }.drop("w"))
+    val aggCols = Seq(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")) ++
+      query.indices.map(i => sum(when(tfCol(i) > 0, 1L).otherwise(0L))
+        .cast("double").as(s"df$i"))
+    val stRow = proxy.agg(aggCols.head, aggCols.tail: _*).head()
+    val (n, avgdl) = (stRow.getLong(0).toDouble, stRow.getDouble(1))
+    val dfPairs = query.indices
+      .map(i => query(i) -> stRow.getDouble(2 + i)).filter(_._2 > 0)
+    import s.implicits._
+    val idf = log((lit(n) - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+    (proxy, avgdl, dfPairs.toDF("term", "df").withColumn("idf", idf))
+  }
+
+  /** text_entropy's quantized log table (k, lnq = round(1e12 · ln k))
+    * for k up to the longest document's word count.
+    */
+  private def lnqTable(s: SparkSession, dir: String): DataFrame = {
+    val maxN = math.max(1, t(s, dir, "documents")
+      .agg(max(size(words(lower(col("text")))))).head().getInt(0))
+    s.range(1, maxN + 1L).toDF("k")
+      .withColumn("lnq",
+        round(log(col("k").cast("double")) * 1e12).cast("long"))
+  }
+
+  /** The oracle dumps of the text entries: the LM bigram model, the
+    * classifier's per-token weights, bm25's idf and entropy's lnq
+    * table — each the one step behind a transcendental or a hash.
+    */
+  def oracleDumps(s: SparkSession, dir: String): Unit = {
+    val base = s"${OracleDumps.root(s, dir)}/text"
+    OracleDumps.write(lmModel(s, dir), s"$base/lm_bigrams")
+    OracleDumps.write(classifyVocab(s, dir), s"$base/classify_vocab")
+    OracleDumps.write(bm25Stats(s, dir)._3, s"$base/bm25_idf")
+    OracleDumps.write(lnqTable(s, dir), s"$base/lnq")
+  }
+
   val entries: Seq[Entry] = Seq(
     Entry(
       "text_classify",
@@ -641,26 +725,9 @@ object TextOps {
             || '/a/b/../c/Page' || doc_id
             || '?utm_source=feed&id=' || doc_id
             || '&myutm_keep=1&utm_campaign=x#frag' AS url FROM documents),
-        p AS (SELECT doc_id, url,
-          lower(regexp_extract(url, '^([A-Za-z]+)://', 1)) AS scheme,
-          regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1) AS hostport,
-          regexp_replace(
-            regexp_extract(url, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1),
-            '[^/]+/\.\./', '') AS path,
-          regexp_extract(url, '\?([^#]*)', 1) AS q0 FROM u),
-        c AS (SELECT doc_id, url, scheme, path, q0,
-          regexp_replace(lower(regexp_replace(hostport, ':[0-9]+$', '')),
-            '^www\.', '') AS host,
-          regexp_extract(hostport, ':([0-9]+)$', 1) AS port,
-          regexp_replace(regexp_replace(q0, '(^|&)utm_[^&]*', '', 'g'),
-            '^&', '') AS q2 FROM p)
-        SELECT doc_id, url,
-          scheme || '://' || host
-            || CASE WHEN (scheme = 'https' AND port = '443')
-                 OR (scheme = 'http' AND port = '80') OR port = ''
-              THEN '' ELSE ':' || port END
-            || path
-            || CASE WHEN q2 = '' THEN '' ELSE '?' || q2 END AS canon_url,
+        """ + urlCanonCtes("doc_id, url", "doc_id, url, scheme, path, q0") +
+        """
+        SELECT doc_id, url, """ + CanonUrlSql + """ AS canon_url,
           host,
           CAST(len(regexp_extract_all(q0, '(^|&)utm_')) AS BIGINT) AS n_tracking
         FROM c ORDER BY doc_id""")),
@@ -787,7 +854,6 @@ object TextOps {
       // no per-position String allocation). No shuffle, no UDF.
       (s, dir) => {
         import org.apache.spark.sql.graft.DatasetBridge
-        DedupOps.dumpOracleBase(s, dir)
         val fps = DatasetBridge.column(graft.functions.WinnowFingerprints(
           DatasetBridge.expression(col("text")), 8, 4))
         t(s, dir, "documents")
@@ -890,29 +956,8 @@ object TextOps {
       // CASE-chained additions in term order — x + 0.0 is exact for
       // these strictly-positive contribs, so scores hash identically.
       (s, dir) => {
-        val query = Seq("the", "data", "and").sorted
-        val tfCol = (i: Int) => col(s"tf$i")
-        val proxy = Scratch.reg(query.zipWithIndex.foldLeft(
-          t(s, dir, "documents")
-            .select(col("doc_id"), words(lower(col("text"))).as("w"))
-            .withColumn("dl", size(col("w")).cast("double"))) {
-          case (d, (term, i)) => d.withColumn(s"tf$i",
-            size(filter(col("w"), x => x === lit(term))).cast("double"))
-        }.drop("w"))
-        val aggCols = Seq(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")) ++
-          query.indices.map(i => sum(when(tfCol(i) > 0, 1L).otherwise(0L))
-            .cast("double").as(s"df$i"))
-        val stRow = proxy.agg(aggCols.head, aggCols.tail: _*).head()
-        val (n, avgdl) = (stRow.getLong(0).toDouble, stRow.getDouble(1))
-        // terms absent from the corpus get NO idf row (the old df
-        // aggregate over tf rows couldn't produce one either)
-        val dfPairs = query.indices
-          .map(i => query(i) -> stRow.getDouble(2 + i)).filter(_._2 > 0)
-        import s.implicits._
-        val idf = log((lit(n) - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-        val idfTbl = dfPairs.toDF("term", "df").withColumn("idf", idf)
-        idfTbl.coalesce(1).write.mode("overwrite")
-          .parquet(s"${OracleDumps.root(s, dir)}/text/bm25_idf")
+        val query = Bm25Query
+        val (proxy, avgdl, idfTbl) = bm25Stats(s, dir)
         val idfs = idfTbl.collect()
           .map(r => r.getString(0) -> r.getDouble(2)).toMap
         // only terms WITH an idf row score or qualify a doc — the old
@@ -1159,13 +1204,7 @@ object TextOps {
             .as("token"))
         val counts = toks.groupBy(col("doc_id"), col("token"))
           .agg(count(lit(1)).as("c"))
-        val maxN = math.max(1, t(s, dir, "documents")
-          .agg(max(size(words(lower(col("text")))))).head().getInt(0))
-        val lnq = s.range(1, maxN + 1L).toDF("k")
-          .withColumn("lnq",
-            round(log(col("k").cast("double")) * 1e12).cast("long"))
-        lnq.coalesce(1).write.mode("overwrite")
-          .parquet(s"${OracleDumps.root(s, dir)}/text/lnq")
+        val lnq = lnqTable(s, dir)
         val perDoc = counts.join(broadcast(lnq), col("c") === col("k"))
           .groupBy(col("doc_id"))
           .agg(sum(col("c")).as("n_tok"), count(lit(1)).as("n_types"),

@@ -1,8 +1,32 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The oracle
+  * dumps that SQL reads are written here, once, before the entries
+  * run — never by an entry. */
 object Verify {
+  /** One dump step per module whose oracle SQL reads dumps. */
+  private val dumpSteps: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+    "SimilarityOps" -> SimilarityOps.oracleDumps _,
+    "MultimodalOps" -> MultimodalOps.oracleDumps _,
+    "DedupOps" -> DedupOps.oracleDumps _,
+    "TextOps" -> TextOps.oracleDumps _,
+    "SnortOps" -> SnortOps.oracleDumps _,
+    "Analytics4" -> Analytics4.oracleDumps _)
+
+  /** Write every oracle dump for corpus `sfDir` under this session's
+    * app id. A failing step is reported and skipped: only the oracles
+    * reading its dumps can fail then, not the whole run.
+    */
+  def writeDumps(spark: SparkSession, sfDir: String): Unit =
+    dumpSteps.foreach { case (module, step) =>
+      try step(spark, sfDir)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[verify] $module oracle dumps failed: ${e.getMessage}")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional query-name subset for local iteration
@@ -12,6 +36,8 @@ object Verify {
       sys.error(s"unknown query name(s): ${unknown.mkString(", ")}")
     val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
+    writeDumps(spark, sfDir)
+    Scratch.drain(spark)
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

@@ -122,7 +122,8 @@ object DecodePacket {
       b.get() & 0xff, b.get() & 0xff))
     r.update(idx("ip_dst"), ip4str(b.get() & 0xff, b.get() & 0xff,
       b.get() & 0xff, b.get() & 0xff))
-    b.position(start + ihl * 4) // honor IP options
+    // honor IP options; a header length past the frame leaves no L4
+    b.position(math.min(start + ihl * 4, b.limit()))
     decodeL4(b, proto, r)
   }
 

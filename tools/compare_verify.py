@@ -9,18 +9,23 @@ local_verify.py's rule), and that oracle_sql.json is equal once the
 Spark application id is masked and whitespace outside quoted literals
 is canonicalised: whitespace between two word characters collapses to
 one space, whitespace next to punctuation is dropped (neither changes
-what the SQL means). Prints one line per difference and a summary;
-exits 1 if anything differs.
+what the SQL means). It also compares the oracle dumps: every
+read_parquet / read_text / read_blob path of the two oracle_sql.json
+files, paired oracle by oracle. Parquet dumps are compared like
+entries; raw files byte for byte. Prints one line per difference and a
+summary; exits 1 if anything differs.
 """
-import json, math, os, re, sys
+import glob, json, math, os, re, sys
 from decimal import Decimal
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from local_verify import floats_match  # noqa: E402
 
 APP_ID = re.compile(r"local-\d+")
+READ = re.compile(r"read_(parquet|text|blob)\(\s*'([^']*)'\s*\)")
 WORD = re.compile(r"\w")
 
 
@@ -60,7 +65,10 @@ def same(a, b):
 
 
 def compare_entry(dir_a, dir_b):
-    ta, tb = pq.read_table(dir_a), pq.read_table(dir_b)
+    return compare_tables(pq.read_table(dir_a), pq.read_table(dir_b))
+
+
+def compare_tables(ta, tb):
     if not ta.schema.equals(tb.schema, check_metadata=False):
         return f"SCHEMA {ta.schema} != {tb.schema}"
     if ta.num_rows != tb.num_rows:
@@ -71,6 +79,37 @@ def compare_entry(dir_a, dir_b):
     for i, (x, y) in enumerate(zip(ra, rb)):
         if not same(x, y):
             return f"VALUES sorted row {i}: {x!r} != {y!r}"
+    return None
+
+
+def dump_reads(sql):
+    """(kind, path) of each dump the oracle SQL reads, in order."""
+    return [m.groups() for m in READ.finditer(sql)]
+
+
+def read_glob(pattern):
+    files = sorted(glob.glob(pattern))
+    return pa.concat_tables([pq.read_table(f) for f in files]) if files else None
+
+
+def compare_dump(kind, path_a, path_b):
+    """None if the two dumps hold the same data, else what differs."""
+    if kind == "parquet":
+        ta, tb = read_glob(path_a), read_glob(path_b)
+        if ta is None or tb is None:
+            return f"MISSING {path_a if ta is None else path_b}"
+        return compare_tables(ta, tb)
+    fa, fb = sorted(glob.glob(path_a)), sorted(glob.glob(path_b))
+    if not fa or not fb:
+        return f"MISSING {path_a if not fa else path_b}"
+    names_a = [os.path.basename(f) for f in fa]
+    names_b = [os.path.basename(f) for f in fb]
+    if names_a != names_b:
+        return f"FILES {names_a} != {names_b}"
+    for x, y in zip(fa, fb):
+        with open(x, "rb") as f, open(y, "rb") as g:
+            if f.read() != g.read():
+                return f"BYTES {os.path.basename(x)}"
     return None
 
 
@@ -118,12 +157,21 @@ def main(out_a, out_b):
     for n in sorted(oa.keys() ^ ob.keys()):
         print(f"ORACLE MISSING {n}")
         bad += 1
+    dumps = {}
     for n in sorted(oa.keys() & ob.keys()):
         if canon_sql(oa[n]) != canon_sql(ob[n]):
             print(f"ORACLE DIFF {n}")
             bad += 1
+            continue
+        for (kind, ra), (_, rb) in zip(dump_reads(oa[n]), dump_reads(ob[n])):
+            dumps[(kind, ra)] = rb
+    for (kind, path_a), path_b in sorted(dumps.items()):
+        diff = compare_dump(kind, path_a, path_b)
+        if diff:
+            print(f"DUMP DIFF {path_a}: {diff}")
+            bad += 1
     print(f"== {len(common)} common entries, {len(oa.keys() & ob.keys())} "
-          f"common oracles, {bad} difference(s)")
+          f"common oracles, {len(dumps)} dumps, {bad} difference(s)")
     return 1 if bad else 0
 
 
