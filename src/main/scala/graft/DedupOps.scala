@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Tables._
-import graft.functions.{RewriteJaccard, SimHash64, Vectors}
+import graft.functions.{JaccardSim, MinHashSig, NgramHashes, SimHash64, Vectors}
 
 /** Deduplication operators (SURVEY.md §2.C). All near-dup variants use
   * LSH-style bucketing so candidate generation is ONE hash-shuffle on
@@ -18,14 +18,6 @@ object DedupOps {
   /** Non-empty whitespace tokens of `text`. */
   private def tokensOf(c: Column): Column =
     filter(split(c, " "), x => length(x) > lit(0))
-
-  /** Install the Jaccard rewrite rule (size∘intersect / size∘union →
-    * single-pass JaccardSim) into this session's optimizer.
-    */
-  private def withJaccardRewrite(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(RewriteJaccard))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ RewriteJaccard
 
   /** doc_id + word-3-shingle distinct set. */
   private def shingled(s: SparkSession, dir: String): DataFrame =
@@ -72,12 +64,9 @@ object DedupOps {
     * path, so one persist serves all of them.
     */
   private def bandedSigs(s: SparkSession, dir: String): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => graft.functions.MinHashSig(exprs.head),
-      "scala_udf")
     val sh = shingledCached(s, dir)
     IndexCache.getOrBuild(s, dir, "banded") {
-      val sig = sh.withColumn("sig", expr("graft_minhash(shingles)"))
+      val sig = sh.withColumn("sig", MinHashSig.column(col("shingles")))
       sig.select(col("doc_id"),
           posexplode(expr(
             "transform(sequence(0, 15), b -> xxhash64(slice(sig, b * 4 + 1, 4)))"))
@@ -163,11 +152,9 @@ object DedupOps {
     * entry and the oracle dump).
     */
   private def simhashSigs(s: SparkSession, dir: String): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs.head), "scala_udf")
     t(s, dir, "documents")
       .withColumn("tokens", tokensOf(col("text")))
-      .select(col("doc_id"), expr("graft_simhash(tokens)").as("sig"))
+      .select(col("doc_id"), SimHash64.column(col("tokens")).as("sig"))
   }
 
   /** Distinct-signature count at which the simhash pigeonhole key
@@ -406,16 +393,13 @@ object DedupOps {
     }
 
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    withJaccardRewrite(s)
     val sh = shingledCached(s, dir)
     val banded = bandedSigs(s, dir)
     val pairs = pairsFromBuckets(banded, Seq("band", "bkey"))
     val sa = sh.toDF("a", "sh_a")
     val sb = sh.toDF("b", "sh_b")
     pairs.join(sa, "a").join(sb, "b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard", JaccardSim.column(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= 0.5)
       .select(col("a"), col("b"), col("jaccard"))
   }
@@ -585,7 +569,6 @@ object DedupOps {
       // sizes + one division per direction — fully re-derived by the
       // oracle from the dumped banded signatures + SQL shingle twin.
       (s, dir) => {
-        withJaccardRewrite(s)
         val cand = pairsFromBuckets(bandedSigs(s, dir), Seq("band", "bkey"))
         val sh = shingledCached(s, dir)
         val joined = cand.join(sh.toDF("a", "sh_a"), "a")
@@ -635,7 +618,6 @@ object DedupOps {
       // shuffle + shingle verify the other dedup entries share; the
       // report itself is a ≤10-row aggregate.
       (s, dir) => {
-        withJaccardRewrite(s)
         val cand = pairsFromBuckets(bandedSigs(s, dir), Seq("band", "bkey"))
         val sh = shingledCached(s, dir)
         cand.join(sh.toDF("a", "sh_a"), "a")
@@ -753,7 +735,6 @@ object DedupOps {
       // dedup_minhash over the batch itself (composition, not this
       // entry). DedupSpec pins the planted cross-split pairs.
       (s, dir) => {
-        withJaccardRewrite(s)
         val hist = minhashStoreHist(s, dir)
           .select(col("band"), col("bkey"), col("doc_id").as("dup_of"))
         val probe = bandedSigs(s, dir).filter(col("doc_id") % 10 === 0)
@@ -763,9 +744,7 @@ object DedupOps {
         val sh = shingledCached(s, dir)
         cand.join(sh.toDF("dup_of", "sh_a"), "dup_of")
           .join(sh.toDF("new_id", "sh_b"), "new_id")
-          .withColumn("jaccard",
-            size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              size(array_union(col("sh_a"), col("sh_b"))))
+          .withColumn("jaccard", JaccardSim.column(col("sh_a"), col("sh_b")))
           .filter(col("jaccard") >= 0.5)
           .select(col("new_id"), col("dup_of"), col("jaccard"))
           .orderBy(col("new_id"), col("dup_of"))
@@ -860,14 +839,10 @@ object DedupOps {
       // block are REPORTED only via their sampled peers; that bound is
       // the documented semantics of this entry.
       (s, dir) => {
-        withJaccardRewrite(s)
-        s.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "graft_ngrams",
-          exprs => graft.functions.NgramHashes(exprs.head, 4), "scala_udf")
         // native one-pass hashed grams: same Jaccard, no per-gram
         // String allocation (see NgramHashes)
         val grams = Scratch.reg(t(s, dir, "documents")
-          .withColumn("grams", expr("graft_ngrams(text)"))
+          .withColumn("grams", NgramHashes.column(col("text"), 4))
           .select(col("doc_id"), col("grams"),
             xxhash64(substring(col("text"), 1, 16)).as("blk")))
         val blocked = grams
@@ -881,9 +856,7 @@ object DedupOps {
           col("grams").as("g_b"))
         l.join(r, "blk")
           .filter(col("a") < col("b"))
-          .withColumn("jaccard",
-            size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-              size(array_union(col("g_a"), col("g_b"))))
+          .withColumn("jaccard", JaccardSim.column(col("g_a"), col("g_b")))
           .filter(col("jaccard") >= 0.6)
           .select(col("a"), col("b"), col("jaccard"))
           .distinct()

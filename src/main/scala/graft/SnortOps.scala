@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Net
+import graft.functions.{DecodePacket, Net}
 import graft.snort.{Maps, SnortStar}
 import graft.sources.{Unified2, Unified2Fixture}
 
@@ -121,10 +121,9 @@ object SnortOps {
     // decoded per-packet headers (decode itself is binary, spec-
     // tested; addresses land as dotted-quad/RFC5952 strings) keyed
     // by record identity — SQL re-derives slot ranks, cid, inet_aton
-    SnortStar.registerFunctions(s)
     val packets = records.filter(col("rec_type") === Unified2.Packet)
     OracleDumps.write(packets
-      .withColumn("d", expr("graft_decode_packet(packet_data)"))
+      .withColumn("d", DecodePacket.column(col("packet_data")))
       .select(col("sensor"), col("src_file"), col("rec_index"),
         col("sensor_id"), col("event_id"), col("event_second"),
         col("d.ip_ver").as("ip_ver"), col("d.ip_src").as("ip_src"),
@@ -503,10 +502,9 @@ object SnortOps {
         ORDER BY b.event_id""")),
 
     Entry("packet_decode", (s, _) => {
-      SnortStar.registerFunctions(s)
       fixtureRecords(s)
         .filter(col("rec_type") === Unified2.Packet)
-        .withColumn("d", expr("graft_decode_packet(packet_data)"))
+        .withColumn("d", DecodePacket.column(col("packet_data")))
         .select(col("event_id"), col("rec_index"), col("d.*"))
         .withColumn("payload_hex", Net.hexlify(col("payload")))
         .drop("payload")
@@ -559,7 +557,8 @@ object SnortOps {
                 h2i(h, ps + 36, 2) || '.' || h2i(h, ps + 38, 2)
               WHEN fam = 6 THEN array_to_string(list_transform(range(0, 8),
                 g -> format('{:x}', h2i(h, ps + 48 + 4 * g, 4))), ':') END AS ip_dst,
-            CASE WHEN fam = 4 THEN ib + (h2i(h, ps, 2) % 16) * 4
+            CASE WHEN fam = 4 AND h2i(h, ps, 2) % 16 < 5 THEN nb
+                 WHEN fam = 4 THEN ib + (h2i(h, ps, 2) % 16) * 4
                  WHEN fam = 6 THEN ib + 40 END AS lb
           FROM i0),
         -- l4 layer: lb = start byte; pl = char pos; guards mirror the match cases

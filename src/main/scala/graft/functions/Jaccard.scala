@@ -1,11 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Divide, Expression, Size}
 import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ArrayUnion}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Single-pass Jaccard similarity of two array columns:
@@ -60,12 +62,19 @@ case class JaccardSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+object JaccardSim {
+  def column(a: Column, b: Column): Column =
+    DatasetBridge.column(JaccardSim(
+      DatasetBridge.expression(a), DatasetBridge.expression(b)))
+}
+
 /** Optimizer rule (preference-path Rule[LogicalPlan] from SURVEY §4):
   * rewrites the declarative Jaccard pattern
   * `size(array_intersect(a,b)) / size(array_union(a,b))` (any cast
   * placement) into [[JaccardSim]]. Values are bit-identical: both
-  * compute int-exact counts then one double division. Register via
-  * `spark.experimental.extraOptimizations` or [[graft.plans.GraftExtensions]].
+  * compute int-exact counts then one double division. graft's queries
+  * call [[JaccardSim.column]]; the rule serves callers that write the
+  * declarative form, through [[graft.plans.GraftExtensions]].
   */
 object RewriteJaccard extends Rule[LogicalPlan] {
 

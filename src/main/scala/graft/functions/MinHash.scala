@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** 64-permutation MinHash signature of a string-array column in ONE
@@ -59,6 +61,11 @@ case class NgramHashes(child: Expression, n: Int)
     copy(child = newChild)
 }
 
+object NgramHashes {
+  def column(text: Column, n: Int): Column =
+    DatasetBridge.column(NgramHashes(DatasetBridge.expression(text), n))
+}
+
 /** Winnowing fingerprints (Schleimer et al., SIGMOD'03) of a string
   * in ONE pass: positional k-byte FNV-1a 64 grams, minimum over each
   * sliding window of `w`, distinct survivors as `array<long>`.
@@ -90,6 +97,9 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
 }
 
 object MinHashSig {
+  def column(shingles: Column): Column =
+    DatasetBridge.column(MinHashSig(DatasetBridge.expression(shingles)))
+
   val NPerms = 64
 
   // deterministic SplitMix64 stream -> 64 permutation seeds

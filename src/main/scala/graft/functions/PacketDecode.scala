@@ -2,10 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,6 +44,9 @@ case class DecodePacket(child: Expression)
 }
 
 object DecodePacket {
+  def column(frame: Column): Column =
+    DatasetBridge.column(DecodePacket(DatasetBridge.expression(frame)))
+
   val schema: StructType = StructType(Seq(
     StructField("eth_type", IntegerType),
     StructField("vlan", IntegerType),
@@ -122,8 +127,9 @@ object DecodePacket {
       b.get() & 0xff, b.get() & 0xff))
     r.update(idx("ip_dst"), ip4str(b.get() & 0xff, b.get() & 0xff,
       b.get() & 0xff, b.get() & 0xff))
-    // honor IP options; a header length past the frame leaves no L4
-    b.position(math.min(start + ihl * 4, b.limit()))
+    // honor IP options; a header length past the frame, or below the
+    // 20-byte minimum (IHL < 5), leaves no L4
+    b.position(if (ihl < 5) b.limit() else math.min(start + ihl * 4, b.limit()))
     decodeL4(b, proto, r)
   }
 

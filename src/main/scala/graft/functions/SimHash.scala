@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** 64-bit SimHash over a token array (Charikar similarity hashing):
@@ -30,4 +32,9 @@ case class SimHash64(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object SimHash64 {
+  def column(tokens: Column): Column =
+    DatasetBridge.column(SimHash64(DatasetBridge.expression(tokens)))
 }

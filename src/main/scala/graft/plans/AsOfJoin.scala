@@ -147,44 +147,41 @@ object AsOfStrategy extends SparkStrategy {
   }
 }
 
-/** Session extension registering graft's planner strategy, optimizer
-  * rule and SQL-callable native functions (for
-  * `spark.builder.withExtensions(new GraftExtensions)` deployments;
-  * [[AsOf.join]] also self-registers via experimental strategies).
-  * After installation, plain SQL can use `graft_decode_packet`,
-  * `graft_simhash`, `graft_minhash`, `graft_jaccard`, `graft_dot`,
-  * `graft_lev_band`, `graft_inet6`, `graft_zvalue`.
+/** Session extension for SQL callers
+  * (`spark.sql.extensions=graft.plans.GraftExtensions`, or
+  * `builder.withExtensions(new GraftExtensions)`): the as-of planner
+  * strategy, the Jaccard rewrite rule and the `graft_*` SQL names of
+  * the native functions. DataFrame callers need none of it: graft's
+  * functions are Columns, and [[AsOf.join]] installs its own strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-  private def fn(name: String, build: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo("graft", name),
-      (exprs: Seq[Expression]) => build(exprs))
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfStrategy)
     e.injectOptimizerRule(_ => graft.functions.RewriteJaccard)
-    e.injectFunction(fn("graft_decode_packet",
-      xs => graft.functions.DecodePacket(xs.head)))
-    e.injectFunction(fn("graft_simhash",
-      xs => graft.functions.SimHash64(xs.head)))
-    e.injectFunction(fn("graft_minhash",
-      xs => graft.functions.MinHashSig(xs.head)))
-    e.injectFunction(fn("graft_jaccard",
-      xs => graft.functions.JaccardSim(xs(0), xs(1))))
-    e.injectFunction(fn("graft_dot",
-      xs => graft.functions.DotProd(xs(0), xs(1))))
-    e.injectFunction(fn("graft_lev_band",
-      xs => graft.functions.LevenshteinBand(xs(0), xs(1),
-        xs(2).eval().asInstanceOf[Int])))
-    e.injectFunction(fn("graft_inet6",
-      xs => graft.functions.Inet6Ntoa(xs.head)))
-    e.injectFunction(fn("graft_zvalue",
-      xs => graft.functions.ZValue(xs(0), xs(1))))
+    GraftExtensions.functions.foreach { case (name, build) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo("graft", name), build))
+    }
   }
+}
+
+object GraftExtensions {
+  import org.apache.spark.sql.catalyst.expressions.Expression
+
+  /** SQL name → builder of each native function offered to SQL. */
+  val functions: Map[String, Seq[Expression] => Expression] = Map(
+    ("graft_decode_packet", xs => graft.functions.DecodePacket(xs.head)),
+    ("graft_simhash", xs => graft.functions.SimHash64(xs.head)),
+    ("graft_minhash", xs => graft.functions.MinHashSig(xs.head)),
+    ("graft_jaccard", xs => graft.functions.JaccardSim(xs(0), xs(1))),
+    ("graft_dot", xs => graft.functions.DotProd(xs(0), xs(1))),
+    ("graft_lev_band", xs => graft.functions.LevenshteinBand(xs(0), xs(1),
+      xs(2).eval().asInstanceOf[Int])),
+    ("graft_inet6", xs => graft.functions.Inet6Ntoa(xs.head)),
+    ("graft_zvalue", xs => graft.functions.ZValue(xs(0), xs(1))))
 }
 
 object AsOf {
@@ -196,6 +193,7 @@ object AsOf {
       leftTsCol: String, rightKeys: Seq[String],
       rightTsCol: String): DataFrame = {
     val spark = left.sparkSession
+    // idempotent, and it plans only AsOfJoinPlan: no other plan changes
     if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfStrategy

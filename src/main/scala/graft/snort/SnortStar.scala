@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{DecodePacket, Net}
+import graft.plans.GraftExtensions
 
 /** Snorby-compatible star-schema normalization — the Spark-native form
   * of the reference's `DatabaseOutput._push_to_db`
@@ -25,10 +26,12 @@ import graft.functions.{DecodePacket, Net}
   */
 object SnortStar {
 
-  /** Register the packet-decode expression for SQL/expr use. */
+  /** Register `graft_decode_packet` ([[GraftExtensions.functions]]) for
+    * SQL callers; graft's queries call [[DecodePacket.column]]. */
   def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_decode_packet", exprs => DecodePacket(exprs.head), "scala_udf")
+      "graft_decode_packet",
+      GraftExtensions.functions("graft_decode_packet"), "scala_udf")
 
   /** All star tables from an assembled+enriched alert DataFrame
     * (Unified2.alerts → Maps.enrichSignatures → enrichClassifications).
@@ -36,7 +39,6 @@ object SnortStar {
     * udphdr, icmphdr, data.
     */
   def normalize(alerts: DataFrame): Map[String, DataFrame] = {
-    registerFunctions(alerts.sparkSession)
     val sensorDim = sensors(alerts)
     val sigDim = signatures(alerts)
 
@@ -91,7 +93,7 @@ object SnortStar {
       col("sig_id").as("signature"), col("timestamp"))
 
     val dec = slots.filter(col("pkt").isNotNull)
-      .withColumn("d", expr("graft_decode_packet(pkt.packet_data)"))
+      .withColumn("d", DecodePacket.column(col("pkt.packet_data")))
       .select(col("sid"), col("cid"), col("d.*"))
 
     val iphdr = dec.filter(col("ip_ver") === 4) // snorby iphdr stores u32 addresses

@@ -70,6 +70,14 @@ object Unified2 {
   val Packet = 2
   val ExtraData = 110
 
+  /** The longest record body (the longest JVM array) any framing walk
+    * accepts: [[parseFile]], [[readRange]] and `SpoolTail`'s offset walk
+    * stop at a header whose u32 length is longer, so none commits an
+    * offset past a record another refuses. `bodyLen` is -1 past it.
+    */
+  val MaxBodyLen: Long = Int.MaxValue - 8
+  def bodyLen(raw: Int): Long = if (raw >= 0 && raw <= MaxBodyLen) raw else -1L
+
   private def u32(b: ByteBuffer): Long = b.getInt() & 0xffffffffL
   private def u16(b: ByteBuffer): Int = b.getShort() & 0xffff
   private def u8(b: ByteBuffer): Int = b.get() & 0xff
@@ -81,7 +89,9 @@ object Unified2 {
     * use [[graft.streaming.SpoolTail]] to follow growing files.
     */
   def parseFile(file: String, bytes: Array[Byte]): Seq[U2Record] =
-    parseRange(file, bytes, 0)
+    walk(file, 0, bytes.length, 0) { (buf, pos) =>
+      buf.put(bytes, pos.toInt, buf.remaining()); true
+    }.toList
 
   /** Stream records straight off a file channel over
     * `[startOff, endOff)`, numbering from `baseIdx` — the executor-side
@@ -90,37 +100,41 @@ object Unified2 {
     * then the body), so memory stays O(max record) no matter how large
     * the span — a single file growing >2 GiB between micro-batches
     * (ADVICE r3) just streams through. Stops early on a truncated tail
-    * (file shrunk/rewritten after offset planning) like [[parseRange]].
+    * (file shrunk/rewritten after offset planning) like [[parseFile]].
     */
   def readRange(ch: java.nio.channels.FileChannel, file: String,
       startOff: Long, endOff: Long, baseIdx: Int): Iterator[U2Record] =
+    walk(file, startOff, endOff, baseIdx) { (buf, pos) =>
+      var p = pos
+      var r = 0
+      while (r >= 0 && buf.hasRemaining) { r = ch.read(buf, p); p += r }
+      r >= 0
+    }
+
+  /** The framing walk of [[parseFile]] and [[readRange]] over
+    * `[startOff, endOff)`: `read(buf, pos)` fills `buf` from byte `pos`,
+    * false on a short read.
+    */
+  private def walk(file: String, startOff: Long, endOff: Long, baseIdx: Int)(
+      read: (ByteBuffer, Long) => Boolean): Iterator[U2Record] =
     new Iterator[U2Record] {
       private var off = startOff
       private var idx = baseIdx
       private var nextRec: U2Record = _
-      private def readFully(buf: ByteBuffer, pos: Long): Boolean = {
-        var p = pos
-        while (buf.hasRemaining) {
-          val r = ch.read(buf, p)
-          if (r < 0) return false
-          p += r
-        }
-        true
-      }
       private def advance(): Unit = {
         nextRec = null
         if (off + 8 <= endOff) {
           val hdr = ByteBuffer.allocate(8)
-          if (readFully(hdr, off)) {
+          if (read(hdr, off)) {
             hdr.flip()
             val recType = hdr.getInt()
-            val len = hdr.getInt() & 0xffffffffL
-            // a record body can't exceed the planned span; anything
-            // bigger is a torn/garbage header — stop, a later batch
-            // re-reads from the committed boundary
-            if (len <= endOff - off - 8 && len <= Int.MaxValue - 8) {
+            val len = bodyLen(hdr.getInt())
+            // a record body can't exceed the span; anything bigger is a
+            // torn/garbage header — stop (a follow batch re-reads from
+            // the committed boundary)
+            if (len >= 0 && len <= endOff - off - 8) {
               val body = ByteBuffer.allocate(len.toInt)
-              if (readFully(body, off + 8)) {
+              if (read(body, off + 8)) {
                 nextRec = parseRecord(file, idx, recType, body.array())
                 off += 8 + len
                 idx += 1
@@ -135,28 +149,6 @@ object Unified2 {
         val r = nextRec; advance(); r
       }
     }
-
-  /** As [[parseFile]] but numbering records from `baseIdx` — the entry
-    * point for resumed mid-file reads (byte-offset bookmarks).
-    */
-  def parseRange(file: String, bytes: Array[Byte], baseIdx: Int): Seq[U2Record] = {
-    val buf = ByteBuffer.wrap(bytes)
-    val out = Seq.newBuilder[U2Record]
-    var idx = baseIdx
-    while (buf.remaining() >= 8) {
-      val recType = buf.getInt()
-      val len = buf.getInt()
-      if (len < 0 || buf.remaining() < len) {
-        buf.position(buf.limit()) // truncated tail: stop
-      } else {
-        val body = new Array[Byte](len)
-        buf.get(body)
-        out += parseRecord(file, idx, recType, body)
-        idx += 1
-      }
-    }
-    out.result()
-  }
 
   /** Body bytes a known record type reads before its optional or
     * length-prefixed tail.

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardOpenOption}
 import java.util.{Map => JMap}
 
 import scala.collection.mutable
@@ -174,8 +174,8 @@ class SpoolTailStream(dirs: Seq[String], prefix: String)
           else {
             hdr.flip()
             hdr.getInt() // type
-            val len = hdr.getInt() & 0xffffffffL
-            if (off + 8 + len <= size) { off += 8 + len; n += 1 }
+            val len = Unified2.bodyLen(hdr.getInt())
+            if (len >= 0 && off + 8 + len <= size) { off += 8 + len; n += 1 }
             else cont = false
           }
         }
@@ -199,7 +199,11 @@ class SpoolTailStream(dirs: Seq[String], prefix: String)
             .toSeq.sortBy(_.toString)
           finally listing.close()
         files.foreach { p =>
-          val (off, n) = boundary(p)
+          // a file gone since the listing (purged, rotated away, or a
+          // dangling link) has nothing to read: skip it
+          val (off, n) = try boundary(p) catch {
+            case _: NoSuchFileException => known.remove(p.toString); (0L, 0L)
+          }
           if (off > 0) m += p.toString -> Seq(off, n)
         }
       }

@@ -67,24 +67,4 @@ object DatasetBridge {
     */
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
-
-  /** A fresh session with `ext` installed on an EXISTING SparkContext —
-    * `builder().withExtensions(...).getOrCreate()` silently ignores
-    * extensions when any session is already active (e.g. a shared test
-    * JVM or a notebook); this is the deterministic path.
-    */
-  def newSessionWithExtensions(sc: org.apache.spark.SparkContext,
-      ext: org.apache.spark.sql.SparkSessionExtensions => Unit): SparkSession = {
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    ext(exts)
-    // the primary constructor is private even within sql — reflection
-    val ctor = classOf[classic.SparkSession].getDeclaredConstructors
-      .find(_.getParameterCount == 6)
-      .getOrElse(throw new IllegalStateException(
-        "classic.SparkSession 6-arg constructor not found"))
-    ctor.setAccessible(true)
-    ctor.newInstance(sc, None, None, exts,
-        Map.empty[String, String], Map.empty[String, String])
-      .asInstanceOf[SparkSession]
-  }
 }

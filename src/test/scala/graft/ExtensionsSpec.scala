@@ -11,16 +11,15 @@ import graft.plans.GraftExtensions
 class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private lazy val spark: SparkSession = {
-    // a fresh session with extensions on the shared context —
-    // getOrCreate() ignores withExtensions when a session already
-    // exists in the JVM (as in this shared test suite)
-    val base = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    org.apache.spark.sql.graft.DatasetBridge
-      .newSessionWithExtensions(base.sparkContext, new GraftExtensions)
+    // create(), unlike getOrCreate(), installs the extensions on the
+    // running context; it also makes its session the default, so the
+    // suite session is put back for the specs that follow
+    val suite = SparkSuite.session()
+    try SparkSession.builder().withExtensions(new GraftExtensions).create()
+    finally {
+      SparkSession.setDefaultSession(suite)
+      SparkSession.setActiveSession(suite)
+    }
   }
 
   test("native functions are SQL-callable after extension install") {

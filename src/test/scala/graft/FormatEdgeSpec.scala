@@ -91,6 +91,26 @@ class FormatEdgeSpec extends AnyFunSuite {
     }
   }
 
+  test("one record-length rule for every framing walk, pinned at its limits") {
+    import Unified2.{MaxBodyLen, bodyLen}
+    assert(MaxBodyLen == Int.MaxValue - 8L)
+    assert(bodyLen(0) == 0L)
+    assert(bodyLen(MaxBodyLen.toInt) == MaxBodyLen)
+    assert(bodyLen(MaxBodyLen.toInt + 1) == -1L)
+    assert(bodyLen(Int.MaxValue) == -1L)
+    assert(bodyLen(Int.MinValue) == -1L) // 2^31 as u32
+    assert(bodyLen(-1) == -1L) // 2^32 - 1 as u32
+    // both in-process walks stop at a header just past the limit
+    val full = Unified2Fixture.eventV2(1, 9, 1700000000L, 100, 1, 1, 1, 1,
+      ip(1, 1, 1, 1), ip(2, 2, 2, 2), 1, 2, 6)
+    val bad = ByteBuffer.allocate(8).putInt(104)
+      .putInt((MaxBodyLen + 1).toInt).array()
+    assert(Unified2.parseFile("f", full ++ bad ++ full).size == 1)
+    withFile(full ++ bad ++ full) { (ch, size) =>
+      assert(Unified2.readRange(ch, "f", 0, size, 0).size == 1)
+    }
+  }
+
   test("parseFile keeps framing for unknown record types") {
     val body = Array[Byte](1, 2, 3, 4)
     val rec = ByteBuffer.allocate(8 + body.length)

@@ -220,4 +220,31 @@ class ParserPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       f => DecodePacket.decode(f) != null
     })
   }
+
+  test("DecodePacket sets no L4 field for an IPv4 header length below 5") {
+    val l4 = Seq("sport", "dport", "tcp_seq", "tcp_ack", "tcp_off",
+      "tcp_flags", "tcp_win", "tcp_csum", "tcp_urp", "udp_len", "udp_csum",
+      "icmp_type", "icmp_code", "icmp_csum", "icmp_id", "icmp_seq")
+      .map(DecodePacket.schema.fieldIndex)
+    val payload = DecodePacket.schema.fieldIndex("payload")
+    val frame = for {
+      vlan <- arbitrary[Boolean]
+      ihl <- Gen.choose(0, 4)
+      proto <- Gen.oneOf(1, 6, 17, 58, 41, 0)
+      // the rest of a complete 20-byte IPv4 header, then any tail
+      tail <- Gen.choose(10, 90).flatMap(bytesOf)
+    } yield {
+      val b = ByteBuffer.allocate(28 + tail.length)
+      b.put(new Array[Byte](12))
+      if (vlan) b.putShort(0x8100.toShort).putShort(5.toShort)
+      b.putShort(0x0800.toShort)
+      b.put((0x40 | ihl).toByte).put(new Array[Byte](8)).put(proto.toByte)
+      b.put(tail)
+      b.array().take(b.position())
+    }
+    check(Prop.forAll(frame) { f =>
+      val r = DecodePacket.decode(f)
+      l4.forall(r.isNullAt) && r.getBinary(payload).isEmpty
+    })
+  }
 }

@@ -37,13 +37,26 @@ object SparkSuite {
   def session(): SparkSession = GraftSession.build("graft-test",
     Map("spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4"))
 
-  def deleteRecursively(root: Path): Unit =
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+  /** Delete `root` and everything in it. A stopped streaming query's
+    * state store can still be writing into its checkpoint for a moment,
+    * so a walk that meets a directory refilled, or a file gone, under
+    * it is run again.
+    */
+  def deleteRecursively(root: Path): Unit = {
+    def attempt(left: Int): Unit =
+      try if (Files.exists(root)) {
+        val walk = Files.walk(root)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      } catch {
+        case _: java.nio.file.DirectoryNotEmptyException |
+            _: java.io.UncheckedIOException if left > 1 =>
+          Thread.sleep(200)
+          attempt(left - 1)
+      }
+    attempt(5)
+  }
 }
 
 /** Planted-fixture tables written once per JVM under target/fixtures:

@@ -256,6 +256,48 @@ class SpoolTailSpec extends SparkSuite {
     assert(spark.read.parquet(out).count() == batch && batch > 0)
   }
 
+  test("a spool file that vanishes after the listing is skipped, not fatal") {
+    val dir = tempDir("graft_tail_gone")
+    Files.write(Paths.get(dir, "snort.log.1800000001"), alert(1) ++ alert(2))
+    // listed by the prefix scan, but Files.size / open find no file
+    Files.createSymbolicLink(Paths.get(dir, "snort.log.1800000002"),
+      Paths.get(dir, "snort.log.purged"))
+    val st = new graft.streaming.SpoolTailStream(Seq(dir), "snort.log")
+    assert(st.latestOffset() == graft.streaming.SpoolTailOffset(Map(
+      Paths.get(dir, "snort.log.1800000001").toString ->
+        Seq(2L * alert(1).length, 2L))))
+    val out = tempDir("graft_tail_gone_out")
+    val q = SpoolTail.streamRecords(spark, Seq(dir), "snort.log", "sG")
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", tempDir("graft_tail_gone_ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    assert(spark.read.parquet(out).count() == 2)
+  }
+
+  test("the offset walk stops at a record length readRange refuses (sparse file)") {
+    // one alert, then a header one byte past Unified2.MaxBodyLen whose
+    // body is all present: a sparse ~2 GiB file on the temp filesystem
+    val dir = tempDir("graft_tail_sparse")
+    val file = Paths.get(dir, "snort.log.1800000001")
+    val head = alert(1)
+    val len = graft.sources.Unified2.MaxBodyLen + 1
+    Files.write(file, head ++ java.nio.ByteBuffer.allocate(8)
+      .putInt(104).putInt(len.toInt).array())
+    val raf = new java.io.RandomAccessFile(file.toFile, "rw")
+    try raf.setLength(head.length + 8 + len + head.length) finally raf.close()
+    val st = new graft.streaming.SpoolTailStream(Seq(dir), "snort.log")
+    val Seq(off, n) = st.latestOffset()
+      .asInstanceOf[graft.streaming.SpoolTailOffset].files(file.toString)
+    assert((off, n) == (head.length.toLong, 1L),
+      "committed an offset past a record the reader refuses")
+    val ch = java.nio.channels.FileChannel.open(file, StandardOpenOption.READ)
+    try assert(graft.sources.Unified2.readRange(ch, file.toString, 0,
+      Files.size(file), 0).size == 1)
+    finally ch.close()
+  }
+
   test("planner fails loud on a record index past Int range (ADVICE r4)") {
     val st = new graft.streaming.SpoolTailStream(Seq("/nonexistent"), "x")
     val start = graft.streaming.SpoolTailOffset(
