@@ -58,8 +58,9 @@ object Bench {
       catch { case scala.util.control.NonFatal(_) => () }
       if ((i + 1) % 16 == 0) System.gc()
     }
-    // untimed warmup: JIT/classloading + parquet footer reads otherwise
-    // land entirely on whichever query happens to run first
+    // untimed warmup: JIT/classloading, and one read of every table of
+    // the sf dir, which memoizes its schema (Tables.schema) and warms
+    // its footer, so no timed first rep pays a schema inference job
     // Each warm step is individually guarded: one throwing step must
     // not skip the REST of the warmup (a single try-block would turn
     // e.g. a schema-drifted table count into every knn/dedup entry
@@ -73,8 +74,8 @@ object Bench {
         System.err.println(s"BENCHWARN warmup '$step' failed: ${e.getMessage}")
       }
     warm("jit")(spark.range(1000000).selectExpr("sum(id)").count())
-    Seq("lineitem", "orders", "customer", "events", "documents",
-      "embeddings").foreach(n =>
+    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+      "region", "events", "documents", "embeddings").foreach(n =>
         warm(s"footer:$n")(Tables.t(spark, sfDir, n).count()))
     // the suite-wide set-up below is skipped for a named run: its
     // first rep pays what its entries need, min-of-k the warm rep

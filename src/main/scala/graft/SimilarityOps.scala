@@ -771,8 +771,8 @@ object SimilarityOps {
     */
   def probeIndex(s: SparkSession, indexPath: String, queries: DataFrame,
       nProbe: Int, k: Int): DataFrame =
-    ivfTopK(s.read.parquet(s"$indexPath/centroids"),
-      s.read.parquet(s"$indexPath/assignments"), queries, nProbe, k)
+    ivfTopK(Tables.parquet(s, s"$indexPath/centroids"),
+      Tables.parquet(s, s"$indexPath/assignments"), queries, nProbe, k)
 
   val entries: Seq[Entry] = Seq(
     Entry(

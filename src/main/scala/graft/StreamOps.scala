@@ -170,7 +170,7 @@ object StreamOps {
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
     // file stream sources take a directory; select the events table
     // out of the sf dir with a glob filter
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schema(s, s"$dir/events.parquet")
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     Tables.normalizeEventTs(raw)
@@ -793,7 +793,7 @@ object StreamOps {
       // dumped-model oracle applies (position-ordered fold and all).
       (s, dir) => {
         val model = TextOps.lmModel(s, dir)
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
+        val schema = Tables.schema(s, s"$dir/documents.parquet")
         val docs = s.readStream.schema(schema)
           .option("pathGlobFilter", "documents.parquet").parquet(dir)
           .select(col("doc_id"), col("text"))
@@ -827,7 +827,7 @@ object StreamOps {
       // the SAME dumped-vocab oracle gates both.
       (s, dir) => {
         val w = TextOps.classifyWeights(s, dir)
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
+        val schema = Tables.schema(s, s"$dir/documents.parquet")
         val docs = s.readStream.schema(schema)
           .option("pathGlobFilter", "documents.parquet").parquet(dir)
           .select(col("doc_id"), col("text"))
@@ -1133,8 +1133,8 @@ object StreamOps {
       (s, dir) => {
         val idx = SimilarityOps.ensureIndex(s, dir)
         val root = tempRoot(s, "graft_stream_knn")
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-        val qs = s.readStream.schema(emb.schema)
+        val qs = s.readStream
+          .schema(Tables.schema(s, s"$dir/embeddings.parquet"))
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
           .filter(col("vec_id") < 32)
           .select(col("vec_id").cast("long").as("qid"),
@@ -1171,8 +1171,8 @@ object StreamOps {
       // it anyway.
       (s, dir) => {
         val root = tempRoot(s, "graft_stream_semdedup")
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
-        val qs = s.readStream.schema(emb.schema)
+        val qs = s.readStream
+          .schema(Tables.schema(s, s"$dir/embeddings.parquet"))
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").cast("long").as("vec_id"),
