@@ -70,6 +70,10 @@ object Charlotte {
     // silently on an empty spool list and per-spool otherwise
     if (!Set("test", "parquet", "follow", "compact").contains(mode))
       throw new IllegalArgumentException(s"unknown mode: $mode")
+    // one map set for every spool's query: each map file is parsed and
+    // broadcast once per stamp, not once per sensor
+    val maps = Spool.SinkMaps(spark, config.signatureMap,
+      config.generatorMap, config.classificationMap)
     config.spools.foreach { sp =>
       mode match {
         case "test" =>
@@ -80,9 +84,7 @@ object Charlotte {
           println(s"compacted ${sp.name}: $nb -> $na files, $rows rows")
         case _ =>
           Spool.tailIngest(spark, sp.directories, sp.filename, sp.name,
-            config.signatureMap, config.generatorMap,
-            config.classificationMap,
-            s"$outDir/${sp.name}", s"$outDir/_ckpt/${sp.name}",
+            maps, s"$outDir/${sp.name}", s"$outDir/_ckpt/${sp.name}",
             availableNow = mode == "parquet")
           ()
       }

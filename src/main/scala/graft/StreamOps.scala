@@ -1,10 +1,11 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.types.StructType
 
 import Tables._
 import graft.sources.Unified2Fixture
@@ -104,6 +105,24 @@ object StreamOps {
       mode: OutputMode): (DataFrame, String) = {
     val ckpt = tempRoot(s, "graft_ckpt")
     (drainToParquet(s, df, mode, Some(ckpt)), ckpt)
+  }
+
+  /** The parquet writes of one execution's foreachBatch sink, read
+    * back with the schema they were written with (parquet makes every
+    * field nullable, and so does the reader), so a read-back runs no
+    * schema-inference job. A read before any write fails on the
+    * missing path, as an inferring read does.
+    */
+  private final class WrittenParquet {
+    private val schema = new AtomicReference(new StructType())
+
+    def write(df: DataFrame, path: String): Unit = {
+      schema.set(df.schema)
+      df.write.mode("overwrite").parquet(path)
+    }
+
+    def read(s: SparkSession, path: String): DataFrame =
+      s.read.schema(schema.get).parquet(path)
   }
 
   private def drainToParquet(s: SparkSession, df: DataFrame,
@@ -1010,21 +1029,22 @@ object StreamOps {
           unix_micros(col("ts").cast("timestamp")).as("us"),
           col("event_type"))
         val version = new AtomicInteger(0)
+        val store = new WrittenParquet
         val q = evs.writeStream
           .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
               _: Long) =>
             val v = version.get()
             val prev =
               if (v == 0) batch.toDF().limit(0)
-              else s.read.parquet(s"$root/v$v")
-            upsertCompact(prev.unionByName(batch.toDF()))
-              .write.mode("overwrite").parquet(s"$root/v${v + 1}")
+              else store.read(s, s"$root/v$v")
+            store.write(upsertCompact(prev.unionByName(batch.toDF())),
+              s"$root/v${v + 1}")
             version.incrementAndGet()
             ()
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.read.parquet(s"$root/v${version.get()}")
+        store.read(s, s"$root/v${version.get()}")
           .select(col("user_id"), col("us").as("last_us"),
             col("event_id").as("last_event_id"),
             col("event_type").as("last_event_type"))
@@ -1073,6 +1093,7 @@ object StreamOps {
       (s, dir) => {
         import org.apache.spark.sql.graft.DatasetBridge
         val root = tempRoot(s, "graft_stream_topk")
+        val out = new WrittenParquet
         val perUser = eventStream(s, dir)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day"), col("user_id"))
@@ -1100,12 +1121,11 @@ object StreamOps {
             // Complete mode re-emits the FULL state each trigger, so
             // overwriting with the latest reduction is exactly-once
             // correct however the drain splits into micro-batches
-            reduce(batch.toDF()).coalesce(1)
-              .write.mode("overwrite").parquet(root)
+            out.write(reduce(batch.toDF()).coalesce(1), root)
             ()
           }.start()))
         q.awaitTermination()
-        s.read.parquet(root).orderBy(col("day"), col("rnk"))
+        out.read(s, root).orderBy(col("day"), col("rnk"))
       },
       Some("""SELECT day, rnk, user_id, n FROM (
           SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
@@ -1133,6 +1153,7 @@ object StreamOps {
       (s, dir) => {
         val idx = SimilarityOps.ensureIndex(s, dir)
         val root = tempRoot(s, "graft_stream_knn")
+        val out = new WrittenParquet
         val qs = s.readStream
           .schema(Tables.schema(s, s"$dir/embeddings.parquet"))
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
@@ -1142,13 +1163,13 @@ object StreamOps {
         val q = qs.writeStream
           .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
               epoch: Long) =>
-            SimilarityOps.probeIndex(s, idx, batch.toDF(), nProbe = 4, k = 5)
-              .write.mode("overwrite").parquet(s"$root/b$epoch")
+            out.write(SimilarityOps.probeIndex(s, idx, batch.toDF(),
+              nProbe = 4, k = 5), s"$root/b$epoch")
             ()
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.read.parquet(s"$root/b*").orderBy(col("qid"), col("rank"))
+        out.read(s, s"$root/b*").orderBy(col("qid"), col("rank"))
       },
       // stream splitting must not change a single row vs the batch
       // probe of the same standing index — the oracle is the full
@@ -1171,6 +1192,7 @@ object StreamOps {
       // it anyway.
       (s, dir) => {
         val root = tempRoot(s, "graft_stream_semdedup")
+        val out = new WrittenParquet
         val qs = s.readStream
           .schema(Tables.schema(s, s"$dir/embeddings.parquet"))
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
@@ -1181,13 +1203,13 @@ object StreamOps {
         val q = qs.writeStream
           .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
               epoch: Long) =>
-            SimilarityOps.semanticProbe(s, dir, batch.toDF())
-              .write.mode("overwrite").parquet(s"$root/b$epoch")
+            out.write(SimilarityOps.semanticProbe(s, dir, batch.toDF()),
+              s"$root/b$epoch")
             ()
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.read.parquet(s"$root/b*").orderBy(col("new_id"), col("dup_of"))
+        out.read(s, s"$root/b*").orderBy(col("new_id"), col("dup_of"))
       },
       Some(SimilarityOps.semanticIncrementalSql)),
 
@@ -1204,6 +1226,7 @@ object StreamOps {
       // (q29's shape) — stream splitting must not change a single row.
       (s, dir) => {
         val root = tempRoot(s, "graft_stream_asof")
+        val out = new WrittenParquet
         val ev = t(s, dir, "events")
         val sg = ev.filter(col("event_type") === "signup")
           .select(col("user_id").as("s_user_id"),
@@ -1216,16 +1239,15 @@ object StreamOps {
         val q = purchases.writeStream
           .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
               epoch: Long) =>
-            graft.plans.AsOf.join(batch.toDF(), sg, Seq("user_id"),
+            out.write(graft.plans.AsOf.join(batch.toDF(), sg, Seq("user_id"),
                 "p_us", Seq("s_user_id"), "s_us")
               .select(col("event_id"), col("user_id"), col("p_us"),
-                col("s_event_id"), col("s_us"))
-              .write.mode("overwrite").parquet(s"$root/b$epoch")
+                col("s_event_id"), col("s_us")), s"$root/b$epoch")
             ()
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.read.parquet(s"$root/b*").orderBy(col("event_id"))
+        out.read(s, s"$root/b*").orderBy(col("event_id"))
       },
       Some(Analytics.asofOracleSql))
   )

@@ -530,4 +530,28 @@ object ExprKernels {
     }
     UTF8String.fromString(sb.toString)
   }
+
+  private val HexDigits = "0123456789abcdef".getBytes("US-ASCII")
+
+  /** A unified2 address blob as text (see [[IpText]]): the dotted quad
+    * of the unsigned octets for 4 bytes, [[inet6]] for 16, lowercase
+    * hex for any other length.
+    */
+  def ipText(bytes: Array[Byte]): UTF8String = bytes.length match {
+    case 4 =>
+      UTF8String.fromString(new java.lang.StringBuilder(15)
+        .append(bytes(0) & 0xff).append('.').append(bytes(1) & 0xff)
+        .append('.').append(bytes(2) & 0xff).append('.')
+        .append(bytes(3) & 0xff).toString)
+    case 16 => inet6(bytes)
+    case n =>
+      val out = new Array[Byte](2 * n)
+      var i = 0
+      while (i < n) {
+        out(2 * i) = HexDigits((bytes(i) >> 4) & 0xf)
+        out(2 * i + 1) = HexDigits(bytes(i) & 0xf)
+        i += 1
+      }
+      UTF8String.fromBytes(out)
+  }
 }

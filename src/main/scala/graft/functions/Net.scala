@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 
-/** Network address helpers composed from built-in (whole-stage
-  * codegen'd) functions — the MySQL `inet_aton`/`inet_ntoa` the
+/** Network address helpers — the MySQL `inet_aton`/`inet_ntoa` the
   * reference leans on in SQL (/root/reference/charlotte/
-  * __init__.py:487-488) plus `hexlify` (ibid:503).
+  * __init__.py:487-488) plus `hexlify` (ibid:503), composed from
+  * built-in (whole-stage codegen'd) functions — and the native
+  * renderers of unified2 address blobs, [[Inet6Ntoa]] and [[IpText]].
   */
 object Net {
   /** u32 → dotted quad, like MySQL INET_NTOA. */
@@ -33,10 +34,6 @@ object Net {
       element_at(p, 4).cast("long")
   }
 
-  /** 4-byte address (as stored in unified2 records) → u32. */
-  def bytesToU32(c: Column): Column =
-    conv(hex(c), 16, 10).cast("long")
-
   /** binascii.hexlify equivalent: binary → lowercase hex string. */
   def hexlify(c: Column): Column = lower(hex(c))
 
@@ -57,9 +54,7 @@ object Net {
     * dotted-quad/other pass through).
     */
   def ipToString(c: Column): Column =
-    when(length(c) === 4, inet_ntoa(bytesToU32(c)))
-      .when(length(c) === 16, inet6_ntoa(c))
-      .otherwise(hexlify(c))
+    DatasetBridge.column(IpText(DatasetBridge.expression(c)))
 }
 
 /** Native RFC 5952 IPv6 renderer (kernel: [[ExprKernels.inet6]]); the
@@ -93,6 +88,36 @@ case class Inet6Ntoa(child: Expression) extends UnaryExpression {
       else { ${ev.value} = $tmp; }
       """
     })
+
+  override protected def withNewChildInternal(
+      newChild: Expression): Expression = copy(child = newChild)
+}
+
+/** Native unified2 address renderer (kernel: [[ExprKernels.ipText]]),
+  * one codegen'd call per address: the text of `inet_ntoa` over 4
+  * bytes read as a u32, of [[Inet6Ntoa]] over 16 and of `hexlify`
+  * over any other length.
+  */
+case class IpText(child: Expression) extends UnaryExpression {
+
+  override def prettyName: String = "graft_ip_text"
+  override def dataType: DataType = StringType
+
+  // nullable like the case chain it replaces, whatever the child
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires binary, got ${child.dataType.simpleString}")
+
+  override protected def nullSafeEval(b: Any): Any =
+    ExprKernels.ipText(b.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, b =>
+      s"${ev.value} = graft.functions.ExprKernels.ipText($b);")
 
   override protected def withNewChildInternal(
       newChild: Expression): Expression = copy(child = newChild)

@@ -5,7 +5,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetBridge
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Snort rule-map parsers: sid-msg.map, gen-msg.map,
   * classification.config → small DataFrames for BROADCAST joins, or
@@ -19,10 +24,12 @@ import org.apache.spark.sql.functions._
   * shuffle on the 100 TB side. The follow sink instead broadcasts the
   * parsed lookups ([[sigLookup]] / [[classLookup]]) once per
   * (mtime, size, file key) stamp and enriches with a projection
-  * ([[lookupSignatures]] / [[lookupClassifications]]), so a micro-batch
-  * runs no broadcast-exchange job — see
-  * [[graft.streaming.Spool.ingestOnce]]. Both paths build their
-  * fallback columns from the same helpers and give the same rows.
+  * ([[lookupSignatures]] / [[lookupClassifications]]) whose lookups are
+  * native expressions over the broadcast ([[SigMsgLookup]] /
+  * [[ClassNameLookup]]), so a micro-batch runs no broadcast-exchange
+  * job and no Scala UDF — see [[graft.streaming.Spool.ingestOnce]].
+  * Both paths build their fallback columns from the same helpers and
+  * give the same rows.
   */
 object Maps {
 
@@ -173,28 +180,115 @@ object Maps {
   }
 
   /** [[enrichSignatures]] against [[combinedSigMap]], as a projection
-    * over a broadcast [[sigLookup]]: no join, so no broadcast-exchange
-    * job. Output: the alert columns, then `sig_msg`, `sig_rev` and
-    * `sig_priority` — the same rows, types and nullability.
+    * over a broadcast [[sigLookup]] ([[SigMsgLookup]]): no join, so no
+    * broadcast-exchange job. Output: the alert columns, then `sig_msg`,
+    * `sig_rev` and `sig_priority` — the same rows, types and
+    * nullability.
     */
   def lookupSignatures(alerts: DataFrame,
       sigs: Broadcast[Map[(Long, Long), String]]): DataFrame = {
-    // a null gid or sid never matches, as in the join: the udf returns
-    // null for a null primitive argument without calling the function
-    val msgOf = udf((g: Long, s: Long) => sigs.value.getOrElse((g, s), null))
-    val msg = msgOf(alerts("generator_id"), alerts("signature_id"))
+    val msg = SigMsgLookup.column(alerts("generator_id"),
+      alerts("signature_id"), sigs)
     alerts.select(alerts.columns.toSeq.map(alerts(_)) ++
       (sigMsg(alerts, msg) +: sigRevAndPriority(alerts, msg.isNotNull)): _*)
   }
 
   /** [[enrichClassifications]] against [[classMap]], as a projection
-    * over a broadcast [[classLookup]]. Output: the alert columns, then
-    * `class_name` — the only [[classMap]] column the follow sink keeps.
+    * over a broadcast [[classLookup]] ([[ClassNameLookup]]). Output: the
+    * alert columns, then `class_name` — the only [[classMap]] column
+    * the follow sink keeps.
     */
   def lookupClassifications(alerts: DataFrame,
-      classes: Broadcast[Map[Long, String]]): DataFrame = {
-    val nameOf = udf((id: Long) => classes.value.getOrElse(id, null))
+      classes: Broadcast[Map[Long, String]]): DataFrame =
     alerts.select(alerts.columns.toSeq.map(alerts(_)) :+
-      className(nameOf(alerts("classification_id"))): _*)
+      className(ClassNameLookup.column(alerts("classification_id"),
+        classes)): _*)
+}
+
+/** (gid, sid) → msg from a broadcast [[Maps.sigLookup]]: null for an
+  * unmapped key and for a null gid or sid, which never matches, as in
+  * the join. Codegen is one static call into [[SigMsgLookup.lookup]]
+  * with the broadcast as a reference object; the broadcast is shipped
+  * with the plan and fetched once per executor.
+  */
+case class SigMsgLookup(left: Expression, right: Expression,
+    sigs: Broadcast[Map[(Long, Long), String]])
+    extends BinaryExpression with ImplicitCastInputTypes {
+
+  override def prettyName: String = "graft_sig_msg"
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(g: Any, s: Any): Any =
+    SigMsgLookup.lookup(sigs, g.asInstanceOf[Long], s.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val bc = ctx.addReferenceObj("sigs", sigs,
+      classOf[Broadcast[_]].getName)
+    nullSafeCodeGen(ctx, ev, (g, s) => s"""
+      ${ev.value} = graft.snort.SigMsgLookup.lookup($bc, $g, $s);
+      ${ev.isNull} = ${ev.value} == null;
+      """)
   }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SigMsgLookup {
+  def column(gid: Column, sid: Column,
+      sigs: Broadcast[Map[(Long, Long), String]]): Column =
+    DatasetBridge.column(SigMsgLookup(DatasetBridge.expression(gid),
+      DatasetBridge.expression(sid), sigs))
+
+  def lookup(sigs: Broadcast[Map[(Long, Long), String]], gid: Long,
+      sid: Long): UTF8String =
+    sigs.value.get((gid, sid)) match {
+      case Some(m) => UTF8String.fromString(m)
+      case None => null
+    }
+}
+
+/** class_id → class_name from a broadcast [[Maps.classLookup]]: null
+  * for an unknown or null id. Codegen as in [[SigMsgLookup]].
+  */
+case class ClassNameLookup(child: Expression,
+    classes: Broadcast[Map[Long, String]])
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def prettyName: String = "graft_class_name"
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(id: Any): Any =
+    ClassNameLookup.lookup(classes, id.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val bc = ctx.addReferenceObj("classes", classes,
+      classOf[Broadcast[_]].getName)
+    nullSafeCodeGen(ctx, ev, id => s"""
+      ${ev.value} = graft.snort.ClassNameLookup.lookup($bc, $id);
+      ${ev.isNull} = ${ev.value} == null;
+      """)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): Expression = copy(child = newChild)
+}
+
+object ClassNameLookup {
+  def column(id: Column, classes: Broadcast[Map[Long, String]]): Column =
+    DatasetBridge.column(ClassNameLookup(DatasetBridge.expression(id),
+      classes))
+
+  def lookup(classes: Broadcast[Map[Long, String]], id: Long): UTF8String =
+    classes.value.get(id) match {
+      case Some(n) => UTF8String.fromString(n)
+      case None => null
+    }
 }

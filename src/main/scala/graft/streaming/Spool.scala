@@ -59,18 +59,19 @@ object Spool {
   /** The complete charlotte-equivalent ingest loop as one call: follow
     * a spool, enrich its events, append to a parquet sink. The parsed
     * rule maps are kept across micro-batches as one broadcast per
-    * (mtime, size, file key) stamp, and each batch first compares every
-    * map file's stamp with the one it was parsed at; if they differ it
-    * parses the file again, broadcasts the new lookup and destroys the
-    * replaced one — the reference's mtime-triggered rehash
-    * (charlotte's __init__.py:155-211): edit sid-msg.map in place or
-    * rename a new one over it, and the NEXT batch enriches with it, no
-    * restart. An in-place edit that keeps both the size and the mtime
-    * (a write within the filesystem's mtime granularity, or a restored
-    * mtime) is not seen, as in the reference. Enrichment is a projection
-    * over the broadcast lookups, so a batch runs one Spark job: the
-    * write. Runs one AvailableNow drain; call again after new files
-    * appear (or swap the trigger for continuous operation).
+    * (mtime, size, file key) stamp ([[SinkMaps]]), and each batch first
+    * compares every map file's stamp with the one it was parsed at; if
+    * they differ it parses the file again, broadcasts the new lookup and
+    * destroys the replaced one once no batch reads it — the reference's
+    * mtime-triggered rehash (charlotte's __init__.py:155-211): edit
+    * sid-msg.map in place or rename a new one over it, and the NEXT
+    * batch enriches with it, no restart. An in-place edit that keeps
+    * both the size and the mtime (a write within the filesystem's mtime
+    * granularity, or a restored mtime) is not seen, as in the reference.
+    * Enrichment is a projection of native lookups over the broadcasts,
+    * so a batch runs one Spark job: the write. Runs one AvailableNow
+    * drain; call again after new files appear (or swap the trigger for
+    * continuous operation).
     */
   def ingestOnce(spark: SparkSession, dirs: Seq[String], prefix: String,
       sensor: String, sigMapPath: String, genMapPath: String,
@@ -78,8 +79,9 @@ object Spool {
     migrateLegacyBatches(spark, outPath, checkpoint)
     val q = streamRecords(spark, dirs, prefix, sensor)
       .writeStream
-      .foreachBatch(enrichAndAppend(spark, sigMapPath, genMapPath,
-        classMapPath, outPath, checkpoint))
+      .foreachBatch(enrichAndAppend(spark,
+        SinkMaps(spark, sigMapPath, genMapPath, classMapPath), outPath,
+        checkpoint))
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -96,12 +98,22 @@ object Spool {
       sensor: String, sigMapPath: String, genMapPath: String,
       classMapPath: String, outPath: String, checkpoint: String,
       availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    tailIngest(spark, dirs, prefix, sensor,
+      SinkMaps(spark, sigMapPath, genMapPath, classMapPath), outPath,
+      checkpoint, availableNow)
+
+  /** [[tailIngest]] enriching with `maps`, which the queries of several
+    * spools may share (as [[graft.Charlotte.run]]'s do): each map file
+    * is then parsed and broadcast once per stamp for all of them.
+    */
+  def tailIngest(spark: SparkSession, dirs: Seq[String], prefix: String,
+      sensor: String, maps: SinkMaps, outPath: String, checkpoint: String,
+      availableNow: Boolean): org.apache.spark.sql.streaming.StreamingQuery = {
     migrateLegacyBatches(spark, outPath, checkpoint)
     val w = SpoolTail.streamRecords(spark, dirs, prefix, sensor)
       .writeStream
-      .foreachBatch(enrichAndAppend(spark, sigMapPath, genMapPath,
-        classMapPath, outPath, checkpoint))
+      .foreachBatch(enrichAndAppend(spark, maps, outPath, checkpoint))
       .option("checkpointLocation", checkpoint)
     val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w)
       .start()
@@ -170,31 +182,36 @@ object Spool {
     * The sink stores event columns only, so it enriches
     * [[Unified2.events]], not the packet and extra-data assembly of
     * [[Unified2.alerts]]. The rule-map lookups are broadcast once per
-    * stamp (see [[ingestOnce]]) and applied by [[sinkRows]]'s
-    * projection, so the batch's only Spark job is the staging write.
+    * stamp by `maps` (see [[ingestOnce]]), held for the batch, and
+    * applied by [[sinkRows]]' projection of native lookups, so the
+    * batch's only Spark job is the staging write.
     * The checkpoint namespace is read once, at the query's first batch
     * (Spark has written `metadata` by then), and lives in this closure:
     * each started query builds its own, so a checkpoint deleted and
-    * recreated at the same path gets the new lifetime's namespace.
+    * recreated at the same path gets the new lifetime's namespace. Only
+    * that first batch can replay an attempt an earlier run promoted
+    * (a failed batch stops the query), so only it looks for one.
     */
-  private def enrichAndAppend(spark: SparkSession, sigMapPath: String,
-      genMapPath: String, classMapPath: String, outPath: String,
-      checkpoint: String): (Dataset[Row], Long) => Unit = {
-    val sigs = StampedMaps.broadcast(spark, Seq(sigMapPath, genMapPath))(
-      Maps.sigLookup(sigMapPath, genMapPath))
-    val classes = StampedMaps.broadcast(spark, Seq(classMapPath))(
-      Maps.classLookup(classMapPath))
+  private def enrichAndAppend(spark: SparkSession, maps: SinkMaps,
+      outPath: String, checkpoint: String): (Dataset[Row], Long) => Unit = {
     lazy val ns = checkpointNamespace(spark, checkpoint)
-    (batch: Dataset[Row], id: Long) =>
-      idempotentAppend(spark,
-        sinkRows(Unified2.events(batch), sigs(), classes()),
-        outPath, id, ns)
+    var first = true
+    (batch: Dataset[Row], id: Long) => {
+      maps.using { (sigs, classes) =>
+        idempotentAppend(spark, sinkRows(Unified2.events(batch), sigs,
+          classes), outPath, id, ns, mayReplay = first)
+      }
+      first = false
+    }
   }
 
   /** The follow sink's columns: `events` enriched by the broadcast
     * lookups, the same rows as [[Maps.enrichSignatures]] /
     * [[Maps.enrichClassifications]] against [[Maps.combinedSigMap]] /
-    * [[Maps.classMap]] followed by [[sinkColumns]].
+    * [[Maps.classMap]] followed by [[sinkColumns]]: one native
+    * expression per lookup ([[Maps.lookupSignatures]] /
+    * [[Maps.lookupClassifications]]) and per address
+    * ([[Net.ipToString]]).
     */
   private[graft] def sinkRows(events: DataFrame,
       sigs: Broadcast[Map[(Long, Long), String]],
@@ -212,17 +229,24 @@ object Spool {
 
   /** A value parsed from local `paths`, kept until the (mtime, size,
     * file key) stamp of one of them changes; `release` then receives
-    * the replaced value. The stamps are taken BEFORE the parse, so a
-    * file rewritten during it differs at the next call and is parsed
-    * again. A missing file throws, like the parse itself, and keeps the
-    * current value.
+    * the replaced value, at once or, if a [[using]] call holds it, when
+    * the last such call returns. The stamps are taken BEFORE the parse,
+    * so a file rewritten during it differs at the next call and is
+    * parsed again. A missing file throws, like the parse itself, and
+    * keeps the current value.
     */
   private[graft] final class StampedMaps[T](paths: Seq[String],
       parse: => T, release: T => Unit = (_: T) => ()) {
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 
-    private var parsed: Option[(Seq[(FileTime, Long, AnyRef)], T)] = None
+    private final class Held(val stamps: Seq[(FileTime, Long, AnyRef)],
+        val value: T) {
+      var users = 0
+      var replaced = false
+    }
+
+    private var held: Option[Held] = None
 
     private def stamp(path: String): (FileTime, Long, AnyRef) = {
       val a = Files.readAttributes(Paths.get(path),
@@ -230,28 +254,73 @@ object Spool {
       (a.lastModifiedTime, a.size, a.fileKey)
     }
 
-    def apply(): T = synchronized {
+    private def current(): Held = synchronized {
       val now = paths.map(stamp)
-      parsed match {
-        case Some((`now`, v)) => v
+      held match {
+        case Some(h) if h.stamps == now => h
         case old =>
-          val v = parse
-          parsed = Some((now, v))
-          old.foreach { case (_, replaced) => release(replaced) }
-          v
+          val h = new Held(now, parse)
+          held = Some(h)
+          old.foreach { o =>
+            o.replaced = true
+            if (o.users == 0) release(o.value)
+          }
+          h
+      }
+    }
+
+    def apply(): T = current().value
+
+    /** `f` over the current value, which no stamp change releases
+      * before `f` returns.
+      */
+    def using[R](f: T => R): R = {
+      val h = synchronized { val h = current(); h.users += 1; h }
+      try f(h.value)
+      finally synchronized {
+        h.users -= 1
+        if (h.replaced && h.users == 0) release(h.value)
       }
     }
   }
 
   private[graft] object StampedMaps {
-    /** One broadcast of `parse` per stamp; a stamp change destroys the
-      * replaced broadcast, so reloads never grow the live set. An
-      * executor fetches the value once per stamp, not once per batch.
+    /** One broadcast of `parse` per stamp; the replaced broadcast is
+      * destroyed once no batch reads it, so reloads never grow the live
+      * set. An executor fetches the value once per stamp, not once per
+      * batch.
       */
     def broadcast[T: scala.reflect.ClassTag](spark: SparkSession,
         paths: Seq[String])(parse: => T): StampedMaps[Broadcast[T]] =
       new StampedMaps(paths, spark.sparkContext.broadcast(parse),
         (b: Broadcast[T]) => b.destroy())
+  }
+
+  /** The follow sink's rule maps: the broadcast (gid, sid) → msg and
+    * class_id → class_name lookups, each reloaded when one of its files'
+    * stamps changes. One instance may serve the queries of every spool:
+    * a reload by one query's batch waits for no other, and destroys the
+    * replaced broadcast only after the batches reading it are done.
+    */
+  final class SinkMaps private[graft] (
+      sigs: StampedMaps[Broadcast[Map[(Long, Long), String]]],
+      classes: StampedMaps[Broadcast[Map[Long, String]]]) {
+    private[graft] def using[R](f: (Broadcast[Map[(Long, Long), String]],
+        Broadcast[Map[Long, String]]) => R): R =
+      sigs.using(s => classes.using(c => f(s, c)))
+  }
+
+  object SinkMaps {
+    /** sid-msg.map + gen-msg.map and classification.config, parsed at
+      * the first batch that reads them.
+      */
+    def apply(spark: SparkSession, sigMapPath: String, genMapPath: String,
+        classMapPath: String): SinkMaps =
+      new SinkMaps(
+        StampedMaps.broadcast(spark, Seq(sigMapPath, genMapPath))(
+          Maps.sigLookup(sigMapPath, genMapPath)),
+        StampedMaps.broadcast(spark, Seq(classMapPath))(
+          Maps.classLookup(classMapPath)))
   }
 
   /** Stable namespace for one checkpoint LIFETIME: the streaming query
@@ -358,9 +427,11 @@ object Spool {
     * (namespace, batch id); same-fs renames are atomic):
     *   1. rewrite the batch into the hidden `.batch_<ns>_<id>.tmp`
     *      staging dir (replay deletes any torn leftover first);
-    *   2. delete every `batch_<ns>_<id>_*.parquet` in `outPath` — the
-    *      files a previous crashed attempt of THIS batch may have
-    *      promoted;
+    *   2. if `mayReplay`, delete every `batch_<ns>_<id>_*.parquet` in
+    *      `outPath` — the files a previous crashed attempt of THIS batch
+    *      may have promoted. Only a started query's first batch can be
+    *      such a replay ([[enrichAndAppend]]); skipping the step for
+    *      the others keeps a batch from listing the whole warehouse;
     *   3. rename the staged part files in as
     *      `batch_<ns>_<id>_<i>.parquet`.
     * `ns` is the checkpoint's query id ([[checkpointNamespace]]), so
@@ -378,7 +449,8 @@ object Spool {
     * run's files.
     */
   private[graft] def idempotentAppend(spark: SparkSession, df: DataFrame,
-      outPath: String, batchId: Long, ns: String): Unit = {
+      outPath: String, batchId: Long, ns: String,
+      mayReplay: Boolean): Unit = {
     import org.apache.hadoop.fs.Path
     val out = new Path(outPath)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -392,10 +464,11 @@ object Spool {
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(tmp.toString)
-    fs.listStatus(out)
-      .filter(st => st.isFile &&
-        st.getPath.getName.startsWith(s"batch_${ns}_${batchId}_"))
-      .foreach(st => fs.delete(st.getPath, false))
+    if (mayReplay)
+      fs.listStatus(out)
+        .filter(st => st.isFile &&
+          st.getPath.getName.startsWith(s"batch_${ns}_${batchId}_"))
+        .foreach(st => fs.delete(st.getPath, false))
     fs.listStatus(tmp)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
