@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.StructType
@@ -13,11 +13,15 @@ import graft.streaming.Spool
 
 /** Structured Streaming operators (SURVEY.md §2.D). Each `queries`
   * entry drives a real streaming query to completion with
-  * Trigger.AvailableNow through an executor-side parquet drain
-  * ([[drainToParquet]] — never the driver-collecting memory sink), so
-  * the driver's batch harness can verify streaming semantics; the
+  * Trigger.AvailableNow through ONE executor-side parquet drain
+  * ([[drain]] — never the driver-collecting memory sink), so the
+  * driver's batch harness can verify streaming semantics; the
   * batch-equivalent oracle SQL checks the result against DuckDB where
-  * expressible.
+  * expressible. An entry states its query, the session confs its drain
+  * runs under ([[StatePartitions]], [[NoTrailingBatch]],
+  * [[RocksDbProvider]]) and, for a per-batch operator, the transform
+  * each micro-batch passes through; only `stream_upsert`, whose batches
+  * read the previous store version, runs its own foreachBatch loop.
   *
   * Scale: these are the same plans you'd run unbounded — watermarked
   * window aggregation state, keyed dedup state and per-key session
@@ -74,87 +78,12 @@ object StreamOps {
         p.toString
     }
 
-  /** Run a bounded streaming DataFrame to completion, return result.
-    *
-    * The drain sink is foreachBatch → parquet ON THE EXECUTORS, not
-    * the memory sink: the memory sink collect()s every batch to the
-    * driver, which caps the whole streaming surface at
-    * spark.driver.maxResultSize — the sf30 full-suite probe (second
-    * r17 wave) killed stream_session there (1.17 GiB of closed
-    * sessions > the 1 GiB default), the same driver-bound
-    * anti-pattern the first r17 wave fixed inside stream_topk. A
-    * 100 TB deployment's drained output must stay distributed.
-    *
-    * Batch-dir layout makes the drain idempotent however the retry
-    * falls: Complete mode overwrites ONE snapshot dir per trigger
-    * (last trigger wins — exactly the memory-sink Complete
-    * semantics); Append/Update write each micro-batch to its own
-    * `b<batchId>` dir with overwrite, so a retried batch replaces
-    * itself and never duplicates (the memory sink appends batches in
-    * both modes). Read-back carries the pre-drain schema explicitly,
-    * so an all-empty drain still returns a typed empty relation.
-    */
-  private def runOnce(s: SparkSession, df: DataFrame,
-      mode: OutputMode): DataFrame =
-    drainToParquet(s, df, mode, ckpt = None)
-
-  /** As [[runOnce]] but with a checkpoint, so the final state-store
-    * contents can be read back afterwards (state data source).
-    */
-  private def runOnceCheckpointed(s: SparkSession, df: DataFrame,
-      mode: OutputMode): (DataFrame, String) = {
-    val ckpt = tempRoot(s, "graft_ckpt")
-    (drainToParquet(s, df, mode, Some(ckpt)), ckpt)
-  }
-
-  /** The parquet writes of one execution's foreachBatch sink, read
-    * back with the schema they were written with (parquet makes every
-    * field nullable, and so does the reader), so a read-back runs no
-    * schema-inference job. A read before any write fails on the
-    * missing path, as an inferring read does.
-    */
-  private final class WrittenParquet {
-    private val schema = new AtomicReference(new StructType())
-
-    def write(df: DataFrame, path: String): Unit = {
-      schema.set(df.schema)
-      df.write.mode("overwrite").parquet(path)
-    }
-
-    def read(s: SparkSession, path: String): DataFrame =
-      s.read.schema(schema.get).parquet(path)
-  }
-
-  private def drainToParquet(s: SparkSession, df: DataFrame,
-      mode: OutputMode, ckpt: Option[String]): DataFrame = {
-    val root = tempRoot(s, "graft_drain")
-    val schema = df.schema
-    val isComplete = mode == OutputMode.Complete()
-    val w0 = df.writeStream
-      .outputMode(mode).trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        val dst = if (isComplete) s"$root/snap" else s"$root/b$id"
-        batch.toDF().write.mode("overwrite").parquet(dst)
-        ()
-      }
-    val w = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
-    w.start().awaitTermination()
-    s.read.schema(schema).option("recursiveFileLookup", "true")
-      .parquet(root)
-  }
-
   /** Bounded drains over the small verify tables don't need 32 state
     * partitions — per-partition state-store init/commit dominates the
     * micro-batch. Production unbounded jobs size this to the cluster;
-    * here each streaming entry drains under a narrower setting.
+    * here each stateful entry drains under this narrower setting.
     */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, prev)
-  }
+  private[graft] val StatePartitions = "spark.sql.shuffle.partitions" -> "8"
 
   /** Skip the trailing NO-DATA micro-batch for entries whose output is
     * provably no-data-batch-invariant (r20, guide §1.2 "don't compute
@@ -171,16 +100,94 @@ object StreamOps {
     *     re-emits byte-identical state.
     * NEVER for append-mode watermarked aggregations or event-time
     * timers (stream_timer_sessions), where the trailing batch is what
-    * FLUSHES results. Scoped set/unset like the provider overrides.
+    * FLUSHES results.
     */
-  private def withNoDataBatchesDisabled[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
+  private[graft] val NoTrailingBatch =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** The RocksDB state store provider: transformWithState needs it
+    * (timers keep a second column family), so every transformWithState
+    * entry drains under it.
+    */
+  private[graft] val RocksDbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `f` with each of `confs` set on the session, then put every
+    * key back as it was: a key that was set gets its value again, a
+    * key that was not is unset — also when `f` throws.
+    */
+  private[graft] def withConfs[T](s: SparkSession,
+      confs: (String, String)*)(f: => T): T = {
+    val set = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      f
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
+  }
+
+  /** Parquet written with `schema`, read back with it (parquet makes
+    * every field nullable, and so does the reader), so the read runs no
+    * schema-inference job. `recursive` reads every file under `path`.
+    */
+  private def readWritten(s: SparkSession, schema: StructType, path: String,
+      recursive: Boolean = false): DataFrame = {
+    val r = s.read.schema(schema)
+    (if (recursive) r.option("recursiveFileLookup", "true") else r)
+      .parquet(path)
+  }
+
+  /** Run the bounded streaming DataFrame `df` to completion with
+    * Trigger.AvailableNow and return what it emitted: `confs` are set
+    * on the session before `start()` and restored once the query has
+    * terminated ([[withConfs]]); `ckpt` is the checkpoint location, if
+    * the caller reads the state store afterwards; each micro-batch
+    * passes through `perBatch` before it is written.
+    *
+    * The drain sink is foreachBatch → parquet ON THE EXECUTORS, not
+    * the memory sink: the memory sink collect()s every batch to the
+    * driver, which caps the whole streaming surface at
+    * spark.driver.maxResultSize — the sf30 full-suite probe (second
+    * r17 wave) killed stream_session there (1.17 GiB of closed
+    * sessions > the 1 GiB default), the same driver-bound
+    * anti-pattern the first r17 wave fixed inside stream_topk. A
+    * 100 TB deployment's drained output must stay distributed.
+    *
+    * Batch-dir layout makes the drain idempotent however the retry
+    * falls: Complete mode overwrites ONE snapshot dir per trigger
+    * (last trigger wins — exactly the memory-sink Complete
+    * semantics); Append/Update write each micro-batch to its own
+    * `b<batchId>` dir with overwrite, so a retried batch replaces
+    * itself and never duplicates (the memory sink appends batches in
+    * both modes). The read-back carries the schema the batches were
+    * written with, so it runs no schema-inference job; a drain that
+    * ran no batch returns a typed empty relation with the schema
+    * `perBatch` gives the query's rows.
+    */
+  private[graft] def drain(s: SparkSession, df: DataFrame, mode: OutputMode,
+      confs: Seq[(String, String)] = Nil, ckpt: Option[String] = None,
+      perBatch: DataFrame => DataFrame = identity): DataFrame = {
+    val root = tempRoot(s, "graft_drain")
+    val written = new AtomicReference[StructType]
+    val w = df.writeStream.outputMode(mode).trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        val out = perBatch(batch.toDF())
+        written.set(out.schema)
+        out.write.mode("overwrite").parquet(
+          if (mode == OutputMode.Complete()) s"$root/snap" else s"$root/b$id")
+        ()
+      }
+    withConfs(s, confs: _*) {
+      ckpt.fold(w)(c => w.option("checkpointLocation", c))
+        .start().awaitTermination()
+    }
+    val schema = Option(written.get).getOrElse(perBatch(
+      s.createDataFrame(java.util.Collections.emptyList[Row], df.schema)).schema)
+    readWritten(s, schema, root, recursive = true)
   }
 
   /** events table as a stream (same ts-normalization as Tables.t — all
@@ -422,7 +429,8 @@ object StreamOps {
     * must demonstrably BOUND state to open sessions — eviction by
     * fired timers — not merely reproduce the output). Returns the
     * drained closed sessions plus the checkpoint dir when requested;
-    * the bench entry runs un-checkpointed, exactly the r16 plan.
+    * the bench entry runs un-checkpointed, exactly the r16 plan. Both
+    * forms are one [[drain]] call, differing only in its `ckpt`.
     */
   private[graft] def timerSessionsDrain(s: SparkSession, dir: String,
       checkpointed: Boolean): (DataFrame, Option[String]) =
@@ -523,32 +531,26 @@ object StreamOps {
 
   /** Stream stage of [[timerSessionsDrain]]: drive the event-time
     * timer sessionization over the prepared bucket files to
-    * completion; the returned frame is the LAZY drained read-back.
+    * completion through [[drain]], under [[RocksDbProvider]] (timers
+    * keep a second column family) and [[StatePartitions]], with a
+    * fresh checkpoint when `checkpointed`; the returned frame is the
+    * LAZY drained read-back.
     */
   private[graft] def timerSessStream(s: SparkSession, root: String,
       checkpointed: Boolean): (DataFrame, Option[String]) = {
-    val gapUs = TimerSessGapUs
     import s.implicits._
-    // timers keep a second column family → RocksDB provider, like
-    // the other transformWithState entries
-    withRocksDbStateStore(s) {
-      val stream = s.readStream
-        .schema("user_id BIGINT, event_id BIGINT, us BIGINT")
-        .option("maxFilesPerTrigger", "1").parquet(root)
-        .withColumn("ts", timestamp_micros(col("us")))
-        .withWatermark("ts", "0 seconds")
-        .as[TimerEv]
-      val sessions = stream.groupByKey(_.user_id)
-        .transformWithState(new TimerSessProcessor(gapUs),
-          TimeMode.EventTime(), OutputMode.Append())
-      if (checkpointed) {
-        val (df, ckpt) = withShufflePartitions(s, 8)(
-          runOnceCheckpointed(s, sessions.toDF(), OutputMode.Append()))
-        (df, Some(ckpt))
-      } else
-        (withShufflePartitions(s, 8)(
-          runOnce(s, sessions.toDF(), OutputMode.Append())), None)
-    }
+    val stream = s.readStream
+      .schema("user_id BIGINT, event_id BIGINT, us BIGINT")
+      .option("maxFilesPerTrigger", "1").parquet(root)
+      .withColumn("ts", timestamp_micros(col("us")))
+      .withWatermark("ts", "0 seconds")
+      .as[TimerEv]
+    val sessions = stream.groupByKey(_.user_id)
+      .transformWithState(new TimerSessProcessor(TimerSessGapUs),
+        TimeMode.EventTime(), OutputMode.Append())
+    val ckpt = if (checkpointed) Some(tempRoot(s, "graft_ckpt")) else None
+    (drain(s, sessions.toDF(), OutputMode.Append(),
+      Seq(RocksDbProvider, StatePartitions), ckpt), ckpt)
   }
 
   /** Resident "open"-session state rows of a [[timerSessionsDrain]]
@@ -585,27 +587,13 @@ object StreamOps {
       .as[SessEv]
   }
 
-  /** Run `f` with the RocksDB state store provider (transformWithState
-    * needs it), restoring the session's previous setting after. */
-  private def withRocksDbStateStore[T](s: SparkSession)(f: => T): T = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(p) => s.conf.set(provKey, p)
-      case None => s.conf.unset(provKey)
-    }
-  }
-
   /** Drain a spool record stream (u2_stream, u2_tail) to its verify
     * projection. The basename only: stream sources differ from the
     * batch scan in path prefix (file:), not identity — the oracle
     * walks copies.
     */
   private def drainSpoolRecords(s: SparkSession, recs: DataFrame): DataFrame =
-    runOnce(s, recs.select(col("sensor"),
+    drain(s, recs.select(col("sensor"),
         substring_index(col("src_file"), "/", -1).as("src_file"),
         col("rec_index"), col("rec_type"), col("event_id"),
         col("signature_id")), OutputMode.Append())
@@ -657,9 +645,9 @@ object StreamOps {
           .agg(count(lit(1)).as("n"), sum(dec(col("value"))).as("total_dec"))
         // Complete mode: every batch re-emits the full snapshot, so
         // the trailing no-data batch is byte-identical — skip it (r20)
-        val res = withShufflePartitions(s, 8)(withNoDataBatchesDisabled(s)(
-          runOnce(s, agg, OutputMode.Complete())))
-        res.select(
+        drain(s, agg, OutputMode.Complete(),
+            Seq(StatePartitions, NoTrailingBatch))
+          .select(
             date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
             col("event_type"), col("n"),
             col("total_dec").cast("double").as("total"))
@@ -688,8 +676,8 @@ object StreamOps {
           .groupBy(col("event_type")).agg(count(lit(1)).as("cb"))
         // Complete mode re-emits the identical snapshot in the trailing
         // no-data batch — skip it (r21; same rule as stream_window_agg)
-        val drained = withShufflePartitions(s, 8)(withNoDataBatchesDisabled(s)(
-          runOnce(s, cnt, OutputMode.Complete())))
+        val drained = drain(s, cnt, OutputMode.Complete(),
+          Seq(StatePartitions, NoTrailingBatch))
         val base = t(s, dir, "events")
           .filter(col("event_id") % 2 === 0)
           .groupBy(col("event_type")).agg(count(lit(1)).as("ca"))
@@ -729,7 +717,7 @@ object StreamOps {
         val dd = eventStream(s, dir)
           .select(col("user_id"), col("event_type"))
           .dropDuplicates("user_id", "event_type")
-        withShufflePartitions(s, 8)(runOnce(s, dd, OutputMode.Append()))
+        drain(s, dd, OutputMode.Append(), Seq(StatePartitions))
           .orderBy(col("user_id"), col("event_type"))
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
@@ -751,9 +739,10 @@ object StreamOps {
         val sessions = evs.groupByKey(_.user_id)
           .flatMapGroupsWithState(OutputMode.Append,
             GroupStateTimeout.NoTimeout)(sessionStep _)
-        val (closed, ckpt) = withShufflePartitions(s, 8)(
-          runOnceCheckpointed(s, sessions.toDF(), OutputMode.Append()))
-        closed.unionByName(openSessions(s, ckpt))
+        val ckpt = tempRoot(s, "graft_ckpt")
+        drain(s, sessions.toDF(), OutputMode.Append(), Seq(StatePartitions),
+            Some(ckpt))
+          .unionByName(openSessions(s, ckpt))
           .orderBy(col("user_id"), col("sess_id"))
       },
       Some(Analytics.sessionizeOracleSql)),
@@ -783,8 +772,8 @@ object StreamOps {
             col("s_ts") <= col("ts"))
         // inner join: matches emit in the data batch; the trailing
         // no-data batch only evicts state — skip it (r20)
-        withShufflePartitions(s, 8)(withNoDataBatchesDisabled(s)(
-          runOnce(s, joined, OutputMode.Append())))
+        drain(s, joined, OutputMode.Append(),
+            Seq(StatePartitions, NoTrailingBatch))
           .select(col("event_id"), col("user_id"),
             unix_micros(col("ts")).as("p_us"),
             col("s_event_id"), unix_micros(col("s_ts")).as("s_us"))
@@ -825,8 +814,8 @@ object StreamOps {
         // generality under batch splits would require a latest-per-key
         // readback (a doc's row re-emits in every batch that changes
         // it, and the drain reads back ALL per-batch dirs).
-        withShufflePartitions(s, 8)(withNoDataBatchesDisabled(s)(
-          runOnce(s, scored, OutputMode.Complete())))
+        drain(s, scored, OutputMode.Complete(),
+            Seq(StatePartitions, NoTrailingBatch))
           .orderBy(col("doc_id"))
       },
       Some(TextOps.lmOracleSql)),
@@ -850,8 +839,7 @@ object StreamOps {
         val docs = s.readStream.schema(schema)
           .option("pathGlobFilter", "documents.parquet").parquet(dir)
           .select(col("doc_id"), col("text"))
-        runOnce(s, TextOps.classifyProjection(docs, w),
-            OutputMode.Append())
+        drain(s, TextOps.classifyProjection(docs, w), OutputMode.Append())
           .orderBy(col("doc_id"))
       },
       Some(TextOps.classifyOracleSql)),
@@ -879,24 +867,21 @@ object StreamOps {
       // batch grouped aggregate (the oracle).
       (s, dir) => {
         import s.implicits._
-        withRocksDbStateStore(s) {
-          val evs = sessEvents(s, dir)
-          val totals = evs.groupByKey(_.user_id)
-            .transformWithState(new TotalsProcessor,
-              TimeMode.None(), OutputMode.Update())
-          // Update-mode sinks keep one row per key PER micro-batch; if
-          // the drain ever splits into several batches, reduce to the
-          // final update per user — n_events grows monotonically with
-          // each update, so max(struct(n_events, cents)) is the last
-          // one (ADVICE r2).
-          withShufflePartitions(s, 8)(
-            runOnce(s, totals.toDF(), OutputMode.Update()))
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("n_events"), col("cents"))).as("last"))
-            .select(col("user_id"), col("last.n_events").as("n_events"),
-              (col("last.cents").cast("double") / 100.0).as("total"))
-            .orderBy(col("user_id"))
-        }
+        val totals = sessEvents(s, dir).groupByKey(_.user_id)
+          .transformWithState(new TotalsProcessor,
+            TimeMode.None(), OutputMode.Update())
+        // Update-mode sinks keep one row per key PER micro-batch; if
+        // the drain ever splits into several batches, reduce to the
+        // final update per user — n_events grows monotonically with
+        // each update, so max(struct(n_events, cents)) is the last
+        // one (ADVICE r2).
+        drain(s, totals.toDF(), OutputMode.Update(),
+            Seq(RocksDbProvider, StatePartitions))
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("n_events"), col("cents"))).as("last"))
+          .select(col("user_id"), col("last.n_events").as("n_events"),
+            (col("last.cents").cast("double") / 100.0).as("total"))
+          .orderBy(col("user_id"))
       },
       Some("""SELECT user_id, COUNT(*) AS n_events,
         CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total
@@ -911,27 +896,25 @@ object StreamOps {
       // Oracle: the batch grouped aggregate with arg_max.
       (s, dir) => {
         import s.implicits._
-        withRocksDbStateStore(s) {
-          val evs: Dataset[TypeEv] = eventStream(s, dir)
-            .select(col("user_id"), col("event_type"), col("event_id"),
-              unix_micros(col("ts").cast("timestamp")).as("us"))
-            .as[TypeEv]
-          val prof = evs.groupByKey(_.user_id)
-            .transformWithState(new ProfileProcessor,
-              TimeMode.None(), OutputMode.Update())
-          // Update-mode sink keeps one row per (user, type) PER batch;
-          // n grows monotonically, so max(struct(...)) is the final one
-          withShufflePartitions(s, 8)(
-            runOnce(s, prof.toDF(), OutputMode.Update()))
-            .groupBy(col("user_id"), col("event_type"))
-            .agg(max(struct(col("n"), col("last_us"), col("last_event_id")))
-              .as("last"))
-            .select(col("user_id"), col("event_type"),
-              col("last.n").as("n"),
-              col("last.last_event_id").as("last_event_id"),
-              col("last.last_us").as("last_us"))
-            .orderBy(col("user_id"), col("event_type"))
-        }
+        val evs: Dataset[TypeEv] = eventStream(s, dir)
+          .select(col("user_id"), col("event_type"), col("event_id"),
+            unix_micros(col("ts").cast("timestamp")).as("us"))
+          .as[TypeEv]
+        val prof = evs.groupByKey(_.user_id)
+          .transformWithState(new ProfileProcessor,
+            TimeMode.None(), OutputMode.Update())
+        // Update-mode sink keeps one row per (user, type) PER batch;
+        // n grows monotonically, so max(struct(...)) is the final one
+        drain(s, prof.toDF(), OutputMode.Update(),
+            Seq(RocksDbProvider, StatePartitions))
+          .groupBy(col("user_id"), col("event_type"))
+          .agg(max(struct(col("n"), col("last_us"), col("last_event_id")))
+            .as("last"))
+          .select(col("user_id"), col("event_type"),
+            col("last.n").as("n"),
+            col("last.last_event_id").as("last_event_id"),
+            col("last.last_us").as("last_us"))
+          .orderBy(col("user_id"), col("event_type"))
       },
       Some("""SELECT user_id, event_type, COUNT(*) AS n,
         arg_max(event_id, epoch_us(ts)) AS last_event_id,
@@ -947,21 +930,18 @@ object StreamOps {
       // window rank (the oracle) regardless of batching.
       (s, dir) => {
         import s.implicits._
-        withRocksDbStateStore(s) {
-          val evs = sessEvents(s, dir)
-          val recent = evs.groupByKey(_.user_id)
-            .transformWithState(new RecentProcessor,
-              TimeMode.None(), OutputMode.Update())
-          withShufflePartitions(s, 8)(
-            runOnce(s, recent.toDF(), OutputMode.Update()))
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("n_seen"), col("r1"), col("r2"),
-              col("r3"))).as("last"))
-            .select(col("user_id"), col("last.n_seen").as("n_seen"),
-              col("last.r1").as("r1"), col("last.r2").as("r2"),
-              col("last.r3").as("r3"))
-            .orderBy(col("user_id"))
-        }
+        val recent = sessEvents(s, dir).groupByKey(_.user_id)
+          .transformWithState(new RecentProcessor,
+            TimeMode.None(), OutputMode.Update())
+        drain(s, recent.toDF(), OutputMode.Update(),
+            Seq(RocksDbProvider, StatePartitions))
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("n_seen"), col("r1"), col("r2"),
+            col("r3"))).as("last"))
+          .select(col("user_id"), col("last.n_seen").as("n_seen"),
+            col("last.r1").as("r1"), col("last.r2").as("r2"),
+            col("last.r3").as("r3"))
+          .orderBy(col("user_id"))
       },
       Some("""WITH r AS (SELECT user_id, event_id,
             ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1029,22 +1009,21 @@ object StreamOps {
           unix_micros(col("ts").cast("timestamp")).as("us"),
           col("event_type"))
         val version = new AtomicInteger(0)
-        val store = new WrittenParquet
-        val q = evs.writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-              _: Long) =>
+        val schema = new AtomicReference[StructType]
+        evs.writeStream
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
             val v = version.get()
             val prev =
               if (v == 0) batch.toDF().limit(0)
-              else store.read(s, s"$root/v$v")
-            store.write(upsertCompact(prev.unionByName(batch.toDF())),
-              s"$root/v${v + 1}")
+              else readWritten(s, schema.get, s"$root/v$v")
+            val next = upsertCompact(prev.unionByName(batch.toDF()))
+            schema.set(next.schema)
+            next.write.mode("overwrite").parquet(s"$root/v${v + 1}")
             version.incrementAndGet()
             ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        store.read(s, s"$root/v${version.get()}")
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        readWritten(s, schema.get, s"$root/v${version.get()}")
           .select(col("user_id"), col("us").as("last_us"),
             col("event_id").as("last_event_id"),
             col("event_type").as("last_event_type"))
@@ -1092,8 +1071,6 @@ object StreamOps {
       // equivalent.
       (s, dir) => {
         import org.apache.spark.sql.graft.DatasetBridge
-        val root = tempRoot(s, "graft_stream_topk")
-        val out = new WrittenParquet
         val perUser = eventStream(s, dir)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day"), col("user_id"))
@@ -1110,22 +1087,15 @@ object StreamOps {
           .select(col("day"), posexplode(col("top")).as(Seq("pos", "e")))
           .select(col("day"), (col("pos") + 1).cast("bigint").as("rnk"),
             col("e.key").as("user_id"), col("e.ord").cast("bigint").as("n"))
-        // Complete mode: the trailing no-data batch re-emits the same
-        // full snapshot the last data batch already reduced — skip it
-        val q = withShufflePartitions(s, 8)(withNoDataBatchesDisabled(s)(
-          perUser.writeStream
-          .outputMode(OutputMode.Complete())
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-              _: Long) =>
-            // Complete mode re-emits the FULL state each trigger, so
-            // overwriting with the latest reduction is exactly-once
-            // correct however the drain splits into micro-batches
-            out.write(reduce(batch.toDF()).coalesce(1), root)
-            ()
-          }.start()))
-        q.awaitTermination()
-        out.read(s, root).orderBy(col("day"), col("rnk"))
+        // Complete mode re-emits the FULL state each trigger, so
+        // overwriting with the latest reduction is exactly-once correct
+        // however the drain splits into micro-batches; the trailing
+        // no-data batch re-emits the same full snapshot the last data
+        // batch already reduced — skip it
+        drain(s, perUser, OutputMode.Complete(),
+            Seq(StatePartitions, NoTrailingBatch),
+            perBatch = b => reduce(b).coalesce(1))
+          .orderBy(col("day"), col("rnk"))
       },
       Some("""SELECT day, rnk, user_id, n FROM (
           SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
@@ -1152,24 +1122,15 @@ object StreamOps {
       // probe over the same index.
       (s, dir) => {
         val idx = SimilarityOps.ensureIndex(s, dir)
-        val root = tempRoot(s, "graft_stream_knn")
-        val out = new WrittenParquet
         val qs = s.readStream
           .schema(Tables.schema(s, s"$dir/embeddings.parquet"))
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
           .filter(col("vec_id") < 32)
           .select(col("vec_id").cast("long").as("qid"),
             graft.functions.Vectors.normalized(col("embedding")).as("qvec"))
-        val q = qs.writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-              epoch: Long) =>
-            out.write(SimilarityOps.probeIndex(s, idx, batch.toDF(),
-              nProbe = 4, k = 5), s"$root/b$epoch")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        out.read(s, s"$root/b*").orderBy(col("qid"), col("rank"))
+        drain(s, qs, OutputMode.Append(),
+            perBatch = SimilarityOps.probeIndex(s, idx, _, nProbe = 4, k = 5))
+          .orderBy(col("qid"), col("rank"))
       },
       // stream splitting must not change a single row vs the batch
       // probe of the same standing index — the oracle is the full
@@ -1191,8 +1152,6 @@ object StreamOps {
       // the oracle (same SQL as the batch twin) and Round11Spec verify
       // it anyway.
       (s, dir) => {
-        val root = tempRoot(s, "graft_stream_semdedup")
-        val out = new WrittenParquet
         val qs = s.readStream
           .schema(Tables.schema(s, s"$dir/embeddings.parquet"))
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
@@ -1200,16 +1159,9 @@ object StreamOps {
           .select(col("vec_id").cast("long").as("vec_id"),
             graft.functions.Vectors.normalized(col("embedding"))
               .as("embedding"))
-        val q = qs.writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-              epoch: Long) =>
-            out.write(SimilarityOps.semanticProbe(s, dir, batch.toDF()),
-              s"$root/b$epoch")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        out.read(s, s"$root/b*").orderBy(col("new_id"), col("dup_of"))
+        drain(s, qs, OutputMode.Append(),
+            perBatch = SimilarityOps.semanticProbe(s, dir, _))
+          .orderBy(col("new_id"), col("dup_of"))
       },
       Some(SimilarityOps.semanticIncrementalSql)),
 
@@ -1225,8 +1177,6 @@ object StreamOps {
       // epoch via overwrite-by-batch dirs). Oracle: the batch as-of
       // (q29's shape) — stream splitting must not change a single row.
       (s, dir) => {
-        val root = tempRoot(s, "graft_stream_asof")
-        val out = new WrittenParquet
         val ev = t(s, dir, "events")
         val sg = ev.filter(col("event_type") === "signup")
           .select(col("user_id").as("s_user_id"),
@@ -1236,18 +1186,12 @@ object StreamOps {
           .filter(col("event_type") === "purchase")
           .select(col("event_id"), col("user_id"),
             unix_micros(col("ts").cast("timestamp")).as("p_us"))
-        val q = purchases.writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-              epoch: Long) =>
-            out.write(graft.plans.AsOf.join(batch.toDF(), sg, Seq("user_id"),
+        drain(s, purchases, OutputMode.Append(),
+            perBatch = b => graft.plans.AsOf.join(b, sg, Seq("user_id"),
                 "p_us", Seq("s_user_id"), "s_us")
               .select(col("event_id"), col("user_id"), col("p_us"),
-                col("s_event_id"), col("s_us")), s"$root/b$epoch")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        out.read(s, s"$root/b*").orderBy(col("event_id"))
+                col("s_event_id"), col("s_us")))
+          .orderBy(col("event_id"))
       },
       Some(Analytics.asofOracleSql))
   )

@@ -1394,19 +1394,18 @@ object TextOps {
     merges.toSeq
   }
 
-  /** Merge table cached per (session, corpus): training is the
-    * build-once half of the tokenizer lifecycle (the same contract as
-    * the IVF/PQ index caches); encoding entries serve from it.
+  /** Merge table cached per (session, corpus) in [[IndexCache]]:
+    * training is the build-once half of the tokenizer lifecycle (the
+    * same contract as the IVF/PQ index caches); encoding entries serve
+    * from it, `IndexCache.evictCorpus` drops it with the corpus's other
+    * artifacts, and a stopped session's entry is purged with them.
     * bpe_train deliberately does NOT use this cache — measuring the
     * training loop is that entry's point.
     */
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), Seq[(Int, String, String, String, Long)]]()
   private def bpeMergesCached(s: SparkSession, dir: String,
       nMerges: Int): Seq[(Int, String, String, String, Long)] =
-    bpeMergeCache.computeIfAbsent(
-      (System.identityHashCode(s), s"$dir#$nMerges"),
-      _ => bpeMerges(s, dir, nMerges))
+    IndexCache.getOrBuild(s, dir, s"bpe_merges_$nMerges")(
+      bpeMerges(s, dir, nMerges))
 
   /** One BPE merge of pair (a, b) as an aggregate() step over the
     * space-separated symbols: a greedy left-to-right rewrite, the same

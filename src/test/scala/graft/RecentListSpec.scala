@@ -11,17 +11,6 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   */
 class RecentListSpec extends SparkSuite {
 
-  private def withRocksDb[T](f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // the file sink's metadata log lives in the CHECKPOINT, so the sink
   // dir must persist across drains along with it
   private def drain(src: String, ckpt: String,
@@ -50,7 +39,7 @@ class RecentListSpec extends SparkSuite {
 
   test("buffer survives restart; late old events never evict newer ones") {
     import spark.implicits._
-    withRocksDb {
+    StreamOps.withConfs(spark, StreamOps.RocksDbProvider) {
       val src = tempDir("graft_recent_src")
       val ckpt = tempDir("graft_recent_ckpt")
       val sink = tempDir("graft_recent_sink")

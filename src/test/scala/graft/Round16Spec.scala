@@ -92,18 +92,11 @@ class Round16Spec extends SparkSuite {
     // the remaining half: GroupState session pipelines on the default
     // HDFS-backed store.)
     val default = rows(q("stream_session", sfDir))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    StreamOps.withConfs(spark, StreamOps.RocksDbProvider) {
       val rocks = rows(q("stream_session", sfDir))
       assert(rocks.nonEmpty)
       assert(rocks == default,
         "state-store provider changed the drained session set")
-    } finally prev match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
     }
   }
 

@@ -159,11 +159,7 @@ class Round19Spec extends SparkSuite {
       ev.filter(col("us") < lit(fileHi(i))).agg(max(col("us")))
         .head().getLong(0)
 
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    StreamOps.withConfs(spark, StreamOps.RocksDbProvider) {
       val commits = new java.io.File(s"$ckpt/commits").list()
         .filter(_.forall(_.isDigit)).map(_.toLong).sorted
       assert(commits.length >= K,
@@ -185,9 +181,6 @@ class Round19Spec extends SparkSuite {
       // per-batch equality above plus history leaving by the end)
       assert(finalRows < totalUsers,
         s"final resident $finalRows did not drop below $totalUsers users")
-    } finally prev match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
     }
   }
 

@@ -32,17 +32,6 @@ object TtlStateSpec {
 class TtlStateSpec extends SparkSuite {
   import TtlStateSpec._
 
-  private def withRocksDb[T](f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** One drain of `src` through a TtlCounter, reusing `ckpt` (so state
     * carries across drains); returns the final count per key this
     * drain emitted. NOT Trigger.AvailableNow: with
@@ -90,7 +79,7 @@ class TtlStateSpec extends SparkSuite {
   }
 
   test("TTL'd counters expire between drains; a long TTL carries over") {
-    withRocksDb {
+    StreamOps.withConfs(spark, StreamOps.RocksDbProvider) {
       import spark.implicits._
       val root = tempDir("graft_ttl")
       Seq((1L, 1L), (1L, 2L), (1L, 3L)).toDF("user_id", "event_id")
