@@ -102,15 +102,17 @@ object Bench {
         try {
           val src = s"$root/in"
           spark.range(1).toDF("v").write.parquet(src)
-          val q = spark.readStream
-            .schema("v BIGINT").parquet(src)
-            .writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                  _: Long) => b.write.mode("overwrite").parquet(s"$root/out"); ()
-            }.start()
-          q.awaitTermination()
+          StreamOps.starting(spark) {
+            spark.readStream
+              .schema("v BIGINT").parquet(src)
+              .writeStream
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .option("checkpointLocation", s"$root/ckpt")
+              .foreachBatch {
+                (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                    _: Long) => b.write.mode("overwrite").parquet(s"$root/out"); ()
+              }.start()
+          }.awaitTermination()
         } finally {
           import scala.jdk.CollectionConverters._
           java.nio.file.Files.walk(root).iterator().asScala.toSeq

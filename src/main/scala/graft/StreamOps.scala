@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
 
 import Tables._
 import graft.sources.Unified2Fixture
-import graft.streaming.Spool
+import graft.streaming.{LocalCheckpointFileManager, Spool}
 
 /** Structured Streaming operators (SURVEY.md §2.D). Each `queries`
   * entry drives a real streaming query to completion with
@@ -130,6 +130,23 @@ object StreamOps {
     }
   }
 
+  /** Start a streaming query in `start` with `confs` and graft's
+    * checkpoint manager ([[LocalCheckpointFileManager.conf]]) set on the
+    * session, then put the session back as it was ([[withConfs]]). The
+    * query keeps both: it runs on a clone of the session taken when it
+    * starts, and builds its offset and commit logs from that clone.
+    */
+  private[graft] def starting[T](s: SparkSession,
+      confs: (String, String)*)(start: => T): T =
+    withConfs(s, LocalCheckpointFileManager.conf(s) ++ confs: _*)(start)
+
+  /** Delete `dir` and everything in it. */
+  private def deleteDir(s: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
+
   /** Parquet written with `schema`, read back with it (parquet makes
     * every field nullable, and so does the reader), so the read runs no
     * schema-inference job. `recursive` reads every file under `path`.
@@ -144,9 +161,17 @@ object StreamOps {
   /** Run the bounded streaming DataFrame `df` to completion with
     * Trigger.AvailableNow and return what it emitted: `confs` are set
     * on the session before `start()` and restored once the query has
-    * terminated ([[withConfs]]); `ckpt` is the checkpoint location, if
+    * terminated ([[starting]]); `ckpt` is the checkpoint location, if
     * the caller reads the state store afterwards; each micro-batch
     * passes through `perBatch` before it is written.
+    *
+    * Without `ckpt` the drain checkpoints into a root of its own beside
+    * the output root ([[tempRoot]], so under `graft.stream.scratchRoot`
+    * when that is set), deleted when the drain returns; Spark's
+    * `temporary-*` checkpoint under `java.io.tmpdir` is never used. A
+    * local checkpoint is written by [[LocalCheckpointFileManager]]: no
+    * Hadoop shell-outs, no `.crc` files and no fsync, unless the
+    * session already names a checkpoint manager, which then wins.
     *
     * The drain sink is foreachBatch → parquet ON THE EXECUTORS, not
     * the memory sink: the memory sink collect()s every batch to the
@@ -181,10 +206,11 @@ object StreamOps {
           if (mode == OutputMode.Complete()) s"$root/snap" else s"$root/b$id")
         ()
       }
-    withConfs(s, confs: _*) {
-      ckpt.fold(w)(c => w.option("checkpointLocation", c))
-        .start().awaitTermination()
-    }
+    // not under root, which is read back recursively
+    val checkpoint = ckpt.getOrElse(tempRoot(s, "graft_drain_ckpt"))
+    try starting(s, confs: _*) {
+      w.option("checkpointLocation", checkpoint).start().awaitTermination()
+    } finally if (ckpt.isEmpty) deleteDir(s, checkpoint)
     val schema = Option(written.get).getOrElse(perBatch(
       s.createDataFrame(java.util.Collections.emptyList[Row], df.schema)).schema)
     readWritten(s, schema, root, recursive = true)
@@ -1010,19 +1036,24 @@ object StreamOps {
           col("event_type"))
         val version = new AtomicInteger(0)
         val schema = new AtomicReference[StructType]
-        evs.writeStream
-          .foreachBatch { (batch: Dataset[Row], _: Long) =>
-            val v = version.get()
-            val prev =
-              if (v == 0) batch.toDF().limit(0)
-              else readWritten(s, schema.get, s"$root/v$v")
-            val next = upsertCompact(prev.unionByName(batch.toDF()))
-            schema.set(next.schema)
-            next.write.mode("overwrite").parquet(s"$root/v${v + 1}")
-            version.incrementAndGet()
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        val ckpt = s"$root/ckpt"
+        starting(s) {
+          evs.writeStream
+            .foreachBatch { (batch: Dataset[Row], _: Long) =>
+              val v = version.get()
+              val prev =
+                if (v == 0) batch.toDF().limit(0)
+                else readWritten(s, schema.get, s"$root/v$v")
+              val next = upsertCompact(prev.unionByName(batch.toDF()))
+              schema.set(next.schema)
+              next.write.mode("overwrite").parquet(s"$root/v${v + 1}")
+              version.incrementAndGet()
+              ()
+            }
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
+        }.awaitTermination()
+        deleteDir(s, ckpt)
         readWritten(s, schema.get, s"$root/v${version.get()}")
           .select(col("user_id"), col("us").as("last_us"),
             col("event_id").as("last_event_id"),

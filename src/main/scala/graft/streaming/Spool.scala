@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.StreamOps
 import graft.functions.Net
 import graft.snort.Maps
 import graft.sources.Unified2
@@ -17,6 +18,13 @@ import graft.sources.Unified2
   * per micro-batch (rollover handling), and the streaming checkpoint IS
   * the bookmark — an `AvailableNow` restart resumes exactly after the
   * last processed file, no custom offset tracking.
+  *
+  * Every query here starts under [[LocalCheckpointFileManager]]
+  * ([[StreamOps.starting]]): a local checkpoint's offset and commit logs
+  * are written with java.nio, without Hadoop's `chmod` / `readlink`
+  * shell-outs, with no `.crc` files and no fsync. A checkpoint manager
+  * the session already names wins, and the session's conf is left as
+  * it was found.
   */
 object Spool {
 
@@ -77,14 +85,16 @@ object Spool {
       sensor: String, sigMapPath: String, genMapPath: String,
       classMapPath: String, outPath: String, checkpoint: String): Unit = {
     migrateLegacyBatches(spark, outPath, checkpoint)
-    val q = streamRecords(spark, dirs, prefix, sensor)
-      .writeStream
-      .foreachBatch(enrichAndAppend(spark,
-        SinkMaps(spark, sigMapPath, genMapPath, classMapPath), outPath,
-        checkpoint))
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val q = StreamOps.starting(spark) {
+      streamRecords(spark, dirs, prefix, sensor)
+        .writeStream
+        .foreachBatch(enrichAndAppend(spark,
+          SinkMaps(spark, sigMapPath, genMapPath, classMapPath), outPath,
+          checkpoint))
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
     q.awaitTermination()
   }
 
@@ -115,8 +125,8 @@ object Spool {
       .writeStream
       .foreachBatch(enrichAndAppend(spark, maps, outPath, checkpoint))
       .option("checkpointLocation", checkpoint)
-    val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w)
-      .start()
+    val q = StreamOps.starting(spark)(
+      (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())
     if (availableNow) q.awaitTermination()
     q
   }

@@ -5,7 +5,6 @@ import java.nio.channels.FileChannel
 import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardOpenOption}
 import java.util.{Map => JMap}
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.json4s.{DefaultFormats, Formats}
@@ -152,17 +151,20 @@ class SpoolTailStream(dirs: Seq[String], prefix: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   // driver-side boundary cache so each latestOffset() walk resumes from
-  // the last known record-complete offset instead of re-framing from 0
-  private val known = mutable.HashMap[String, (Long, Long)]()
+  // the last known record-complete offset instead of re-framing from 0;
+  // holds the files of the last listing only
+  private var known = Map.empty[String, (Long, Long)]
   private var availableEnd: Option[SpoolTailOffset] = None
+
+  /** The paths whose boundaries the last listing cached. */
+  private[graft] def cachedPaths: Set[String] = known.keySet
 
   /** Walk framing headers from the known boundary; return the greatest
     * record-complete (offset, count) not past the current file size.
     */
   private def boundary(p: Path): (Long, Long) = {
-    val key = p.toString
     val size = Files.size(p)
-    var (off, n) = known.getOrElse(key, (0L, 0L))
+    var (off, n) = known.getOrElse(p.toString, (0L, 0L))
     if (size >= off + 8) {
       val ch = FileChannel.open(p, StandardOpenOption.READ)
       try {
@@ -180,13 +182,17 @@ class SpoolTailStream(dirs: Seq[String], prefix: String)
           }
         }
       } finally ch.close()
-      known(key) = (off, n)
     }
     (off, n)
   }
 
+  /** The boundaries of every `prefix*` file listed now. A file gone
+    * since an earlier listing (purged, or rotated away) leaves the
+    * cache with it.
+    */
   private def computeLatest(): SpoolTailOffset = {
     val m = Map.newBuilder[String, Seq[Long]]
+    val listed = Map.newBuilder[String, (Long, Long)]
     dirs.foreach { d =>
       val dir = Paths.get(d)
       if (Files.isDirectory(dir)) {
@@ -201,13 +207,15 @@ class SpoolTailStream(dirs: Seq[String], prefix: String)
         files.foreach { p =>
           // a file gone since the listing (purged, rotated away, or a
           // dangling link) has nothing to read: skip it
-          val (off, n) = try boundary(p) catch {
-            case _: NoSuchFileException => known.remove(p.toString); (0L, 0L)
-          }
-          if (off > 0) m += p.toString -> Seq(off, n)
+          try {
+            val (off, n) = boundary(p)
+            listed += p.toString -> (off, n)
+            if (off > 0) m += p.toString -> Seq(off, n)
+          } catch { case _: NoSuchFileException => () }
         }
       }
     }
+    known = listed.result()
     SpoolTailOffset(m.result())
   }
 

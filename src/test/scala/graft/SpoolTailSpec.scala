@@ -276,6 +276,23 @@ class SpoolTailSpec extends SparkSuite {
     assert(spark.read.parquet(out).count() == 2)
   }
 
+  test("a purged spool file leaves the boundary cache at the next listing") {
+    val dir = tempDir("graft_tail_cache")
+    val rolled = Paths.get(dir, "snort.log.1800000001")
+    val active = Paths.get(dir, "snort.log.1800000002")
+    Files.write(rolled, alert(1) ++ alert(2))
+    Files.write(active, alert(3))
+    val st = new graft.streaming.SpoolTailStream(Seq(dir), "snort.log")
+    def offsets() = st.latestOffset()
+      .asInstanceOf[graft.streaming.SpoolTailOffset].files
+    val before = offsets()
+    assert(st.cachedPaths == Set(rolled.toString, active.toString))
+    // what purgeIngested does to a fully committed rolled-over file
+    Files.delete(rolled)
+    assert(offsets() == before - rolled.toString)
+    assert(st.cachedPaths == Set(active.toString))
+  }
+
   test("the offset walk stops at a record length readRange refuses (sparse file)") {
     // one alert, then a header one byte past Unified2.MaxBodyLen whose
     // body is all present: a sparse ~2 GiB file on the temp filesystem

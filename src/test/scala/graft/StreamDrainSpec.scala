@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -94,6 +97,29 @@ class StreamDrainSpec extends SparkSuite {
       "a failed drain must restore a set key and unset an unset one")
     assert(!spark.conf.getAll.contains(NoTrailingBatch._1))
     assert(!spark.conf.getAll.contains(RocksDbProvider._1))
+  }
+
+  private def names(dir: String): Set[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).toSet
+    finally s.close()
+  }
+
+  test("a drain under a set scratchRoot checkpoints there, not in a temporary-* dir") {
+    val scratch = tempDir("graft_drain_scratch")
+    val tmp = System.getProperty("java.io.tmpdir")
+    def temporaries() = names(tmp).filter(_.startsWith("temporary-"))
+    val before = temporaries()
+    val src = source(2, 5)
+    var during = (Set.empty[String], Set.empty[String])
+    val out = StreamOps.withConfs(spark, "graft.stream.scratchRoot" -> scratch)(
+      StreamOps.drain(spark, stream(src), OutputMode.Append(),
+        perBatch = b => { during = (temporaries(), names(scratch)); b }))
+    assert(out.count() == 10)
+    assert((during._1 -- before).isEmpty, "Spark made a temporary checkpoint")
+    assert(during._2.exists(_.startsWith("graft_drain_ckpt_")))
+    assert(!names(scratch).exists(_.startsWith("graft_drain_ckpt_")),
+      "the drain's own checkpoint outlived it")
   }
 
   test("Append and Complete drains of no rows return typed empty frames") {
